@@ -1,52 +1,42 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main: runs every SparkEntry query against
-  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query wall
-  * seconds. Results are materialized through the noop sink so the full
-  * plan (including projections that `count()` would prune away) executes.
+/** Benchmark main: runs the SparkEntry queries against
+  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line whose `value` is the
+  * battery total in seconds. Results are materialized through the noop
+  * sink so the full plan (including projections that `count()` would
+  * prune away) executes.
   *
-  * Self-defense against external contention (VERDICT r11 #1 — the old
-  * version parsed a `"queries"` key no driver `BENCH_r*.json` ever had,
-  * so the outlier re-run was dead code for eleven rounds):
-  *   - every run ARCHIVES its full per-query line as
-  *     `BENCH_LOCAL_r<round>.json` (round inferred from the newest
-  *     driver `BENCH_r*.json` + 1), so a comparison base survives the
-  *     per-run overwrite of `BENCH_LOCAL.json`;
-  *   - the outlier re-run reads the newest archive whose `sf` matches
-  *     this run's (cross-sf bases would mass-misfire the 3x test),
-  *     falling back to `BENCH_LOCAL.json` and finally to a bench line
-  *     embedded in a driver artifact's `tail`;
-  *   - both output lines carry `rerun_base` naming the base actually
-  *     used (`"none"` when no compatible base existed), so an empty
-  *     `outlier_rerun` is distinguishable from a defense that never ran;
-  *   - both output lines carry a per-pass RUN-QUALITY STAMP
-  *     (`passes`: wall seconds, listener-summed job seconds, /proc/stat
-  *     steal seconds, load at pass end) so a weather-inflated run
-  *     self-identifies: uniform job inflation with flat shuffle and/or
-  *     nonzero steal is the external-contention signature
-  *     (PROFILE round-11c);
-  *   - (r15) the full line additionally stamps steal PER QUERY SEGMENT
-  *     (`steal_q`: steal accrued during each query's best sample), and
-  *     the round archive is a COMPOSITE FLOOR MAP merged across the
-  *     round's runs — see the archive section in main() and
-  *     [[mergeFloors]]. The quality stamp is steal-only: contention
-  *     that books as user time (memory-bandwidth/frequency theft,
-  *     PROFILE round-14c) can inflate a segment-clean floor, and the
-  *     estimator for THAT is the min across many runs in different
-  *     weather, which the merge is.
-  */
+  * Protocol: `SPARK_GRAFT_BENCH_RUNS` (default 2) INTERLEAVED passes over
+  * the selected queries — round-robin puts a query's samples a whole
+  * pass apart, so one burst of external load cannot hit all of them, and
+  * the first pass also absorbs plan compilation and codegen. Per query
+  * the run reports the min (best-of-N, the number `value` sums), the
+  * median and the spread (max − min) of its successful samples; `-1`
+  * marks a query that failed in every pass. Every pass carries a stamp
+  * (wall, job-seconds, /proc/stat steal, load, cpus, host) so a run taken
+  * under contention identifies itself. Timings are comparable only
+  * between runs with the same host and core count, which is why the
+  * archive name carries both.
+  *
+  * Outputs: the full line goes to `BENCH_LOCAL.json` (a subset run writes
+  * `BENCH_LOCAL_partial.json` instead) and a full run also writes its own
+  * archive, [[archiveName]]; nothing is ever merged with an earlier run.
+  * Stdout's last line is the slim summary, [[slimLine]]. */
 object Bench {
   def main(args: Array[String]): Unit = {
-    // The defense re-parses the bench's own output next run, so the JSON
-    // must be locale-stable: on a comma-decimal default locale (de_DE,
-    // fr_FR, ...) the f"%.3f" interpolators below would render 96,115 —
-    // not JSON — and every future comparison base would fail soft,
-    // silently re-killing the outlier rerun.
+    // the JSON lines are re-parsed by tools: on a comma-decimal default
+    // locale (de_DE, fr_FR, ...) the f"%.3f" interpolators below would
+    // render 96,115 — not JSON
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val cpusN = cpus.toIntOption.getOrElse(-1)
+    val runs = math.max(1,
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt)
+    val host = hostName()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -54,18 +44,15 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    // ERROR, not WARN: the bench's one-line JSON contract wants a clean
-    // tail, and the WARN class here is all known noise — localCheckpoint
-    // unpersists between queries (intended; see timeOne's finally),
-    // function re-registration, truncated plan strings. The bench's own
-    // diagnostics go through System.err.println and are unaffected.
+    // ERROR, not WARN: the one-line JSON contract wants a clean tail, and
+    // the WARN class here is known noise (localCheckpoint unpersists
+    // between queries, function re-registration, truncated plan strings)
     spark.sparkContext.setLogLevel("ERROR")
-    // once per session; operator-level register calls are idempotent no-ops
     graft.functions.functions.register(spark)
 
-    // job-seconds accumulator for the run-quality stamp: listener events
-    // are async, so a pass's snapshot can lag the last job by the bus
-    // drain (ms against ~minute passes — noise, not bias)
+    // job-seconds for the pass stamp: listener events are async, so a
+    // pass's snapshot can lag its last job by the bus drain (ms against
+    // minute-long passes)
     val jobSeconds = new java.util.concurrent.atomic.DoubleAdder
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -81,319 +68,161 @@ object Bench {
         }
       })
 
-    // JVM + codegen warmup on a trivial job so the first timed query does
-    // not absorb session startup
+    // JVM + codegen warmup so the first timed query does not absorb
+    // session startup
     spark.range(1000000).selectExpr("sum(id)").collect()
-
-    // machine-speed canary (r15): /proc steal cannot see contention that
-    // books as user time (memory-bandwidth or frequency theft — the r14
-    // run-5 signature), so every run also times three FIXED loops whose
-    // true cost never changes: a register-only LCG (CPU frequency), a
-    // single-thread 256 MB stream-sum (per-core bandwidth), and an
-    // all-cores parallel stream-sum (aggregate bandwidth — the leg that
-    // sees neighbor-VM pressure the single-thread pair misses).
-    // Cross-round canary deltas separate "the code got slower" from
-    // "the box got slower" without any Spark in the loop; the composite
-    // archive keeps the round's best (minimum) triple.
-    val (canaryCpu, canaryMem, canaryPar) = canary()
-
-    // quiet-window launcher (VERDICT r13 missing #1): this box shows
-    // multi-minute hypervisor-steal bursts that uniformly inflate a
-    // battery ~1.2x. Rather than always measuring into the weather,
-    // sample /proc/stat steal over short windows and start the battery
-    // only inside a measured-quiet one — bounded by a max wait so an
-    // all-day-dirty box still produces a (stamped) result. Env knobs:
-    // SPARK_GRAFT_QUIET_{WINDOW_SEC,STEAL_SEC,MAX_WAIT_SEC}; max wait 0
-    // disables. The wait + last window's steal ride both output lines.
-    val (quietWaitSec, quietLastSteal) = awaitQuietWindow(
-      windowSec = sys.env.getOrElse("SPARK_GRAFT_QUIET_WINDOW_SEC", "45").toInt,
-      stealBudgetSec =
-        sys.env.getOrElse("SPARK_GRAFT_QUIET_STEAL_SEC", "0.5").toDouble,
-      maxWaitSec =
-        sys.env.getOrElse("SPARK_GRAFT_QUIET_MAX_WAIT_SEC", "900").toInt)
 
     val selected =
       if (args.nonEmpty) SparkEntry.queries.view.filterKeys(args.toSet).toMap
       else SparkEntry.queries
-    // a subset run (local iteration on named queries) must leave the
-    // round's comparison artifacts alone: a 1-query archive would become
-    // the newest same-sf base and silently strip the other queries'
-    // 3x defense (observed live in r14 — a q_ngram_jaccard solo run
-    // archived itself as BENCH_LOCAL_r14.json)
     val subset = selected.keySet != SparkEntry.queries.keySet
     args.filterNot(SparkEntry.queries.keySet).foreach(a =>
       System.err.println(s"[bench] unknown query name ignored: $a"))
-    // best-of-N per query (default 2), measured as N INTERLEAVED battery
-    // passes rather than N back-to-back runs per query: this box shows
-    // multi-minute external contention windows, and back-to-back samples
-    // of one query both land inside the same window (observed 30x
-    // inflation on its best-of-3). Round-robin puts a query's samples
-    // ~minutes apart, so its min dodges any window shorter than a pass.
-    // The first pass also pays plan compilation + codegen, so later
-    // passes measure steady-state throughput.
-    val runs = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt)
     val ordered = selected.toSeq.sortBy(_._1)
-    val best = scala.collection.mutable.Map.empty[String, Double]
-    // 1-minute system load average at the moment each query's BEST sample
-    // finished — the "was this number taken under external load?" stamp
-    val loadAtBest = scala.collection.mutable.Map.empty[String, Double]
-    // SEGMENT-level steal stamp (VERDICT r14 #1): /proc/stat steal
-    // accrued DURING the best sample's own execution. Pass-level stamps
-    // forced the whole ~150-280 s battery into one quiet window, which
-    // this box rarely offers; per-query stamps let each query's floor be
-    // individually certified by whichever short quiet window it landed
-    // in — the archive's quality is then max over floor providers, not
-    // worst pass.
-    val stealAtBest = scala.collection.mutable.Map.empty[String, Double]
-    // SEGMENT-level machine-speed stamp (VERDICT r15 #1): the parallel
-    // canary leg probed immediately before the best sample — per-floor
-    // ratio-to-canary evidence, temporally aligned with the sample
-    // itself rather than with the run's startup
-    val parAtBest = scala.collection.mutable.Map.empty[String, Double]
-    val failedQ = scala.collection.mutable.Set.empty[String]
+    val samples = ordered.map { case (name, _) =>
+      name -> scala.collection.mutable.ArrayBuffer.empty[Option[Double]]
+    }.toMap
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
 
-    def timeOne(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    def timeOne(name: String, fn: (SparkSession, String) => DataFrame)
         : Option[Double] = {
-      val par0 = canaryParProbe()
-      val st0 = stealTicks()
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        val t = (System.nanoTime() - t0) / 1e9
-        if (t < best.getOrElse(name, Double.MaxValue)) {
-          best(name) = t
-          loadAtBest(name) = os.getSystemLoadAverage
-          // steal first (the stamp covers exactly the sample), THEN the
-          // closing probe — a probe between timer-stop and the steal
-          // read would book its own ~25 ms into the segment stamp
-          stealAtBest(name) = (for (a <- st0; b <- stealTicks())
-            yield (b - a) / userHz).getOrElse(-1.0)
-          // stamp = min over the sample's two endpoint probes (ADVICE
-          // r16 #1): a single pre-sample probe only covers the first
-          // instant — weather turning mid-sample escaped it in either
-          // direction. Min is the conservative side: credit is granted
-          // only for slowdown BOTH endpoints agree on, so a burst that
-          // started or ended mid-sample discounts less, never more.
-          parAtBest(name) = math.min(par0, canaryParProbe())
-        }
-        failedQ -= name // any successful pass clears earlier failures
-        Some(t)
+        Some((System.nanoTime() - t0) / 1e9)
       } catch {
         case e: Throwable =>
-          // a failure only marks the query failed while NO pass has
-          // succeeded (and a later success un-marks it): neither a flaky
-          // early pass nor a failed solo outlier rerun may erase a valid
-          // best-of-N measurement
-          if (!best.contains(name)) failedQ += name
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           None
       } finally {
         // release blocks pinned by this query (localCheckpoints, cached
-        // plans) so earlier queries' leftovers can't slow later ones —
-        // measured 3-4x inflation on checkpoint-heavy queries without this
+        // plans) so its leftovers cannot slow later queries — measured
+        // 3-4x inflation on checkpoint-heavy queries without this
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
         spark.catalog.clearCache()
       }
     }
 
-    // per-pass run-quality stamp: wall vs job-sum vs steal (see scaladoc)
-    val passes = scala.collection.mutable.ArrayBuffer.empty[PassStamp]
-    for (_ <- 1 to runs) {
+    val passes = (1 to runs).map { _ =>
       val w0 = System.nanoTime()
       val j0 = jobSeconds.sum()
       val s0 = stealTicks()
-      for ((name, fn) <- ordered) timeOne(name, fn)
-      passes += PassStamp(
+      for ((name, fn) <- ordered) samples(name) += timeOne(name, fn)
+      PassStamp(
         wall = (System.nanoTime() - w0) / 1e9,
         jobSum = jobSeconds.sum() - j0,
         stealSec = (for (a <- s0; b <- stealTicks())
           yield (b - a) / userHz).getOrElse(-1.0),
-        loadEnd = os.getSystemLoadAverage)
-    }
-
-    // contention self-defense: both interleaved samples of a query can
-    // still land inside one long external-load burst (it happened to two
-    // whole battery passes in a row). Any query whose best-of-N exceeds
-    // 3x its previous run's time is re-run once, solo, at the end —
-    // minutes later, when a burst has likely passed — and BOTH numbers
-    // are recorded so the reader can see the burst rather than infer it.
-    // The base must match this run's CORE COUNT too (VERDICT r17 #2):
-    // the driver's 8-core scaling run produces LOWER totals for most
-    // queries at this SF, so an 8-core base under a 32-core run (or vice
-    // versa) mass-skews the 3x test.
-    val cpusN = cpus.toIntOption.getOrElse(-1)
-    val (prev, rerunBase) =
-      previousRun(new java.io.File("."), sfTag(sfDir), Some(cpusN))
-    // the base's own run quality, stamped into both output lines so a
-    // reader can judge the 3x threshold's footing (VERDICT r12 #1: an
-    // inflated base weakens the outlier test exactly when it's needed)
-    val rerunBaseSteal =
-      if (rerunBase == "none") -1.0
-      else (try Some(new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(rerunBase)), "UTF-8"))
-        catch { case _: Throwable => None })
-        .flatMap(maxSteal).getOrElse(-1.0)
-    val rerun = scala.collection.mutable.Map.empty[String, Double]
-    for (name <- outliersToRerun(best.toMap, failedQ.toSet, prev)) {
-      val before = best(name)
-      timeOne(name, selected(name))
-      rerun(name) = before // the contaminated number, kept for the record
-    }
-
-    // a failed query must not report its time-to-error as a result
-    val results = ordered.map { case (name, _) =>
-      name -> (if (failedQ(name)) -1.0 else best(name))
-    }
-    val qs = jmap(results)
-    val loads = jmap(results.map { case (k, _) =>
-      k -> loadAtBest.getOrElse(k, -1.0) })
-    // steal_q carries entries ONLY for succeeded queries (a failed query
-    // has no best sample to stamp); within those, a -1 still means
-    // "unreadable" and makes the whole map's quality unknown (maxSteal)
-    val stealQJson = jmap(results.collect { case (k, v) if v >= 0 =>
-      k -> stealAtBest.getOrElse(k, -1.0) })
-    val parQJson = jmap(results.collect { case (k, v) if v >= 0 =>
-      k -> parAtBest.getOrElse(k, -1.0) })
-    val reruns = jmap(rerun.toSeq.sorted)
-    val stamp = passes.map(p =>
-      f"""{"wall":${p.wall}%.1f,"job_sum":${p.jobSum}%.1f""" +
-        f""","steal_sec":${p.stealSec}%.1f,"load_end":${p.loadEnd}%.1f}""")
-      .mkString("[", ",", "]")
-    // failed queries (−1 markers) are excluded from the headline total so
-    // an error can never improve the reported aggregate
-    val failedCount = results.count(_._2 < 0)
-    val total = results.map(_._2).filter(_ >= 0).sum
-    var archived = false
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$cpusN,"canary_cpu":$canaryCpu%.3f,"canary_mem":$canaryMem%.3f,"canary_par":$canaryPar%.3f,"queries":$qs,"load":$loads,"steal_q":$stealQJson,"canary_par_q":$parQJson,"outlier_rerun":$reruns,"rerun_base":"$rerunBase","rerun_base_steal":$rerunBaseSteal%.1f,"passes":$stamp,"failed":$failedCount,"quiet_wait_sec":$quietWaitSec%.1f,"quiet_last_steal":$quietLastSteal%.1f,"sf":"$sfDir"}"""
-    // The full per-query/load/rerun line goes ONLY to BENCH_LOCAL.json
-    // (VERDICT r10 #4): printing the ~8 KB map to stdout — first OR
-    // last — overflowed the driver's fixed-size tail capture five rounds
-    // running ("parsed": null). Stdout carries nothing but the slim
-    // summary line below. A per-round archive copy survives the next
-    // run's overwrite — it is the next run's outlier-comparison base
-    // (VERDICT r11 #1 / missing #3). SUBSET runs write a _partial file
-    // instead: neither discovery tier parses it, so local iteration can
-    // never shrink the comparison base.
-    val localOut = if (subset) "BENCH_LOCAL_partial.json" else "BENCH_LOCAL.json"
-    try java.nio.file.Files.write(java.nio.file.Paths.get(
-      localOut), (line + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $localOut: $e") }
-    // the round archive is a COMPOSITE FLOOR MAP (VERDICT r14 #1): two
-    // rounds of evidence say this box never offers a quiet window long
-    // enough for a whole battery pass, so instead of hoping for one, the
-    // archive merges per-query MINIMA across the round's runs — the
-    // ladder's rung-level best-of-N estimator generalized to the
-    // battery. Contention only ever INFLATES a query (steal, bandwidth
-    // theft, frequency theft all slow it down), so a lower observed time
-    // is strictly better evidence for the floor regardless of the run's
-    // overall weather; each floor carries the segment steal of the
-    // sample that provided it, and the archive's quality (maxSteal =
-    // max over steal_q) IMPROVES monotonically as short quiet windows
-    // are harvested. This subsumes the old whole-line protections per
-    // segment: a dirty run cannot raise a clean floor (min), a
-    // mixed-signature slower run contributes nothing (min), an
-    // unknown-steal sample never displaces a known-stamped floor
-    // (mergeFloors), and local subset runs can only IMPROVE floors of
-    // queries they ran, never record failures or shrink the battery.
-    // After a code change that legitimately slows queries, set
-    // SPARK_GRAFT_BENCH_FRESH=1 to reseed the composite from this run
-    // (the explicit override ADVICE r14 #3 asked for — without it the
-    // floors would pin superseded-code timings for the round).
-    val archive = archiveName(new java.io.File("."), sfTag(sfDir), cpus)
-    val fresh = sys.env.get("SPARK_GRAFT_BENCH_FRESH").contains("1")
-    val runFloors = Floors(
-      queries = results.toMap,
-      stealQ = results.collect { case (k, v) if v >= 0 =>
-        k -> stealAtBest.getOrElse(k, -1.0) }.toMap,
-      load = results.collect { case (k, v) if v >= 0 =>
-        k -> loadAtBest.getOrElse(k, -1.0) }.toMap,
-      sf = sfTag(sfDir),
-      mergedRuns = 1L,
-      canaryCpu = canaryCpu,
-      canaryMem = canaryMem,
-      canaryPar = canaryPar,
-      parQ = results.collect { case (k, v) if v >= 0 =>
-        k -> parAtBest.getOrElse(k, -1.0) }.toMap,
-      cpus = cpusN)
-    // an incumbent stamped with a DIFFERENT core count never merges
-    // (VERDICT r17 #2: the driver's 8-core run self-archived under the
-    // next round's canonical name and its lower floors would poison a
-    // 32-core composite); an unstamped incumbent (pre-r18 archive) is
-    // accepted — every committed canonical archive was 32-core.
-    val incFloors =
-      if (fresh) None
-      else (try Some(new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(archive)), "UTF-8"))
-        catch { case _: Throwable => None })
-        .flatMap(parseFloors).filter(_.sf == runFloors.sf)
-        .filter { f =>
-          val ok = f.cpus <= 0 || f.cpus == cpusN
-          if (!ok) System.err.println(s"[bench] incumbent $archive is a " +
-            s"${f.cpus}-core composite, this run is $cpusN-core: reseeding")
-          ok
-        }
-    val registered = Some(SparkEntry.queries.keySet)
-    val merged: Option[Floors] =
-      if (subset) incFloors.map(mergeFloors(_, runFloors, subset = true,
-        registered))
-      else Some(incFloors.map(mergeFloors(_, runFloors, subset = false,
-        registered)).getOrElse(runFloors))
-    merged match {
-      case Some(f) =>
-        archived = true
-        try java.nio.file.Files.write(java.nio.file.Paths.get(archive),
-          (renderFloors(f, sfDir) + "\n").getBytes("UTF-8"))
-        catch { case e: Throwable =>
-          archived = false
-          System.err.println(s"[bench] could not write $archive: $e") }
-        System.err.println(f"[bench] archive $archive: merged_runs=" +
-          f"${f.mergedRuns} floors_quality=${f.quality.getOrElse(-1.0)}%.2f" +
-          (if (fresh) " (FRESH reseed)" else ""))
-      case None =>
-        System.err.println(s"[bench] subset run with no same-sf composite " +
-          s"incumbent: not archiving to $archive")
+        loadEnd = os.getSystemLoadAverage,
+        cpus = cpusN,
+        host = host)
     }
     // Stop BEFORE the final line so Spark's shutdown logging cannot land
     // after it: the LAST stdout line (before sbt's own footer) is then
     // always one complete JSON object, un-prefixed thanks to
     // `run / outputStrategy := StdoutOutput` in build.sbt.
-    // BENCH_LOCAL.json holds the full per-query/load/rerun detail.
     spark.stop()
-    // the slim line surfaces the COMPOSITE's state too (total over
-    // floors, merged-run count, worst floor-provider steal): the driver
-    // artifact's tail then records the harvested-floor quality without
-    // carrying the ~8 KB maps
-    val floorsTotal = merged.map(_.total).getOrElse(-1.0)
-    val floorsSteal = merged.flatMap(_.quality).getOrElse(-1.0)
-    val mergedRuns = merged.map(_.mergedRuns).getOrElse(0L)
-    // canary-normalized view of the composite (VERDICT r15 #1) so the
-    // driver artifact's tail records both raw and normalized totals
-    val (consScale, parScale) = merged.map(f => canaryScales(canaryRef(),
-      (f.canaryCpu, f.canaryMem, f.canaryPar))).getOrElse((1.0, 1.0))
-    val normParq = merged.map(normParQ(_, canaryRef()._3)).getOrElse(-1.0)
-    val lastFailedN = merged.map(_.lastFailed.size).getOrElse(0)
-    val brokenN = merged.map(_.broken).getOrElse(failedCount)
+
+    val stats = ordered.map { case (name, _) =>
+      name -> queryStats(samples(name).toSeq) }
+    val total = battery(stats)
+    val failedCount = stats.count(_._2.isEmpty)
+    val tag = sfTag(sfDir)
+    val files = outputFiles(subset, host, cpus, tag)
+    val line = fullLine(total, failedCount, cpusN, host, stats, passes, sfDir)
+    val written = files.filter { f =>
+      try {
+        java.nio.file.Files.write(java.nio.file.Paths.get(f),
+          (line + "\n").getBytes("UTF-8"))
+        true
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write $f: $e"); false }
+    }
+    val archive = files.drop(1).find(written.contains).getOrElse("none")
+    val stealSec = passes.map(_.stealSec)
+    val steal = if (stealSec.exists(_ < 0)) -1.0 else stealSec.sum
     val slimTail =
-      f""","canary_cpu":$canaryCpu%.3f,"canary_mem":$canaryMem%.3f,"canary_par":$canaryPar%.3f,"canary_scale_cons":$consScale%.3f,"canary_scale_par":$parScale%.3f,"floors_norm_cons":${if (floorsTotal > 0) floorsTotal / consScale else -1.0}%.3f,"floors_norm_par":${if (floorsTotal > 0) floorsTotal / parScale else -1.0}%.3f,"rerun_base":"$rerunBase","rerun_base_steal":$rerunBaseSteal%.1f,"reran":${rerun.size},"archived":$archived,"merged_runs":$mergedRuns,"floors_total":$floorsTotal%.3f,"floors_steal":$floorsSteal%.2f,"last_failed":$lastFailedN,"quiet_wait_sec":$quietWaitSec%.1f,"quiet_last_steal":$quietLastSteal%.1f,"passes":$stamp,"sf":"$sfDir","full":"$localOut"}"""
-    println(slimLine(tailHead(total, normParq, failedCount, brokenN) +
-      s""","cpus":$cpusN""", slimTail, results))
+      f""","host":"${jsonEscape(host)}","runs":$runs,"steal_sec":$steal%.1f,"archive":"$archive","sf":"${jsonEscape(sfDir)}","full":"${files.head}"}"""
+    println(slimLine(tailHead(total, failedCount, cpusN), slimTail,
+      stats.map { case (q, s) => q -> s.fold(-1.0)(_.min) }))
   }
+
+  /** min / median / spread (max − min) of a query's successful samples. */
+  final case class QueryStats(min: Double, median: Double, spread: Double)
+
+  /** Stats over one query's per-pass samples (`None` = that pass failed).
+    * A later successful pass clears an earlier failure; the query counts
+    * as failed (`None`) only when every pass failed. */
+  def queryStats(passes: Seq[Option[Double]]): Option[QueryStats] = {
+    val ok = passes.flatten.sorted
+    if (ok.isEmpty) None
+    else {
+      val mid = ok.size / 2
+      val median =
+        if (ok.size % 2 == 1) ok(mid) else (ok(mid - 1) + ok(mid)) / 2
+      Some(QueryStats(ok.head, median, ok.last - ok.head))
+    }
+  }
+
+  /** The headline `value`: the sum of each query's best-of-N. A failed
+    * query is left out, so an error can never improve the total. */
+  def battery(stats: Seq[(String, Option[QueryStats])]): Double =
+    stats.flatMap(_._2).map(_.min).sum
+
+  /** One pass's run-quality stamp: wall seconds, listener-summed job
+    * seconds, /proc/stat steal seconds (-1 unreadable), the 1-minute
+    * load at pass end, and the core count and host it ran on. */
+  final case class PassStamp(wall: Double, jobSum: Double, stealSec: Double,
+      loadEnd: Double, cpus: Int, host: String) {
+    def json: String =
+      f"""{"wall":$wall%.1f,"job_sum":$jobSum%.1f,"steal_sec":$stealSec%.1f,"load_end":$loadEnd%.1f,"cpus":$cpus,"host":"${jsonEscape(host)}"}"""
+  }
+
+  /** The full per-query line written to the local file and the archive:
+    * `queries` holds each query's min (the shape [[parseBenchLine]]
+    * reads), `median` and `spread` the rest of its stats, `-1` in all
+    * three for a query that failed in every pass. */
+  def fullLine(total: Double, failed: Int, cpus: Int, host: String,
+      stats: Seq[(String, Option[QueryStats])], passes: Seq[PassStamp],
+      sfDir: String): String = {
+    def field(f: QueryStats => Double): String =
+      jmap(stats.map { case (q, s) => q -> s.fold(-1.0)(f) })
+    tailHead(total, failed, cpus) +
+      s""","host":"${jsonEscape(host)}","runs":${passes.size}""" +
+      s""","queries":${field(_.min)},"median":${field(_.median)}""" +
+      s""","spread":${field(_.spread)}""" +
+      s""","passes":${passes.map(_.json).mkString("[", ",", "]")}""" +
+      s""","sf":"${jsonEscape(sfDir)}"}"""
+  }
+
+  /** Files a run writes its full line to, the local file first. A subset
+    * run writes only `BENCH_LOCAL_partial.json`, so local iteration on a
+    * few queries can never overwrite the full-battery file or an archive;
+    * a full run writes `BENCH_LOCAL.json` and its own archive. */
+  def outputFiles(subset: Boolean, host: String, cpus: String,
+      tag: String): Seq[String] =
+    if (subset) Seq("BENCH_LOCAL_partial.json")
+    else Seq("BENCH_LOCAL.json", archiveName(host, cpus, tag))
+
+  /** Archive name of a full run, keyed by everything its timings depend
+    * on besides the code: scale, core count and host. */
+  def archiveName(host: String, cpus: String, tag: String): String =
+    s"BENCH_LOCAL_${tag}_c${cpus}_${host.replaceAll("[^A-Za-z0-9.-]", "_")}.json"
+
+  /** Host stamped on every pass and into the archive name. */
+  private def hostName(): String =
+    try java.net.InetAddress.getLocalHost.getHostName
+    catch { case _: Throwable => sys.env.getOrElse("HOSTNAME", "unknown") }
 
   /** The driver's stdout capture keeps only the LAST [[TailCaptureChars]]
     * characters and parses the bench line out of THAT (every committed
-    * `BENCH_r*.json` carries a tail of exactly 2000 chars; the r10-era
-    * full-map line overflowed it and parsed as null for five rounds).
-    * A per-query map therefore rides the stdout line ONLY when the whole
-    * line still fits the capture with room for the runner's footer
-    * (VERDICT r17 #1 asked for the map back; for the full 123-query
-    * battery the query NAMES alone sum past the budget — see
-    * OPTIMIZATION_r18.md for the byte math — so the full battery keeps
-    * the slim line + `"full"` file pointer, while subset runs, which DO
-    * fit, carry their map inline). */
+    * `BENCH_r*.json` carries a tail of exactly 2000 chars; a full-map
+    * line overflowed it and parsed as null for five rounds). A per-query
+    * map therefore rides the stdout line ONLY when the whole line still
+    * fits the capture with room for the runner's footer: for the full
+    * 123-query battery the query names alone exceed the budget, so it
+    * keeps the slim line + `"full"` file pointer, while subset runs carry
+    * their map inline. */
   val TailCaptureChars = 2000
   val TailFooterReserveChars = 120
   def slimLine(head: String, tail: String,
@@ -405,740 +234,26 @@ object Bench {
 
   /** Render a per-query seconds map as a compact JSON object.
     * `decimals` trades precision for line length (the stdout slim line
-    * uses 2, the archived full lines keep 3). */
+    * uses 2, the full lines keep 3). */
   private def jmap(m: Seq[(String, Double)], decimals: Int = 3): String = {
     val fmt = s"%.${decimals}f"
     m.map { case (k, v) => "\"" + k + "\":" + fmt.format(v) }
       .mkString("{", ",", "}")
   }
 
-  /** Head of the slim stdout summary line (VERDICT r16 #7): the raw
-    * total stays FIRST — it has been the driver tail's anchor since r1
-    * and is never replaced — but the sharpest normalized view
-    * (`floors_norm_parq`, the composite total with each floor divided
-    * by its own sample's probed machine slowdown) is promoted from
-    * mid-line to ride directly beside it, and the combined broken
-    * count (`failed` this run + surviving `last_failed` markers, as a
-    * set — ADVICE r16 #3) follows, so a reader anchoring on the front
-    * of the line can miss neither the normalized story nor a query
-    * that is broken behind a healthy-looking floor. */
-  def tailHead(total: Double, normParq: Double, failed: Int,
-      broken: Int): String =
-    f"""{"metric":"total","value":$total%.3f,"unit":"sec","floors_norm_parq":$normParq%.3f,"failed":$failed,"broken":$broken"""
+  private def jsonEscape(s: String): String =
+    s.replace("\\", "\\\\").replace("\"", "\\\"")
 
-  /** Best-of-3 of three fixed machine-speed loops: (register-LCG
-    * seconds, single-thread 256 MB stream-sum seconds, ALL-CORES
-    * parallel stream-sum seconds). Pure JVM, no allocation inside the
-    * timed regions — the measured work is identical on every run
-    * forever, so any delta is the machine. The parallel leg exists
-    * because the single-thread pair can read clean while the box is
-    * still slow: neighbor-VM pressure on the shared memory controllers
-    * only shows when all cores pull at once (observed live in r15 —
-    * canary_cpu/mem flat across runs whose floors sat ~1.5x over the
-    * clean r12 base). */
-  def canary(): (Double, Double, Double) = {
-    val mem = new Array[Long](32 * 1024 * 1024) // 256 MB, touched once
-    java.util.Arrays.fill(mem, 0x9E3779B97F4A7C15L)
-    val sink = new java.util.concurrent.atomic.AtomicLong
-    def cpuOnce(): Double = {
-      val t0 = System.nanoTime()
-      var x = 88172645463325252L
-      var i = 0
-      while (i < 200000000) {
-        x = x * 6364136223846793005L + 1442695040888963407L
-        i += 1
-      }
-      sink.addAndGet(x)
-      (System.nanoTime() - t0) / 1e9
-    }
-    def sumRange(from: Int, until: Int, passes: Int): Long = {
-      var s = 0L
-      var pass = 0
-      while (pass < passes) {
-        var i = from
-        while (i < until) { s += mem(i); i += 1 }
-        pass += 1
-      }
-      s
-    }
-    def memOnce(): Double = {
-      val t0 = System.nanoTime()
-      sink.addAndGet(sumRange(0, mem.length, 4))
-      (System.nanoTime() - t0) / 1e9
-    }
-    val r = ((1 to 3).map(_ => cpuOnce()).min,
-      (1 to 3).map(_ => memOnce()).min,
-      (1 to 3).map(_ => parStreamSumSeconds(mem, sink)).min)
-    if (sink.get == 42L) System.err.println("[bench] canary sink") // live
-    r
-  }
-
-  // shared buffer for the per-segment parallel-leg probe: allocated once
-  // per process so probing before every sample costs memory traffic, not
-  // allocation + page faults
-  private lazy val probeBuf: Array[Long] = {
-    val a = new Array[Long](32 * 1024 * 1024) // 256 MB
-    java.util.Arrays.fill(a, 0x9E3779B97F4A7C15L)
-    a
-  }
-  private val probeSink = new java.util.concurrent.atomic.AtomicLong
-
-  /** One-shot all-cores parallel stream-sum over the shared buffer — the
-    * [[canary]] parallel leg as a ~tens-of-ms probe, cheap enough to run
-    * immediately BEFORE and AFTER every measured sample (the stamp is
-    * the MIN of the two endpoint probes — ADVICE r16 #1). The run-level
-    * canary is measured once at startup, but floors are per SEGMENT and
-    * this box's weather turns in minutes (PROFILE round-15a), so a
-    * run-level triple cannot say what the machine looked like when a
-    * particular floor was taken; the endpoint pair can, and its stamp
-    * travels with the floor like the segment steal does.
-    *
-    * Interpretation caveats (ADVICE r16 #1, measured in PROFILE r17):
-    *   - the PRE-sample probe runs ~4 GB of all-core memory traffic
-    *     right before the timed query, so it evicts up to 256 MB of
-    *     cache and briefly saturates the cores the sample is about to
-    *     use. Measured against probe-free runs this perturbs trivial
-    *     (<0.5 s) queries by low single-digit ms and is lost in noise
-    *     on multi-second ones — but floors for sub-100 ms segments
-    *     should be read as carrying that overhead;
-    *   - the buffer deliberately stays at 256 MB, NOT the 32-64 MB a
-    *     smaller-pin redesign would suggest: this box advertises a
-    *     260 MB shared L3 with 2 MB per-core L2 (lscpu), so a 64 MB
-    *     buffer means 2 MB per-thread slices that go L2-resident on
-    *     re-pass and stop measuring the SHARED resource the probe
-    *     exists to sense; and any change to the probe's work would
-    *     split stamp units against every canary_par_q already merged
-    *     into the round's composite (normParQ divides floor-by-floor,
-    *     so one archive must carry one unit). The 256 MB pin is 0.4%
-    *     of the 64 g bench heap. */
-  def canaryParProbe(): Double = {
-    val sec = parStreamSumSeconds(probeBuf, probeSink)
-    if (probeSink.get == 42L) System.err.println("[bench] probe sink")
-    sec
-  }
-
-  /** THE parallel canary leg's measured work, defined once: all cores
-    * stream-sum disjoint slices of `mem`, 16 passes each (last thread
-    * takes the remainder), elapsed seconds returned. [[canary]]'s
-    * run-level leg and [[canaryParProbe]]'s per-segment probe both call
-    * this — two private copies of the loop could silently de-calibrate
-    * the run triple against the per-floor stamps that normalize every
-    * committed composite (VERDICT r17 next-round #7 / ADVICE r17). */
-  def parStreamSumSeconds(mem: Array[Long],
-      sink: java.util.concurrent.atomic.AtomicLong): Double = {
-    val n = Runtime.getRuntime.availableProcessors()
-    val slice = mem.length / n
-    val t0 = System.nanoTime()
-    val threads = (0 until n).map { k =>
-      val th = new Thread(() => {
-        var s = 0L
-        var pass = 0
-        val until = if (k == n - 1) mem.length else (k + 1) * slice
-        while (pass < 16) {
-          var i = k * slice
-          while (i < until) { s += mem(i); i += 1 }
-          pass += 1
-        }
-        sink.addAndGet(s)
-      })
-      th.start(); th
-    }
-    threads.foreach(_.join())
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** A composite per-query floor map (VERDICT r14 #1): for each query
-    * the LOWEST time any of the round's runs observed, with the segment
-    * steal and load stamped at the sample that provided it. `queries`
-    * uses -1 as the failed marker; `stealQ`/`load` carry entries only
-    * for non-failed queries (-1 inside them = stamp unreadable). */
-  final case class Floors(
-      queries: Map[String, Double],
-      stealQ: Map[String, Double],
-      load: Map[String, Double],
-      sf: String,
-      mergedRuns: Long,
-      // best (minimum) machine-speed canary triple seen by any merged
-      // run: the round's cleanest weather, -1 unknown (see [[canary]])
-      canaryCpu: Double = -1.0,
-      canaryMem: Double = -1.0,
-      canaryPar: Double = -1.0,
-      // queries that FAILED in the most recent merged run while their
-      // floor survived on older evidence (ADVICE r15 #1): the floor map
-      // alone would read failed=0 for a query newly broken mid-round —
-      // this marker surfaces the run-level failure without discarding
-      // the still-valid floor evidence; a later success clears it
-      lastFailed: Set[String] = Set.empty,
-      // per-floor machine-speed stamp: the parallel canary leg probed
-      // immediately before each floor's providing sample (VERDICT r15
-      // #1 — travels with the floor like stealQ; absent on floors from
-      // pre-r16 lines, which then get NO normalization credit)
-      parQ: Map[String, Double] = Map.empty,
-      // core count the floors were measured at (VERDICT r17 #2: an
-      // 8-core scaling run must never merge into — or silently BE — the
-      // canonical 32-core composite); -1 = pre-r18 archive, unknown
-      cpus: Int = -1) {
-    def total: Double = queries.values.filter(_ >= 0).sum
-    def failed: Int = queries.values.count(_ < 0)
-    /** Queries currently believed broken: a -1 floor OR a run-level
-      * failure marker, counted as a set union (a no-incumbent failure
-      * carries both). With keep-incumbent-on-failure semantics a
-      * composite can read failed=0 while a query is broken right now
-      * (only `lastFailed` reveals it) — this is the single combined
-      * count an external consumer can key off without knowing about
-      * the marker field (ADVICE r16 #3). */
-    def broken: Int =
-      (queries.collect { case (q, v) if v < 0 => q }.toSet ++
-        lastFailed).size
-    /** Worst floor-provider segment steal — the composite's quality
-      * stamp. None when any non-failed floor is unstamped (strict:
-      * unknown never reads as clean). */
-    def quality: Option[Double] = {
-      val ss = queries.collect { case (k, v) if v >= 0 =>
-        stealQ.getOrElse(k, -1.0) }
-      if (ss.isEmpty || ss.exists(_ < 0)) None else Some(ss.max)
-    }
-  }
-
-  /** Parse a top-level bench/archive line into [[Floors]]. Accepts both
-    * composite archives (merged_runs present) and plain run lines (r14-
-    * era lines without steal_q parse with an empty stamp map — their
-    * floors then read as unstamped and any stamped sample may take
-    * them). Fails soft. */
-  def parseFloors(text: String): Option[Floors] = {
-    import org.json4s._
-    def numMap(v: JValue): Map[String, Double] = v match {
-      case JObject(kvs) => kvs.collect {
-        case (k, JDouble(x)) => k -> x
-        case (k, JDecimal(x)) => k -> x.toDouble
-        case (k, JInt(x)) => k -> x.toDouble
-      }.toMap
-      case _ => Map.empty
-    }
-    try {
-      val v = org.json4s.jackson.JsonMethods.parse(text)
-      val qs = numMap(v \ "queries")
-      val tag = v \ "sf" match {
-        case JString(s) => Some(sfTag(s))
-        case _ => None
-      }
-      def num(x: JValue): Double = x match {
-        case JDouble(d) => d
-        case JDecimal(d) => d.toDouble
-        case JInt(n) => n.toDouble
-        case _ => -1.0
-      }
-      tag.filter(_ => qs.nonEmpty).map(t => Floors(
-        queries = qs,
-        stealQ = numMap(v \ "steal_q"),
-        load = numMap(v \ "load"),
-        sf = t,
-        mergedRuns = v \ "merged_runs" match {
-          case JInt(n) => n.toLong
-          case JDouble(n) => n.toLong
-          case _ => 1L
-        },
-        canaryCpu = num(v \ "canary_cpu"),
-        canaryMem = num(v \ "canary_mem"),
-        canaryPar = num(v \ "canary_par"),
-        lastFailed = v \ "last_failed" match {
-          case JArray(xs) => xs.collect { case JString(s) => s }.toSet
-          case _ => Set.empty
-        },
-        // -1 entries mean "probe unreadable at the providing sample" —
-        // drop them so absent and unreadable read the same way (no
-        // normalization credit, [[normParQ]])
-        parQ = numMap(v \ "canary_par_q").filter(_._2 > 0),
-        cpus = v \ "cpus" match {
-          case JInt(n) => n.toInt
-          case JDouble(n) => n.toInt
-          case _ => -1
-        }))
-    } catch { case _: Throwable => None }
-  }
-
-  /** Merge one run into the incumbent composite — the per-segment floor
-    * estimator (VERDICT r14 #1). Rules, per query:
-    *   - lower time wins (contention only inflates, so the min is always
-    *     admissible evidence for the floor) — EXCEPT a sample with an
-    *     UNKNOWN segment steal never displaces a stamped floor: an
-    *     unreadable /proc means an environment this box's comparisons
-    *     don't cover, and "unknown never displaces known" stays strict
-    *     per segment (the whole-line rule's successor);
-    *   - a full run DEFINES the battery: its key set replaces the
-    *     incumbent's (renamed/removed queries do not linger). A query
-    *     that failed every pass and has NO incumbent floor records -1
-    *     honestly; one that failed but HAS an incumbent floor keeps it —
-    *     past floor evidence stays valid (contention and flakes only
-    *     ever inflate or break a run, never make the true floor higher)
-    *     — and the run-level failure is surfaced in `lastFailed`
-    *     instead, so a query newly broken mid-round is visible without
-    *     a FRESH reseed (ADVICE r15 #1). Any success clears the marker;
-    *   - a SUBSET run (local iteration) may only IMPROVE floors of the
-    *     queries it ran and SEED floors for queries registered since the
-    *     incumbent's last full run (VERDICT r15 #7 — without seeding,
-    *     every battery addition would demand a full run in a quiet
-    *     window, re-creating the problem floors solved): incumbent keys
-    *     are kept, a successful new-to-the-composite query is added, no
-    *     failures are ever recorded as -1 (they surface in `lastFailed`
-    *     only), nothing shrinks — the r14 solo-run base-shrink incident
-    *     stays impossible while short quiet windows can still be
-    *     harvested one query at a time. When `registered` is given
-    *     (main passes the battery's key set), a subset run may only
-    *     seed keys that are REGISTERED queries — a typo'd or
-    *     since-removed experimental key from local iteration must not
-    *     enter the composite and later read as a legitimate floor
-    *     (ADVICE r16 #2; main's filterKeys already drops unknown args,
-    *     so this is the merge-layer backstop for floors built by other
-    *     tools). */
-  def mergeFloors(inc: Floors, run: Floors, subset: Boolean,
-      registered: Option[Set[String]] = None): Floors = {
-    val keys =
-      if (subset)
-        // seed only SUCCEEDED new queries that the battery actually
-        // registers: a failed or unregistered key must not enter the
-        // battery from local iteration
-        inc.queries.keySet ++
-          run.queries.collect { case (q, v)
-            if v >= 0 && registered.forall(_.contains(q)) => q }
-      else run.queries.keySet
-    val picked = keys.toSeq.map { q =>
-      val rv = run.queries.get(q).filter(_ >= 0)
-      val iv = inc.queries.get(q).filter(_ >= 0)
-      val takeRun = (rv, iv) match {
-        case (Some(_), None) => true
-        case (None, _) => false
-        case (Some(r), Some(i)) =>
-          val sN = run.stealQ.getOrElse(q, -1.0)
-          val sI = inc.stealQ.getOrElse(q, -1.0)
-          r < i && !(sN < 0 && sI >= 0)
-      }
-      if (takeRun)
-        (q, rv.get, run.stealQ.get(q), run.load.get(q), run.parQ.get(q))
-      else if (iv.isDefined)
-        (q, iv.get, inc.stealQ.get(q), inc.load.get(q), inc.parQ.get(q))
-      else if (subset)
-        (q, inc.queries.getOrElse(q, -1.0), inc.stealQ.get(q),
-          inc.load.get(q), inc.parQ.get(q))
-      else (q, -1.0, Option.empty[Double], Option.empty[Double],
-        Option.empty[Double])
-    }
-    def minPos(a: Double, b: Double): Double =
-      Seq(a, b).filter(_ > 0) match {
-        case Nil => -1.0
-        case xs => xs.min
-      }
-    // run-level failure markers: a failure in THIS run sets the marker,
-    // a success in this run clears it, untouched queries keep theirs;
-    // markers are pruned to the merged key set so renamed queries drop
-    val succeeded = run.queries.collect { case (q, v) if v >= 0 => q }.toSet
-    val failedNow = run.queries.collect { case (q, v) if v < 0 => q }.toSet
-    Floors(
-      queries = picked.map(p => p._1 -> p._2).toMap,
-      stealQ = picked.flatMap(p => p._3.map(p._1 -> _)).toMap,
-      load = picked.flatMap(p => p._4.map(p._1 -> _)).toMap,
-      sf = inc.sf,
-      mergedRuns = inc.mergedRuns + 1,
-      canaryCpu = minPos(inc.canaryCpu, run.canaryCpu),
-      canaryMem = minPos(inc.canaryMem, run.canaryMem),
-      canaryPar = minPos(inc.canaryPar, run.canaryPar),
-      lastFailed = ((inc.lastFailed -- succeeded) ++ failedNow) & keys,
-      parQ = picked.flatMap(p => p._5.map(p._1 -> _)).toMap,
-      // the caller guarantees inc/run core counts are compatible (main
-      // discards cpu-mismatched incumbents); a stamped run upgrades an
-      // unstamped legacy incumbent
-      cpus = if (run.cpus > 0) run.cpus else inc.cpus)
-  }
-
-  /** The composite archive line. Shape-compatible with every consumer:
-    * `queries`+`sf` for [[parseBenchLine]], `steal_q` for [[maxSteal]]
-    * (whose strict per-segment rule replaces the pass-level one when the
-    * key is present), `merged_runs` for the next merge. Also stamps the
-    * canary-normalized view (VERDICT r15 #1): the raw total, the
-    * per-leg canary ratios vs [[canaryRef]], and the two normalized
-    * totals [[canaryScales]] defines — recomputed at render time so the
-    * archive always reflects the current reference. */
-  def renderFloors(f: Floors, sfDir: String): String = {
-    val ordered = f.queries.toSeq.sortBy(_._1)
-    val qs = jmap(ordered)
-    val stealQ = jmap(ordered.collect { case (k, v) if v >= 0 =>
-      k -> f.stealQ.getOrElse(k, -1.0) })
-    val loads = jmap(ordered.collect { case (k, v) if v >= 0 =>
-      k -> f.load.getOrElse(k, -1.0) })
-    val lastFailed = f.lastFailed.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val parQ = jmap(ordered.collect { case (k, v) if v >= 0 =>
-      k -> f.parQ.getOrElse(k, -1.0) })
-    val (cons, par) = canaryScales(canaryRef(),
-      (f.canaryCpu, f.canaryMem, f.canaryPar))
-    // record the REFERENCE the normalized fields were rendered under:
-    // without it, a SPARK_GRAFT_CANARY_REF re-anchor leaves old
-    // archives' floors_norm_* silently computed against a different
-    // anchor than new ones, and no reader can tell (r17 self-review)
-    val refStr = { val r = canaryRef()
-      f"""[${r._1}%.3f,${r._2}%.3f,${r._3}%.3f]""" }
-    f"""{"metric":"total","value":${f.total}%.3f,"unit":"sec","composite":true,"merged_runs":${f.mergedRuns},"cpus":${f.cpus},"canary_cpu":${f.canaryCpu}%.3f,"canary_mem":${f.canaryMem}%.3f,"canary_par":${f.canaryPar}%.3f,"canary_ref":$refStr,"canary_scale_cons":$cons%.3f,"canary_scale_par":$par%.3f,"floors_norm_cons":${f.total / cons}%.3f,"floors_norm_par":${f.total / par}%.3f,"floors_norm_parq":${normParQ(f, canaryRef()._3)}%.3f,"queries":$qs,"load":$loads,"steal_q":$stealQ,"canary_par_q":$parQ,"failed":${f.failed},"broken":${f.broken},"last_failed":$lastFailed,"sf":"$sfDir"}"""
-  }
-
-  /** Per-floor canary-normalized total: each floor divided by ITS
-    * providing sample's parallel-leg slowdown vs the reference —
-    * `max(1, par_q / refPar)` — so the normalization is temporally
-    * aligned with the sample instead of with the run's startup triple.
-    * A floor with no stamp (pre-r16 provider, or an unreadable probe)
-    * gets NO credit: unknown weather never discounts a floor. Like the
-    * par scale, this is the bandwidth-bound UPPER bound on credit per
-    * floor; the composite cons scale stays the lower bound. */
-  def normParQ(f: Floors, refPar: Double): Double =
-    f.queries.collect { case (q, v) if v >= 0 =>
-      val p = f.parQ.getOrElse(q, -1.0)
-      if (p > 0 && refPar > 0) v / math.max(1.0, p / refPar) else v
-    }.sum
-
-  /** Reference machine-speed canary triple — the cleanest weather this
-    * box has ever committed: the round-15 composite's merged minima
-    * (BENCH_LOCAL_r15.json, merged_runs=19, canary_cpu/mem/par). All
-    * canary-ratio telemetry anchors here; override with
-    * SPARK_GRAFT_CANARY_REF="cpu,mem,par" after a hardware change. */
-  val CanaryRefDefault: (Double, Double, Double) = (0.248, 0.161, 0.021)
-
-  def canaryRef(): (Double, Double, Double) =
-    sys.env.get("SPARK_GRAFT_CANARY_REF").flatMap { s =>
-      s.split(',') match {
-        case Array(a, b, c) =>
-          for (x <- a.trim.toDoubleOption; y <- b.trim.toDoubleOption;
-               z <- c.trim.toDoubleOption) yield (x, y, z)
-        case _ => None
-      }
-    }.getOrElse(CanaryRefDefault)
-
-  /** Canary-normalized floor scales (VERDICT r15 #1): how much of a
-    * composite's inflation over a clean-day archive is attributable to
-    * the MACHINE being slower, per the fixed-work canary triple.
-    *
-    * Returns (consScale, parScale), both >= 1; divide raw floors by a
-    * scale to get its normalized view:
-    *   - consScale = the SMALLEST per-leg slowdown vs the reference —
-    *     the machine-attributable inflation every leg agrees on, so
-    *     floors/consScale is the CONSERVATIVE normalized total (a lower
-    *     bound on the credit: a flat single-thread leg caps it at ~1
-    *     even when the parallel leg is swinging);
-    *   - parScale = the all-cores parallel leg's slowdown alone — the
-    *     leg that tracks neighbor-VM aggregate-bandwidth pressure
-    *     (PROFILE round-15a), so floors/parScale is the UPPER bound on
-    *     the credit (exact only if the workload were purely
-    *     bandwidth-bound; Spark batteries are not, so the truth sits
-    *     between the two normalized totals).
-    * A faster-than-reference leg clamps to 1 (normalization must never
-    * INFLATE floors), and any unreadable leg (-1) makes its scale 1 —
-    * no credit without evidence. This makes the weather-attribution
-    * claim self-testing: on a genuinely quiet day both scales read 1.0
-    * and normalized == raw. */
-  def canaryScales(ref: (Double, Double, Double),
-      c: (Double, Double, Double)): (Double, Double) = {
-    def leg(t: Double, r: Double): Option[Double] =
-      if (t > 0 && r > 0) Some(math.max(1.0, t / r)) else None
-    val legs = Seq(leg(c._1, ref._1), leg(c._2, ref._2), leg(c._3, ref._3))
-    val cons = if (legs.exists(_.isEmpty)) 1.0 else legs.flatten.min
-    (cons, leg(c._3, ref._3).getOrElse(1.0))
-  }
-
-  /** Block until a measured-quiet window or the wait budget runs out:
-    * sample the /proc/stat steal delta over `windowSec`-second windows
-    * and return as soon as one stays within `stealBudgetSec`. Returns
-    * (seconds waited BEFORE the final window, last window's steal; -1
-    * when steal is unreadable or the launcher is disabled). The final
-    * sampled-quiet window sits immediately before the first battery
-    * pass, so the measurement starts in weather the stamp just
-    * certified. `ticks` is the steal source — injectable so the
-    * give-up paths (a box that never goes quiet) are spec-drivable
-    * without a real contention burst (VERDICT r16 #6). */
-  def awaitQuietWindow(
-      windowSec: Int, stealBudgetSec: Double, maxWaitSec: Int,
-      ticks: () => Option[Long] = () => stealTicks()): (Double, Double) = {
-    if (maxWaitSec <= 0 || windowSec <= 0 || ticks().isEmpty)
-      return (0.0, -1.0)
-    val t0 = System.nanoTime()
-    var last = -1.0
-    var done = false
-    var lastWindow = 0L
-    var passed = false
-    while (!done) {
-      // never sleep past the configured bound: the first window used to
-      // run full-length regardless, so maxWaitSec < windowSec silently
-      // floored the wait at one whole window (45 s for a 10 s budget)
-      val remaining = maxWaitSec - (System.nanoTime() - t0) / 1e9
-      val thisWindow = math.min(windowSec.toLong, math.ceil(remaining).toLong)
-      // a truncated window below HALF length cannot certify anything
-      // meaningful — its pro-rated budget drops under the 10 ms steal
-      // tick and a 1 s sample would pass on no evidence (ADVICE r14 #2)
-      // — so give up and proceed on the unstamped-weather path instead
-      if (thisWindow * 2 < windowSec) {
-        System.err.println(f"[bench] no quiet window within $maxWaitSec s " +
-          f"(remaining budget $remaining%.0f s is under half a " +
-          f"${windowSec}s window) — proceeding; the stamps carry the " +
-          "weather")
-        done = true
-      } else {
-        val s0 = ticks()
-        lastWindow = thisWindow
-        Thread.sleep(thisWindow * 1000L)
-        last = (for (a <- s0; b <- ticks())
-          yield (b - a) / userHz).getOrElse(-1.0)
-        // a short final window sees proportionally less steal: scale the
-        // budget so the pass/fail bar means the same rate (only ever
-        // down to half, per the guard above)
-        val budget = stealBudgetSec * thisWindow / windowSec
-        val waited = (System.nanoTime() - t0) / 1e9
-        if (last < 0 || last <= budget) {
-          // only a readable sample within budget is a PASS — an
-          // unreadable /proc mid-loop proceeds unstamped, not certified
-          passed = last >= 0
-          done = true
-        }
-        else if (waited + windowSec > maxWaitSec &&
-            maxWaitSec - waited < windowSec / 2.0) {
-          System.err.println(f"[bench] no quiet window within $maxWaitSec s " +
-            f"(last ${thisWindow}s window: steal $last%.1f s) — " +
-            "proceeding; the stamps carry the weather")
-          done = true
-        } else System.err.println(
-          f"[bench] waiting out contention (steal $last%.1f s / " +
-            f"${thisWindow}s window, ${waited}%.0f s waited)")
-      }
-    }
-    // report wait EXCLUDING the final window ONLY when it passed (the
-    // sample that passed is measurement, not waiting); on the give-up
-    // paths every window was waiting, so the full elapsed time is the
-    // honest quiet_wait_sec (ADVICE r15 #3 — the old unconditional
-    // subtraction undercounted a refused wait by up to windowSec)
-    val elapsed = (System.nanoTime() - t0) / 1e9
-    (math.max(0.0, if (passed) elapsed - lastWindow else elapsed), last)
-  }
-
-  final case class PassStamp(
-      wall: Double, jobSum: Double, stealSec: Double, loadEnd: Double)
-
-  /** The driver's artifact naming contract, defined ONCE: both round
-    * inference (archiveName) and base discovery (previousRun) key off
-    * this — two private copies could desynchronize silently. */
-  private val DriverArtifact = """BENCH_r(\d+)\.json""".r
+  /** Head of every bench line: the raw total FIRST — the anchor tail
+    * parsers have keyed on since r1 — then the failed-query count and the
+    * core count. */
+  def tailHead(total: Double, failed: Int, cpus: Int): String =
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","failed":$failed,"cpus":$cpus"""
 
   /** Short scale tag of an sf directory — `/root/testdata/sf0.1` →
-    * `sf0.1`. Comparison bases are only valid WITHIN a scale: a 3x test
-    * against an sf0.01 base would solo-rerun the entire sf0.1 battery. */
+    * `sf0.1`. */
   def sfTag(sfDir: String): String =
     sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-
-  /** Core count of the driver's canonical bench runs; archives at any
-    * other count are name-suffixed like non-canonical scales are. */
-  val CanonicalCpus = "32"
-
-  /** Archive file name for this run: `BENCH_LOCAL_r<round>.json` at the
-    * driver's canonical sf0.1 scale (the name VERDICT r11 prescribes),
-    * `BENCH_LOCAL_r<round>_<tag>.json` at any other scale so a local
-    * sf0.01 ladder run can never clobber the round's canonical archive,
-    * and `..._c<cpus>.json` at any non-canonical core count (VERDICT
-    * r17 #2: the driver's 8-core scaling run archived itself under the
-    * canonical next-round name and would have min-merged its — mostly
-    * LOWER at this SF — floors into the 32-core composite).
-    * The round is the newest driver `BENCH_r<N>.json` + 1 (the driver
-    * writes its artifact AFTER the round ends, so during round N+1 the
-    * newest is N); 1 when no driver artifact exists. */
-  def archiveName(dir: java.io.File, tag: String,
-      cpus: String = CanonicalCpus): String = {
-    val newest = Option(dir.listFiles()).getOrElse(Array.empty)
-      .flatMap(f => f.getName match {
-        case DriverArtifact(n) => n.toLongOption
-        case _ => None
-      }).sorted.lastOption.getOrElse(0L)
-    val suffix = (if (tag == "sf0.1") "" else s"_$tag") +
-      (if (cpus == CanonicalCpus) "" else s"_c$cpus")
-    s"BENCH_LOCAL_r${newest + 1}$suffix.json"
-  }
-
-  /** Queries whose best-of-N exceeds 3x their previous-run time (and are
-    * not marked failed) — the solo-rerun candidates. A non-positive
-    * previous time is skipped: it is a failure marker, not a base. */
-  def outliersToRerun(
-      best: Map[String, Double],
-      failed: Set[String],
-      prev: Map[String, Double]): Seq[String] =
-    best.toSeq.sortBy(_._1).collect {
-      case (name, b) if !failed(name) &&
-        prev.get(name).exists(p => p > 0 && b > 3 * p) => name
-    }
-
-  /** Steal tolerance (seconds) under which two artifacts count as
-    * equally clean in the cleanest-base preference (ties go to the
-    * newest). */
-  val CleanMarginSec = 1.0
-
-  /** How many rounds back the cleanest-base search may reach: archives
-    * more than this many rounds behind the newest are too stale to be a
-    * 3x comparison base (queries evolve), however clean their stamp. */
-  val MaxBaseAgeRounds = 4L
-
-  /** The CLEANEST compatible per-query comparison base in `dir`, plus
-    * the file name it came from (`"none"` when nothing compatible
-    * exists). Candidate discovery order (newest first within each tier):
-    *   1. `BENCH_LOCAL_r*.json` archives — full lines this bench wrote;
-    *   2. `BENCH_LOCAL.json` — the previous run's overwritten line (it
-    *      is read BEFORE this run rewrites it);
-    *   3. driver `BENCH_r*.json` artifacts — a top-level `"queries"` key
-    *      if one ever appears, else a bench line embedded in the `tail`
-    *      string (the shape every actual driver artifact has).
-    * Among candidates with a parsable run-quality stamp, the one with
-    * the LOWEST worst-pass steal wins (ties within [[CleanMarginSec]] →
-    * the earliest in discovery order, i.e. newest archive): VERDICT r13
-    * missing #1 — when the current round's base is ~1.2x steal-inflated
-    * but a clean cross-round archive is committed, the 3x outlier test
-    * should anchor on the clean map, not inherit the weather. (This is
-    * also r13 polish #7 resolved at the root: instead of scaling the 3x
-    * threshold by the base's measured inflation, the base itself is the
-    * cleanest available.) Candidates with NO stamp are used only when
-    * no stamped candidate exists (newest first — the pre-r12 behavior).
-    * A candidate only qualifies if its `"sf"` tag matches `tag` —
-    * cross-scale bases mass-misfire the 3x test — so a candidate with
-    * no parsable sf is skipped, not trusted. When `cpus` is given, a
-    * candidate stamped with a DIFFERENT core count (top level on both
-    * driver wrappers and r18+ bench lines) is likewise skipped: the
-    * driver's own 8-core runs are faster than 32-core for most queries
-    * at this SF (VERDICT r17 scaling note), so a cross-cpu base skews
-    * the 3x test; an unstamped candidate is accepted (every pre-r18
-    * canonical artifact was 32-core). Archives older than
-    * [[MaxBaseAgeRounds]] rounds behind the newest are excluded
-    * outright: the queries themselves evolve round over round, and on
-    * a chronically noisy box one lucky zero-steal archive would
-    * otherwise pin the 3x test to an arbitrarily stale map, flagging
-    * every intentionally-slowed query forever. */
-  def previousRun(dir: java.io.File, tag: String,
-      cpus: Option[Int] = None): (Map[String, Double], String) = {
-    val all = Option(dir.listFiles()).getOrElse(Array.empty)
-    val Archive = """BENCH_LOCAL_r(\d+)(_.*)?\.json""".r
-    def readText(f: java.io.File): Option[String] =
-      try Some(new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-      catch { case _: Throwable => None }
-    val numbered = all.flatMap(f => f.getName match {
-      case Archive(n, _) => n.toLongOption.map(r => (r, f))
-      case _ => None
-    }).sortBy(-_._1)
-    val driversNumbered = all.flatMap(f => f.getName match {
-      case DriverArtifact(n) => n.toLongOption.map(r => (r, f))
-      case _ => None
-    }).sortBy(-_._1)
-    // the staleness cutoff applies to BOTH numbered tiers, against the
-    // newest round seen in EITHER (ADVICE r14 #1): driver artifacts
-    // carry embedded steal stamps and accumulate forever, so without
-    // the cutoff a stale-but-lucky-clean BENCH_r12 would re-open the
-    // exact stale-base 3x-misfire the bound exists to prevent
-    val newestRound = (numbered.headOption.map(_._1) ++
-      driversNumbered.headOption.map(_._1)).maxOption.getOrElse(0L)
-    val archives = numbered
-      .filter(_._1 > newestRound - MaxBaseAgeRounds).map(_._2)
-    val local = all.filter(_.getName == "BENCH_LOCAL.json")
-    val drivers = driversNumbered
-      .filter(_._1 > newestRound - MaxBaseAgeRounds).map(_._2)
-    val candidates =
-      (archives.iterator ++ local.iterator ++ drivers.iterator)
-        .flatMap { f =>
-          readText(f).filter(t => cpusCompatible(t, cpus)).flatMap { text =>
-            parseBenchLine(text).filter(_._2 == tag)
-              .map { case (qs, _) => (qs, f.getName, maxSteal(text)) }
-          }
-        }.toSeq
-    val stamped = candidates.filter(_._3.isDefined)
-    val pick =
-      if (stamped.isEmpty) candidates.headOption
-      else {
-        val cleanest = stamped.map(_._3.get).min
-        stamped.find(_._3.get <= cleanest + CleanMarginSec)
-      }
-    pick.map { case (qs, name, _) => (qs, name) }
-      .getOrElse((Map.empty, "none"))
-  }
-
-  /** True when an artifact's top-level `"cpus"` stamp is compatible with
-    * the given core count: absent/unreadable stamps are accepted (pre-r18
-    * bench lines never carried one; every committed canonical artifact
-    * was 32-core), a present stamp must match. Driver wrappers
-    * (`BENCH_r*_c8.json`) and r18+ bench/archive lines both stamp it at
-    * the top level, so one check covers every candidate tier. */
-  def cpusCompatible(text: String, cpus: Option[Int]): Boolean =
-    cpus.forall { want =>
-      import org.json4s._
-      try org.json4s.jackson.JsonMethods.parse(text) \ "cpus" match {
-        case JInt(n) => n.toInt == want
-        case JDouble(n) => n.toInt == want
-        case _ => true
-      } catch { case _: Throwable => true }
-    }
-
-  /** Worst contamination evidence (seconds) in a bench line's
-    * run-quality stamp — the one number that says "this artifact's
-    * query map was taken under hypervisor contention".
-    *
-    * Granularity (VERDICT r14 #1): a line carrying a `steal_q` map —
-    * per-query SEGMENT steal at each floor's providing sample — is
-    * judged by max over those segments, because the map's numbers only
-    * ever came from those segments; the between-query weather a
-    * pass-level stamp would include is irrelevant to them. Lines
-    * without `steal_q` (r14 and older, driver wrappers) fall back to
-    * worst-pass steal from `passes`. Either way the strict rule holds:
-    * ANY missing or -1 entry at the chosen granularity makes the whole
-    * artifact UNKNOWN (None), never the max of the entries that
-    * happened to stamp — "unknown never displaces known-clean"
-    * (ADVICE r13). Checks the top level first, then a bench line
-    * embedded in a driver `tail`. */
-  def maxSteal(text: String): Option[Double] = {
-    import org.json4s._
-    def strictMax(vals: Seq[Option[Double]]): Option[Double] =
-      if (vals.isEmpty || vals.exists(s => s.isEmpty || s.get < 0)) None
-      else Some(vals.flatten.max)
-    def num(v: JValue): Option[Double] = v match {
-      case JDouble(x) => Some(x)
-      case JDecimal(x) => Some(x.toDouble)
-      case JInt(x) => Some(x.toDouble)
-      case _ => None
-    }
-    def fromLine(v: JValue): Option[Double] = v \ "steal_q" match {
-      // steal_q PRESENT (even empty or all-unknown): it IS the quality
-      // source — falling back to passes would let a partially-stamped
-      // floor map read as pass-clean. An EMPTY object (the shape a full
-      // run where every query failed writes) means no floor was ever
-      // segment-stamped, so the artifact's quality is unknown, not
-      // whatever the pass stamps happen to say (ADVICE r15 #4); only a
-      // line that predates steal_q entirely (key absent) falls back.
-      case JObject(kvs) => strictMax(kvs.map(kv => num(kv._2)))
-      case _ => v \ "passes" match {
-        case JArray(ps) if ps.nonEmpty =>
-          strictMax(ps.map(p => num(p \ "steal_sec")))
-        case _ => None
-      }
-    }
-    try {
-      val v = org.json4s.jackson.JsonMethods.parse(text)
-      fromLine(v).orElse(v \ "tail" match {
-        case JString(tail) =>
-          """\{"metric":"total"""".r.findAllMatchIn(tail).map(_.start)
-            .toSeq.reverse.iterator
-            .flatMap(i => balancedJson(tail, i).flatMap(s =>
-              try fromLine(org.json4s.jackson.JsonMethods.parse(s))
-              catch { case _: Throwable => None }))
-            .collectFirst { case hit => hit }
-        case _ => None
-      })
-    } catch { case _: Throwable => None }
-  }
-
-  // The r12-r14 whole-line archive protections (shouldReplaceArchive's
-  // best-of-by-steal, the medianRatio mixed-signature veto) are
-  // SUBSUMED by the composite floor merge ([[mergeFloors]]): min-merge
-  // means a dirty run cannot raise a clean floor, a steal-clean-but-
-  // uniformly-slower run (bandwidth theft) contributes nothing, and
-  // the ADVICE r14 #3 deadlock — a legitimate code slowdown that the
-  // veto blocked forever — is handled by the explicit
-  // SPARK_GRAFT_BENCH_FRESH reseed instead of a heuristic.
 
   /** Per-query seconds + sf tag from one artifact's text. Accepts a bare
     * bench line, a driver wrapper with a (future) top-level `"queries"`,

@@ -21,7 +21,8 @@ object Verify {
     // and a contaminated box visible in the driver's verify log too.
     val steal0 = Bench.stealTicks()
     val wall0 = System.nanoTime()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

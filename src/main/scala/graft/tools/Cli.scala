@@ -57,7 +57,7 @@ object Cli {
   /** The warehouse record store; attaches the work-id index when one has
     * been built (`maintain`) so every writer keeps it current and every
     * work-id query takes the pruned path. */
-  private def recordStore(s: SparkSession): (RecordStore, Option[graft.store.WorkIdIndex]) = {
+  private def recordStore(s: SparkSession, root: String): (RecordStore, Option[graft.store.WorkIdIndex]) = {
     val idx = new graft.store.WorkIdIndex(s, s"$root/work-id-index")
     val attached = if (idx.exists) Some(idx) else None
     (new RecordStore(s, s"$root/records", attached), attached)
@@ -65,35 +65,7 @@ object Cli {
 
   def main(args: Array[String]): Unit = args.toList match {
     case "push" :: file :: rest =>
-      val opts = parseOpts(rest)
-      val cs = new LocalContentStore(s"$root/content")
-      // a --what/--where/--work-id VALUE containing '~' is a path
-      // translation (regex~format), applied inside push exactly as the
-      // reference applies it at its file→metadata boundary
-      // (dlfile.py:213-219) — no separate flag
-      val fields: Map[String, Any] = Map(
-        "what" -> opts.getOrElse("what",
-          fail("--what is required")),
-        "where" -> opts.getOrElse("where", "localhost"),
-        "work_id" -> opts.get("work-id").orNull,
-        "start" -> (opts.getOrElse("start", "now") match {
-          case "crtime" => Long.box(graft.sources.Crtime(
-            java.nio.file.Paths.get(file)))
-          case other => other
-        }),
-      ) ++ opts.get("end").map("end" -> _)
-      val (url, meta) = cs.push(java.nio.file.Paths.get(file), fields)
-      // synchronous ingest (the reference's push→S3→SQS→ingester loop,
-      // collapsed for the local warehouse): records AND the latest
-      // table, exactly what the ingester maintains — a latest table
-      // that pushes bypass would serve stale hits
-      val s = spark()
-      val rec = DatalakeRecord.listFromMetadata(meta, url,
-        System.currentTimeMillis(), java.nio.file.Files.size(
-          java.nio.file.Paths.get(file)))
-      recordStore(s)._1.append(rec)
-      upsertLatest(s, rec)
-      println(url)
+      println(push(spark(), root, file, parseOpts(rest)))
 
     case "list" :: what :: rest =>
       val opts = parseOpts(rest)
@@ -108,7 +80,7 @@ object Cli {
         case None =>
       }
       val s = spark()
-      val (store, idx) = recordStore(s)
+      val (store, idx) = recordStore(s, root)
       val q = new ArchiveQuerier(store, workIdIndex = idx)
       val params = Map("what" -> what) ++ opts.view.filterKeys(
         Set("start", "end", "work_id", "where", "cursor")).toMap
@@ -144,14 +116,7 @@ object Cli {
         case None =>
       }
       val lookback = ApiV0.validateLookback(opts.getOrElse("lookback", "14"))
-      val s = spark()
-      // useLatestTable = true: every CLI writer maintains the latest
-      // table (push, uploader, the ingesters), so the purpose-built
-      // top-1 lookup serves the hit; a missing/empty table still falls
-      // back to the walk-back scan inside queryLatest
-      val q = new ArchiveQuerier(new RecordStore(s, s"$root/records"),
-        Some(new LatestStore(s, s"$root/latest")), useLatestTable = true)
-      q.queryLatest(what, where, lookback) match {
+      latest(spark(), root, what, where, lookback) match {
         case Some(r) => println(JsonMethods.pretty(JsonMethods.render(
           ApiV0.recordJson(r, "local://graft"))))
         case None =>
@@ -209,14 +174,14 @@ object Cli {
       val timeout = opts.get("timeout").map(_.toLong)
       val cs = new LocalContentStore(s"$root/content")
       val s = spark()
-      val store = recordStore(s)._1
+      val store = recordStore(s, root)._1
       val n = new graft.sources.Uploader(s"$root/queue", (content, meta) => {
         // bundle metadata is already validated/normalized — store verbatim
         val url = cs.pushValidated(content, meta)
         val rec = DatalakeRecord.listFromMetadata(
           meta, url, System.currentTimeMillis(), content.length.toLong)
         store.append(rec)
-        upsertLatest(s, rec)
+        upsertLatest(s, root, rec)
       }, (p, e) => System.err.println(s"skipping $p: ${e.getMessage}"))
         .listen(timeout)
       println(s"uploaded $n bundles")
@@ -224,7 +189,7 @@ object Cli {
     case "maintain" :: rest =>
       val opts = parseOpts(rest)
       val s = spark()
-      val store = recordStore(s)._1
+      val store = recordStore(s, root)._1
       val compacted = store.compact(
         opts.getOrElse("files-per-partition", "1").toInt)
       println(s"compacted $compacted partitions")
@@ -243,7 +208,7 @@ object Cli {
     case "serve" :: rest =>
       val opts = parseOpts(rest)
       val s = spark()
-      val (store, idx) = recordStore(s)
+      val (store, idx) = recordStore(s, root)
       val q = new ArchiveQuerier(store,
         Some(new LatestStore(s, s"$root/latest")), useLatestTable = true,
         workIdIndex = idx)
@@ -260,7 +225,7 @@ object Cli {
       val opts = parseOpts(rest)
       val s = spark()
       val n = new StreamingIngester(s, new LocalContentStore(s"$root/content"),
-        recordStore(s)._1,
+        recordStore(s, root)._1,
         Some(new LatestStore(s, s"$root/latest")),
         Some(s"$root/reports"))
         .drainQueue(new graft.streaming.DirNotificationQueue(queueDir),
@@ -270,7 +235,7 @@ object Cli {
     case "ingest-dir" :: notifDir :: Nil =>
       val s = spark()
       val q = new StreamingIngester(s, new LocalContentStore(s"$root/content"),
-        recordStore(s)._1,
+        recordStore(s, root)._1,
         Some(new LatestStore(s, s"$root/latest")),
         Some(s"$root/reports"))
         .start(notifDir, s"$root/checkpoints/ingest", availableNow = true)
@@ -311,12 +276,61 @@ object Cli {
       Some(s"local://graft/v0/archive/files/${r.metadata.id}/data"),
       graft.store.RecordRow.toMeta(r.metadata), r.createTime, r.size)
 
+  /** `push`: store the file under `root`'s content store and ingest its
+    * records synchronously; returns the content url. */
+  private[tools] def push(sess: => SparkSession, root: String, file: String,
+      opts: Map[String, String]): String = {
+    val cs = new LocalContentStore(s"$root/content")
+    // a --what/--where/--work-id VALUE containing '~' is a path
+    // translation (regex~format), applied inside push exactly as the
+    // reference applies it at its file→metadata boundary
+    // (dlfile.py:213-219) — no separate flag
+    val fields: Map[String, Any] = Map(
+      "what" -> opts.getOrElse("what",
+        fail("--what is required")),
+      "where" -> opts.getOrElse("where", "localhost"),
+      "work_id" -> opts.get("work-id").orNull,
+      "start" -> (opts.getOrElse("start", "now") match {
+        case "crtime" => Long.box(graft.sources.Crtime(
+          java.nio.file.Paths.get(file)))
+        case other => other
+      }),
+    ) ++ opts.get("end").map("end" -> _)
+    val (url, meta) = cs.push(java.nio.file.Paths.get(file), fields)
+    // synchronous ingest (the reference's push→S3→SQS→ingester loop,
+    // collapsed for the local warehouse): records AND the latest
+    // table, exactly what the ingester maintains — a latest table
+    // that pushes bypass would serve stale hits
+    val s = sess
+    val rec = DatalakeRecord.listFromMetadata(meta, url,
+      System.currentTimeMillis(), java.nio.file.Files.size(
+        java.nio.file.Paths.get(file)))
+    recordStore(s, root)._1.append(rec)
+    upsertLatest(s, root, rec)
+    url
+  }
+
+  /** `latest` served in-process from the warehouse under `root`. */
+  private[tools] def latest(s: SparkSession, root: String, what: String,
+      where: String, lookback: Int): Option[graft.query.UnpackedRecord] =
+    // useLatestTable = true: every CLI writer maintains the latest
+    // table (push, uploader, the ingesters), so the purpose-built
+    // top-1 lookup serves the hit; a missing/empty table still falls
+    // back to the walk-back scan inside queryLatest
+    new ArchiveQuerier(new RecordStore(s, s"$root/records"),
+      Some(new LatestStore(s, s"$root/latest")), useLatestTable = true)
+      .queryLatest(what, where, lookback)
+
   /** Keep the latest table current from a CLI writer — the collapsed
     * form of the ingester's records+latest maintenance; a latest table
-    * only SOME writers maintain would serve stale hits. */
-  private def upsertLatest(s: SparkSession, rec: Seq[DatalakeRecord]): Unit = {
+    * only SOME writers maintain would serve stale hits. The table takes
+    * the snake_case [[graft.store.RecordRow]] shape, as the ingester
+    * writes it. */
+  private def upsertLatest(s: SparkSession, root: String,
+      rec: Seq[DatalakeRecord]): Unit = {
     import s.implicits._
-    new LatestStore(s, s"$root/latest").upsert(rec.toDF())
+    new LatestStore(s, s"$root/latest")
+      .upsert(rec.map(graft.store.RecordRow.fromCore).toDS().toDF())
   }
 
   /** The reference CLI's list formatters (`cli.py:210-241`):

@@ -20,13 +20,9 @@ import org.apache.spark.sql.SparkSession
   * Small-rung exponents undershoot (fixed overhead dominates 500-doc
   * runs); the TOP leg (5 000 → 50 000+) is the graded signal.
   *
-  * r15 (VERDICT r14 #5/#6): every rung carries a SEGMENT steal stamp
-  * (steal accrued during the best sample alone), and a rung whose floor
-  * was taken under steal past `SPARK_GRAFT_LADDER_STEAL_SEC` (0.5) is
-  * re-sampled up to `SPARK_GRAFT_LADDER_RETRIES` (4) extra times — the
-  * r14 artifact shipped a rung whose best-of-3 all sat inside one
-  * burst (q_minhash_lsh_pairs @500: 6.0 s vs 0.9 s @5000, exponent
-  * −0.83), which per-rung stamps make visible and retries usually heal.
+  * Each rung is the best of `SPARK_GRAFT_LADDER_RUNS` (2) samples, and
+  * carries the steal accrued during that best sample alone, so a rung
+  * taken under contention is visible in its own line.
   * A `q_neardup_probe_fixed` pseudo-query ladders the probe in its PURE
   * probe-independence form: fixed ~50-doc batch against 500/5k/50k
   * histories. Output: one `LADDER` line per (query, rung), one
@@ -87,7 +83,8 @@ object Ladder {
 
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val mult = sys.env.getOrElse("SPARK_GRAFT_LADDER_MULT", "10").toInt
     val rung2 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val rung1 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR_SMALL",
@@ -123,72 +120,33 @@ object Ladder {
       spark.catalog.clearCache()
     }
 
-    // one measured sample with its SEGMENT steal stamp (the Bench r15
-    // discipline at rung granularity): /proc/stat steal accrued during
-    // this sample alone, -1 when unreadable. r17 adds the machine-speed
-    // probe pair (min over the sample's endpoints, the Bench r17
-    // discipline): steal-clean user-time contention — bandwidth or
-    // frequency theft — inflated a probe-independence rung 3x with a
-    // 0.02 s steal stamp in this round's first invocation, and only a
-    // probe stamp makes that visible and retryable
-    def sample(body: () => Unit): (Double, Double, Double) = {
-      val p0 = graft.Bench.canaryParProbe()
+    // one measured sample with the /proc/stat steal accrued during it
+    // alone (-1 when unreadable)
+    def sample(body: () => Unit): (Double, Double) = {
       val s0 = graft.Bench.stealTicks()
       val t0 = System.nanoTime()
       body()
       val sec = (System.nanoTime() - t0) / 1e9
       val steal = (for (a <- s0; b <- graft.Bench.stealTicks())
         yield (b - a) / graft.Bench.userHz).getOrElse(-1.0)
-      val par = math.min(p0, graft.Bench.canaryParProbe())
       clearPins()
-      (sec, steal, par)
+      (sec, steal)
     }
 
-    def run(name: String, dir: String): (Double, Double, Double) =
+    def run(name: String, dir: String): (Double, Double) =
       sample(() => graft.SparkEntry.queries(name)(spark, dir)
         .write.mode("overwrite").format("noop").save())
 
     val samples = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_LADDER_RUNS", "2").toInt)
-    // a rung whose BEST sample still carries steal past this budget is
-    // re-sampled up to `retries` more times (VERDICT r14 #5: the
-    // published r14 ladder carried a rung-1 sample 6.8x inflated by a
-    // burst both its best-of-3 samples sat inside — per-rung stamps
-    // plus bounded retries harvest a quiet window per RUNG, the same
-    // estimator the bench's composite floors use per query)
-    val stealBudget =
-      sys.env.getOrElse("SPARK_GRAFT_LADDER_STEAL_SEC", "0.5").toDouble
-    // probe-stamp budget as a RATIO to the canary reference par leg
-    // (r17): a rung whose best sample's endpoint probes read the
-    // machine >1.35x its reference speed is dirty even when
-    // steal-clean, and earns the same bounded retries
-    val parBudget = sys.env.getOrElse("SPARK_GRAFT_LADDER_PAR_MAX",
-      "1.35").toDouble * graft.Bench.canaryRef()._3
-    val retries = math.max(0,
-      sys.env.getOrElse("SPARK_GRAFT_LADDER_RETRIES", "4").toInt)
+    // best-of-N: contention only inflates, so the min sample is the rung
+    def floorOf(one: () => (Double, Double)): (Double, Double) =
+      (1 to samples).map(_ => one()).minBy(_._1)
 
-    // best-of-N with per-rung quality: min sec wins (contention only
-    // inflates); retry while the floor's own segment was dirty —
-    // by steal OR by probe
-    def dirty(s: (Double, Double, Double)): Boolean =
-      s._2 > stealBudget || s._3 > parBudget
-    def floorOf(one: () => (Double, Double, Double))
-        : (Double, Double, Double) = {
-      var best = (1 to samples).map(_ => one()).minBy(_._1)
-      var extra = 0
-      while (dirty(best) && extra < retries) {
-        extra += 1
-        val s = one()
-        if (s._1 < best._1) best = s
-      }
-      best
-    }
-
-    def fitAndPrint(name: String,
-        times: Seq[(Long, Double, Double, Double)])
-        : (String, Seq[(Long, Double, Double, Double)], Seq[Double]) = {
+    def fitAndPrint(name: String, times: Seq[(Long, Double, Double)])
+        : (String, Seq[(Long, Double, Double)], Seq[Double]) = {
       val legs = times.sliding(2).collect {
-        case Seq((n1, t1, _, _), (n2, t2, _, _)) if n2 > n1 && t1 > 0 =>
+        case Seq((n1, t1, _), (n2, t2, _)) if n2 > n1 && t1 > 0 =>
           math.log(t2 / t1) / math.log(n2.toDouble / n1)
       }.toSeq
       val top = legs.lastOption.getOrElse(Double.NaN)
@@ -205,11 +163,11 @@ object Ladder {
         // clusterTableCache) land in each rung's warm pass — measured
         // runs see steady state, so the curve is pure data scaling
         run(name, dir)
-        val (sec, steal, par) = floorOf(() => run(name, dir))
+        val (sec, steal) = floorOf(() => run(name, dir))
         val n = rowsOf(dir, table)
         println(f"LADDER q=$name dir=$dir rows=$n sec=$sec%.2f " +
-          f"steal=$steal%.2f par=$par%.3f")
-        (n, sec, steal, par)
+          f"steal=$steal%.2f")
+        (n, sec, steal)
       }
       fitAndPrint(name, times)
     }
@@ -244,25 +202,24 @@ object Ladder {
         // first measured sample's semantically-identical plans could hit
         // that cache — publishing a cached-read time as the floor
         clearPins()
-        val (sec, steal, par) = floorOf(() => sample(() => probe()))
+        val (sec, steal) = floorOf(() => sample(() => probe()))
         val n = rowsOf(dir, "documents")
         println(f"LADDER q=$probeFixed dir=$dir rows=$n sec=$sec%.2f " +
-          f"steal=$steal%.2f par=$par%.3f")
+          f"steal=$steal%.2f")
         def rm(f: java.io.File): Unit = {
           if (f.isDirectory)
             Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
           f.delete()
         }
         rm(root)
-        (n, sec, steal, par)
+        (n, sec, steal)
       }
       fitAndPrint(probeFixed, times)
     }
 
     val qjson = fits2.map { case (n, times, legs) =>
-      s""""$n":{"rungs":${times.map { case (r, t, s, p) =>
-        s"""{"rows":$r,"sec":${f"$t%.3f"},"steal":${f"$s%.2f"},""" +
-          s""""par":${f"$p%.3f"}}"""
+      s""""$n":{"rungs":${times.map { case (r, t, s) =>
+        s"""{"rows":$r,"sec":${f"$t%.3f"},"steal":${f"$s%.2f"}}"""
       }.mkString("[", ",", "]")},""" +
         s""""exponents":${legs.map(l => f"$l%.3f").mkString("[", ",", "]")}}"""
     }.mkString("{", ",", "}")

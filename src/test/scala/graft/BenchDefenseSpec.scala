@@ -2,22 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench's contention self-defense (VERDICT r11 #1): for eleven
-  * rounds the outlier re-run parsed a `"queries"` key no driver
-  * artifact ever had, so it never fired. These tests pin the repaired
-  * pieces — archive discovery, the sf-matched comparison base, the
-  * tail-embedded fallback, the 3x outlier rule, and the steal parser —
-  * against the ACTUAL artifact shapes on disk. */
+/** The bench's output contract and its N-pass protocol as pure
+  * functions: per-query stats over the pass samples, the failed-query
+  * rule of the headline total, the output file names, the stdout line's
+  * tail fit and the parsers other tools rely on. */
 class BenchDefenseSpec extends AnyFunSuite {
-
-  private def dir(files: (String, String)*): java.io.File = {
-    val d = java.nio.file.Files.createTempDirectory("bench-defense").toFile
-    files.foreach { case (name, text) =>
-      java.nio.file.Files.write(
-        new java.io.File(d, name).toPath, text.getBytes("UTF-8"))
-    }
-    d
-  }
 
   private def benchLine(qs: Map[String, Double], sf: String): String =
     qs.map { case (k, v) => s""""$k":$v""" }
@@ -26,71 +15,84 @@ class BenchDefenseSpec extends AnyFunSuite {
         ",",
         s"""},"failed":0,"sf":"$sf"}""")
 
-  test("previousRun prefers the newest sf-matched BENCH_LOCAL_r archive") {
-    val d = dir(
-      "BENCH_LOCAL_r11.json" ->
-        benchLine(Map("q_a" -> 1.0), "/root/testdata/sf0.1"),
-      "BENCH_LOCAL_r12.json" ->
-        benchLine(Map("q_a" -> 2.0), "/root/testdata/sf0.1"),
-      // newer round but WRONG scale: must be skipped, not trusted
-      "BENCH_LOCAL_r13_sf0.01.json" ->
-        benchLine(Map("q_a" -> 0.01), "/root/testdata/sf0.01"))
-    val (qs, base) = Bench.previousRun(d, "sf0.1")
-    assert(base === "BENCH_LOCAL_r12.json")
-    assert(qs === Map("q_a" -> 2.0))
-    // and the sf0.01 caller finds ITS base
-    val (qs2, base2) = Bench.previousRun(d, "sf0.01")
-    assert(base2 === "BENCH_LOCAL_r13_sf0.01.json")
-    assert(qs2 === Map("q_a" -> 0.01))
+  test("queryStats: min, median and spread over the successful pass " +
+    "samples") {
+    val odd = Bench.queryStats(Seq(Some(3.0), Some(1.0), Some(2.5))).get
+    assert(odd === Bench.QueryStats(min = 1.0, median = 2.5, spread = 2.0))
+    val even = Bench.queryStats(Seq(Some(4.0), Some(1.0), Some(2.0),
+      Some(3.0))).get
+    assert(even === Bench.QueryStats(min = 1.0, median = 2.5, spread = 3.0))
+    assert(Bench.queryStats(Seq(Some(0.5))).get ===
+      Bench.QueryStats(0.5, 0.5, 0.0))
   }
 
-  test("previousRun falls back to BENCH_LOCAL.json, then to a bench " +
-    "line embedded in a driver artifact's tail") {
-    val d1 = dir("BENCH_LOCAL.json" ->
-      benchLine(Map("q_b" -> 3.5), "/root/testdata/sf0.1"))
-    assert(Bench.previousRun(d1, "sf0.1") ===
-      (Map("q_b" -> 3.5), "BENCH_LOCAL.json"))
-    // the driver wrapper shape every BENCH_r*.json actually has:
-    // {n, rc, cpus, sf, tail, parsed} with the full line inside `tail`
-    val inner = benchLine(Map("q_c" -> 0.7), "/root/testdata/sf0.1")
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", "\\n") + "\""
-    val wrapper = s"""{"n":11,"rc":0,"cpus":32,"sf":0.1,
-      "tail":${jstr(s"log noise\n$inner\nmore")},
-      "parsed":{"metric":"total","value":1.0}}"""
-    val d2 = dir("BENCH_r11.json" -> wrapper)
-    assert(Bench.previousRun(d2, "sf0.1") ===
-      (Map("q_c" -> 0.7), "BENCH_r11.json"))
-    // a truncated tail (the five dark rounds' shape) fails SOFT
-    val d3 = dir("BENCH_r11.json" ->
-      s"""{"n":11,"sf":0.1,"tail":"${inner.take(40).replace("\"", "\\\"")}"}""")
-    assert(Bench.previousRun(d3, "sf0.1") === (Map.empty, "none"))
+  test("a failed query is left out of value, and a later successful " +
+    "pass clears an earlier failure") {
+    val healed = Bench.queryStats(Seq(None, Some(2.0)))
+    assert(healed === Some(Bench.QueryStats(2.0, 2.0, 0.0)),
+      "a failed pass contributes no sample; the later success stands")
+    assert(Bench.queryStats(Seq(Some(1.5), None)).map(_.min) === Some(1.5))
+    assert(Bench.queryStats(Seq(None, None)) === None)
+    assert(Bench.queryStats(Seq.empty) === None)
+    val stats = Seq(
+      "q_a" -> Bench.queryStats(Seq(Some(1.0), Some(1.5))),
+      "q_broken" -> Bench.queryStats(Seq(None, None)),
+      "q_healed" -> healed)
+    assert(Bench.battery(stats) === 3.0,
+      "the time-to-error of a failed query never enters the total")
+    // the full line marks the failure with -1 in every per-query map
+    val line = Bench.fullLine(Bench.battery(stats), 1, 4, "h", stats,
+      Seq(Bench.PassStamp(10.0, 9.0, 0.0, 1.0, 4, "h")),
+      "/data/sf0.1")
+    import org.json4s._
+    val v = org.json4s.jackson.JsonMethods.parse(line)
+    assert(v \ "value" === JDouble(3.0))
+    assert(v \ "failed" === JInt(1))
+    for (k <- Seq("queries", "median", "spread"))
+      assert(v \ k \ "q_broken" === JDouble(-1.0), k)
+    assert(v \ "spread" \ "q_a" === JDouble(0.5))
+    assert(v \ "median" \ "q_a" === JDouble(1.25))
+    assert(Bench.parseBenchLine(line).map(_._1("q_a")) === Some(1.0))
   }
 
-  test("previousRun on an empty dir reports 'none' — an empty " +
-    "outlier_rerun is then distinguishable from a vacuous one") {
-    assert(Bench.previousRun(dir(), "sf0.1") === (Map.empty, "none"))
+  test("every pass carries one stamp with steal, load, cpus and host") {
+    val passes = Seq(Bench.PassStamp(60.0, 55.5, 0.3, 2.0, 4, "box-a"),
+      Bench.PassStamp(58.0, 54.0, -1.0, 1.5, 4, "box-a"))
+    val line = Bench.fullLine(1.0, 0, 4, "box-a",
+      Seq("q" -> Bench.queryStats(Seq(Some(1.0), Some(1.2)))), passes,
+      "/data/sf0.1")
+    import org.json4s._
+    val ps = org.json4s.jackson.JsonMethods.parse(line) \ "passes" match {
+      case JArray(xs) => xs
+      case other => fail(s"no passes array: $other")
+    }
+    assert(ps.size === 2)
+    assert(ps.map(_ \ "host") === Seq(JString("box-a"), JString("box-a")))
+    assert(ps.map(_ \ "cpus") === Seq(JInt(4), JInt(4)))
+    assert(ps.map(_ \ "steal_sec") === Seq(JDouble(0.3), JDouble(-1.0)))
+    assert(ps.head \ "job_sum" === JDouble(55.5))
+    assert(ps.head \ "load_end" === JDouble(2.0))
   }
 
-  test("outliersToRerun: fires past 3x, skips failed queries and " +
-    "non-positive bases") {
-    val prev = Map("slow" -> 1.0, "ok" -> 1.0, "failbase" -> -1.0,
-      "zerobase" -> 0.0, "failed" -> 1.0)
-    val best = Map("slow" -> 3.1, "ok" -> 2.9, "failbase" -> 9.0,
-      "zerobase" -> 9.0, "failed" -> 9.0, "noprev" -> 9.0)
-    assert(Bench.outliersToRerun(best, Set("failed"), prev) === Seq("slow"))
-    // no base at all -> defense stays quiet rather than re-running all
-    assert(Bench.outliersToRerun(best, Set.empty, Map.empty) === Seq.empty)
+  test("a subset run never produces the canonical BENCH_LOCAL.json or an " +
+    "archive name") {
+    val full = Bench.outputFiles(subset = false, "box-a", "4", "sf0.1")
+    assert(full === Seq("BENCH_LOCAL.json",
+      Bench.archiveName("box-a", "4", "sf0.1")))
+    val part = Bench.outputFiles(subset = true, "box-a", "4", "sf0.1")
+    assert(part === Seq("BENCH_LOCAL_partial.json"))
+    assert(!part.contains("BENCH_LOCAL.json"))
+    assert(!part.exists(_.startsWith("BENCH_LOCAL_sf")))
   }
 
-  test("archiveName: driver rounds + 1, sf-suffixed off the canonical " +
-    "scale") {
-    val d = dir("BENCH_r09.json" -> "{}", "BENCH_r11.json" -> "{}",
-      "BENCH_rX.json" -> "{}", "BENCH_LOCAL_r12.json" -> "{}")
-    assert(Bench.archiveName(d, "sf0.1") === "BENCH_LOCAL_r12.json")
-    assert(Bench.archiveName(d, "sf0.01") === "BENCH_LOCAL_r12_sf0.01.json")
-    assert(Bench.archiveName(dir(), "sf0.1") === "BENCH_LOCAL_r1.json")
+  test("archiveName differs by host, by core count and by scale") {
+    val base = Bench.archiveName("box-a", "4", "sf0.1")
+    assert(base === "BENCH_LOCAL_sf0.1_c4_box-a.json")
+    assert(Bench.archiveName("box-b", "4", "sf0.1") !== base)
+    assert(Bench.archiveName("box-a", "32", "sf0.1") !== base)
+    assert(Bench.archiveName("box-a", "4", "sf0.01") !== base)
+    // a host name cannot smuggle a path separator into the file name
+    assert(!Bench.archiveName("a/../b", "4", "sf0.1").contains("/"))
   }
 
   test("steal parser: field 8 of the aggregate cpu line; soft on " +
@@ -129,7 +131,7 @@ class BenchDefenseSpec extends AnyFunSuite {
     corpus.foreach { text =>
       val r = Bench.parseBenchLine(text) // must not throw
       // soundness: anything parsed must carry a non-empty query map and
-      // an sf tag — the two facts the outlier rerun consumes
+      // an sf tag — the two facts every consumer of a bench line reads
       r.foreach { case (qs, tag) =>
         assert(qs.nonEmpty && tag.nonEmpty, s"hollow parse from: $text")
       }
@@ -158,543 +160,26 @@ class BenchDefenseSpec extends AnyFunSuite {
     assert(Bench.parseBenchLine("""{"queries":{}}""") === None)
   }
 
-  private def stamped(steals: Double*): String = {
-    val ps = steals.map(s =>
-      s"""{"wall":100.0,"job_sum":90.0,"steal_sec":$s,"load_end":30.0}""")
-      .mkString("[", ",", "]")
-    s"""{"metric":"total","value":96.1,"unit":"sec","queries":{"q":1.0},""" +
-      s""""passes":$ps,"failed":0,"sf":"/root/testdata/sf0.1"}"""
-  }
-
-  test("maxSteal: worst pass wins; unknown (-1) stamps and stampless " +
-    "lines report None; driver-tail-embedded stamps parse") {
-    assert(Bench.maxSteal(stamped(0.2, 12.1)) === Some(12.1))
-    assert(Bench.maxSteal(stamped(-1.0, -1.0)) === None)
-    // ANY unknown pass makes the whole run unknown (ADVICE r13): the
-    // contaminated pass may be exactly the one that failed to stamp, so
-    // a partial stamp must not read as known-clean
-    assert(Bench.maxSteal(stamped(-1.0, 0.3)) === None)
-    assert(Bench.maxSteal("""{"metric":"total","value":1.0}""") === None)
-    assert(Bench.maxSteal("not json") === None)
-    val tail = stamped(5.5).replace("\\", "\\\\").replace("\"", "\\\"")
-    assert(Bench.maxSteal(s"""{"n":12,"tail":"noise $tail more"}""") ===
-      Some(5.5))
-  }
-
-  private def stampedLine(qs: Map[String, Double], steals: Double*): String = {
-    val ps = steals.map(s =>
-      s"""{"wall":100.0,"job_sum":90.0,"steal_sec":$s,"load_end":30.0}""")
-      .mkString("[", ",", "]")
-    qs.map { case (k, v) => s""""$k":$v""" }
-      .mkString(
-        s"""{"metric":"total","value":${qs.values.sum},"queries":{""",
-        ",",
-        s"""},"passes":$ps,"failed":0,"sf":"/root/testdata/sf0.1"}""")
-  }
-
-  test("previousRun prefers the cleanest stamped base across rounds over " +
-    "a newer dirtier one (VERDICT r13 missing #1)") {
-    val d = dir(
-      // r12: the committed clean map (steal 0.2/0.1)
-      "BENCH_LOCAL_r12.json" ->
-        stampedLine(Map("q_a" -> 1.0), 0.2, 0.1),
-      // r13: newer but ~1.2x steal-inflated (4.2/8.3)
-      "BENCH_LOCAL_r13.json" ->
-        stampedLine(Map("q_a" -> 1.2), 4.2, 8.3))
-    val (qs, base) = Bench.previousRun(d, "sf0.1")
-    assert(base === "BENCH_LOCAL_r12.json")
-    assert(qs === Map("q_a" -> 1.0))
-    // two equally-clean (within the margin) runs: the NEWEST wins
-    val d2 = dir(
-      "BENCH_LOCAL_r12.json" -> stampedLine(Map("q_a" -> 1.0), 0.1),
-      "BENCH_LOCAL_r13.json" -> stampedLine(Map("q_a" -> 1.2), 0.6))
-    assert(Bench.previousRun(d2, "sf0.1")._2 === "BENCH_LOCAL_r13.json")
-    // a stamped base (even dirty) beats any unstamped one; unstamped
-    // only serves when no stamp exists anywhere (newest first)
-    val d3 = dir(
-      "BENCH_LOCAL_r12.json" -> stampedLine(Map("q_a" -> 1.0), 7.7),
-      "BENCH_LOCAL_r13.json" ->
-        benchLine(Map("q_a" -> 1.2), "/root/testdata/sf0.1"))
-    assert(Bench.previousRun(d3, "sf0.1")._2 === "BENCH_LOCAL_r12.json")
-  }
-
-  test("cleanest-base search is bounded to MaxBaseAgeRounds: a lucky " +
-    "clean archive cannot pin the 3x test to a stale query map") {
-    // r8 is 5 rounds behind r13 — excluded despite the perfect stamp
-    val d = dir(
-      "BENCH_LOCAL_r8.json" -> stampedLine(Map("q_a" -> 1.0), 0.0),
-      "BENCH_LOCAL_r13.json" -> stampedLine(Map("q_a" -> 1.2), 4.2))
-    assert(Bench.previousRun(d, "sf0.1")._2 === "BENCH_LOCAL_r13.json")
-    // r10 is within the bound (13 - 4 < 10) — the clean stamp wins
-    val d2 = dir(
-      "BENCH_LOCAL_r10.json" -> stampedLine(Map("q_a" -> 1.0), 0.0),
-      "BENCH_LOCAL_r13.json" -> stampedLine(Map("q_a" -> 1.2), 4.2))
-    assert(Bench.previousRun(d2, "sf0.1")._2 === "BENCH_LOCAL_r10.json")
-  }
-
-  test("previousRun never parses a subset run's _partial file — local " +
-    "iteration cannot shrink or dirty the comparison base") {
-    val d = dir(
-      "BENCH_LOCAL_partial.json" ->
-        stampedLine(Map("q_a" -> 0.1), 0.0))
-    assert(Bench.previousRun(d, "sf0.1") === ((Map.empty, "none")))
-    // and it never outranks a real archive, however clean its stamp
-    val d2 = dir(
-      "BENCH_LOCAL_partial.json" -> stampedLine(Map("q_a" -> 0.1), 0.0),
-      "BENCH_LOCAL_r13.json" -> stampedLine(Map("q_a" -> 1.2), 4.2))
-    assert(Bench.previousRun(d2, "sf0.1")._2 === "BENCH_LOCAL_r13.json")
-  }
-
-  test("awaitQuietWindow: disabled or steal-less environments return " +
-    "immediately without blocking") {
-    // maxWaitSec=0 disables; windowSec=0 degrades; neither may sleep
-    val t0 = System.nanoTime()
-    assert(Bench.awaitQuietWindow(45, 0.5, 0) === ((0.0, -1.0)))
-    assert(Bench.awaitQuietWindow(0, 0.5, 900) === ((0.0, -1.0)))
-    assert((System.nanoTime() - t0) / 1e9 < 5.0)
-    // a 1-second window with an unmissable budget samples exactly once
-    // and reports that window's steal (>= 0 on Linux, -1 off it)
-    val (waited, last) = Bench.awaitQuietWindow(1, 1e9, 10)
-    assert(waited >= 0.0 && waited < 5.0)
-    assert(last >= -1.0)
-    // maxWaitSec BELOW the window length bounds the sleep — the first
-    // window used to run full-length regardless (45 s for a 2 s budget)
-    val t1 = System.nanoTime()
-    Bench.awaitQuietWindow(3600, 0.0, 2)
-    assert((System.nanoTime() - t1) / 1e9 < 10.0,
-      "wait must be bounded by maxWaitSec, not windowSec")
-  }
-
-  // ---- composite floor merge (VERDICT r14 #1): the per-segment
-  // successor of the whole-line archive protections ----
-
-  private def floors(
-      qs: Map[String, Double],
-      steal: Map[String, Double] = Map.empty,
-      runs: Long = 1L): Bench.Floors =
-    Bench.Floors(qs, steal, load = Map.empty, sf = "sf0.1",
-      mergedRuns = runs)
-
-  test("mergeFloors: per-query minima with travelling stamps — a dirty " +
-    "run cannot RAISE a clean floor, and a dirty-but-faster sample is " +
-    "still admissible (contention only ever inflates)") {
-    val inc = floors(Map("q_a" -> 1.0, "q_b" -> 2.0),
-      Map("q_a" -> 0.0, "q_b" -> 0.1))
-    // uniformly slower challenger (diffuse contention or bandwidth
-    // theft, steal-clean or not): contributes nothing — the old
-    // mixed-signature veto's property, now structural
-    val slower = floors(Map("q_a" -> 1.5, "q_b" -> 3.1),
-      Map("q_a" -> 0.0, "q_b" -> 0.0))
-    val m1 = Bench.mergeFloors(inc, slower, subset = false)
-    assert(m1.queries === Map("q_a" -> 1.0, "q_b" -> 2.0))
-    assert(m1.stealQ === Map("q_a" -> 0.0, "q_b" -> 0.1))
-    assert(m1.mergedRuns === 2L)
-    // a faster sample takes the floor and brings ITS stamp — even a
-    // dirty one (steal can only have made it slower than truth)
-    val faster = floors(Map("q_a" -> 0.8, "q_b" -> 2.4),
-      Map("q_a" -> 7.7, "q_b" -> 0.0))
-    val m2 = Bench.mergeFloors(inc, faster, subset = false)
-    assert(m2.queries === Map("q_a" -> 0.8, "q_b" -> 2.0))
-    assert(m2.stealQ === Map("q_a" -> 7.7, "q_b" -> 0.1))
-  }
-
-  test("mergeFloors: an UNKNOWN-steal sample never displaces a stamped " +
-    "floor; unknown-vs-unknown keeps the min") {
-    val inc = floors(Map("q_a" -> 1.0), Map("q_a" -> 0.2))
-    val unknown = floors(Map("q_a" -> 0.5)) // no stamp at all
-    val m = Bench.mergeFloors(inc, unknown, subset = false)
-    assert(m.queries === Map("q_a" -> 1.0),
-      "unknown must not displace known (ADVICE r13, per segment)")
-    // both unstamped (r14-era incumbent): min wins
-    val incOld = floors(Map("q_a" -> 1.0))
-    assert(Bench.mergeFloors(incOld, unknown, subset = false)
-      .queries === Map("q_a" -> 0.5))
-  }
-
-  test("mergeFloors: a FULL run defines the battery's key set and " +
-    "records failures honestly; the next success self-heals") {
-    val inc = floors(Map("q_old" -> 1.0, "q_keep" -> 2.0),
-      Map("q_old" -> 0.0, "q_keep" -> 0.0))
-    val run = floors(Map("q_keep" -> 3.0, "q_new" -> 4.0, "q_fail" -> -1.0),
-      Map("q_keep" -> 0.0, "q_new" -> 0.0))
-    val m = Bench.mergeFloors(inc, run, subset = false)
-    assert(m.queries === Map(
-      "q_keep" -> 2.0, "q_new" -> 4.0, "q_fail" -> -1.0),
-      "removed queries drop, a no-incumbent failure records as -1")
-    assert(m.quality === Some(0.0), "failed queries don't poison quality")
-    assert(m.lastFailed === Set("q_fail"))
-    // the failure self-heals on the next successful run — marker clears
-    val heal = floors(Map("q_keep" -> 3.0, "q_new" -> 5.0, "q_fail" -> 9.0),
-      Map("q_keep" -> 0.0, "q_new" -> 0.0, "q_fail" -> 0.3))
-    val m2 = Bench.mergeFloors(m, heal, subset = false)
-    assert(m2.queries("q_fail") === 9.0)
-    assert(m2.lastFailed === Set.empty)
-  }
-
-  test("mergeFloors: a FULL-run failure with an incumbent floor keeps " +
-    "the floor (past evidence survives) and surfaces the break in " +
-    "lastFailed (ADVICE r15 #1)") {
-    val inc = floors(Map("q_a" -> 1.0, "q_b" -> 2.0),
-      Map("q_a" -> 0.1, "q_b" -> 0.1))
-    // q_b newly broken mid-round: this run failed it on every pass
-    val run = floors(Map("q_a" -> 1.4, "q_b" -> -1.0), Map("q_a" -> 0.0))
-    val m = Bench.mergeFloors(inc, run, subset = false)
-    assert(m.queries === Map("q_a" -> 1.0, "q_b" -> 2.0),
-      "the incumbent floor is still valid evidence of the achievable time")
-    assert(m.lastFailed === Set("q_b"),
-      "but the composite must not read as failed=0 for a broken query")
-    // the marker survives a merge that does not run q_b (subset on q_a)
-    val solo = floors(Map("q_a" -> 0.9), Map("q_a" -> 0.0))
-    val m2 = Bench.mergeFloors(m, solo, subset = true)
-    assert(m2.lastFailed === Set("q_b"))
-    // and clears the moment any run succeeds on q_b
-    val heal = floors(Map("q_b" -> 2.4), Map("q_b" -> 0.0))
-    assert(Bench.mergeFloors(m2, heal, subset = true).lastFailed === Set.empty)
-  }
-
-  test("mergeFloors: a SUBSET run may improve floors it ran and SEED a " +
-    "newly-registered query, but never records failures or shrinks " +
-    "the battery (the r14 solo-run incident stays impossible)") {
-    val inc = floors(Map("q_a" -> 1.0, "q_b" -> 2.0),
-      Map("q_a" -> 0.1, "q_b" -> 0.1))
-    val solo = floors(Map("q_a" -> 0.6, "q_new" -> 0.1, "q_b" -> -1.0),
-      Map("q_a" -> 0.0, "q_new" -> 0.0))
-    val m = Bench.mergeFloors(inc, solo, subset = true)
-    assert(m.queries === Map("q_a" -> 0.6, "q_b" -> 2.0, "q_new" -> 0.1),
-      "improvement taken, NEW query seeded (VERDICT r15 #7), b's " +
-        "failure NOT recorded as -1")
-    assert(m.stealQ === Map("q_a" -> 0.0, "q_b" -> 0.1, "q_new" -> 0.0))
-    assert(m.lastFailed === Set("q_b"),
-      "the failure surfaces as a marker, not a floor")
-    // a FAILED unknown query must not enter the battery from local
-    // iteration — not as a floor, not as a -1
-    val soloFail = floors(Map("q_broken" -> -1.0))
-    val m2 = Bench.mergeFloors(inc, soloFail, subset = true)
-    assert(m2.queries === inc.queries)
-    assert(m2.lastFailed === Set.empty,
-      "markers are pruned to the merged battery's key set")
-  }
-
-  test("mergeFloors: subset seeding only admits REGISTERED keys — a " +
-    "typo'd or experimental local query cannot enter the composite " +
-    "(ADVICE r16 #2)") {
-    val inc = floors(Map("q_a" -> 1.0), Map("q_a" -> 0.1))
-    val solo = floors(Map("q_new" -> 0.5, "q_typo" -> 0.4),
-      Map("q_new" -> 0.0, "q_typo" -> 0.0))
-    val m = Bench.mergeFloors(inc, solo, subset = true,
-      registered = Some(Set("q_a", "q_new")))
-    assert(m.queries === Map("q_a" -> 1.0, "q_new" -> 0.5),
-      "registered key seeds, unregistered key is dropped")
-    // without a registry (other tools, old callers) seeding is open —
-    // the pre-r17 behavior is the explicit default, not an accident
-    val open = Bench.mergeFloors(inc, solo, subset = true)
-    assert(open.queries.keySet === Set("q_a", "q_new", "q_typo"))
-    // the registry never blocks IMPROVEMENT of an incumbent floor,
-    // even one that has since been dropped from the battery (full runs
-    // are what prune the key set, not subsets)
-    val stale = Bench.mergeFloors(
-      floors(Map("q_gone" -> 2.0), Map("q_gone" -> 0.1)),
-      floors(Map("q_gone" -> 1.5), Map("q_gone" -> 0.0)),
-      subset = true, registered = Some(Set("q_other")))
-    assert(stale.queries === Map("q_gone" -> 1.5))
-  }
-
-  test("per-segment canary stamps: par_q travels with the winning " +
-    "floor, round-trips through the archive, and normParQ credits " +
-    "only stamped floors (VERDICT r15 #1)") {
-    // the probe itself: positive. NO upper bound (ADVICE r16 #5): the
-    // parallel leg legitimately reads >10x reference under neighbor
-    // pressure — the dirty windows this repo runs in are exactly when
-    // the suite must not flake; a hang is caught by the suite timeout,
-    // duration belongs to the bench telemetry
-    val p = Bench.canaryParProbe()
-    assert(p > 0)
-    val inc = floors(Map("q_a" -> 1.0, "q_b" -> 2.0),
-      Map("q_a" -> 0.0, "q_b" -> 0.0))
-      .copy(parQ = Map("q_a" -> 0.021, "q_b" -> 0.021))
-    // run improves q_a; its par stamp must travel with the new floor,
-    // and q_b keeps the incumbent's
-    val run = floors(Map("q_a" -> 0.8, "q_b" -> 3.0),
-      Map("q_a" -> 0.0, "q_b" -> 0.0))
-      .copy(parQ = Map("q_a" -> 0.084, "q_b" -> 0.042))
-    val m = Bench.mergeFloors(inc, run, subset = false)
-    assert(m.parQ === Map("q_a" -> 0.084, "q_b" -> 0.021))
-    // per-floor normalization vs refPar=0.021: q_a's provider ran 4x
-    // slow (credit /4), q_b's at reference (no credit)
-    assert(math.abs(Bench.normParQ(m, 0.021) - (0.8 / 4 + 2.0)) < 1e-9)
-    // an unstamped floor gets NO credit, whatever the weather was
-    val bare = floors(Map("q_c" -> 5.0), Map("q_c" -> 0.0))
-    assert(Bench.normParQ(bare, 0.021) === 5.0)
-    // stamps survive the archive round-trip; -1 (unreadable probe)
-    // reads back as absent so it can never grant credit
-    val withUnknown = m.copy(
-      queries = m.queries + ("q_c" -> 1.0),
-      stealQ = m.stealQ + ("q_c" -> 0.0),
-      parQ = m.parQ + ("q_c" -> -1.0))
-    val back = Bench.parseFloors(
-      Bench.renderFloors(withUnknown, "/root/testdata/sf0.1")).get
-    assert(back.parQ === Map("q_a" -> 0.084, "q_b" -> 0.021))
-    assert(math.abs(Bench.normParQ(back, 0.021) - (0.8 / 4 + 2.0 + 1.0))
-      < 1e-9)
-  }
-
-  test("canaryScales: conservative = smallest per-leg slowdown, par = " +
-    "parallel leg alone; clamped at 1, no credit on unknown legs " +
-    "(VERDICT r15 #1)") {
-    val ref = (0.25, 0.16, 0.02)
-    // box uniformly 2x slower on par, 1.2x on cpu, 1.5x on mem
-    val (cons, par) = Bench.canaryScales(ref, (0.30, 0.24, 0.04))
-    assert(math.abs(cons - 1.2) < 1e-9,
-      "conservative credit is what EVERY leg agrees on")
-    assert(math.abs(par - 2.0) < 1e-9)
-    // a flat (or faster) leg caps the conservative scale at exactly 1 —
-    // the r15 signature: cpu/mem flat while par swings 5x
-    val (cons2, par2) = Bench.canaryScales(ref, (0.25, 0.15, 0.10))
-    assert(cons2 === 1.0, "normalization must never inflate floors")
-    assert(math.abs(par2 - 5.0) < 1e-9)
-    // unknown legs give no credit
-    assert(Bench.canaryScales(ref, (-1.0, 0.32, 0.04)) === ((1.0, 2.0)))
-    assert(Bench.canaryScales(ref, (0.5, 0.32, -1.0)) === ((1.0, 1.0)))
-    // a clean day reads (1, 1): normalized == raw, the self-test the
-    // weather-attribution claim needs
-    assert(Bench.canaryScales(ref, ref) === ((1.0, 1.0)))
-    // the env-less reference is the documented r15 committed minimum
-    assert(Bench.canaryRef() === Bench.CanaryRefDefault ||
-      sys.env.contains("SPARK_GRAFT_CANARY_REF"))
-  }
-
-  test("renderFloors/parseFloors round-trip; quality is max provider " +
-    "steal, None when any non-failed floor is unstamped") {
-    val f = floors(Map("q_a" -> 1.25, "q_b" -> -1.0),
-      Map("q_a" -> 0.3), runs = 4L)
-      .copy(lastFailed = Set("q_b"), canaryCpu = 0.496, canaryMem = 0.161,
-        canaryPar = 0.042)
-    val line = Bench.renderFloors(f, "/root/testdata/sf0.1")
-    val back = Bench.parseFloors(line).get
-    assert(back.queries === f.queries)
-    assert(back.stealQ === Map("q_a" -> 0.3))
-    assert(back.mergedRuns === 4L)
-    assert(back.sf === "sf0.1")
-    assert(back.quality === Some(0.3))
-    assert(back.lastFailed === Set("q_b"),
-      "run-level failure markers survive the archive round-trip")
-    assert(Bench.maxSteal(line) === Some(0.3),
-      "maxSteal reads the composite's steal_q")
-    // the combined broken count rides the archive line (ADVICE r16 #3):
-    // q_b is both a -1 floor and a marker — counted ONCE
-    assert(f.broken === 1)
-    assert(line.contains(""""broken":1"""), line)
-    // keep-incumbent-on-failure shape: floor survives, failed=0, but
-    // broken surfaces the marker so old failed-only readers have one
-    // field that cannot read healthy
-    val kept = floors(Map("q_a" -> 1.0), Map("q_a" -> 0.1))
-      .copy(lastFailed = Set("q_a"))
-    assert(kept.failed === 0 && kept.broken === 1)
-    // the rendered line carries the canary-normalized view: with the
-    // default reference (0.248, 0.161, 0.021) this triple is cpu 2x,
-    // mem 1x, par 2x slower → cons scale 1.0, par scale 2.0 — and
-    // RECORDS the reference it was rendered under (r17: a re-anchor
-    // must not silently split old archives from new ones)
-    if (!sys.env.contains("SPARK_GRAFT_CANARY_REF")) {
-      assert(line.contains(""""canary_scale_cons":1.000"""))
-      assert(line.contains(""""canary_scale_par":2.000"""))
-      assert(line.contains(""""floors_norm_par":0.625"""), line)
-      assert(line.contains(""""floors_norm_cons":1.250"""))
-      assert(line.contains(""""canary_ref":[0.248,0.161,0.021]"""), line)
-    }
-    // an unstamped non-failed floor makes quality unknown
-    assert(floors(Map("q_a" -> 1.0, "q_b" -> 2.0), Map("q_a" -> 0.0))
-      .quality === None)
-    // parseBenchLine accepts the composite as an outlier base
-    assert(Bench.parseBenchLine(line) ===
-      Some((Map("q_a" -> 1.25, "q_b" -> -1.0), "sf0.1")))
-  }
-
-  test("machine-speed canary: positive timings, and the composite " +
-    "keeps the minimum positive triple (cleanest weather seen)") {
-    val (c, m, p) = Bench.canary()
-    assert(c > 0 && m > 0 && p > 0)
-    val inc = floors(Map("q" -> 1.0), Map("q" -> 0.0), runs = 2L)
-      .copy(canaryCpu = 0.5, canaryMem = 0.8, canaryPar = 0.3)
-    val run = floors(Map("q" -> 2.0), Map("q" -> 0.0))
-      .copy(canaryCpu = 0.4, canaryMem = -1.0) // mem unreadable this run
-    val merged = Bench.mergeFloors(inc, run, subset = false)
-    assert(merged.canaryCpu === 0.4 && merged.canaryMem === 0.8)
-    assert(merged.canaryPar === 0.3)
-    val back = Bench.parseFloors(
-      Bench.renderFloors(merged, "/root/testdata/sf0.1")).get
-    assert(back.canaryCpu === 0.4 && back.canaryMem === 0.8)
-    assert(back.canaryPar === 0.3)
-    // a line without canary fields parses as unknown, and unknown
-    // never overwrites a known canary in the merge
-    assert(Bench.parseFloors(stampedLine(Map("q" -> 1.0), 0.0))
-      .get.canaryCpu === -1.0)
-    assert(Bench.mergeFloors(merged,
-      floors(Map("q" -> 3.0), Map("q" -> 0.0)), subset = false)
-      .canaryCpu === 0.4)
-  }
-
-  test("maxSteal: steal_q is authoritative when present — a clean " +
-    "passes stamp cannot mask a partially-stamped floor map") {
-    val ps = """[{"wall":9.0,"job_sum":8.0,"steal_sec":0.0,"load_end":1.0}]"""
-    def line(stealQ: String) =
-      s"""{"metric":"total","value":1.0,"queries":{"q_a":1.0},""" +
-        s""""steal_q":$stealQ,"passes":$ps,"sf":"sf0.1"}"""
-    assert(Bench.maxSteal(line("""{"q_a":0.4}""")) === Some(0.4))
-    assert(Bench.maxSteal(line("""{"q_a":-1.0}""")) === None,
-      "unknown segment must not fall back to the clean pass stamp")
-    // steal_q PRESENT but EMPTY (the shape a full run where every query
-    // failed writes) → quality unknown, NOT the clean pass stamp
-    // (ADVICE r15 #4: none of this line's floors were segment-stamped)
-    assert(Bench.maxSteal(line("{}")) === None)
-    // only a line that PREDATES steal_q (key absent) falls back to passes
-    val preSegment =
-      s"""{"metric":"total","value":1.0,"queries":{"q_a":1.0},""" +
-        s""""passes":$ps,"sf":"sf0.1"}"""
-    assert(Bench.maxSteal(preSegment) === Some(0.0))
-  }
-
-  test("previousRun: the staleness bound also covers driver artifacts " +
-    "(ADVICE r14 #1) — a stale-but-clean BENCH_r* cannot outrank the " +
-    "round's base") {
-    val inner = stampedLine(Map("q_a" -> 1.0), 0.0)
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val staleDriver = s"""{"n":8,"sf":0.1,"tail":${jstr(inner)}}"""
-    val d = dir(
-      "BENCH_r8.json" -> staleDriver, // clean stamp, 5 rounds stale
-      "BENCH_LOCAL_r13.json" -> stampedLine(Map("q_a" -> 1.2), 4.2))
-    assert(Bench.previousRun(d, "sf0.1")._2 === "BENCH_LOCAL_r13.json",
-      "stale driver tier must be age-filtered like the archive tier")
-    // a driver artifact WITHIN the bound still competes on cleanliness
-    val d2 = dir(
-      "BENCH_r11.json" -> staleDriver.replace(""""n":8""", """"n":11"""),
-      "BENCH_LOCAL_r13.json" -> stampedLine(Map("q_a" -> 1.2), 4.2))
-    assert(Bench.previousRun(d2, "sf0.1")._2 === "BENCH_r11.json")
-    // and the newest round is computed across BOTH tiers: a driver
-    // artifact far ahead of any local archive ages the archives out
-    val d3 = dir(
-      "BENCH_r14.json" -> s"""{"n":14,"sf":0.1,"tail":${jstr(
-        stampedLine(Map("q_a" -> 2.0), 3.0))}}""",
-      "BENCH_LOCAL_r9.json" -> stampedLine(Map("q_a" -> 1.0), 0.0))
-    assert(Bench.previousRun(d3, "sf0.1")._2 === "BENCH_r14.json")
-  }
-
-  test("awaitQuietWindow: a wait budget under half a window gives up " +
-    "immediately instead of certifying on a sub-scale sample " +
-    "(ADVICE r14 #2)") {
-    val t0 = System.nanoTime()
-    val (waited, last) = Bench.awaitQuietWindow(45, 0.5, 10)
-    assert((System.nanoTime() - t0) / 1e9 < 5.0,
-      "10 s budget vs 45 s window: must not sleep a truncated window")
-    assert(last === -1.0, "nothing was sampled, so nothing is certified")
-    assert(waited >= 0.0)
-  }
-
-  test("tailHead: raw total stays the FIRST value, the per-segment " +
-    "normalized total and combined broken count ride directly beside " +
-    "it (VERDICT r16 #7, ADVICE r16 #3)") {
-    val head = Bench.tailHead(153.163, 107.234, 0, 2)
+  test("tailHead: raw total stays the FIRST value, the failed count and " +
+    "core count ride directly beside it") {
+    val head = Bench.tailHead(153.163, 2, 4)
     // the head is the literal prefix of the stdout line: closing it
     // with '}' must parse, and the field order is the contract
     val v = org.json4s.jackson.JsonMethods.parse(head + "}")
     import org.json4s._
     assert(v \ "value" === JDouble(153.163))
-    assert(v \ "floors_norm_parq" === JDouble(107.234))
-    assert(v \ "failed" === JInt(0))
-    assert(v \ "broken" === JInt(2))
-    // raw first (the driver anchor, never replaced), normalized second
-    assert(head.indexOf("\"value\"") >= 0)
-    assert(head.indexOf("\"value\"") < head.indexOf("\"floors_norm_parq\""))
+    assert(v \ "unit" === JString("sec"))
+    assert(v \ "failed" === JInt(2))
+    assert(v \ "cpus" === JInt(4))
     assert(head.startsWith("""{"metric":"total","value":"""),
       "the tail's long-standing anchor prefix must not move")
-  }
-
-  test("awaitQuietWindow: a box that NEVER goes quiet exhausts the " +
-    "budget mid-loop, reports the dirty last window, and counts the " +
-    "full elapsed time as waiting (VERDICT r16 #6 / ADVICE r15 #3)") {
-    // injected steal source: +2 s of steal per read pair — every
-    // window fails its budget, deterministically, with no real burst
-    var t = 0L
-    val dirty = () => { t += 100L; Some(t) }
-    val t0 = System.nanoTime()
-    val (waited, last) = Bench.awaitQuietWindow(
-      windowSec = 1, stealBudgetSec = 0.5, maxWaitSec = 2, ticks = dirty)
-    val elapsed = (System.nanoTime() - t0) / 1e9
-    assert(elapsed < 10.0, "give-up must fire once the budget is spent")
-    assert(last > 0.5,
-      "the last window's (dirty) steal is reported, not erased: the " +
-        "stamps carry the weather")
-    // ADVICE r15 #3: on the give-up path NO window was measurement —
-    // the full elapsed time is waiting (the passed-window subtraction
-    // must not fire). Two 1 s windows slept => waited ~2 s, not ~1 s.
-    assert(waited >= 1.5, f"refused wait undercounted: $waited%.2f s")
-    assert(waited <= elapsed + 0.1)
-  }
-
-  // ---- core-count contract (VERDICT r17 #2): the driver's 8-core
-  // scaling run archived itself as next round's canonical composite ----
-
-  test("archiveName: non-canonical core counts are name-suffixed like " +
-    "non-canonical scales, composing with the sf suffix") {
-    val d = dir("BENCH_r17.json" -> "{}")
-    assert(Bench.archiveName(d, "sf0.1", "32") === "BENCH_LOCAL_r18.json")
-    assert(Bench.archiveName(d, "sf0.1", "8") === "BENCH_LOCAL_r18_c8.json")
-    assert(Bench.archiveName(d, "sf0.01", "8") ===
-      "BENCH_LOCAL_r18_sf0.01_c8.json")
-  }
-
-  test("renderFloors/parseFloors round-trip the cpus stamp; a merge " +
-    "carries the run's stamp over a legacy unstamped incumbent") {
-    val f = floors(Map("q_a" -> 1.0), Map("q_a" -> 0.0)).copy(cpus = 32)
-    val line = Bench.renderFloors(f, "/root/testdata/sf0.1")
-    assert(line.contains(""""cpus":32"""), line)
-    assert(Bench.parseFloors(line).get.cpus === 32)
-    // pre-r18 archive (no cpus key) parses as unknown
-    assert(Bench.parseFloors(stampedLine(Map("q" -> 1.0), 0.0))
-      .get.cpus === -1)
-    // a stamped run upgrades an unstamped incumbent; the stamp survives
-    // a later unstamped-run merge (floors-tool-built runs)
-    val legacy = floors(Map("q_a" -> 2.0), Map("q_a" -> 0.0))
-    assert(Bench.mergeFloors(legacy, f, subset = false).cpus === 32)
-    assert(Bench.mergeFloors(f, legacy, subset = false).cpus === 32)
-  }
-
-  test("cpusCompatible: a present top-level stamp must match; absent " +
-    "or unreadable stamps are accepted (pre-r18 artifacts)") {
-    assert(Bench.cpusCompatible("""{"cpus":8,"sf":0.1}""", Some(8)))
-    assert(!Bench.cpusCompatible("""{"cpus":8,"sf":0.1}""", Some(32)))
-    assert(Bench.cpusCompatible("""{"sf":0.1}""", Some(32)))
-    assert(Bench.cpusCompatible("not json at all", Some(32)))
-    assert(Bench.cpusCompatible("""{"cpus":8}""", None))
-  }
-
-  test("previousRun: a cpu-stamped candidate at another core count is " +
-    "skipped — the driver's 8-core run (faster at this SF) must not " +
-    "become the 32-core 3x base") {
-    // the exact shape of BENCH_r17_c8.json: driver wrapper, cpus:8 at
-    // the top level, full bench line in the tail
-    val inner = stampedLine(Map("q_a" -> 0.5), 0.0)
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val d = dir(
-      "BENCH_r17.json" -> s"""{"n":17,"rc":0,"cpus":8,"sf":0.1,
-        "tail":${jstr(inner)}}""",
-      // dirty archive: without the cpu filter the CLEANER 8-core
-      // wrapper would win the cleanest-base preference
-      "BENCH_LOCAL_r17.json" -> stampedLine(Map("q_a" -> 1.2), 4.2))
-    assert(Bench.previousRun(d, "sf0.1", Some(32))._2 ===
-      "BENCH_LOCAL_r17.json",
-      "the 8-core wrapper must be filtered for a 32-core run")
-    assert(Bench.previousRun(d, "sf0.1", Some(8))._2 === "BENCH_r17.json",
-      "and accepted for an 8-core run")
-    // no cpu filter (legacy callers): cleanest stamp still wins
-    assert(Bench.previousRun(d, "sf0.1")._2 === "BENCH_r17.json")
+    assert(head.indexOf("\"unit\"") < head.indexOf("\"failed\""))
+    assert(head.indexOf("\"failed\"") < head.indexOf("\"cpus\""))
   }
 
   test("slimLine: the per-query map rides stdout only when the whole " +
     "line fits the driver's 2000-char tail capture (VERDICT r17 #1)") {
-    val head = Bench.tailHead(10.0, 9.0, 0, 0) + ""","cpus":32"""
+    val head = Bench.tailHead(10.0, 0, 32)
     val tail = ""","sf":"/root/testdata/sf0.1","full":"BENCH_LOCAL.json"}"""
     val few = Seq("q_a" -> 1.234, "q_b" -> 2.0)
     val small = Bench.slimLine(head, tail, few)

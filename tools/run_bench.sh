@@ -10,6 +10,9 @@
 cd "$(dirname "$0")/.." || exit 1
 CLASSES=${GRAFT_BENCH_CLASSES:-/tmp/graft-bench/classes}
 [ -d "$CLASSES" ] || CLASSES=target/scala-2.13/classes
+# default heap: half of MemTotal, clamped to 2-8 g
+HEAP=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null)}
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
@@ -25,5 +28,5 @@ exec java \
   --add-opens java.base/sun.security.action=ALL-UNNAMED \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-64g}" \
+  -Xmx"$HEAP" \
   -cp "$CLASSES:/opt/spark/jars/*" "${GRAFT_BENCH_MAIN:-graft.Bench}" "$@"

@@ -4,9 +4,8 @@
 # the sf0.1 tables (graft.tools.ScaleGen — disjoint per-replica
 # vocabulary, so similarity self-join work scales LINEARLY by
 # construction), then runs the same subset battery at 32 and at 8 cores
-# through the unmodified bench (subset runs never seed or merge the
-# canonical composite; non-canonical sf dirs and core counts are
-# name-suffixed by the bench itself).
+# through the unmodified bench (a subset run writes only
+# BENCH_LOCAL_partial.json; the per-query map rides its stdout line).
 #
 #   tools/scale_run.sh [K] [outBase]
 set -e
@@ -25,7 +24,6 @@ for CPUS in 32 8; do
   OUT="$BASE/scale_x${K}_c${CPUS}.log"
   echo "=== scale run x$K c$CPUS $(date -u +%H:%M:%S) ==="
   SPARK_GRAFT_SF_DIR="$DIR" SPARK_GRAFT_CPUS=$CPUS \
-    SPARK_GRAFT_QUIET_MAX_WAIT_SEC=${SPARK_GRAFT_QUIET_MAX_WAIT_SEC:-240} \
     tools/run_bench.sh $QUERIES > "$OUT" 2>&1 || true
   grep -a '"metric"' "$OUT" | tail -1
 done
