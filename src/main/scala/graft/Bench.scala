@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.{Obs, Scope}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs the SparkEntry queries against
@@ -18,7 +19,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (wall, job-seconds, /proc/stat steal, load, cpus, host) so a run taken
   * under contention identifies itself. Timings are comparable only
   * between runs with the same host and core count, which is why the
-  * archive name carries both.
+  * archive name carries both. Each query runs in a [[graft.obs.Collector]]
+  * scope; its job count and shuffle bytes, which need no luck to compare,
+  * ride the full line beside the timings.
   *
   * Outputs: the full line goes to `BENCH_LOCAL.json` (a subset run writes
   * `BENCH_LOCAL_partial.json` instead) and a full run also writes its own
@@ -31,42 +34,14 @@ object Bench {
     // render 96,115 — not JSON
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val cpusN = cpus.toIntOption.getOrElse(-1)
+    val cpusN = Obs.cpus
+    val cpus = cpusN.toString
     val runs = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt)
     val host = hostName()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: the one-line JSON contract wants a clean tail, and
-    // the WARN class here is known noise (localCheckpoint unpersists
-    // between queries, function re-registration, truncated plan strings)
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.functions.register(spark)
-
-    // job-seconds for the pass stamp: listener events are async, so a
-    // pass's snapshot can lag its last job by the bus drain (ms against
-    // minute-long passes)
-    val jobSeconds = new java.util.concurrent.atomic.DoubleAdder
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        private val starts =
-          new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.put(e.jobId, e.time)
-        override def onJobEnd(
-            e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val t0 = starts.remove(e.jobId)
-          if (t0 != null) jobSeconds.add((e.time - t0) / 1e3)
-        }
-      })
+    // log level ERROR: the one-line JSON contract wants a clean tail
+    val spark = Obs.session("graft-bench")
+    val collector = Obs.collector(spark)
 
     // JVM + codegen warmup so the first timed query does not absorb
     // session startup
@@ -82,15 +57,17 @@ object Bench {
     val samples = ordered.map { case (name, _) =>
       name -> scala.collection.mutable.ArrayBuffer.empty[Option[Double]]
     }.toMap
+    // the latest successful scope of each query: its counters
+    val counters = scala.collection.mutable.Map.empty[String, Counters]
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
 
+    // the timed region is the scope's construct + exec: from building the
+    // frame to the end of the noop write
     def timeOne(name: String, fn: (SparkSession, String) => DataFrame)
-        : Option[Double] = {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch {
+        : Option[Scope] =
+      try Some(collector.measure(fn(spark, sfDir))(
+        _.write.mode("overwrite").format("noop").save()))
+      catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           None
@@ -98,19 +75,24 @@ object Bench {
         // release blocks pinned by this query (localCheckpoints, cached
         // plans) so its leftovers cannot slow later queries — measured
         // 3-4x inflation on checkpoint-heavy queries without this
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        spark.catalog.clearCache()
+        Obs.release(spark)
       }
-    }
 
     val passes = (1 to runs).map { _ =>
       val w0 = System.nanoTime()
-      val j0 = jobSeconds.sum()
       val s0 = stealTicks()
-      for ((name, fn) <- ordered) samples(name) += timeOne(name, fn)
+      var jobSum = 0.0
+      for ((name, fn) <- ordered) {
+        val scope = timeOne(name, fn)
+        scope.foreach { s =>
+          jobSum += s.jobs.map(_.seconds).sum
+          counters(name) = Counters(s.jobs.size, s.shuffleWriteBytes)
+        }
+        samples(name) += scope.map(_.wallSec)
+      }
       PassStamp(
         wall = (System.nanoTime() - w0) / 1e9,
-        jobSum = jobSeconds.sum() - j0,
+        jobSum = jobSum,
         stealSec = (for (a <- s0; b <- stealTicks())
           yield (b - a) / userHz).getOrElse(-1.0),
         loadEnd = os.getSystemLoadAverage,
@@ -129,7 +111,8 @@ object Bench {
     val failedCount = stats.count(_._2.isEmpty)
     val tag = sfTag(sfDir)
     val files = outputFiles(subset, host, cpus, tag)
-    val line = fullLine(total, failedCount, cpusN, host, stats, passes, sfDir)
+    val line = fullLine(total, failedCount, cpusN, host, stats,
+      counters.toMap, passes, sfDir)
     val written = files.filter { f =>
       try {
         java.nio.file.Files.write(java.nio.file.Paths.get(f),
@@ -169,7 +152,11 @@ object Bench {
   def battery(stats: Seq[(String, Option[QueryStats])]): Double =
     stats.flatMap(_._2).map(_.min).sum
 
-  /** One pass's run-quality stamp: wall seconds, listener-summed job
+  /** A query's luck-free counters from its latest successful pass: the
+    * jobs it fired and the shuffle bytes it wrote. */
+  final case class Counters(jobs: Int, shuffleBytes: Long)
+
+  /** One pass's run-quality stamp: wall seconds, collector-summed job
     * seconds, /proc/stat steal seconds (-1 unreadable), the 1-minute
     * load at pass end, and the core count and host it ran on. */
   final case class PassStamp(wall: Double, jobSum: Double, stealSec: Double,
@@ -180,17 +167,25 @@ object Bench {
 
   /** The full per-query line written to the local file and the archive:
     * `queries` holds each query's min (the shape [[parseBenchLine]]
-    * reads), `median` and `spread` the rest of its stats, `-1` in all
-    * three for a query that failed in every pass. */
+    * reads), `median` and `spread` the rest of its stats, `jobs` and
+    * `shuffle_bytes` its [[Counters]]; `-1` in all five for a query that
+    * failed in every pass. */
   def fullLine(total: Double, failed: Int, cpus: Int, host: String,
-      stats: Seq[(String, Option[QueryStats])], passes: Seq[PassStamp],
+      stats: Seq[(String, Option[QueryStats])],
+      counters: Map[String, Counters], passes: Seq[PassStamp],
       sfDir: String): String = {
     def field(f: QueryStats => Double): String =
       jmap(stats.map { case (q, s) => q -> s.fold(-1.0)(f) })
+    def count(f: Counters => Long): String =
+      stats.map { case (q, s) =>
+        val n = s.flatMap(_ => counters.get(q)).fold(-1L)(f)
+        "\"" + q + "\":" + n
+      }.mkString("{", ",", "}")
     tailHead(total, failed, cpus) +
       s""","host":"${jsonEscape(host)}","runs":${passes.size}""" +
       s""","queries":${field(_.min)},"median":${field(_.median)}""" +
-      s""","spread":${field(_.spread)}""" +
+      s""","spread":${field(_.spread)},"jobs":${count(_.jobs)}""" +
+      s""","shuffle_bytes":${count(_.shuffleBytes)}""" +
       s""","passes":${passes.map(_.json).mkString("[", ",", "]")}""" +
       s""","sf":"${jsonEscape(sfDir)}"}"""
   }
@@ -210,7 +205,7 @@ object Bench {
     s"BENCH_LOCAL_${tag}_c${cpus}_${host.replaceAll("[^A-Za-z0-9.-]", "_")}.json"
 
   /** Host stamped on every pass and into the archive name. */
-  private def hostName(): String =
+  private[graft] def hostName(): String =
     try java.net.InetAddress.getLocalHost.getHostName
     catch { case _: Throwable => sys.env.getOrElse("HOSTNAME", "unknown") }
 

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.obs.Obs
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -21,15 +21,7 @@ object Verify {
     // and a contaminated box visible in the driver's verify log too.
     val steal0 = Bench.stealTicks()
     val wall0 = System.nanoTime()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Obs.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // a failure must stay LOUD end to end: the old per-query catch
     // swallowed the error with exit code 0 and left no output dir, which
@@ -48,13 +40,10 @@ object Verify {
         failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally {
-        // the Bench.timeOne discipline (ADVICE r17): the eager pins some
-        // queries ride (keepAboveQuantile, the banding candidate pins)
-        // are localCheckpoint blocks that catalog.clearCache does NOT
-        // free — without the unpersist-all they accumulate across the
+        // the eager pins some queries ride (keepAboveQuantile, the
+        // banding candidate pins) would otherwise accumulate across the
         // 123-query battery until GC, pure memory pressure at scale
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        spark.catalog.clearCache()
+        Obs.release(spark)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -19,10 +19,13 @@ import org.apache.spark.sql.DataFrame
   * loop, the streaming curation stages (StreamOps), and the incremental
   * stores (FingerprintIndex, NearDupIndex, GramIndex, CellIndex,
   * RecordStore, LatestStore). Results are identical in both modes — the
-  * barrier only changes where the materialized frame lives. The
-  * measurement harnesses under `tools/` deliberately stay
-  * executor-local: they pin to EXCLUDE scan cost from a measurement,
-  * and durability would change what they measure.
+  * barrier only changes where the materialized frame lives.
+  * `tools/SeamRetention` runs in reliable mode on purpose: it measures
+  * how reliable checkpoint files are retained.
+  *
+  * Every eager pin tags the jobs of its action with the operator that
+  * asked for it (local property [[graft.obs.Obs.OpKey]], e.g.
+  * `GraphOps.pageRank`), so the collector can attribute them.
   *
   * Long-running reliable mode (a streaming ingester): checkpoint files
   * accumulate under the dir until context shutdown. Set
@@ -45,13 +48,28 @@ private[graft] object Checkpoints {
     * (the pageRank trade). */
   def pin(df: DataFrame, eager: Boolean = true): DataFrame = {
     val spark = df.sparkSession
-    spark.conf.getOption(ReliableDirKey).filter(_.nonEmpty) match {
-      case Some(dir) =>
-        val sc = spark.sparkContext
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-        df.checkpoint(eager)
-      case None => df.localCheckpoint(eager)
+    graft.obs.Obs.tagged(spark.sparkContext, caller()) {
+      spark.conf.getOption(ReliableDirKey).filter(_.nonEmpty) match {
+        case Some(dir) =>
+          val sc = spark.sparkContext
+          if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+          df.checkpoint(eager)
+        case None => df.localCheckpoint(eager)
+      }
     }
+  }
+
+  /** `Object.method` of the first frame outside this object that is not
+    * a local def (`cp$1`): `GraphOps$` + `$anonfun$pageRank$2` names the
+    * operator `GraphOps.pageRank` that asked for the pin. */
+  private def caller(): String = {
+    def name(s: String) = s.split('$').find(p =>
+      p.nonEmpty && p != "anonfun" && !p.forall(_.isDigit)).getOrElse(s)
+    StackWalker.getInstance().walk { frames =>
+      frames.filter(f => f.getClassName != getClass.getName &&
+        !f.getMethodName.matches("[^$]+\\$\\d+")).findFirst()
+    }.map[String](f => name(f.getClassName.split('.').last) + "." +
+      name(f.getMethodName)).orElse("")
   }
 
   /** Release the block-manager copy behind a localCheckpointed frame

@@ -46,7 +46,7 @@ object TextQueries {
     * — the banding-recall specs' text-identity precondition and the
     * DuckDB oracles mirror them exactly — so every consumer
     * (q_ngram_jaccard, q_banding_recall/curve, BandingRecallSpec,
-    * tools/SeamTax) must read this definition, not restate it. */
+    * tools/SeamRetention) must read this definition, not restate it. */
   private[graft] def jaccardBase(documents: DataFrame): DataFrame =
     documents.select(
       col("doc_id"), col("lang"),

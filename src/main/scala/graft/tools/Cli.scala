@@ -19,18 +19,7 @@ import org.json4s.jackson.JsonMethods
   */
 object Cli {
 
-  private def spark(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private def spark(): SparkSession = graft.obs.Obs.session("graft-cli")
 
   private def root: String =
     sys.env.getOrElse("GRAFT_ROOT", sys.props("java.io.tmpdir") + "/graft")

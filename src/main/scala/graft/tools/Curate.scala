@@ -336,25 +336,13 @@ object Curate {
       val root = args.collectFirst {
         case a if a.startsWith("--root=") => a.stripPrefix("--root=")
       }.getOrElse(defaultRoot)
-      val s = SparkSession.builder().master("local[4]")
-        .appName("graft-curate-stats")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
+      val s = graft.obs.Obs.session("graft-curate-stats")
       stats(s, root).foreach(println)
       s.stop()
       return
     }
     val cfg = parseConfig(args)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-curate")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.obs.Obs.session("graft-curate")
     val q = run(spark, cfg)
     q.awaitTermination()
     println(s"curate: ${if (cfg.once) "drained" else "stopped"} " +

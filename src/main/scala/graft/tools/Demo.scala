@@ -3,7 +3,6 @@ package graft.tools
 import graft.core._
 import graft.query._
 import graft.store._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** End-to-end smoke driver for the archive store + querier: builds a
@@ -13,15 +12,8 @@ import org.apache.spark.sql.functions.col
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.obs.Obs.session("graft-demo",
+      "spark.sql.extensions" -> classOf[graft.functions.GraftExtensions].getName)
 
     val dir = java.nio.file.Files.createTempDirectory("graft-demo").toString
     val store = new RecordStore(spark, dir + "/records")

@@ -1,17 +1,18 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.obs.Obs
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming-ingest latency curves (VERDICT r8 #7): the four
   * history-backed dedup units claim per-batch cost INDEPENDENT of
   * history size — this main measures it end to end instead of arguing
   * from plan asserts. For each history multiplier (default 1×/8×/64×,
-  * via [[graft.Profile.buildSynthetic]]'s disjoint-copy corpus) it
+  * via [[ScaleGen.build]]'s disjoint-replica corpus) it
   * seeds a fresh index family with the multiplied corpus, then runs the
   * SAME fixed 1×-sized batch sequence through each stream's
   * foreachBatch unit and prints one INGESTLAT line per (op, mult,
-  * batch): wall seconds + shuffle read/write bytes.
+  * batch): wall seconds + shuffle read/write bytes from the collector.
   *
   *   - `exact`    = [[graft.store.FingerprintIndex.ingestResolved]]
   *                  (the [[graft.streaming.StreamOps.curateWithHistory]]
@@ -30,15 +31,12 @@ import org.apache.spark.sql.functions._
   *                  over mixed dup+novel batches, with the
   *                  `maintainAll` sweep timed after every batch)
   *
-  * Batch construction: each history dir's OWN copy-0 documents
-  * (doc_id < 1e6 — at mult=1 that is the raw base corpus) with ids
+  * Batch construction: each history dir's replica-0 documents
+  * (id < [[ScaleGen.Stride]] — the base corpus verbatim) with ids
   * shifted to a novel range — texts/vectors IDENTICAL to the history's
-  * copy-0 rows, so every op does real duplicate-detection work against
-  * copy-0 history, and that hit set is CONSTANT across multipliers
-  * (the other synthetic copies are textually disjoint; drawing the
-  * batch from the per-dir corpus matters because the synthetic build
-  * token-prefixes copy 0 too — a raw-base batch would be all-duplicate
-  * at 1× and all-novel at 8×/64×, comparing different work). A flat
+  * replica-0 rows, so every op does real duplicate-detection work
+  * against replica-0 history, and that hit set is CONSTANT across
+  * multipliers (the other replicas are textually disjoint). A flat
   * curve therefore means the probe legs really are pruned to the
   * batch's own keys / cells; growth with mult would mean the batch is
   * paying for history it can never match. Three batches per (op,
@@ -56,42 +54,32 @@ object IngestLatency {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mults =
       if (args.length > 1) args.drop(1).toSeq.map(_.toInt) else Seq(1, 8, 64)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_WARM=1: call each store's warm() between seed and
     // batch 1 — the first-touch-outlier mitigation under measurement
     val warm = sys.env.get("SPARK_GRAFT_WARM").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.functions.register(spark)
+    val spark = Obs.session("graft-ingestlatency")
+    val collector = Obs.collector(spark)
+    val replica0 = ScaleGen.Stride
 
-    val metrics = new graft.Profile.StageMetrics
-    spark.sparkContext.addSparkListener(metrics)
-
-    // fixed 1x-sized batch sequence: three disjoint copy-0 doc slices
+    // fixed 1x-sized batch sequence: three disjoint replica-0 doc slices
     // of the given dir, ids shifted novel, text/vectors verbatim
     def docBatches(dir: String): Seq[DataFrame] = (0 until 3).map { i =>
       spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
-        .filter(col("doc_id") < 1000000L && col("doc_id") % 3 === i)
+        .filter(col("doc_id") < replica0 && col("doc_id") % 3 === i)
         .select((col("doc_id") + 900000000L).as("doc_id"), col("text"))
         .localCheckpoint(true) // pin: measure the ingest, not the scan
     }
     def embBatches(dir: String): Seq[DataFrame] = (0 until 3).map { i =>
       spark.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"), col("embedding"))
-        .filter(col("vec_id") < 1000000L && col("vec_id") % 3 === i)
+        .filter(col("vec_id") < replica0 && col("vec_id") % 3 === i)
         .select((col("vec_id") + 900000000L).as("vec_id"), col("embedding"))
         .localCheckpoint(true)
     }
 
     // composed-pipeline batches: the dup half is the docBatches slice
-    // joined to its vectors (copy-0 texts, novel ids — real duplicate
+    // joined to its vectors (replica-0 texts, novel ids — real duplicate
     // work, dropped at the exact leg); the novel half prefixes every
     // token (novel fingerprints/bands/grams) and REVERSES the vector
     // under a disjoint id range, so it pays every leg and appends.
@@ -106,10 +94,10 @@ object IngestLatency {
     def pipeBatches(dir: String): Seq[DataFrame] = (0 until 3).map { i =>
       val d = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
-        .filter(col("doc_id") < 1000000L && col("doc_id") % 3 === i)
+        .filter(col("doc_id") < replica0 && col("doc_id") % 3 === i)
       val e = spark.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id").as("doc_id"), col("embedding"))
-        .filter(col("doc_id") < 1000000L && col("doc_id") % 3 === i)
+        .filter(col("doc_id") < replica0 && col("doc_id") % 3 === i)
       val joined = d.join(e, Seq("doc_id"))
       val dup = joined.select((col("doc_id") + 900000000L).as("doc_id"),
         col("text"), col("embedding"))
@@ -124,20 +112,30 @@ object IngestLatency {
       java.nio.file.Files.createTempDirectory(p).toString
 
     def measure(op: String, mult: Int, batch: Int)(f: => Long): Unit = {
-      val (r0, w0, _) = metrics.settle()
-      val t0 = System.nanoTime()
-      val rows = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      val (r1, w1, _) = metrics.settle()
-      println(f"INGESTLAT op=$op mult=$mult batch=$batch sec=$sec%.2f " +
-        f"shuffle_read_mb=${(r1 - r0) / 1e6}%.1f " +
-        f"shuffle_write_mb=${(w1 - w0) / 1e6}%.1f rows=$rows")
+      var rows = 0L
+      val s = collector.measure(())(_ => rows = f)
+      println(f"INGESTLAT op=$op mult=$mult batch=$batch sec=${s.wallSec}%.2f " +
+        f"shuffle_read_mb=${s.shuffleReadBytes / 1e6}%.1f " +
+        f"shuffle_write_mb=${s.shuffleWriteBytes / 1e6}%.1f rows=$rows")
+    }
+
+    // seed an op's stores with the history; with SPARK_GRAFT_WARM=1 then
+    // run their warm() and time it separately
+    def seed(op: String, mult: Int)(ingest: => Unit)(warmAll: => Long)
+        : Unit = {
+      val s = collector.measure(())(_ => ingest)
+      println(f"INGESTLAT seeded op=$op mult=$mult sec=${s.wallSec}%.1f")
+      if (warm) {
+        var n = 0L
+        val w = collector.measure(())(_ => n = warmAll)
+        println(f"INGESTLAT warmed op=$op mult=$mult n=$n sec=${w.wallSec}%.1f")
+      }
     }
 
     for (mult <- mults) {
       val dir =
         if (mult == 1) sfDir
-        else graft.Profile.buildSynthetic(spark, sfDir, mult)
+        else ScaleGen.build(spark, sfDir, mult)
       val histDocs = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
       val histEmb = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -146,63 +144,28 @@ object IngestLatency {
       val eBatches = embBatches(dir)
 
       val fp = new graft.store.FingerprintIndex(spark, tmp("lat-fp"))
-      val t0 = System.nanoTime()
-      fp.ingest(histDocs)
-      println(f"INGESTLAT seeded op=exact mult=$mult " +
-        f"sec=${(System.nanoTime() - t0) / 1e9}%.1f")
-      if (warm) {
-        val w0 = System.nanoTime()
-        val n = fp.warm()
-        println(f"INGESTLAT warmed op=exact mult=$mult n=$n " +
-          f"sec=${(System.nanoTime() - w0) / 1e9}%.1f")
-      }
+      seed("exact", mult)(fp.ingest(histDocs))(fp.warm())
       dBatches.zipWithIndex.foreach { case (b, i) =>
         measure("exact", mult, i + 1)(fp.ingestResolved(b).count())
       }
 
       val gr = new graft.store.GramIndex(spark, tmp("lat-gr"),
         w = 8, buckets = 64)
-      val t1 = System.nanoTime()
-      gr.ingest(histDocs)
-      println(f"INGESTLAT seeded op=spans mult=$mult " +
-        f"sec=${(System.nanoTime() - t1) / 1e9}%.1f")
-      if (warm) {
-        val w0 = System.nanoTime()
-        val n = gr.warm()
-        println(f"INGESTLAT warmed op=spans mult=$mult n=$n " +
-          f"sec=${(System.nanoTime() - w0) / 1e9}%.1f")
-      }
+      seed("spans", mult)(gr.ingest(histDocs))(gr.warm())
       dBatches.zipWithIndex.foreach { case (b, i) =>
         measure("spans", mult, i + 1)(gr.ingest(b).count())
       }
 
       val nd = new graft.store.NearDupIndex(spark, tmp("lat-nd"),
         buckets = 64)
-      val t3 = System.nanoTime()
-      nd.append(histDocs)
-      println(f"INGESTLAT seeded op=neardup mult=$mult " +
-        f"sec=${(System.nanoTime() - t3) / 1e9}%.1f")
-      if (warm) {
-        val w0 = System.nanoTime()
-        val n = nd.warm()
-        println(f"INGESTLAT warmed op=neardup mult=$mult n=$n " +
-          f"sec=${(System.nanoTime() - w0) / 1e9}%.1f")
-      }
+      seed("neardup", mult)(nd.append(histDocs))(nd.warm())
       dBatches.zipWithIndex.foreach { case (b, i) =>
         measure("neardup", mult, i + 1)(nd.ingest(b).count())
       }
 
       val cell = new graft.operators.CellIndex(spark, tmp("lat-cell"))
-      val t2 = System.nanoTime()
-      cell.buildLearned(histEmb, k = 64, iters = 2)
-      println(f"INGESTLAT seeded op=semantic mult=$mult " +
-        f"sec=${(System.nanoTime() - t2) / 1e9}%.1f")
-      if (warm) {
-        val w0 = System.nanoTime()
-        val n = cell.warm()
-        println(f"INGESTLAT warmed op=semantic mult=$mult n=$n " +
-          f"sec=${(System.nanoTime() - w0) / 1e9}%.1f")
-      }
+      seed("semantic", mult)(cell.buildLearned(histEmb, k = 64, iters = 2))(
+        cell.warm())
       eBatches.zipWithIndex.foreach { case (b, i) =>
         measure("semantic", mult, i + 1)(
           cell.semanticIngestResolved(b, thresholdMicro = 300000L)._1.count())
@@ -220,19 +183,12 @@ object IngestLatency {
       val ndP = new graft.store.NearDupIndex(spark, tmp("lat-pnd"),
         buckets = 64)
       val cellP = new graft.operators.CellIndex(spark, tmp("lat-pcell"))
-      val t5 = System.nanoTime()
-      fpP.ingest(histDocs)
-      grP.ingest(histDocs)
-      ndP.append(histDocs)
-      cellP.buildLearned(histEmb, k = 64, iters = 2)
-      println(f"INGESTLAT seeded op=pipeline mult=$mult " +
-        f"sec=${(System.nanoTime() - t5) / 1e9}%.1f")
-      if (warm) {
-        val w0 = System.nanoTime()
-        val n = fpP.warm() + grP.warm() + ndP.warm() + cellP.warm()
-        println(f"INGESTLAT warmed op=pipeline mult=$mult n=$n " +
-          f"sec=${(System.nanoTime() - w0) / 1e9}%.1f")
-      }
+      seed("pipeline", mult) {
+        fpP.ingest(histDocs)
+        grP.ingest(histDocs)
+        ndP.append(histDocs)
+        cellP.buildLearned(histEmb, k = 64, iters = 2)
+      }(fpP.warm() + grP.warm() + ndP.warm() + cellP.warm())
       // permissive gate: the tool measures pipeline cost, not gate
       // selectivity — junk-heavy corpora shortcut the very legs under
       // measurement

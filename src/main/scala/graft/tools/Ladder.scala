@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.obs.{Obs, Scope}
 
 /** Three-rung scaling ladder for the pair/join battery family
   * (VERDICT r12 #3): two points (sf0.01 vs sf0.1) fit a straight line
@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * "ratio 2.3, fine" on one step and only shows its curve on the next.
   * This main measures each query at sf0.01 (500 docs), sf0.1 (5 000),
   * and a synthetic ×`SPARK_GRAFT_LADDER_MULT` (default 10 → 50 000
-  * docs, [[graft.Profile.buildSynthetic]]'s construction: duplication
-  * density constant, volume scaled), then fits a per-leg scaling
+  * docs, [[ScaleGen.build]]'s construction: duplication density
+  * constant, volume scaled), then fits a per-leg scaling
   * exponent p = ln(t₂/t₁) / ln(n₂/n₁) against the DRIVING table's real
   * row counts (documents vs embeddings — they scale differently across
   * the driver's dirs). A query whose top-leg exponent exceeds
@@ -22,12 +22,16 @@ import org.apache.spark.sql.SparkSession
   *
   * Each rung is the best of `SPARK_GRAFT_LADDER_RUNS` (2) samples, and
   * carries the steal accrued during that best sample alone, so a rung
-  * taken under contention is visible in its own line.
+  * taken under contention is visible in its own line, plus that sample's
+  * shuffle read, shuffle write and spill bytes from the collector: a
+  * query whose shuffle grows ~linearly with the corpus at a near-constant
+  * bytes-per-row is shaped right for scale; a superlinear jump flags a
+  * pair explosion or a partition-count cliff.
   * A `q_neardup_probe_fixed` pseudo-query ladders the probe in its PURE
   * probe-independence form: fixed ~50-doc batch against 500/5k/50k
   * histories. Output: one `LADDER` line per (query, rung), one
   * `LADDER-FIT` line per query, and a closing JSON summary (per-rung
-  * `steal` included). PROFILE.md holds the analysis. */
+  * `steal` and shuffle bytes included). PROFILE.md holds the analysis. */
 object Ladder {
 
   /** The laddered battery (r14 widens the original pair/join family
@@ -72,7 +76,18 @@ object Ladder {
     "q_neardup_probe" -> "documents", // banded postings probe vs history
     // archive family — pushed-filter scans + TakeOrdered pages
     "q_time_interval" -> "events",
-    "q_cursor_page" -> "events")
+    "q_cursor_page" -> "events",
+    // aggregation and model families — corpus-wide aggregates with
+    // broadcast legs must stay ~linear per unit of corpus
+    "q_percentiles" -> "lineitem", // exact-kth histogram chains
+    "q_line_dedup" -> "documents", // line counting + blocklist
+    "q_lm_coverage" -> "documents", // vocab learning + scoring
+    "q_charlm_score" -> "documents", // two linear scans, broadcast model
+    "q_bpe_tokens" -> "documents", // broadcast-merges encode scan
+    "q_cms_registers" -> "documents", // bounded sketch state
+    "q_dsir_weights" -> "documents", // two-agg broadcast model
+    "q_curation_pipeline" -> "documents", // composed curation stages
+    "q_image_neardup" -> "documents") // hash-only-exchange image pipeline
 
   /** Top-leg exponent above which a query is flagged by name: 1.0 is
     * linear, candidate/pair families legitimately run slightly above
@@ -81,28 +96,30 @@ object Ladder {
     * fixed-overhead noise. */
   val SuperLinear = 1.3
 
+  /** One rung: driving-table rows, and the best sample's seconds, steal,
+    * shuffle read, shuffle write and spill bytes. */
+  private final case class Rung(rows: Long, sec: Double, steal: Double,
+      shuffleRead: Long, shuffleWrite: Long, spill: Long) {
+    def json: String =
+      f"""{"rows":$rows,"sec":$sec%.3f,"steal":$steal%.2f,""" +
+        s""""shuffle_read":$shuffleRead,"shuffle_write":$shuffleWrite,""" +
+        s""""spill":$spill}"""
+  }
+
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val mult = sys.env.getOrElse("SPARK_GRAFT_LADDER_MULT", "10").toInt
     val rung2 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val rung1 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR_SMALL",
       "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.functions.register(spark)
+    val spark = Obs.session("graft-ladder")
+    val collector = Obs.collector(spark)
     spark.range(1000000).selectExpr("sum(id)").collect() // JVM warmup
 
-    val rung3 = graft.Profile.buildSynthetic(spark, rung2, mult)
-    // quiesce after the synthetic build (see Profile.main: async cleaner
-    // work otherwise lands inside the first measured query)
+    val rung3 = ScaleGen.build(spark, rung2, mult)
+    // quiesce after the synthetic build: the multi-GB write leaves async
+    // work (ContextCleaner shuffle/broadcast deletion, GC of the build's
+    // task results) that otherwise lands inside the first measured query
     spark.range(1000000).selectExpr("sum(id)").collect()
     System.gc()
     Thread.sleep(3000)
@@ -115,39 +132,40 @@ object Ladder {
       rowCount.getOrElseUpdate((dir, table),
         spark.read.parquet(s"$dir/$table.parquet").count())
 
-    def clearPins(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
-    }
-
-    // one measured sample with the /proc/stat steal accrued during it
-    // alone (-1 when unreadable)
-    def sample(body: () => Unit): (Double, Double) = {
+    // one measured sample through the noop sink, with the /proc/stat
+    // steal accrued during it alone (-1 when unreadable)
+    def sample(frame: => org.apache.spark.sql.DataFrame): (Scope, Double) = {
       val s0 = graft.Bench.stealTicks()
-      val t0 = System.nanoTime()
-      body()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val scope = try collector.measure(frame)(
+        _.write.mode("overwrite").format("noop").save())
+      finally Obs.release(spark)
       val steal = (for (a <- s0; b <- graft.Bench.stealTicks())
         yield (b - a) / graft.Bench.userHz).getOrElse(-1.0)
-      clearPins()
-      (sec, steal)
+      (scope, steal)
     }
 
-    def run(name: String, dir: String): (Double, Double) =
-      sample(() => graft.SparkEntry.queries(name)(spark, dir)
-        .write.mode("overwrite").format("noop").save())
+    def run(name: String, dir: String): (Scope, Double) =
+      sample(graft.SparkEntry.queries(name)(spark, dir))
 
     val samples = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_LADDER_RUNS", "2").toInt)
     // best-of-N: contention only inflates, so the min sample is the rung
-    def floorOf(one: () => (Double, Double)): (Double, Double) =
-      (1 to samples).map(_ => one()).minBy(_._1)
+    def rungOf(one: () => (Scope, Double), name: String, dir: String,
+        n: Long): Rung = {
+      val (scope, steal) = (1 to samples).map(_ => one()).minBy(_._1.wallSec)
+      println(f"LADDER q=$name dir=$dir rows=$n sec=${scope.wallSec}%.2f " +
+        f"steal=$steal%.2f shuffle_read_mb=${scope.shuffleReadBytes / 1e6}%.1f " +
+        f"shuffle_write_mb=${scope.shuffleWriteBytes / 1e6}%.1f " +
+        f"spill_mb=${scope.spillBytes / 1e6}%.1f")
+      Rung(n, scope.wallSec, steal, scope.shuffleReadBytes,
+        scope.shuffleWriteBytes, scope.spillBytes)
+    }
 
-    def fitAndPrint(name: String, times: Seq[(Long, Double, Double)])
-        : (String, Seq[(Long, Double, Double)], Seq[Double]) = {
+    def fitAndPrint(name: String, times: Seq[Rung])
+        : (String, Seq[Rung], Seq[Double]) = {
       val legs = times.sliding(2).collect {
-        case Seq((n1, t1, _), (n2, t2, _)) if n2 > n1 && t1 > 0 =>
-          math.log(t2 / t1) / math.log(n2.toDouble / n1)
+        case Seq(a, b) if b.rows > a.rows && a.sec > 0 =>
+          math.log(b.sec / a.sec) / math.log(b.rows.toDouble / a.rows)
       }.toSeq
       val top = legs.lastOption.getOrElse(Double.NaN)
       val flag = if (top > SuperLinear) " SUPERLINEAR" else ""
@@ -163,11 +181,7 @@ object Ladder {
         // clusterTableCache) land in each rung's warm pass — measured
         // runs see steady state, so the curve is pure data scaling
         run(name, dir)
-        val (sec, steal) = floorOf(() => run(name, dir))
-        val n = rowsOf(dir, table)
-        println(f"LADDER q=$name dir=$dir rows=$n sec=$sec%.2f " +
-          f"steal=$steal%.2f")
-        (n, sec, steal)
+        rungOf(() => run(name, dir), name, dir, rowsOf(dir, table))
       }
       fitAndPrint(name, times)
     }
@@ -192,35 +206,25 @@ object Ladder {
           .createTempDirectory("graft-ladder-neardup-").toFile
         val idx = new graft.store.NearDupIndex(spark, root.toString)
         idx.append(spark.read.parquet(s"$dir/documents.parquet"))
-        clearPins()
-        def probe(): Unit =
-          idx.probe(batch).write.mode("overwrite").format("noop").save()
-        probe() // warm: plan + postings footer reads
-        // drop the warm pass's Checkpoints pins (ADVICE r15 #2): the
-        // battery path's warm run() clears pins via sample(), but a bare
-        // probe() leaves its pinned frames in the CacheManager, and the
-        // first measured sample's semantically-identical plans could hit
-        // that cache — publishing a cached-read time as the floor
-        clearPins()
-        val (sec, steal) = floorOf(() => sample(() => probe()))
-        val n = rowsOf(dir, "documents")
-        println(f"LADDER q=$probeFixed dir=$dir rows=$n sec=$sec%.2f " +
-          f"steal=$steal%.2f")
+        Obs.release(spark)
+        // warm: plan + postings footer reads; sample() releases its pins,
+        // so the measured samples cannot hit the warm pass's cached plans
+        sample(idx.probe(batch))
+        val rung = rungOf(() => sample(idx.probe(batch)), probeFixed, dir,
+          rowsOf(dir, "documents"))
         def rm(f: java.io.File): Unit = {
           if (f.isDirectory)
             Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
           f.delete()
         }
         rm(root)
-        (n, sec, steal)
+        rung
       }
       fitAndPrint(probeFixed, times)
     }
 
     val qjson = fits2.map { case (n, times, legs) =>
-      s""""$n":{"rungs":${times.map { case (r, t, s) =>
-        s"""{"rows":$r,"sec":${f"$t%.3f"},"steal":${f"$s%.2f"}}"""
-      }.mkString("[", ",", "]")},""" +
+      s""""$n":{"rungs":${times.map(_.json).mkString("[", ",", "]")},""" +
         s""""exponents":${legs.map(l => f"$l%.3f").mkString("[", ",", "]")}}"""
     }.mkString("{", ",", "}")
     val worst = fits2.flatMap { case (n, _, legs) =>

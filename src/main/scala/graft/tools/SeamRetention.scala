@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.obs.Obs
 import org.apache.spark.sql.functions._
 
 /** Reliable-checkpoint RETENTION soak (VERDICT r14 #8): the last open
@@ -43,16 +43,9 @@ object SeamRetention {
     val batches = sys.env.getOrElse("SPARK_GRAFT_SEAM_BATCHES", "8").toInt
     val ckDir = java.nio.file.Files
       .createTempDirectory("graft-seam-retention-").toString
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.checkpoint.dir", ckDir)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.functions.register(spark)
+    val spark = Obs.session("graft-seamretention",
+      "spark.graft.checkpoint.dir" -> ckDir,
+      "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")
 
     def rddDirs(): Int = {
       def walk(f: java.io.File): Int =
@@ -72,8 +65,7 @@ object SeamRetention {
         base, "doc_id", "words", Seq("lang", "size_bucket"), 1, 4)
       val n = pairs.count()
       // release like a real caller: the result pin is done with
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
+      Obs.release(spark)
       // let the ContextCleaner see the dead references and delete
       System.gc()
       Thread.sleep(2000)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.obs.Obs
 import org.apache.spark.sql.functions._
 
 import graft.operators.CellIndex
@@ -8,9 +8,8 @@ import graft.store.{FingerprintIndex, GramIndex, ManifestLog, NearDupIndex,
   SketchStore}
 
 /** Unified capacity plan for every manifested store family — the table
-  * a 100 TB deployment reads first. [[GramEconomics]] proved the shape
-  * for one store (stored bytes per unit of corpus, measured, flat in
-  * scale); this main measures ALL of them in one run: for each input
+  * a 100 TB deployment reads first: stored bytes per unit of corpus,
+  * measured, for every store family in one run. For each input
   * dir it ingests `documents.parquet` / `embeddings.parquet` into fresh
   * temp stores and prints one STORECON line per store with rows, stored
   * bytes, bytes per doc, bytes per corpus token (text stores), and
@@ -26,7 +25,7 @@ import graft.store.{FingerprintIndex, GramIndex, ManifestLog, NearDupIndex,
   *   - `sketch_hll`    per-source HLL registers — state ∝ groups, not corpus
   *
   * Scaling rows: pass `<dir>@<mult>` to measure against
-  * [[graft.Profile.buildSynthetic]]'s disjoint-copy corpus (e.g.
+  * [[ScaleGen.build]]'s disjoint-replica corpus (e.g.
   * `/root/testdata/sf0.1@8` for the ×8 point) — constants that stay
   * flat across sf0.01 → sf0.1 → ×8 are the evidence the 100 TB
   * extrapolation stands on.
@@ -38,21 +37,13 @@ object StoreEconomics {
     val specs =
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.functions.register(spark)
+    val spark = Obs.session("graft-storeeconomics")
+    val collector = Obs.collector(spark)
 
     for (spec <- specs) {
       val dir = spec.split("@") match {
         case Array(d) => d
-        case Array(d, m) => graft.Profile.buildSynthetic(spark, d, m.toInt)
+        case Array(d, m) => ScaleGen.build(spark, d, m.toInt)
       }
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"), col("source"))
@@ -74,11 +65,8 @@ object StoreEconomics {
           f"bytes_per_token=${bytes.toDouble / math.max(tokens, 1)}%.2f " +
           f"build_sec=$sec%.1f")
 
-      def timed[A](body: => A): (A, Double) = {
-        val t0 = System.nanoTime()
-        val a = body
-        (a, (System.nanoTime() - t0) / 1e9)
-      }
+      def timed(body: => Unit): Double =
+        collector.measure(())(_ => body).wallSec
 
       // SPARK_GRAFT_STORECON_ONLY=fingerprint,grams,… restricts the
       // run to named families — the ×64 sweeps run the slow seeds
@@ -92,7 +80,7 @@ object StoreEconomics {
       if (wanted("fingerprint")) {
         val p = tmp("fp")
         val idx = new FingerprintIndex(spark, p, buckets = 256)
-        val (_, sec) = timed(idx.ingest(docs.select("doc_id", "text")))
+        val sec = timed(idx.ingest(docs.select("doc_id", "text")))
         val log = new ManifestLog(spark, p)
         line("fingerprint", nDocs, log.rowCount(), idx.stats().bytes, sec)
       }
@@ -103,7 +91,7 @@ object StoreEconomics {
       if (wanted("neardup")) {
         val p = tmp("nd")
         val idx = new NearDupIndex(spark, p, buckets = 256)
-        val (_, sec) = timed(idx.ingest(docs.select("doc_id", "text")))
+        val sec = timed(idx.ingest(docs.select("doc_id", "text")))
         val log = new ManifestLog(spark, p)
         line("neardup_post", nDocs, log.rowCount("kind=postings"),
           log.storeStats("kind=postings").bytes, sec)
@@ -115,7 +103,7 @@ object StoreEconomics {
       if (wanted("grams")) {
         val p = tmp("gm")
         val idx = new GramIndex(spark, p, w = 8, buckets = 256)
-        val (_, sec) = timed(idx.ingest(docs.select("doc_id", "text")))
+        val sec = timed(idx.ingest(docs.select("doc_id", "text")))
         val log = new ManifestLog(spark, p)
         line("grams", nDocs, log.rowCount(), idx.stats().bytes, sec)
       }
@@ -123,7 +111,7 @@ object StoreEconomics {
       // semantic index: float table + PQ codes, per VECTOR
       if (wanted("cell")) {
         val idx = new CellIndex(spark, tmp("cell"))
-        val (_, sec) = timed {
+        val sec = timed {
           idx.buildLearned(emb, k = 16)
           idx.buildPq(m = 4, k = 4)
         }
@@ -149,7 +137,7 @@ object StoreEconomics {
         val cells = graft.operators.Hll
           .registers(docs, Seq("source"), "text")
           .withColumnRenamed("source", "group")
-        val (_, sec) = timed(store.ingest(cells, "storecon-batch"))
+        val sec = timed(store.ingest(cells, "storecon-batch"))
         val log = new ManifestLog(spark, p)
         line("sketch_hll", nDocs, log.rowCount(), store.stats().bytes, sec)
       }

@@ -40,9 +40,14 @@ class BenchDefenseSpec extends AnyFunSuite {
       "q_healed" -> healed)
     assert(Bench.battery(stats) === 3.0,
       "the time-to-error of a failed query never enters the total")
-    // the full line marks the failure with -1 in every per-query map
+    // the full line marks the failure with -1 in every per-query map,
+    // the counters of a failed query included even when an earlier
+    // build left some behind
+    val counters = Map("q_a" -> Bench.Counters(7, 1234L),
+      "q_broken" -> Bench.Counters(3, 5L),
+      "q_healed" -> Bench.Counters(2, 0L))
     val line = Bench.fullLine(Bench.battery(stats), 1, 4, "h", stats,
-      Seq(Bench.PassStamp(10.0, 9.0, 0.0, 1.0, 4, "h")),
+      counters, Seq(Bench.PassStamp(10.0, 9.0, 0.0, 1.0, 4, "h")),
       "/data/sf0.1")
     import org.json4s._
     val v = org.json4s.jackson.JsonMethods.parse(line)
@@ -50,6 +55,12 @@ class BenchDefenseSpec extends AnyFunSuite {
     assert(v \ "failed" === JInt(1))
     for (k <- Seq("queries", "median", "spread"))
       assert(v \ k \ "q_broken" === JDouble(-1.0), k)
+    for (k <- Seq("jobs", "shuffle_bytes"))
+      assert(v \ k \ "q_broken" === JInt(-1), k)
+    assert(v \ "jobs" \ "q_a" === JInt(7))
+    assert(v \ "shuffle_bytes" \ "q_a" === JInt(1234))
+    assert(v \ "jobs" \ "q_healed" === JInt(2))
+    assert(v \ "shuffle_bytes" \ "q_healed" === JInt(0))
     assert(v \ "spread" \ "q_a" === JDouble(0.5))
     assert(v \ "median" \ "q_a" === JDouble(1.25))
     assert(Bench.parseBenchLine(line).map(_._1("q_a")) === Some(1.0))
@@ -59,8 +70,8 @@ class BenchDefenseSpec extends AnyFunSuite {
     val passes = Seq(Bench.PassStamp(60.0, 55.5, 0.3, 2.0, 4, "box-a"),
       Bench.PassStamp(58.0, 54.0, -1.0, 1.5, 4, "box-a"))
     val line = Bench.fullLine(1.0, 0, 4, "box-a",
-      Seq("q" -> Bench.queryStats(Seq(Some(1.0), Some(1.2)))), passes,
-      "/data/sf0.1")
+      Seq("q" -> Bench.queryStats(Seq(Some(1.0), Some(1.2)))),
+      Map("q" -> Bench.Counters(1, 0L)), passes, "/data/sf0.1")
     import org.json4s._
     val ps = org.json4s.jackson.JsonMethods.parse(line) \ "passes" match {
       case JArray(xs) => xs

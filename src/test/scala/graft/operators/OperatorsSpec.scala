@@ -237,26 +237,15 @@ class OperatorsSpec extends SparkSuite {
     val n = 64L
     val vertices = (1L to n).toDF("doc_id")
     val edges = (1L until n).map(i => (n - i + 1, n - i)).toDF("doc_a", "doc_b")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     // AQE schedules every query stage as its own job, which would bury
     // the per-round action count; without it one action == one job
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val got = Dedup.connectedComponents(vertices, edges, maxIterations = 20)
-        .collect().map(_.getLong(1)).distinct
-      assert(got === Array(1L))
-    } finally {
-      // listener bus is async: give in-flight events time to drain
-      Thread.sleep(2000)
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-    }
+    val scope = try graft.obs.Obs.collector(spark).measure(
+        Dedup.connectedComponents(vertices, edges, maxIterations = 20))(cc =>
+        assert(cc.collect().map(_.getLong(1)).distinct === Array(1L)))
+      finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
+    val jobs = scope.jobs.size
     val rounds = Dedup.lastConnectedComponentsRounds
     assert(rounds >= 4, s"pointer-jump chain should need several rounds, got $rounds")
     // exactly ONE action per round: the changed-count aggregate is the
@@ -264,8 +253,8 @@ class OperatorsSpec extends SparkSuite {
     // overhead: the 2 initial eager checkpoints + the final collect. The
     // old eager-checkpoint-then-isEmpty shape paid 2 jobs per round and
     // fails this bound.
-    assert(jobs.get() <= rounds + 4,
-      s"expected 1 job per round, got ${jobs.get()} for $rounds rounds")
+    assert(jobs <= rounds + 4,
+      s"expected 1 job per round, got $jobs for $rounds rounds")
   }
 
   test("ivfTopK returns k ranked neighbors from probed cells") {

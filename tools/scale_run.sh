@@ -1,13 +1,14 @@
 #!/bin/bash
-# Scaling-evidence runner (VERDICT r17 #3/#6): measure the top-floor
-# queries where data outweighs per-job overhead. Builds a K× replica of
-# the sf0.1 tables (graft.tools.ScaleGen — disjoint per-replica
-# vocabulary, so similarity self-join work scales LINEARLY by
-# construction), then runs the same subset battery at 32 and at 8 cores
-# through the unmodified bench (a subset run writes only
-# BENCH_LOCAL_partial.json; the per-query map rides its stdout line).
+# Scaling-evidence runner: measure the top-floor queries where data
+# outweighs per-job overhead. Builds a K× replica of the sf0.1 tables
+# (graft.tools.ScaleGen — disjoint per-replica vocabulary, so similarity
+# self-join work scales LINEARLY by construction), then runs the same
+# subset battery at all cores and at half of them through the unmodified
+# bench (a subset run writes only BENCH_LOCAL_partial.json; the
+# per-query map and the cpus stamp ride its stdout line).
 #
 #   tools/scale_run.sh [K] [outBase]
+#   tools/scale_table.py "$outBase"/scale_x${K}_c*.log
 set -e
 cd "$(dirname "$0")/.." || exit 1
 K=${1:-20}
@@ -20,7 +21,8 @@ if [ ! -d "$DIR/documents.parquet" ]; then
   GRAFT_BENCH_MAIN=graft.tools.ScaleGen tools/run_bench.sh \
     /root/testdata/sf0.1 "$DIR" "$K"
 fi
-for CPUS in 32 8; do
+NPROC=$(nproc)
+for CPUS in "$NPROC" $(( NPROC > 1 ? NPROC / 2 : 1 )); do
   OUT="$BASE/scale_x${K}_c${CPUS}.log"
   echo "=== scale run x$K c$CPUS $(date -u +%H:%M:%S) ==="
   SPARK_GRAFT_SF_DIR="$DIR" SPARK_GRAFT_CPUS=$CPUS \

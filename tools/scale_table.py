@@ -1,12 +1,14 @@
 #!/usr/bin/env python3
-"""Render the r18 scaling table from two scale_run.sh logs.
+"""Render the scaling table from two scale_run.sh logs.
 
-Usage: scale_table.py <c32_log> <c8_log> [sf01_archive]
+Usage: scale_table.py <log_a> <log_b> [sf01_archive]
 
 Reads the last bench JSON line from each log (subset runs carry the
-per-query map inline), prints per-query seconds at 32 and 8 cores, the
-c8/c32 ratio (>1 = the query benefits from cores), and — when an sf0.1
-composite archive is given — the x20/sf0.1 work ratio at 32 cores.
+per-query map inline) and labels each column with that line's `cpus`
+stamp. Prints per-query seconds at both core counts, the ratio of the
+fewer-core run to the more-core run (>1 = the query benefits from
+cores), and — when an sf0.1 archive is given — the scaled/sf0.1 work
+ratio at the higher core count.
 """
 import json
 import sys
@@ -21,28 +23,28 @@ def last_line(path):
 
 
 def main():
-    c32 = last_line(sys.argv[1])
-    c8 = last_line(sys.argv[2])
+    hi, lo = sorted((last_line(p) for p in sys.argv[1:3]),
+                    key=lambda r: r.get("cpus", 0), reverse=True)
+    h, l = f"c{hi.get('cpus', '?')}", f"c{lo.get('cpus', '?')}"
     base = json.load(open(sys.argv[3]))["queries"] if len(sys.argv) > 3 \
         else {}
-    q32, q8 = c32["queries"], c8["queries"]
-    common = sorted(q for q in q32 if q in q8 and q32[q] > 0 and q8[q] > 0)
-    print(f"{'query':28s} {'c32 s':>8s} {'c8 s':>8s} {'c8/c32':>7s}"
-          + (f" {'x20/sf0.1@c32':>14s}" if base else ""))
+    qh, ql = hi["queries"], lo["queries"]
+    common = sorted(q for q in qh if q in ql and qh[q] > 0 and ql[q] > 0)
+    print(f"{'query':28s} {h + ' s':>8s} {l + ' s':>8s} {l + '/' + h:>9s}"
+          + (f" {'scaled/sf0.1@' + h:>16s}" if base else ""))
     ratios = []
     for q in common:
-        r = q8[q] / q32[q]
+        r = ql[q] / qh[q]
         ratios.append(r)
-        row = f"{q:28s} {q32[q]:8.2f} {q8[q]:8.2f} {r:7.2f}"
+        row = f"{q:28s} {qh[q]:8.2f} {ql[q]:8.2f} {r:9.2f}"
         if base and base.get(q, 0) > 0:
-            row += f" {q32[q] / base[q]:14.1f}"
+            row += f" {qh[q] / base[q]:16.1f}"
         print(row)
     ratios.sort()
     med = ratios[len(ratios) // 2]
-    print(f"\nmedian c8/c32: {med:.2f}  "
-          f"(>1 = more cores help; sf0.1's was ~0.87, i.e. cores HURT)")
-    print(f"c32 total {sum(q32[q] for q in common):.1f} s, "
-          f"c8 total {sum(q8[q] for q in common):.1f} s")
+    print(f"\nmedian {l}/{h}: {med:.2f}  (>1 = more cores help)")
+    print(f"{h} total {sum(qh[q] for q in common):.1f} s, "
+          f"{l} total {sum(ql[q] for q in common):.1f} s")
 
 
 if __name__ == "__main__":
