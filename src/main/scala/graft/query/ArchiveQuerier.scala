@@ -20,11 +20,20 @@ final case class QueryPage(records: Seq[UnpackedRecord], cursor: Option[Cursor])
 /** DataFrame reimplementation of the reference's ArchiveQuerier
   * (`api/datalake_api/querier.py:180-417`).
   *
-  * Every page is ONE Spark job: partition-pruned scan → pushed-down
-  * filters → `TakeOrderedAndProject` (order by the reference's range-key
-  * order, limit pageSize+1) → ≤101 rows to the driver. Pagination resumes
-  * by key predicate, never by offset, so it is stable under concurrent
-  * ingest and costs the same for page 1 and page 1000.
+  * A page first resolves the store's manifest once and prunes it on the
+  * driver to the cells its keys reach: the (bucket, what) cells of the
+  * window (from the cursor's resume bucket on), the work id's prefix
+  * cell, the (what, where) key's latest-table bucket. Then it runs ONE
+  * Spark job: scan of those cells → pushed-down filters →
+  * `TakeOrderedAndProject` (order by the reference's range-key order,
+  * limit pageSize+1) → ≤101 rows to the driver. A latest walk-back runs
+  * two: the latest-table probe, then the walk. Spark lists the cells of a
+  * read serially on the driver up to 32 leaves per live data dir; above
+  * that (a window wider than 31 days in an uncompacted dir, or an
+  * unindexed work-id read over a long-lived what) its listing is a job of
+  * its own. Pagination resumes by key predicate, never by offset, so it
+  * is stable under concurrent ingest and costs the same for page 1 and
+  * page 1000.
   */
 final class ArchiveQuerier(
     store: RecordStore,
@@ -69,10 +78,10 @@ final class ArchiveQuerier(
             s"[$firstBucket, $lastBucket]")
     }
 
-    if (!store.exists) return QueryPage(Nil, None)
-    val df = store.records
+    val fromBucket = resumeBucket.getOrElse(firstBucket)
+    val df = store.recordsIn(Some(what), fromBucket, lastBucket)
     var pred: Column =
-      col("time_bucket").between(resumeBucket.getOrElse(firstBucket), lastBucket) &&
+      col("time_bucket").between(fromBucket, lastBucket) &&
         col("what") === what &&
         // interval intersection with null-end = point semantics
         // (querier.py:286-303): coalesce(end, start) collapses both cases.
@@ -113,13 +122,10 @@ final class ArchiveQuerier(
       what: String,
       where: Option[String] = None,
       cursor: Option[Cursor] = None): QueryPage = {
-    if (!store.exists) return QueryPage(Nil, None)
     // prefer the secondary index (the reference's work-id GSI): its
     // work_id-prefix partitioning prunes the scan to one directory
-    val df = workIdIndex.filter(_.exists) match {
-      case Some(idx) => idx.lookup(workId, what)
-      case None => store.records
-    }
+    val df = workIdIndex.flatMap(_.find(workId, what))
+      .getOrElse(store.recordsIn(Some(what)))
     var pred: Column = col("work_id") === workId && col("what") === what
     where.foreach(w => pred = pred && col("where") === w)
     cursor.foreach { c =>
@@ -157,11 +163,8 @@ final class ArchiveQuerier(
     val maxLookforward = now + LatestMaxLookforwardHours * 3600 * 1000L
 
     val fromTable: Option[Option[UnpackedRecord]] =
-      if (useLatestTable && latestStore.exists(_.exists)) {
-        val ls = latestStore.get
-        val hit = ls.latest
-          .filter(col("what") === what && col("where") === where)
-          .limit(1).collect()
+      if (useLatestTable && latestStore.isDefined) {
+        val hit = latestStore.get.lookup(what, where).limit(1).collect()
         if (hit.isEmpty) None // miss → fallback
         else {
           val r = unpack(hit.head)
@@ -173,19 +176,19 @@ final class ArchiveQuerier(
     fromTable.getOrElse(defaultLatest(what, where, lookbackDays, now))
   }
 
-  /** Walk-back (`querier.py:407-417`) as a single partition-pruned job:
-    * newest non-empty bucket wins; within it, argmax by (start,
-    * create_time) — create_time breaks ties (`querier.py:384-395`). */
+  /** Walk-back (`querier.py:407-417`) as a single job over the lookback
+    * window's cells of `what`: newest non-empty bucket wins; within it,
+    * argmax by (start, create_time) — create_time breaks ties
+    * (`querier.py:384-395`). */
   private def defaultLatest(
       what: String,
       where: String,
       lookbackDays: Int,
       now: Long): Option[UnpackedRecord] = {
-    if (!store.exists) return None
     val nowBucket = DatalakeRecord.bucketOf(now)
     val minBucket = DatalakeRecord.bucketOf(now - lookbackDays * OneDayMs)
-    val df = store.records
-    df.filter(col("time_bucket").between(minBucket, nowBucket) &&
+    store.recordsIn(Some(what), minBucket, nowBucket)
+      .filter(col("time_bucket").between(minBucket, nowBucket) &&
         col("what") === what && col("where") === where)
       .orderBy(col("time_bucket").desc, col("metadata.start").desc,
         col("create_time").desc, col("metadata.id").desc)

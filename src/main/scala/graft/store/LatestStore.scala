@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.functions._
 
 /** Compacted latest table replacing the reference's 1-row-per-
@@ -76,14 +77,39 @@ final class LatestStore(spark: SparkSession, path: String,
     * pre-manifest flat table reads as-is until the first upsert
     * migrates it). */
   def latest: DataFrame = log.resolve() match {
-    case None =>
-      val legacy = legacyFiles
-      if (legacy.isEmpty) emptyTable
-      else spark.read.schema(RecordStore.schema)
-        .parquet(legacy.map(_.toString): _*)
+    case None => legacyOrEmpty
     case Some((_, raw)) =>
       val entries = asBuckets(raw)
       readBuckets(entries, entries.keys)
+  }
+
+  /** The row of (`what`, `where`), if any, read from the one kp bucket
+    * [[upsert]] writes that key to. The bucket is computed on the driver
+    * from one manifest resolve, so nothing else is listed or scanned. */
+  def lookup(what: String, where: String): DataFrame = {
+    val table = log.resolve() match {
+      case None => legacyOrEmpty
+      case Some((_, raw)) =>
+        readBuckets(asBuckets(raw),
+          Seq(LatestStore.bucketOf(what, where, modulus)))
+    }
+    table.filter(col("what") === what && col("where") === where)
+  }
+
+  private def legacyOrEmpty: DataFrame = {
+    val legacy = legacyFiles
+    if (legacy.isEmpty) emptyTable
+    else spark.read.schema(RecordStore.schema)
+      .parquet(legacy.map(_.toString): _*)
+  }
+
+  // the modulus the table's upserts stamped (write-once, so read once);
+  // this opener's until a stamp exists
+  @volatile private var stamped: Option[Int] = None
+  private def modulus: Int = stamped.getOrElse {
+    val m = Fs.readMarker(f, new Path(path, "_buckets")).map(_.toInt)
+    stamped = m
+    m.getOrElse(nBuckets)
   }
 
   private def withBucket(df: DataFrame): DataFrame =
@@ -211,5 +237,15 @@ final class LatestStore(spark: SparkSession, path: String,
   def latestAt(version: Long): DataFrame = {
     val entries = asBuckets(log.readManifest(version))
     readBuckets(entries, entries.keys, strict = true)
+  }
+}
+
+object LatestStore {
+  /** The kp bucket [[LatestStore.upsert]] writes (`what`, `where`) to:
+    * the same `pmod(xxhash64(what, where), nBuckets)`, evaluated on the
+    * driver without a Spark job. */
+  def bucketOf(what: String, where: String, nBuckets: Int): Int = {
+    val h = new XxHash64(Seq(Literal(what), Literal(where))).eval()
+    java.lang.Math.floorMod(h.asInstanceOf[Long], nBuckets.toLong).toInt
   }
 }

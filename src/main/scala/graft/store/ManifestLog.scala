@@ -300,6 +300,15 @@ final class ManifestLog(spark: SparkSession, path: String,
   def legacyCells(levelPrefixes: Seq[String]): Seq[String] =
     if (hasAny) Nil else listCells(".", levelPrefixes)
 
+  /** The whole pre-manifest tree at the table root, if there is one —
+    * for a reader whose [[resolve]] found no manifest. Partition pruning
+    * is left to the planner, after the listing. */
+  def legacyTable(levelPrefixes: Seq[String],
+      schema: org.apache.spark.sql.types.StructType)
+      : Option[org.apache.spark.sql.DataFrame] =
+    if (listCells(".", levelPrefixes).isEmpty) None
+    else Some(spark.read.schema(schema).option("basePath", path).parquet(path))
+
   /** One-time adoption of a pre-manifest partitioned tree: commit
     * version 1 referencing the existing leaves in place (dir "."). A
     * lost CAS means another writer already migrated — equally fine. */
@@ -309,10 +318,14 @@ final class ManifestLog(spark: SparkSession, path: String,
       tryCommit(1L, cells.map(_ -> Seq(".")).toMap)
   }
 
-  /** Snapshot read: one scan per live data dir (cells listed
-    * explicitly, so a dir's superseded leaves are never read), unioned
-    * — filters and partition pruning push into every branch, and
-    * compaction bounds the fan-in. One scan PER TABLE is not possible
+  /** Snapshot read of exactly the cells in `entries`: one scan per data
+    * dir they name, unioned (a dir's superseded leaves are never read).
+    * Every leaf passed in is LISTED before the planner sees a filter —
+    * serially on the driver up to Spark's 32-path discovery threshold
+    * per dir, by a Spark job of its own above it — so a keyed read
+    * prunes `entries` to the cells its keys reach first (see
+    * [[RecordStore.recordsIn]]); filters then push into every branch,
+    * and compaction bounds the fan-in. One scan PER TABLE is not possible
     * with the file source: partition discovery refuses leaves whose
     * `k=v` chains sit under different non-partition parents
     * (CONFLICTING_DIRECTORY_STRUCTURES — "load them separately and

@@ -3,6 +3,7 @@ package graft.store
 import graft.core.{DatalakeRecord, Metadata}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -90,11 +91,12 @@ final class RecordStore(spark: SparkSession, path: String,
 
   /** Append with optional cross-batch idempotence: when
     * `dedupAgainstExisting`, rows whose (time_bucket, id) already exist are
-    * dropped via an anti-join that only reads the bucket partitions touched
-    * by this batch (partition-pruned, so the cost is bounded by batch span,
-    * not table size — the 30-bucket ingest cap guarantees that). This is
-    * the replay-safety the reference gets from DynamoDB's idempotent put
-    * (`storage.py:64-73`) under at-least-once delivery.
+    * dropped via an anti-join against [[recordsIn]] over the batch's
+    * min..max buckets, so only those cells are listed and read (the cost
+    * is bounded by batch span, not table size — the 30-bucket ingest cap
+    * guarantees that). This is the replay-safety the reference gets from
+    * DynamoDB's idempotent put (`storage.py:64-73`) under at-least-once
+    * delivery.
     *
     * Commit shape: the batch is written ONCE into a writer-unique data
     * dir, then the manifest pointer is advanced through the commit-CAS
@@ -112,9 +114,9 @@ final class RecordStore(spark: SparkSession, path: String,
           .collect().head
         if (buckets.isNullAt(0)) deduped
         else {
-          val existing = records
-            .filter(col("time_bucket")
-              .between(buckets.getLong(0), buckets.getLong(1)))
+          val (lo, hi) = (buckets.getLong(0), buckets.getLong(1))
+          val existing = recordsIn(None, lo, hi)
+            .filter(col("time_bucket").between(lo, hi))
             .select(col("time_bucket"),
               col("metadata.id").as("__dedup_id"))
           deduped.join(existing, Seq("time_bucket", "__dedup_id"), "left_anti")
@@ -158,15 +160,25 @@ final class RecordStore(spark: SparkSession, path: String,
 
   /** Full table as DataFrame; partition columns are restored to their
     * logical types. See [[ManifestLog.readEntries]] for the scan shape. */
-  def records: DataFrame = log.resolve() match {
-    case None =>
-      if (log.legacyCells(RecordStore.LevelPrefixes).nonEmpty)
-        spark.read
-          .schema(RecordStore.schema)
-          .option("basePath", path)
-          .parquet(path)
-      else log.emptyDf(RecordStore.schema)
-    case Some((_, entries)) => log.readEntries(entries, RecordStore.schema)
+  def records: DataFrame = recordsIn(None)
+
+  /** Records of `what` (every what when None) in day buckets
+    * `[fromBucket, toBucket]`. The current manifest is resolved once and
+    * its cells are pruned on the driver to the ones these keys reach, so
+    * Spark lists and scans no other cell. A missing or empty table reads
+    * as an empty frame. A pre-manifest tree is read whole, and the
+    * caller's filters prune its partitions after the listing. */
+  def recordsIn(what: Option[String], fromBucket: Long = Long.MinValue,
+      toBucket: Long = Long.MaxValue): DataFrame = log.resolve() match {
+    case Some((_, entries)) =>
+      val reached = entries.filter { case (cell, _) =>
+        RecordStore.parseCell(cell).forall { case (b, w) =>
+          b >= fromBucket && b <= toBucket && what.forall(_ == w)
+        }
+      }
+      log.readEntries(reached, RecordStore.schema)
+    case None => log.legacyTable(RecordStore.LevelPrefixes, RecordStore.schema)
+      .getOrElse(log.emptyDf(RecordStore.schema))
   }
 
   private def countParquet(dir: String, cell: String): Int = {
@@ -335,20 +347,28 @@ final class WorkIdIndex(spark: SparkSession, path: String,
     log.commitRetry(RecordStore.appendMutate(cells, dirName))
   }
 
-  def lookup(workId: String, what: String): DataFrame = {
+  /** Index rows of (`workId`, `what`); empty while no index is built. */
+  def lookup(workId: String, what: String): DataFrame =
+    find(workId, what).getOrElse(
+      log.emptyDf(WorkIdIndex.schema).drop("work_id_prefix"))
+
+  /** [[lookup]] read from the one prefix cell `workId` falls in, pruned
+    * on the driver from a single manifest resolve; None when no index
+    * has been built, so a caller can fall back to the record table. A
+    * pre-manifest tree is read whole and pruned by the planner. */
+  private[graft] def find(workId: String, what: String): Option[DataFrame] = {
+    val prefix = workId.take(prefixLen)
     val table = log.resolve() match {
-      case Some((_, entries)) => log.readEntries(entries, WorkIdIndex.schema)
-      case None if log.legacyCells(WorkIdIndex.LevelPrefixes).nonEmpty =>
-        spark.read
-          .schema(WorkIdIndex.schema)
-          .option("basePath", path)
-          .parquet(path)
-      case None => log.emptyDf(WorkIdIndex.schema)
+      case Some((_, entries)) =>
+        Some(log.readEntries(entries.filter { case (cell, _) =>
+          WorkIdIndex.parseCell(cell).forall(_ == prefix)
+        }, WorkIdIndex.schema))
+      case None => log.legacyTable(WorkIdIndex.LevelPrefixes, WorkIdIndex.schema)
     }
-    table
-      .filter(col("work_id_prefix") === workId.take(prefixLen) &&
+    table.map(_
+      .filter(col("work_id_prefix") === prefix &&
         col("work_id") === workId && col("what") === what)
-      .drop("work_id_prefix")
+      .drop("work_id_prefix"))
   }
 
   /** See [[ManifestLog.vacuumOrphans]]. */
@@ -359,6 +379,16 @@ final class WorkIdIndex(spark: SparkSession, path: String,
 object RecordStore {
   /** Partition-directory walk for this table's cells. */
   private[store] val LevelPrefixes = Seq("time_bucket=", "what=")
+
+  /** (time_bucket, what) of a `time_bucket=…/what=…` cell; None for a
+    * cell of any other shape, which pruning then keeps. */
+  private[store] def parseCell(cell: String): Option[(Long, String)] =
+    cell.split('/') match {
+      case Array(b, w) if b.startsWith("time_bucket=") && w.startsWith("what=") =>
+        b.stripPrefix("time_bucket=").toLongOption
+          .map(_ -> ExternalCatalogUtils.unescapePathName(w.stripPrefix("what=")))
+      case _ => None
+    }
 
   /** Commit transform for an append that wrote `cells` into `dirName`:
     * the new dir joins each touched cell's list; everything else rides
@@ -419,6 +449,14 @@ object RecordStore {
 
 object WorkIdIndex {
   private[store] val LevelPrefixes = Seq("work_id_prefix=")
+
+  /** The prefix a `work_id_prefix=…` cell holds; None for any other
+    * shape, which pruning then keeps. */
+  private[store] def parseCell(cell: String): Option[String] =
+    if (cell.startsWith("work_id_prefix=") && !cell.contains('/'))
+      Some(ExternalCatalogUtils.unescapePathName(
+        cell.stripPrefix("work_id_prefix=")))
+    else None
 
   /** Commit transform for a full rebuild into `newDir` (tagged
     * "rebuild" in its name): every cell of the new layout points at the

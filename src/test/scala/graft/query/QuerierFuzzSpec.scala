@@ -177,4 +177,128 @@ class QuerierFuzzSpec extends SparkSuite {
         .map(_.metadata.id) === expected.map(_.id), s"$what/$where")
     }
   }
+
+  // ---- second corpus: 45 day buckets × 2 whats in two uncompacted
+  // appends, split in time, so walks cross from one data dir to the next
+
+  val base2: Long = 16000L * day
+  val rng2 = new Random(20261018)
+  val whats2 = Seq("gamma", "delta")
+  val workIds2 = Seq(None, Some("wa-1"), Some("wa-2"), Some("zz-9"))
+
+  val metas2: Seq[Metadata] = (1 to 400).map { i =>
+    val start = base2 + rng2.nextInt(45) * day + rng2.nextInt(1000)
+    val end = if (rng2.nextBoolean()) None
+      else Some(start + rng2.nextInt(3) * day + rng2.nextInt(500))
+    Metadata(0, start, end, wheres(rng2.nextInt(3)), whats2(rng2.nextInt(2)),
+      workIds2(rng2.nextInt(4)), "/var/f.log", f"${1000 + i}%032x", "h")
+  }
+  val (early2, late2) = metas2.partition(_.start < base2 + 22 * day)
+
+  lazy val index2 = new graft.store.WorkIdIndex(spark, tmpDir("fuzz2") + "/idx")
+  lazy val store2: RecordStore = {
+    val s = new RecordStore(spark, tmpDir("fuzz2") + "/records", Some(index2))
+    Seq(early2, late2).foreach(batch => s.append(batch.flatMap(m =>
+      DatalakeRecord.listFromMetadata(m, s"file:///c/${m.id}", 7L, 9L))))
+    assert(s.stats().liveDirs === 2)
+    s
+  }
+  lazy val querier2 = new ArchiveQuerier(store2, pageSize = 23)
+
+  def model2ByTime(qs: Long, qe: Long, what: String,
+      where: Option[String]): Set[String] =
+    metas2.filter { m =>
+      m.what == what && where.forall(_ == m.where) &&
+        m.end.getOrElse(m.start) >= qs && m.start <= qe
+    }.map(_.id).toSet
+
+  /** Ids of every page of a time walk, and the number of pages. */
+  def walk2(qs: Long, qe: Long, what: String,
+      where: Option[String]): (Seq[String], Int) = {
+    var cursor: Option[Cursor] = None
+    var all = Vector.empty[String]
+    var pages = 0
+    do {
+      val p = querier2.queryByTime(qs, qe, what, where,
+        cursor.map(c => Cursor.fromSerialized(c.serialized)))
+      val ids = p.records.map(_.metadata.id)
+      assert(ids.distinct.size === ids.size, "duplicate inside a page")
+      all ++= ids
+      cursor = p.cursor
+      pages += 1
+      assert(pages < 100, "cursor chain does not terminate")
+    } while (cursor.isDefined)
+    (all, pages)
+  }
+
+  test("second corpus: random windows agree with the model; windows " +
+    "outside the data give an empty page") {
+    for (_ <- 1 to 24) {
+      // windows from 3 days before the first bucket to 3 after the last
+      val qs = base2 + rng2.nextInt(51) * day - 3 * day + rng2.nextInt(2000)
+      val qe = qs + rng2.nextInt(6) * day + rng2.nextInt(2000)
+      val what = whats2(rng2.nextInt(2))
+      val where = if (rng2.nextBoolean()) Some(wheres(rng2.nextInt(3))) else None
+      assert(walk2(qs, qe, what, where)._1.toSet ===
+        model2ByTime(qs, qe, what, where), s"[$qs,$qe] $what $where")
+    }
+    val last = metas2.map(m => m.end.getOrElse(m.start)).max
+    for ((qs, qe) <- Seq((base2 - 9 * day, base2 - 2 * day),
+        (base2 - 30 * day, base2 - 1), (last + 1, last + 4 * day),
+        (last + 20 * day, last + 21 * day)); what <- whats2) {
+      val p = querier2.queryByTime(qs, qe, what)
+      assert(p.records.isEmpty && p.cursor.isEmpty, s"[$qs,$qe] $what")
+      assert(model2ByTime(qs, qe, what, None).isEmpty)
+    }
+  }
+
+  test("second corpus: cursor walks cross from one data dir to the next") {
+    val earlyIds = early2.map(_.id).toSet
+    for (what <- whats2; where <- Seq(None, Some("h2"))) {
+      val (qs, qe) = (base2 + 17 * day, base2 + 27 * day)
+      val (ids, pages) = walk2(qs, qe, what, where)
+      assert(pages >= 2)
+      assert(ids.exists(earlyIds) && ids.exists(id => !earlyIds(id)))
+      assert(ids.toSet === model2ByTime(qs, qe, what, where))
+    }
+  }
+
+  test("second corpus: work-id pages agree with the model, with and " +
+    "without the index") {
+    val indexed = new ArchiveQuerier(store2, pageSize = 23,
+      workIdIndex = Some(index2))
+    for (q <- Seq(querier2, indexed); wid <- Seq("wa-1", "wa-2", "zz-9", "nope");
+        what <- whats2) {
+      var cursor: Option[Cursor] = None
+      var all = Vector.empty[String]
+      do {
+        val p = q.queryByWorkId(wid, what, cursor = cursor)
+        all ++= p.records.map(_.metadata.id)
+        cursor = p.cursor
+      } while (cursor.isDefined)
+      assert(all.toSet === metas2.filter(m => m.workId.contains(wid) &&
+        m.what == what).map(_.id).toSet, s"$wid/$what")
+    }
+  }
+
+  test("second corpus: walk-back latest agrees with the model") {
+    for (nowDay <- Seq(3, 21, 23, 44, 52, 70); what <- whats2;
+        where <- wheres) {
+      val now = base2 + nowDay * day + 500
+      val lo = (now - 14 * day) / day
+      val inWindow = metas2.filter(m => m.what == what && m.where == where)
+        .flatMap(m => DatalakeRecord.timeBucketsOf(m).map(_ -> m))
+        .filter { case (b, _) => b >= lo && b <= now / day }
+      val expected =
+        if (inWindow.isEmpty) None
+        else {
+          val newest = inWindow.map(_._1).max
+          Some(inWindow.filter(_._1 == newest).map(_._2)
+            .maxBy(m => (m.start, m.id)).id)
+        }
+      val q = new ArchiveQuerier(store2, clock = () => now)
+      assert(q.queryLatest(what, where).map(_.metadata.id) === expected,
+        s"$what/$where at day $nowDay")
+    }
+  }
 }

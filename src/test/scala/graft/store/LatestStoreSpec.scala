@@ -275,4 +275,50 @@ class LatestStoreSpec extends SparkSuite {
     // drop the vanished bucket's existing keys from the rewrite
     intercept[Exception] { store.upsert(batch(keys, 200L * day, 2L)) }
   }
+
+  test("bucketOf on the driver names the kp upsert wrote; the one-bucket " +
+    "lookup returns the full table's row, and nothing for an absent key") {
+    val dir = tmpDir("lat-kp") + "/t"
+    val store = new LatestStore(spark, dir, nBuckets = 16)
+    val rng = new scala.util.Random(606)
+    val alphabet = "abcdefghijklmnopqrstuvwxyz0123456789_-"
+    def slug(): String =
+      Seq.fill(1 + rng.nextInt(12))(alphabet(rng.nextInt(alphabet.length)))
+        .mkString
+    val keys = Seq.fill(240)((slug(), slug())).distinct
+    assert(keys.size >= 200)
+    store.upsert(batch(keys, 100L * day, 1L))
+    val kpOf = "kp=(\\d+)".r.unanchored
+    val written = store.latest
+      .select($"what", $"where",
+        org.apache.spark.sql.functions.input_file_name())
+      .collect()
+      .map(r => (r.getString(0), r.getString(1)) -> (r.getString(2) match {
+        case kpOf(kp) => kp.toInt
+      })).toMap
+    assert(written.keySet === keys.toSet)
+    keys.foreach { case k @ (what, where) =>
+      assert(LatestStore.bucketOf(what, where, 16) === written(k), k)
+    }
+
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq
+    def full(what: String, where: String) =
+      rows(store.latest.filter($"what" === what && $"where" === where))
+    keys.take(8).foreach { case (what, where) =>
+      val got = rows(store.lookup(what, where))
+      assert(got.size === 1)
+      assert(got === full(what, where))
+    }
+    // a reader opened with another modulus still reads the stamped one
+    val (w0, h0) = keys.head
+    assert(rows(new LatestStore(spark, dir, nBuckets = 5).lookup(w0, h0)) ===
+      full(w0, h0))
+    Seq(("absent", "key"), (w0, h0 + "x"), (keys(1)._1, h0)).foreach {
+      case (what, where) =>
+        assert(!keys.contains((what, where)))
+        assert(store.lookup(what, where).isEmpty)
+    }
+    assert(new LatestStore(spark, tmpDir("lat-kp-none") + "/t")
+      .lookup(w0, h0).isEmpty)
+  }
 }
