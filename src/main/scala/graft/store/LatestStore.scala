@@ -1,9 +1,11 @@
 package graft.store
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Compacted latest table replacing the reference's 1-row-per-
   * `what:where` DynamoDB table (`storage.py:78-137`), stored as a
@@ -134,22 +136,29 @@ final class LatestStore(spark: SparkSession, path: String,
 
   /** Monotone upsert: newest (metadata.start, create_time) per (what,
     * where) wins; replay-safe (applying the same batch twice is a no-op).
-    * Only buckets containing batch keys are re-merged and rewritten. */
+    * Only buckets containing batch keys are re-merged and rewritten.
+    *
+    * The batch is collected once (a local frame fires no job); its
+    * per-key winners ([[LatestStore.winners]]) and their kp buckets are
+    * computed on the driver. The merge with the touched buckets' existing
+    * rows stays one Spark write: those rows grow with the table and are
+    * never collected, so driver memory is bounded by the batch. */
   def upsert(batch: DataFrame): Unit = {
     ensureBuckets()
     val cols = RecordStore.schema.fieldNames.map(col).toSeq
-    val bucketed = withBucket(batch.select(cols: _*))
-    // per-key batch winners first: bounds the merge input by key count
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"what", $"where")
-      .orderBy($"metadata.start".desc, $"create_time".desc, $"metadata.id".desc)
-    val batchWinners = bucketed
-      .withColumn("__rn", row_number().over(w))
-      .filter($"__rn" === 1).drop("__rn")
-      .transform(graft.operators.Checkpoints.pin(_)) // stable across commit retries
-    val touched = batchWinners.select("kp").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted // ≤ nBuckets rows
+    val selected = batch.select(cols: _*)
+    val winners = LatestStore.winners(selected.collect().toSeq)
+    val touched = winners.map(r =>
+      LatestStore.bucketOf(r.getString(LatestStore.WhatAt),
+        r.getString(LatestStore.WhereAt), modulus)).distinct.sorted
     if (touched.isEmpty) return
+    val batchWinners =
+      withBucket(spark.createDataFrame(winners.asJava, selected.schema))
+    // kp is a function of (what, where), so a window partitioned by it
+    // too runs on the merge's kp repartition without a shuffle of its own
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy($"kp", $"what", $"where")
+      .orderBy($"metadata.start".desc, $"create_time".desc, $"metadata.id".desc)
 
     var attempts = 0
     var committed = false
@@ -188,11 +197,11 @@ final class LatestStore(spark: SparkSession, path: String,
         // two racing writers may both target manifest version N, and their
         // Spark write jobs must not collide on one directory
         val newDataVersion = log.newDataDirName(newV)
-        val merged = existing.unionByName(batchWinners)
+        // one shuffle partition per touched bucket -> one file per kp dir
+        existing.unionByName(batchWinners)
+          .repartition(touchedAll.size, col("kp"))
           .withColumn("__rn", row_number().over(w))
           .filter($"__rn" === 1).drop("__rn")
-        // one shuffle partition per touched bucket -> one file per kp dir
-        merged.repartition(touchedAll.size, col("kp"))
           .write.mode(SaveMode.Overwrite).partitionBy("kp")
           .parquet(log.dataPath(newDataVersion).toString)
         val newEntries = entries ++ touchedAll.map(_ -> newDataVersion)
@@ -241,6 +250,31 @@ final class LatestStore(spark: SparkSession, path: String,
 }
 
 object LatestStore {
+  private[store] val WhatAt = RecordStore.schema.fieldIndex("what")
+  private[store] val WhereAt = RecordStore.schema.fieldIndex("where")
+  private val CreateAt = RecordStore.schema.fieldIndex("create_time")
+  private val MetaAt = RecordStore.schema.fieldIndex("metadata")
+  private val StartAt = RecordStore.metadataSchema.fieldIndex("start")
+  private val IdAt = RecordStore.metadataSchema.fieldIndex("id")
+
+  /** Ids compare as Spark compares strings: binary UTF-8, which differs
+    * from Java's UTF-16 `compareTo` on supplementary characters. */
+  private implicit val utf8Order: Ordering[UTF8String] =
+    Ordering.fromLessThan(_.compareTo(_) < 0)
+
+  private val rank: Ordering[Row] = Ordering.by { (r: Row) =>
+    val m = r.getStruct(MetaAt)
+    (m.getLong(StartAt), r.getLong(CreateAt),
+      UTF8String.fromString(m.getString(IdAt)))
+  }
+
+  /** The row per (what, where) that `upsert`'s merge window ranks first
+    * — newest metadata.start, then create_time, then metadata.id — over
+    * rows in [[RecordStore.schema]] column order. */
+  private[store] def winners(rows: Seq[Row]): Seq[Row] =
+    rows.groupBy(r => (r.getString(WhatAt), r.getString(WhereAt)))
+      .values.map(_.max(rank)).toSeq
+
   /** The kp bucket [[LatestStore.upsert]] writes (`what`, `where`) to:
     * the same `pmod(xxhash64(what, where), nBuckets)`, evaluated on the
     * driver without a Spark job. */

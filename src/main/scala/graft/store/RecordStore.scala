@@ -2,10 +2,11 @@ package graft.store
 
 import graft.core.{DatalakeRecord, Metadata}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Spark-row shape of a metadata document (snake_case to match the wire
   * format of the reference, `README.md:105-115`). */
@@ -89,59 +90,57 @@ final class RecordStore(spark: SparkSession, path: String,
   def appendDs(ds: Dataset[RecordRow]): Unit =
     appendDf(ds.toDF(), dedupAgainstExisting = false)
 
-  /** Append with optional cross-batch idempotence: when
-    * `dedupAgainstExisting`, rows whose (time_bucket, id) already exist are
-    * dropped via an anti-join against [[recordsIn]] over the batch's
-    * min..max buckets, so only those cells are listed and read (the cost
-    * is bounded by batch span, not table size — the 30-bucket ingest cap
-    * guarantees that). This is the replay-safety the reference gets from
-    * DynamoDB's idempotent put (`storage.py:64-73`) under at-least-once
-    * delivery.
+  /** Append with optional cross-batch idempotence. The batch is
+    * collected once (a local frame fires no job) and deduplicated on the
+    * driver: within-batch duplicate (time_bucket, id) pairs collapse to
+    * their first row. When `dedupAgainstExisting`, rows whose
+    * (time_bucket, id) already exist are dropped too: a Spark semi-join
+    * of [[recordsIn]] over the batch's min..max buckets against the
+    * broadcast batch keys returns the keys already stored, so only those
+    * cells are listed and read and only batch-bounded keys come back
+    * (the 30-bucket ingest cap bounds the span). This is the
+    * replay-safety the reference gets from DynamoDB's idempotent put
+    * (`storage.py:64-73`) under at-least-once delivery.
     *
-    * Commit shape: the batch is written ONCE into a writer-unique data
-    * dir, then the manifest pointer is advanced through the commit-CAS
-    * retry loop — on a lost race only the (tiny) manifest is recomputed,
-    * never the data files, because an append's content does not depend
-    * on the base version. */
+    * Driver memory is bounded by the batch: existing table rows are
+    * joined in Spark and never collected.
+    *
+    * Commit shape: the surviving rows are written ONCE, by one task so
+    * each cell gets one file, into a writer-unique data dir; the work-id
+    * index appends the same local rows; then the manifest pointer is
+    * advanced through the commit-CAS retry loop — on a lost race only
+    * the (tiny) manifest is recomputed, never the data files, because an
+    * append's content does not depend on the base version. An empty
+    * result writes nothing. */
   def appendDf(df: DataFrame, dedupAgainstExisting: Boolean): Unit = {
     log.migrateLegacyIfNeeded(RecordStore.LevelPrefixes)
-    val deduped = df
-      .withColumn("__dedup_id", col("metadata.id"))
-      .dropDuplicates("time_bucket", "__dedup_id")
-    val toWrite =
-      if (dedupAgainstExisting && exists) {
-        val buckets = deduped.select(min("time_bucket"), max("time_bucket"))
-          .collect().head
-        if (buckets.isNullAt(0)) deduped
-        else {
-          val (lo, hi) = (buckets.getLong(0), buckets.getLong(1))
-          val existing = recordsIn(None, lo, hi)
-            .filter(col("time_bucket").between(lo, hi))
-            .select(col("time_bucket"),
-              col("metadata.id").as("__dedup_id"))
-          deduped.join(existing, Seq("time_bucket", "__dedup_id"), "left_anti")
-        }
-      } else deduped
-    // with a work-id index configured the batch plan is consumed TWICE
-    // (the parquet write below, then the index append) — pin it so the
-    // dedup anti-join against the record table runs once, not per
-    // consumer (the LatestStore.upsert merge-input discipline)
-    val finalRows = {
-      val rows = toWrite.drop("__dedup_id")
-      if (workIdIndex.isDefined) rows.transform(graft.operators.Checkpoints.pin(_)) else rows
-    }
+    val schema = df.schema
+    val bucketAt = schema.fieldIndex("time_bucket")
+    val metaAt = schema.fieldIndex("metadata")
+    val idAt = schema(metaAt).dataType.asInstanceOf[StructType].fieldIndex("id")
+    def key(r: Row): (Long, String) =
+      (r.getLong(bucketAt), r.getStruct(metaAt).getString(idAt))
+    val seen = scala.collection.mutable.HashSet.empty[(Long, String)]
+    val batch = df.collect().toSeq.filter(r => seen.add(key(r)))
+    val stored =
+      if (!dedupAgainstExisting || batch.isEmpty || !exists) Set.empty[(Long, String)]
+      else {
+        val buckets = seen.map(_._1)
+        recordsIn(None, buckets.min, buckets.max)
+          .select(col("time_bucket"), col("metadata.id").as("id"))
+          .join(broadcast(seen.toSeq.toDF("time_bucket", "id")),
+            Seq("time_bucket", "id"), "left_semi")
+          .as[(Long, String)].collect().toSet
+      }
+    val rows = batch.filterNot(r => stored.contains(key(r)))
+    if (rows.isEmpty) return
     val dirName = log.newDataDirName(log.currentVersion.getOrElse(0L) + 1)
-    finalRows
-      .write
+    val frame = spark.createDataFrame(rows.asJava, schema).coalesce(1)
+    frame.write
       .mode(SaveMode.Overwrite)
       .partitionBy("time_bucket", "what")
       .parquet(log.dataPath(dirName).toString)
     val cells = log.listCells(dirName, RecordStore.LevelPrefixes)
-    if (cells.isEmpty) {
-      // empty batch (or everything deduped away): nothing to commit
-      f.delete(log.dataPath(dirName), true)
-      return
-    }
     // every writer maintains the secondary index — hooking here (not in
     // individual callers) keeps the index consistent for push, uploader,
     // and streaming alike. Index append comes BEFORE the record commit:
@@ -151,7 +150,7 @@ final class RecordStore(spark: SparkSession, path: String,
     // dedups the already-committed rows to an empty batch and early-
     // returns before ever reaching the index append, so lookup() missed
     // those rows forever.
-    workIdIndex.foreach(_.append(finalRows))
+    workIdIndex.foreach(_.append(frame))
     log.commitRetry(RecordStore.appendMutate(cells, dirName))
   }
 

@@ -113,13 +113,16 @@ object Ingester {
 /** Structured Streaming replacement for the SQS-driven pipeline
   * (`ingester.py:131-137` + `queue.py:50-78`): a file source watches a
   * notification directory (one JSON document per file — the reference's
-  * inotify/SQS delivery unit), each micro-batch parses + expands records
-  * on the executors, and `foreachBatch` writes the records table, merges
-  * the latest table, and appends the report side-output. The reference's
+  * inotify/SQS delivery unit), at most [[StreamingIngester.MaxFilesPerTrigger]]
+  * files per micro-batch, and `foreachBatch` hands each micro-batch to
+  * [[StreamingIngester.processBatch]]: the messages are handled (parsed,
+  * resolved and expanded into records) on the executors in one job and
+  * collected, and the records table, the latest table and the report
+  * side-output are written from that driver-side copy. The reference's
   * at-least-once + idempotent-put contract becomes dedup-on-append +
   * monotone latest MERGE, which is replay-safe (T3, strictly stronger).
-  */
-/** @param compactEvery when > 0, run `recordStore.compact()` after
+  *
+  * @param compactEvery when > 0, run `recordStore.compact()` after
   *        every N ingested batches: each micro-batch appends one small
   *        file per touched (bucket, what) cell, and without periodic
   *        compaction a long-running stream fragments the table (and
@@ -142,7 +145,14 @@ final class StreamingIngester(
   private val ingester = new Ingester(contentStore, clock)
   private val batchesSinceCompact = new java.util.concurrent.atomic.AtomicLong
 
-  /** One ingest batch: records + latest + report in one pass.
+  /** One ingest batch: records + latest + report from one collect.
+    *
+    * `batch.map(handle)` runs once, as one Spark job, and its results
+    * come back to the driver; the records append, the latest upsert, the
+    * report write and the fatal check all read that array, so nothing is
+    * pinned or recomputed. The batch is bounded (`maxBatch` messages on
+    * the queue path, [[StreamingIngester.MaxFilesPerTrigger]] files on
+    * the streaming path), and so is what is collected.
     *
     * `batchTag` keys the report side-output: with a tag (the streaming
     * path passes the foreachBatch batch id) each batch's reports land
@@ -168,38 +178,35 @@ final class StreamingIngester(
   def processBatch(batch: Dataset[String],
       batchTag: Option[String] = None): Unit = {
     val ing = ingester
-    val results = batch.map(ing.handle).persist()
-    try {
-      val records = results.flatMap(_.records)
-      recordStore.appendDf(records.toDF(), dedupAgainstExisting = true)
-      latestStore.foreach(_.upsert(records.toDF()))
-      reportPath.foreach { p =>
-        migrateLegacyReports(p)
-        val reports = results.map(_.report)
-        batchTag match {
-          case Some(t) => reports.write.mode(SaveMode.Overwrite)
-            .json(s"$p/batch=$t")
-          case None =>
-            // Uniform partition-style layout (ADVICE r10): Spark cannot
-            // read a directory mixing data files at the root with
-            // batch=<id> subdirs ("conflicting directory structures"),
-            // so queue drains get their own batch=queue-<uuid> dir
-            // instead of appending flat files. The dir is fresh, so
-            // Overwrite≡Append; redeliveries still have no stable batch
-            // identity, so a crash between processBatch and queue-delete
-            // may duplicate reports (as the old Append did) — records
-            // never. Read the report tree with
-            // `spark.read.json(s"$reportPath/batch=*")`.
-            reports.write.mode(SaveMode.Overwrite)
-              .json(s"$p/batch=queue-${java.util.UUID.randomUUID()}")
-        }
+    val results = batch.map(ing.handle).collect().toSeq
+    val records = results.flatMap(_.records).toDF()
+    recordStore.appendDf(records, dedupAgainstExisting = true)
+    latestStore.foreach(_.upsert(records))
+    reportPath.foreach { p =>
+      migrateLegacyReports(p)
+      val reports = results.map(_.report).toDS()
+      batchTag match {
+        case Some(t) => reports.write.mode(SaveMode.Overwrite)
+          .json(s"$p/batch=$t")
+        case None =>
+          // Uniform partition-style layout: Spark cannot
+          // read a directory mixing data files at the root with
+          // batch=<id> subdirs ("conflicting directory structures"),
+          // so queue drains get their own batch=queue-<uuid> dir
+          // instead of appending flat files. The dir is fresh, so
+          // Overwrite≡Append; redeliveries still have no stable batch
+          // identity, so a crash between processBatch and queue-delete
+          // may duplicate reports (as the old Append did) — records
+          // never. Read the report tree with
+          // `spark.read.json(s"$reportPath/batch=*")`.
+          reports.write.mode(SaveMode.Overwrite)
+            .json(s"$p/batch=queue-${java.util.UUID.randomUUID()}")
       }
-      val fatal = results.flatMap(_.fatal.toSeq).take(1)
-      fatal.headOption.foreach { msg =>
-        throw new IllegalStateException(
-          s"unsafe ingest exception (reported, message NOT consumed): $msg")
-      }
-    } finally results.unpersist()
+    }
+    results.flatMap(_.fatal).headOption.foreach { msg =>
+      throw new IllegalStateException(
+        s"unsafe ingest exception (reported, message NOT consumed): $msg")
+    }
     if (compactEvery > 0 &&
         batchesSinceCompact.incrementAndGet() % compactEvery == 0)
       recordStore.compact()
@@ -291,6 +298,8 @@ final class StreamingIngester(
       availableNow: Boolean = false): StreamingQuery = {
     val raw = spark.readStream
       .option("wholetext", "true")
+      // processBatch collects each micro-batch to the driver
+      .option("maxFilesPerTrigger", StreamingIngester.MaxFilesPerTrigger.toString)
       .text(notificationDir)
       .as[String]
     val writer = raw.writeStream
@@ -302,4 +311,11 @@ final class StreamingIngester(
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
       .start()
   }
+}
+
+object StreamingIngester {
+  /** Notification files per streaming micro-batch: the bound on what
+    * [[StreamingIngester.processBatch]] collects, and the same as
+    * `drainQueue`'s default `maxBatch`. */
+  private[streaming] val MaxFilesPerTrigger = 100
 }

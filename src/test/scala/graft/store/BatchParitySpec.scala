@@ -1,0 +1,74 @@
+package graft.store
+
+import graft.SparkSuite
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
+
+/** The ingest stores reduce each batch on the driver. These specs hold
+  * that reduction to what the Spark expressions it replaces compute:
+  * the latest table's per-key winner under the merge window's order, and
+  * the record table's one row per (time_bucket, id). */
+class BatchParitySpec extends SparkSuite {
+  import spark.implicits._
+
+  // U+1F600 sorts after U+FFFD in UTF-8 (F0.. > EF..) but before it in
+  // UTF-16 (surrogate D83D < FFFD), so Java's String order and Spark's
+  // binary string order pick different winners between these two ids
+  private val supplementary = "\uD83D\uDE00"
+  private val replacement = "\uFFFD"
+
+  private def row(what: String, where: String, start: Long,
+      createTime: Long, id: String, bucket: Long = 16552L): RecordRow =
+    RecordRow(0, s"file:///$where/$id", bucket, what, where, None,
+      createTime, 1L, MetadataRow(0, start, None, where, what, None,
+        "/var/x.log", id, "h"))
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.select(RecordStore.schema.fieldNames.map(col).toSeq: _*)
+      .collect().map(_.toString).toSet
+
+  test("latest upsert breaks (start, create_time) ties on the id in " +
+    "Spark's UTF-8 order, as the row_number window does") {
+    assert(supplementary.compareTo(replacement) < 0,
+      "the ids must disagree between UTF-16 and UTF-8 order")
+    val batch = (1 to 8).flatMap { k =>
+      val ids = Seq(s"id-$replacement", s"id-$supplementary", "id-a")
+        .map(s => s"k$k-$s")
+      // rotate so the winner is first, middle or last in its key's rows
+      val rotated = ids.drop(k % 3) ++ ids.take(k % 3)
+      rotated.map(row("syslog", s"host-$k", 1430092800000L, 7L, _)) :+
+        row("syslog", s"host-$k", 1430092800000L - 1, 9L, s"k$k-zzz")
+    }.toDS().toDF()
+    val w = Window.partitionBy($"what", $"where")
+      .orderBy($"metadata.start".desc, $"create_time".desc, $"metadata.id".desc)
+    val want = batch.withColumn("__rn", row_number().over(w))
+      .filter($"__rn" === 1).drop("__rn")
+    val store = new LatestStore(spark, tmpDir("lat-utf8") + "/t", nBuckets = 4)
+    store.upsert(batch)
+    assert(rows(store.latest) === rows(want))
+    assert(store.latest.select($"metadata.id").as[String].collect()
+      .forall(_.endsWith(supplementary)))
+  }
+
+  test("duplicate (time_bucket, id) rows within one appendDf collapse " +
+    "to one row") {
+    val batch = for {
+      copy <- 0 until 3
+      id <- Seq("a", "b", "c")
+      bucket <- Seq(16552L, 16553L)
+    } yield row("syslog", s"host-$copy", bucket * 86400000L, copy.toLong,
+      id, bucket)
+    for (dedupAgainstExisting <- Seq(false, true)) {
+      val store = new RecordStore(spark,
+        tmpDir(s"rec-dups-$dedupAgainstExisting") + "/t")
+      store.appendDf(batch.toDS().toDF(), dedupAgainstExisting)
+      val keys = store.records
+        .select($"time_bucket", $"metadata.id").as[(Long, String)].collect()
+      assert(keys.length === 6, dedupAgainstExisting)
+      assert(keys.toSet.size === 6, dedupAgainstExisting)
+      // the first row of each key is the one kept
+      assert(store.records.select($"where").as[String].collect().toSet ===
+        Set("host-0"), dedupAgainstExisting)
+    }
+  }
+}

@@ -2,8 +2,9 @@ package graft.streaming
 
 import graft.SparkSuite
 import graft.core._
+import graft.obs.Obs
 import graft.query.ArchiveQuerier
-import graft.store.{LatestStore, RecordStore}
+import graft.store.{LatestStore, RecordStore, WorkIdIndex}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
@@ -310,5 +311,106 @@ class IngesterSpec extends SparkSuite {
     val viaIndex = new ArchiveQuerier(recordStore, workIdIndex = Some(widIndex))
       .queryByWorkId("w-77", "syslog")
     assert(viaIndex.records.map(_.metadata.id) === Seq("abc123"))
+  }
+
+  /** `n` syslog files from index `from`, each under its own url: 4
+    * wheres and 4 work ids, starts spread over 3 days, every other file
+    * with an end. */
+  def files(from: Int, n: Int): Map[String, String] =
+    (from until from + n).map { i =>
+      val start = 1430092800000L + (i % 3) * 86400000L + i * 60000L
+      val end = if (i % 2 == 0) "null" else (start + 3600000L).toString
+      s"s3://datalake-test/x/syslog/f$i.txt" ->
+        s"""{"version": 0, "work_id": "w-${i % 4}", "id": "f$i",
+           |"what": "syslog", "path": "/var/log/f$i.log",
+           |"where": "host-${i % 4}", "start": $start, "end": $end,
+           |"hash": "h$i"}""".stripMargin
+    }.toMap
+
+  /** One Put notification per url of `fs`, in url order. */
+  def notificationsOf(fs: Map[String, String]): Seq[String] =
+    fs.keys.toSeq.sorted.map(u => notification(Seq(
+      s3Event(key = u.stripPrefix("s3://datalake-test/")))))
+
+  def ds(messages: Seq[String]): org.apache.spark.sql.Dataset[String] =
+    spark.createDataset(messages)(org.apache.spark.sql.Encoders.STRING)
+
+  /** Rows of `df` as a multiset of their renderings. */
+  def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("one batch of 20 notifications fires at most 9 jobs, holds no " +
+    "persisted block after it returns, and replays as a no-op") {
+    val all = files(0, 40)
+    val widIndex = new WorkIdIndex(spark, tmpDir("wix-batch") + "/i")
+    val recordStore = new RecordStore(spark, tmpDir("rec-batch") + "/t",
+      workIdIndex = Some(widIndex))
+    val latestStore = new LatestStore(spark, tmpDir("lat-batch") + "/t")
+    val ing = new StreamingIngester(spark, new FakeContentStore(all),
+      recordStore, Some(latestStore), Some(tmpDir("rep-batch") + "/r"),
+      () => 123000L)
+    val messages = notificationsOf(all)
+    ing.processBatch(ds(messages.take(10)))
+    ing.processBatch(ds(messages.slice(10, 20)))
+    assert(recordStore.versions.size >= 2)
+    val batch = messages.slice(20, 40)
+
+    val collector = Obs.collector(spark)
+    Obs.release(spark)
+    val s = collector.measure(ds(batch))(ing.processBatch(_))
+    assert(s.jobs.size <= 9, s.jobs.map(_.op))
+    assert(s.residualBlocks === 0, "a batch must not leave blocks pinned")
+
+    def indexRows: Long =
+      (0 until 4).map(w => widIndex.lookup(s"w-$w", "syslog").count()).sum
+    val records = rowsOf(recordStore.records)
+    val index = indexRows
+    val latest = rowsOf(latestStore.latest)
+    assert(records.size === 40 && index === 40 && latest.size === 4)
+    ing.processBatch(ds(batch))
+    assert(rowsOf(recordStore.records) === records)
+    assert(indexRows === index)
+    assert(rowsOf(latestStore.latest) === latest)
+  }
+
+  test("the streaming source takes at most MaxFilesPerTrigger files per " +
+    "micro-batch and ends where one queue drain of the same messages " +
+    "does") {
+    val n = StreamingIngester.MaxFilesPerTrigger + 20
+    val all = files(0, n)
+    val messages = notificationsOf(all)
+    def wired(tag: String): (RecordStore, LatestStore, String, StreamingIngester) = {
+      val recordStore = new RecordStore(spark, tmpDir(s"rec-$tag") + "/t")
+      val latestStore = new LatestStore(spark, tmpDir(s"lat-$tag") + "/t")
+      val reportDir = tmpDir(s"rep-$tag") + "/r"
+      (recordStore, latestStore, reportDir, new StreamingIngester(spark,
+        new FakeContentStore(all), recordStore, Some(latestStore),
+        Some(reportDir), () => 123000L))
+    }
+
+    val (sRecords, sLatest, sReports, streamed) = wired("stream")
+    val notifDir = tmpDir("notif-bound")
+    messages.zipWithIndex.foreach { case (m, i) =>
+      Files.write(Paths.get(notifDir, f"n$i%04d.json"),
+        m.getBytes(StandardCharsets.UTF_8))
+    }
+    val q = streamed.start(notifDir, tmpDir("ckpt-bound"), availableNow = true)
+    assert(q.awaitTermination(300000), "the stream did not drain in time")
+    val inputs = q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+    assert(inputs.size >= 2, inputs)
+    assert(inputs.forall(_ <= StreamingIngester.MaxFilesPerTrigger), inputs)
+    assert(inputs.sum === n)
+
+    val (qRecords, qLatest, qReports, drained) = wired("queue")
+    val queue = new DirNotificationQueue(tmpDir("queue-bound"))
+    messages.foreach(queue.send)
+    assert(drained.drainQueue(queue, maxBatch = n, idleTimeoutMs = 100) === n)
+
+    assert(rowsOf(sRecords.records).size === n)
+    assert(rowsOf(sRecords.records) === rowsOf(qRecords.records))
+    assert(rowsOf(sLatest.latest) === rowsOf(qLatest.latest))
+    def reports(dir: String) = rowsOf(spark.read.json(dir).drop("batch"))
+    assert(reports(sReports).size === n)
+    assert(reports(sReports) === reports(qReports))
   }
 }
