@@ -27,11 +27,11 @@ final case class QueryPage(records: Seq[UnpackedRecord], cursor: Option[Cursor])
   * Spark job: scan of those cells → pushed-down filters →
   * `TakeOrderedAndProject` (order by the reference's range-key order,
   * limit pageSize+1) → ≤101 rows to the driver. A latest walk-back runs
-  * two: the latest-table probe, then the walk. Spark lists the cells of a
-  * read serially on the driver up to 32 leaves per live data dir; above
-  * that (a window wider than 31 days in an uncompacted dir, or an
-  * unindexed work-id read over a long-lived what) its listing is a job of
-  * its own. Pagination resumes by key predicate, never by offset, so it
+  * two: the latest-table probe, then the walk. The scan is one relation
+  * over the pruned cells' files, each leaf listed once on the driver
+  * ([[graft.store.ManifestLog.readEntries]]), so no page fires a listing
+  * job however many cells or live data dirs it reaches. Pagination
+  * resumes by key predicate, never by offset, so it
   * is stable under concurrent ingest and costs the same for page 1 and
   * page 1000.
   */

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * index), and the join itself shuffles just the fp projection, never
   * document content. Micro-batch ingestion appends one data dir per
   * commit; run [[compact]] periodically (like the record table's) so
-  * the per-batch union of per-dir scans stays bounded.
+  * the files every probe lists and opens stay bounded.
   *
   * Contracts:
   *   - `idCol` must be an integral column (stored as BIGINT) — a silent
@@ -255,8 +255,8 @@ final class FingerprintIndex(spark: SparkSession, path: String,
     * doc_id on the way — the same OPTIMIZE-style maintenance as
     * [[RecordStore.compact]], sharing its race-yielding commit
     * transform. Micro-batch ingestion needs this periodically: every
-    * commit adds one data dir, and snapshot reads union one scan per
-    * live dir. Returns the number of cells rewritten. */
+    * commit adds one data dir, and snapshot reads list and open one more
+    * file per touched cell. Returns the number of cells rewritten. */
   def compact(filesPerPartition: Int = 1): Int = {
     require(filesPerPartition >= 1, "filesPerPartition must be >= 1")
     val resolved = log.resolve()

@@ -257,7 +257,7 @@ final class GramIndex(spark: SparkSession, path: String,
     * collapsing racing-writer duplicate keys to the min owner — the
     * same OPTIMIZE-style maintenance as [[FingerprintIndex.compact]].
     * Micro-batch ingestion needs this periodically: every commit adds
-    * one data dir and snapshot reads union one scan per live dir.
+    * one data dir and snapshot reads open one more file per cell.
     * Returns the number of cells rewritten. */
   def compact(filesPerPartition: Int = 1): Int = {
     require(filesPerPartition >= 1, "filesPerPartition must be >= 1")
@@ -315,8 +315,9 @@ final class GramIndex(spark: SparkSession, path: String,
 
   /** Maintenance policy for continuous micro-batch ingestion: run
     * [[compact]] only once the number of LIVE data dirs exceeds
-    * `maxLiveDirs` (every commit adds one dir; snapshot reads union one
-    * scan per live dir, so unbounded dirs means unbounded read fan-in).
+    * `maxLiveDirs` (every commit adds one dir; snapshot reads list and
+    * open one file per cell per live dir, so unbounded dirs means
+    * unbounded read fan-in).
     * Returns the number of cells rewritten (0 = under threshold or
     * nothing fragmented). Call it after ingests the way
     * [[RecordStore.compact]] is scheduled — cheap to call every batch,

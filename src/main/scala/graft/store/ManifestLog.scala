@@ -1,7 +1,15 @@
 package graft.store
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+  BoundReference, Expression, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  PartitionDirectory, PartitioningUtils}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StructType
 
 /** Versioned manifest log shared by every manifested table
   * ([[LatestStore]], [[RecordStore]], [[WorkIdIndex]]): the generic
@@ -105,8 +113,8 @@ final class ManifestLog(spark: SparkSession, path: String,
     * live data dirs, referenced cells, parquet file count, total stored
     * bytes. Every manifested store exposes this as `stats()` — the
     * gauge behind its `compactIfNeeded` live-dirs policy (each commit
-    * adds one dir; snapshot reads union one scan per live dir, so
-    * unbounded dirs means unbounded read fan-in) and behind
+    * adds one dir and one file per touched cell; a snapshot read lists
+    * and opens every one of them) and behind
     * size-derived heuristics like [[graft.store.GramIndex]]'s
     * bloom-prefilter ratio gate. */
   def storeStats(): ManifestLog.StoreStats = storeStats("")
@@ -304,8 +312,7 @@ final class ManifestLog(spark: SparkSession, path: String,
     * for a reader whose [[resolve]] found no manifest. Partition pruning
     * is left to the planner, after the listing. */
   def legacyTable(levelPrefixes: Seq[String],
-      schema: org.apache.spark.sql.types.StructType)
-      : Option[org.apache.spark.sql.DataFrame] =
+      schema: StructType): Option[DataFrame] =
     if (listCells(".", levelPrefixes).isEmpty) None
     else Some(spark.read.schema(schema).option("basePath", path).parquet(path))
 
@@ -318,39 +325,56 @@ final class ManifestLog(spark: SparkSession, path: String,
       tryCommit(1L, cells.map(_ -> Seq(".")).toMap)
   }
 
-  /** Snapshot read of exactly the cells in `entries`: one scan per data
-    * dir they name, unioned (a dir's superseded leaves are never read).
-    * Every leaf passed in is LISTED before the planner sees a filter —
-    * serially on the driver up to Spark's 32-path discovery threshold
-    * per dir, by a Spark job of its own above it — so a keyed read
-    * prunes `entries` to the cells its keys reach first (see
-    * [[RecordStore.recordsIn]]); filters then push into every branch,
-    * and compaction bounds the fan-in. One scan PER TABLE is not possible
-    * with the file source: partition discovery refuses leaves whose
-    * `k=v` chains sit under different non-partition parents
-    * (CONFLICTING_DIRECTORY_STRUCTURES — "load them separately and
-    * then union"), so per-dir scans + union IS the supported shape;
-    * collapsing the fan-in further is exactly what compaction is for. */
-  def readEntries(entries: Map[String, Seq[String]],
-      schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.DataFrame = {
-    val dirCells: Seq[(String, Seq[String])] = entries.toSeq
+  /** Snapshot read of exactly the cells in `entries` as ONE relation
+    * over a fixed file list (a dir's superseded leaves are never read).
+    * Each (dir, cell) leaf is listed once on the driver — one
+    * `listStatus`, never Spark's file discovery, so no read fires a
+    * listing job whatever its leaf count — and becomes one partition
+    * directory whose `k=v` values come from the cell name, typed from
+    * `schema`. Small files from every dir pack into the same scan tasks,
+    * so a read's cost no longer grows with the number of live dirs. The
+    * planner's partition filters prune leaves inside the index, and a
+    * keyed read prunes `entries` to the cells its keys reach before that
+    * (see [[RecordStore.recordsIn]]). Columns: `schema`'s data columns in
+    * their order, then the cells' partition columns in path order (every
+    * cell of one read must name the same columns); an empty `entries`
+    * reads as an empty frame of `schema`. */
+  def readEntries(entries: Map[String, Seq[String]], schema: StructType)
+      : DataFrame = {
+    val dirCells = entries.toSeq
       .flatMap { case (cell, dirs) => dirs.map(_ -> cell) }
-      .groupBy(_._1).view.mapValues(_.map(_._2).distinct.sorted)
-      .toSeq.sortBy(_._1)
-    val scans = dirCells.map { case (dir, cells) =>
-      val base = cellBase(dir)
-      val leaves = cells.map(c => new Path(base, c).toString)
-      spark.read
-        .schema(schema)
-        .option("basePath", base.toString)
-        .parquet(leaves: _*)
+      .distinct.sorted
+    // "k1=v1/k2=v2" -> (k1, v1), (k2, v2): names unescaped, values as
+    // written (the cast below unescapes them)
+    def pairs(cell: String): Seq[(String, String)] =
+      cell.split('/').toSeq.map { kv =>
+        val (k, v) = kv.splitAt(kv.indexOf('='))
+        ExternalCatalogUtils.unescapePathName(k) -> v.drop(1)
+      }
+    val partCols = dirCells.map(dc => pairs(dc._2).map(_._1)).distinct
+    require(partCols.size <= 1,
+      s"cells under $path name different partition columns: $partCols")
+    val partitionSchema = StructType(partCols.flatten.map { c =>
+      schema.find(_.name == c).getOrElse(throw new IllegalArgumentException(
+        s"partition column $c is not in $schema")).copy(nullable = true)
+    })
+    val zone =
+      java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+    val leaves = dirCells.map { case (dir, cell) =>
+      val leaf = new Path(cellBase(dir), cell)
+      val values = pairs(cell).zip(partitionSchema).map { case ((_, v), fld) =>
+        PartitioningUtils.castPartValueToDesiredType(fld.dataType, v, zone)
+      }
+      ManifestFileIndex.Leaf(leaf, InternalRow.fromSeq(values),
+        f.listStatus(leaf).filter(_.getPath.getName.endsWith(".parquet")))
     }
-    scans.reduceOption(_ unionByName _).getOrElse(emptyDf(schema))
+    val dataSchema = StructType(
+      schema.filterNot(fld => partitionSchema.fieldNames.contains(fld.name)))
+    Bridge.parquetScan(spark, new ManifestFileIndex(leaves, partitionSchema),
+      dataSchema)
   }
 
-  def emptyDf(schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.DataFrame =
+  def emptyDf(schema: StructType): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
@@ -484,6 +508,54 @@ final class ManifestLog(spark: SparkSession, path: String,
         newest = math.max(newest, it.next().getModificationTime)
       newest
     } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
+}
+
+/** The fixed file list behind [[ManifestLog.readEntries]]: one partition
+  * directory per (data dir, cell) leaf, listed when the read is built.
+  * Committed data dirs are write-once, so the list never goes stale and
+  * [[refresh]] has nothing to do. Partition filters are applied here:
+  * the planner does not re-apply partition-only filters above the scan. */
+private[store] final class ManifestFileIndex(
+    leaves: Seq[ManifestFileIndex.Leaf],
+    override val partitionSchema: StructType) extends FileIndex {
+
+  override val rootPaths: Seq[Path] = leaves.map(_.path)
+
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val keep = partitionFilters.reduceOption(And).map { cond =>
+      Predicate.createInterpreted(cond.transform {
+        case a: AttributeReference =>
+          val i = partitionSchema.fieldIndex(a.name)
+          BoundReference(i, partitionSchema(i).dataType, nullable = true)
+      })
+    }
+    leaves.filter(l => keep.forall(_.eval(l.values)))
+      .map(l => PartitionDirectory(l.values, l.files))
+  }
+
+  override def inputFiles: Array[String] =
+    leaves.flatMap(_.files.map(_.getPath.toString)).toArray
+
+  override def refresh(): Unit = ()
+
+  override def sizeInBytes: Long = leaves.map(_.files.map(_.getLen).sum).sum
+
+  // the same leaves hold the same files: equal indexes let the planner
+  // reuse an exchange or a cached plan across two reads of one snapshot
+  private lazy val rootSet = rootPaths.toSet
+
+  override def equals(o: Any): Boolean = o match {
+    case m: ManifestFileIndex => rootSet == m.rootSet
+    case _ => false
+  }
+
+  override def hashCode(): Int = rootSet.hashCode()
+}
+
+private[store] object ManifestFileIndex {
+  final case class Leaf(path: Path, values: InternalRow,
+      files: Array[FileStatus])
 }
 
 object ManifestLog {

@@ -164,7 +164,7 @@ final class RecordStore(spark: SparkSession, path: String,
   /** Records of `what` (every what when None) in day buckets
     * `[fromBucket, toBucket]`. The current manifest is resolved once and
     * its cells are pruned on the driver to the ones these keys reach, so
-    * Spark lists and scans no other cell. A missing or empty table reads
+    * no other cell is listed or scanned. A missing or empty table reads
     * as an empty frame. A pre-manifest tree is read whole, and the
     * caller's filters prune its partitions after the listing. */
   def recordsIn(what: Option[String], fromBucket: Long = Long.MinValue,

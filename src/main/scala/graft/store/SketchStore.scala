@@ -32,9 +32,9 @@ import org.apache.spark.sql.types._
   * every sum-based store has without a global lock).
   *
   * Scale shape: a batch appends ≤ groups × cells rows (64 / d·w / k per
-  * group); [[read]] unions one scan per live data dir — run [[compact]]
-  * periodically to fold history into one merged dir so read cost stays
-  * bounded as batches accumulate.
+  * group); [[read]] opens one file per cell per live data dir — run
+  * [[compact]] periodically to fold history into one merged dir so read
+  * cost stays bounded as batches accumulate.
   */
 final class SketchStore(spark: SparkSession, path: String,
     kind: SketchStore.Kind,

@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.core._
 import graft.store.{LatestStore, MetadataRow, RecordRow, RecordStore}
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SaveMode,
+  SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Per-message ingestion telemetry (`ingester.py:27-65`, README.md:264-306):
@@ -126,11 +127,12 @@ object Ingester {
   *        every N ingested batches: each micro-batch appends one small
   *        file per touched (bucket, what) cell, and without periodic
   *        compaction a long-running stream fragments the table (and
-  *        widens the per-dir scan union). Safe inline because the
-  *        compaction commit is snapshot-isolated and yields to racing
-  *        writers; readers concurrent with it keep resolving complete
-  *        snapshots. The reference never needed this — DynamoDB has no
-  *        files — so it is an operational knob, not reference parity. */
+  *        every read lists and opens one more file per cell). Safe
+  *        inline because the compaction commit is snapshot-isolated and
+  *        yields to racing writers; readers concurrent with it keep
+  *        resolving complete snapshots. The reference never needed
+  *        this — DynamoDB has no files — so it is an operational knob,
+  *        not reference parity. */
 final class StreamingIngester(
     spark: SparkSession,
     contentStore: ContentStore,
@@ -140,7 +142,7 @@ final class StreamingIngester(
     clock: () => Long = () => System.currentTimeMillis(),
     compactEvery: Int = 0) {
 
-  import spark.implicits._
+  import StreamingIngester.{ReportEnc, ResultEnc, RowEnc}
 
   private val ingester = new Ingester(contentStore, clock)
   private val batchesSinceCompact = new java.util.concurrent.atomic.AtomicLong
@@ -178,13 +180,16 @@ final class StreamingIngester(
   def processBatch(batch: Dataset[String],
       batchTag: Option[String] = None): Unit = {
     val ing = ingester
-    val results = batch.map(ing.handle).collect().toSeq
-    val records = results.flatMap(_.records).toDF()
+    val results = batch.map(ing.handle)(ResultEnc).collect().toSeq
+    val records =
+      spark.createDataset(results.flatMap(_.records))(RowEnc).toDF()
     recordStore.appendDf(records, dedupAgainstExisting = true)
     latestStore.foreach(_.upsert(records))
     reportPath.foreach { p =>
       migrateLegacyReports(p)
-      val reports = results.map(_.report).toDS()
+      // one task, so each batch dir holds one report file
+      val reports =
+        spark.createDataset(results.map(_.report))(ReportEnc).coalesce(1)
       batchTag match {
         case Some(t) => reports.write.mode(SaveMode.Overwrite)
           .json(s"$p/batch=$t")
@@ -283,7 +288,8 @@ final class StreamingIngester(
       val claimed = queue.receiveBatch(maxBatch, idleTimeoutMs)
       if (claimed.isEmpty) continue = false
       else {
-        processBatch(spark.createDataset(claimed.map(_.body)))
+        processBatch(
+          spark.createDataset(claimed.map(_.body))(Encoders.STRING))
         claimed.foreach(m => queue.delete(m.handle))
         total += claimed.size
       }
@@ -301,7 +307,7 @@ final class StreamingIngester(
       // processBatch collects each micro-batch to the driver
       .option("maxFilesPerTrigger", StreamingIngester.MaxFilesPerTrigger.toString)
       .text(notificationDir)
-      .as[String]
+      .as(Encoders.STRING)
     val writer = raw.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch((batch: Dataset[String], id: Long) =>
@@ -318,4 +324,10 @@ object StreamingIngester {
     * [[StreamingIngester.processBatch]] collects, and the same as
     * `drainQueue`'s default `maxBatch`. */
   private[streaming] val MaxFilesPerTrigger = 100
+
+  // derived once per JVM: deriving a product encoder reflects over the
+  // case class, which every batch paid through `spark.implicits`
+  private val ResultEnc: Encoder[IngestResult] = Encoders.product
+  private val RowEnc: Encoder[RecordRow] = Encoders.product
+  private val ReportEnc: Encoder[IngesterReport] = Encoders.product
 }

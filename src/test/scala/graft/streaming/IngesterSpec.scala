@@ -412,5 +412,16 @@ class IngesterSpec extends SparkSuite {
     def reports(dir: String) = rowsOf(spark.read.json(dir).drop("batch"))
     assert(reports(sReports).size === n)
     assert(reports(sReports) === reports(qReports))
+    // each batch's reports are one JSON file
+    Seq(sReports, qReports).foreach { dir =>
+      val batches = new java.io.File(dir).listFiles()
+        .filter(_.getName.startsWith("batch=")).toSeq
+      assert(batches.nonEmpty)
+      batches.foreach { b =>
+        assert(b.list().count(_.startsWith("part-")) === 1, b)
+      }
+    }
+    assert(new java.io.File(sReports).list().count(_.startsWith("batch=")) ===
+      inputs.size)
   }
 }
