@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.store.{Fs, RenameCommitter}
+import graft.store.{Fs, ManifestLog, RenameCommitter}
 
 /** IVF index materialized as cell-partitioned storage: vectors live in a
   * parquet table partitioned by cell id, centroids in a small side table.
@@ -326,7 +326,7 @@ final class CellIndex(spark: SparkSession, path: String) {
         .empty[org.apache.hadoop.fs.FileStatus]
       def walk(p: Path): Unit = f.listStatus(p).foreach { st =>
         if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) parts += st
+        else if (ManifestLog.isDataFile(st.getPath.getName)) parts += st
       }
       Seq("vectors", "codes", "centroids", "codebooks").foreach { t =>
         val base = new Path(s"$r/$t")
@@ -358,7 +358,7 @@ final class CellIndex(spark: SparkSession, path: String) {
         var files = 0L; var bytes = 0L; var worst = 0
         cells.foreach { c =>
           val parts = f.listStatus(c.getPath)
-            .filter(_.getPath.getName.endsWith(".parquet"))
+            .filter(st => ManifestLog.isDataFile(st.getPath.getName))
           files += parts.length
           bytes += parts.map(_.getLen).sum
           worst = math.max(worst, parts.length)

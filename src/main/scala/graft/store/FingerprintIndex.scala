@@ -263,7 +263,7 @@ final class FingerprintIndex(spark: SparkSession, path: String,
     if (resolved.isEmpty) return 0
     val (_, snapshot) = resolved.get
     val fragmented = snapshot.filter { case (cell, dirs) =>
-      dirs.map(countParquet(_, cell)).sum > filesPerPartition
+      dirs.map(log.leafFiles(_, cell).length).sum > filesPerPartition
     }
     if (fragmented.isEmpty) return 0
     val newDir = log.newDataDirName(
@@ -292,12 +292,6 @@ final class FingerprintIndex(spark: SparkSession, path: String,
     if (yielded.size == fragmented.size)
       f.delete(log.dataPath(newDir), true)
     fragmented.size - yielded.size
-  }
-
-  private def countParquet(dir: String, cell: String): Int = {
-    val leaf = new Path(log.cellBase(dir), cell)
-    if (!f.exists(leaf)) 0
-    else f.listStatus(leaf).count(_.getPath.getName.endsWith(".parquet"))
   }
 
   /** Index economics from filesystem metadata only (no data scan) —

@@ -10,10 +10,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Durability now comes from the manifest-commit protocol
   * ([[ManifestLog]] + [[ManifestCommitter]]): data dirs are immutable
-  * (created once, garbage-collected later, never renamed), and the only
-  * rename anywhere is the manifest's own rename-as-commit — the layout
-  * that stays correct even on object stores without atomic directory
-  * operations.
+  * once committed (garbage-collected later, never renamed); the only
+  * renames are a file's, from its hidden in-progress name inside its
+  * writer's own uncommitted dir ([[DriverWrite]]), and the manifest's
+  * own rename-as-commit — the layout that stays correct even on object
+  * stores without atomic directory operations.
   */
 private[graft] object Fs {
 

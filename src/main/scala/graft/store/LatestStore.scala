@@ -46,7 +46,7 @@ final class LatestStore(spark: SparkSession, path: String,
   private def legacyFiles: Seq[Path] =
     if (!f.exists(root)) Nil
     else f.listStatus(root).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .filter(st => st.isFile && ManifestLog.isDataFile(st.getPath.getName))
       .map(_.getPath)
 
   /** bucket -> data-version dir name; manifests store one dir per kp. */

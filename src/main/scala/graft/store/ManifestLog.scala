@@ -32,8 +32,8 @@ import org.apache.spark.sql.types.StructType
   * optimistic loop the reference runs against DynamoDB,
   * `storage.py:78-137`, and the same manifest-log shape Delta/Iceberg
   * use on object stores where directory operations are not atomic:
-  * data files are only ever created and later garbage-collected, never
-  * renamed).
+  * once committed, data files are only ever read and later
+  * garbage-collected, never renamed).
   *
   * File format: one `cell=dir1,dir2` line per cell, cells URL-encoded
   * (values never need encoding — dir names are self-assigned). A
@@ -132,14 +132,10 @@ final class ManifestLog(spark: SparkSession, path: String,
       var files = 0L
       var bytes = 0L
       dirCells.foreach { case (dir, cell) =>
-        val leaf = new Path(cellBase(dir), cell)
-        if (f.exists(leaf))
-          f.listStatus(leaf).foreach { st =>
-            if (st.getPath.getName.endsWith(".parquet")) {
-              files += 1
-              bytes += st.getLen
-            }
-          }
+        leafFiles(dir, cell).foreach { st =>
+          files += 1
+          bytes += st.getLen
+        }
       }
       ManifestLog.StoreStats(
         dirCells.map(_._1).distinct.size, entries.size, files, bytes)
@@ -200,11 +196,7 @@ final class ManifestLog(spark: SparkSession, path: String,
           val cached = ManifestLog.rowCache.get(key)
           if (cached != null) exactRows += cached._1
           else {
-            val leaf = new Path(cellBase(dir), cell)
-            val parts =
-              if (!f.exists(leaf)) Array.empty[org.apache.hadoop.fs.FileStatus]
-              else f.listStatus(leaf)
-                .filter(_.getPath.getName.endsWith(".parquet"))
+            val parts = leafFiles(dir, cell)
             if (parts.length <= budget) {
               budget -= parts.length
               val (rows, bytes) = Fs.footerRows(conf, parts)
@@ -266,9 +258,9 @@ final class ManifestLog(spark: SparkSession, path: String,
 
   /** Writer-unique data dir name for a commit targeting version `v`.
     * The version prefix is advisory (ordering comes from manifest
-    * numbers alone); the nonce keeps two racing writers' Spark write
-    * jobs — whose `_temporary` staging must never collide — in
-    * disjoint directories. `tag` marks the dir's ORIGIN (e.g.
+    * numbers alone); the nonce keeps two racing writers' files — and
+    * the hidden in-progress files they rename into place — in disjoint
+    * directories. `tag` marks the dir's ORIGIN (e.g.
     * "rebuild") so commit logic can recognize a racing writer of the
     * same kind by name where a set-diff cannot (two full rebuilds from
     * an empty snapshot look like plain appends to each other). */
@@ -284,6 +276,14 @@ final class ManifestLog(spark: SparkSession, path: String,
     * is crash- and race-safe); [[vacuum]] protects it. */
   def cellBase(dirName: String): Path =
     if (dirName == ".") root else dataPath(dirName)
+
+  /** The data files of one (dir, cell) leaf; none when the leaf does
+    * not exist. */
+  def leafFiles(dir: String, cell: String): Array[FileStatus] = {
+    val leaf = new Path(cellBase(dir), cell)
+    if (!f.exists(leaf)) Array.empty
+    else f.listStatus(leaf).filter(st => ManifestLog.isDataFile(st.getPath.getName))
+  }
 
   /** Relative partition-leaf paths under `dir`, walking one directory
     * level per prefix (e.g. Seq("time_bucket=", "what=")), exactly as
@@ -366,7 +366,7 @@ final class ManifestLog(spark: SparkSession, path: String,
         PartitioningUtils.castPartValueToDesiredType(fld.dataType, v, zone)
       }
       ManifestFileIndex.Leaf(leaf, InternalRow.fromSeq(values),
-        f.listStatus(leaf).filter(_.getPath.getName.endsWith(".parquet")))
+        f.listStatus(leaf).filter(st => ManifestLog.isDataFile(st.getPath.getName)))
     }
     val dataSchema = StructType(
       schema.filterNot(fld => partitionSchema.fieldNames.contains(fld.name)))
@@ -423,9 +423,9 @@ final class ManifestLog(spark: SparkSession, path: String,
     * reference — instead of sweeping every dir no retained manifest
     * names — is what makes concurrent writers safe: an in-flight
     * writer's freshly-written dir is referenced by NO manifest yet, and
-    * a delete-the-unreferenced sweep from a racing writer would rip its
-    * `_temporary` staging out from under the active Spark write job
-    * (caught by the racing-writers spec). The cost: a dir whose writer
+    * a delete-the-unreferenced sweep from a racing writer would delete
+    * its files before its commit lands (caught by the racing-writers
+    * spec). The cost: a dir whose writer
     * crashed before committing is never referenced and so never swept —
     * bounded by crash count; [[vacuumOrphans]] reclaims them offline. */
   def vacuum(): Unit = {
@@ -462,7 +462,7 @@ final class ManifestLog(spark: SparkSession, path: String,
     * last modified more than `olderThanMs` ago. The age guard is what
     * keeps an in-flight writer safe — its dir is unreferenced by design
     * until its commit lands, but it is also FRESH (a directory's mtime
-    * updates as Spark creates its `_temporary` staging and files), so
+    * updates as its writer creates and renames its files), so
     * any threshold comfortably above a write's duration (hours) never
     * touches it. Run from a maintenance job, not concurrently with a
     * backlogged writer whose single write outlives the threshold.
@@ -484,7 +484,7 @@ final class ManifestLog(spark: SparkSession, path: String,
         // object stores report SYNTHETIC directory mtimes (S3A: often
         // 0), so the dir entry alone cannot prove age — take the newest
         // timestamp across the dir AND every file under it (an
-        // in-flight writer's staging has fresh FILE mtimes everywhere).
+        // in-flight writer's files have fresh mtimes everywhere).
         // An age that still reads 0 is UNKNOWN, not old: never delete
         // on unknown age.
         val newest = newestMtimeUnder(st)
@@ -563,6 +563,13 @@ object ManifestLog {
     * table's own root (a migrated pre-manifest tree referenced in
     * place); deleting it would take the manifests with it. */
   private[store] val Protected: Set[String] = Set(".", "")
+
+  /** Whether a leaf's file named `name` is data: a `.parquet` name that
+    * is not hidden. Names starting with `_` or `.` are skipped, as
+    * Spark's own file listing skips them, so a writer's in-progress
+    * file ([[DriverWrite]]) is never read or counted. */
+  private[graft] def isDataFile(name: String): Boolean =
+    name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
 
   /** Filesystem-level table economics; see [[ManifestLog.storeStats]]. */
   final case class StoreStats(liveDirs: Int, cells: Int, files: Long,

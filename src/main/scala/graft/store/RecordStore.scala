@@ -1,12 +1,13 @@
 package graft.store
 
 import graft.core.{DatalakeRecord, Metadata}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
 
 /** Spark-row shape of a metadata document (snake_case to match the wire
   * format of the reference, `README.md:105-115`). */
@@ -94,24 +95,24 @@ final class RecordStore(spark: SparkSession, path: String,
     * collected once (a local frame fires no job) and deduplicated on the
     * driver: within-batch duplicate (time_bucket, id) pairs collapse to
     * their first row. When `dedupAgainstExisting`, rows whose
-    * (time_bucket, id) already exist are dropped too: a Spark semi-join
-    * of [[recordsIn]] over the batch's min..max buckets against the
-    * broadcast batch keys returns the keys already stored, so only those
-    * cells are listed and read and only batch-bounded keys come back
-    * (the 30-bucket ingest cap bounds the span). This is the
-    * replay-safety the reference gets from DynamoDB's idempotent put
-    * (`storage.py:64-73`) under at-least-once delivery.
+    * (time_bucket, id) already exist are dropped too: one scan of the
+    * cells of the batch's buckets, filtered to the batch's ids, returns
+    * the stored (time_bucket, id) pairs those ids have there, and the
+    * driver matches them against the batch's keys. Only batch-bounded
+    * keys come back (the 30-bucket ingest cap bounds the buckets). This
+    * is the replay-safety the reference gets from DynamoDB's idempotent
+    * put (`storage.py:64-73`) under at-least-once delivery.
     *
     * Driver memory is bounded by the batch: existing table rows are
-    * joined in Spark and never collected.
+    * filtered in Spark and never collected.
     *
-    * Commit shape: the surviving rows are written ONCE, by one task so
-    * each cell gets one file, into a writer-unique data dir; the work-id
-    * index appends the same local rows; then the manifest pointer is
-    * advanced through the commit-CAS retry loop — on a lost race only
-    * the (tiny) manifest is recomputed, never the data files, because an
-    * append's content does not depend on the base version. An empty
-    * result writes nothing. */
+    * Commit shape: the surviving rows are written once, on the driver
+    * ([[DriverWrite]], no Spark job), one file per cell into a
+    * writer-unique data dir; the work-id index appends the same rows;
+    * then the manifest pointer is advanced through the commit-CAS retry
+    * loop — on a lost race only the (tiny) manifest is recomputed, never
+    * the data files, because an append's content does not depend on the
+    * base version. An empty result writes nothing. */
   def appendDf(df: DataFrame, dedupAgainstExisting: Boolean): Unit = {
     log.migrateLegacyIfNeeded(RecordStore.LevelPrefixes)
     val schema = df.schema
@@ -124,23 +125,14 @@ final class RecordStore(spark: SparkSession, path: String,
     val batch = df.collect().toSeq.filter(r => seen.add(key(r)))
     val stored =
       if (!dedupAgainstExisting || batch.isEmpty || !exists) Set.empty[(Long, String)]
-      else {
-        val buckets = seen.map(_._1)
-        recordsIn(None, buckets.min, buckets.max)
-          .select(col("time_bucket"), col("metadata.id").as("id"))
-          .join(broadcast(seen.toSeq.toDF("time_bucket", "id")),
-            Seq("time_bucket", "id"), "left_semi")
-          .as[(Long, String)].collect().toSet
-      }
+      else storedKeys(seen)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
     val rows = batch.filterNot(r => stored.contains(key(r)))
+      .map(toCatalyst(_).asInstanceOf[InternalRow])
     if (rows.isEmpty) return
     val dirName = log.newDataDirName(log.currentVersion.getOrElse(0L) + 1)
-    val frame = spark.createDataFrame(rows.asJava, schema).coalesce(1)
-    frame.write
-      .mode(SaveMode.Overwrite)
-      .partitionBy("time_bucket", "what")
-      .parquet(log.dataPath(dirName).toString)
-    val cells = log.listCells(dirName, RecordStore.LevelPrefixes)
+    val cells = DriverWrite(spark, new ParquetFileFormat, log.dataPath(dirName),
+      schema, RecordStore.PartitionColumns, rows.iterator)
     // every writer maintains the secondary index — hooking here (not in
     // individual callers) keeps the index consistent for push, uploader,
     // and streaming alike. Index append comes BEFORE the record commit:
@@ -150,8 +142,21 @@ final class RecordStore(spark: SparkSession, path: String,
     // dedups the already-committed rows to an empty batch and early-
     // returns before ever reaching the index append, so lookup() missed
     // those rows forever.
-    workIdIndex.foreach(_.append(frame))
+    workIdIndex.foreach(_.append(rows, schema))
     log.commitRetry(RecordStore.appendMutate(cells, dirName))
+  }
+
+  /** The (time_bucket, id) pairs of `keys` already stored: one Spark job
+    * scans the cells of the keys' buckets for rows with one of their
+    * ids, and the driver keeps the pairs that match a key. */
+  private def storedKeys(keys: scala.collection.Set[(Long, String)])
+      : Set[(Long, String)] = {
+    val buckets = keys.map(_._1)
+    val ids = keys.map(_._2).toSeq.distinct
+    recordsWhere((b, _) => buckets.contains(b))
+      .filter(col("metadata.id").isin(ids: _*))
+      .select(col("time_bucket"), col("metadata.id"))
+      .as[(Long, String)].collect().toSet.filter(keys.contains)
   }
 
   def exists: Boolean =
@@ -168,23 +173,21 @@ final class RecordStore(spark: SparkSession, path: String,
     * as an empty frame. A pre-manifest tree is read whole, and the
     * caller's filters prune its partitions after the listing. */
   def recordsIn(what: Option[String], fromBucket: Long = Long.MinValue,
-      toBucket: Long = Long.MaxValue): DataFrame = log.resolve() match {
-    case Some((_, entries)) =>
-      val reached = entries.filter { case (cell, _) =>
-        RecordStore.parseCell(cell).forall { case (b, w) =>
-          b >= fromBucket && b <= toBucket && what.forall(_ == w)
-        }
-      }
-      log.readEntries(reached, RecordStore.schema)
-    case None => log.legacyTable(RecordStore.LevelPrefixes, RecordStore.schema)
-      .getOrElse(log.emptyDf(RecordStore.schema))
-  }
+      toBucket: Long = Long.MaxValue): DataFrame =
+    recordsWhere((b, w) =>
+      b >= fromBucket && b <= toBucket && what.forall(_ == w))
 
-  private def countParquet(dir: String, cell: String): Int = {
-    val leaf = new Path(log.cellBase(dir), cell)
-    if (!f.exists(leaf)) 0
-    else f.listStatus(leaf).count(_.getPath.getName.endsWith(".parquet"))
-  }
+  /** Records of the cells whose (time_bucket, what) `keep` accepts; see
+    * [[recordsIn]]. */
+  private def recordsWhere(keep: (Long, String) => Boolean): DataFrame =
+    log.resolve() match {
+      case Some((_, entries)) =>
+        log.readEntries(entries.filter { case (cell, _) =>
+          RecordStore.parseCell(cell).forall(keep.tupled)
+        }, RecordStore.schema)
+      case None => log.legacyTable(RecordStore.LevelPrefixes, RecordStore.schema)
+        .getOrElse(log.emptyDf(RecordStore.schema))
+    }
 
   /** Compact fragmented cells: streaming ingest appends one small file
     * per micro-batch per (bucket, what); this rewrites each cell whose
@@ -205,7 +208,7 @@ final class RecordStore(spark: SparkSession, path: String,
     if (resolved.isEmpty) return 0
     val (_, snapshot) = resolved.get
     val fragmented = snapshot.filter { case (cell, dirs) =>
-      dirs.map(countParquet(_, cell)).sum > filesPerPartition
+      dirs.map(log.leafFiles(_, cell).length).sum > filesPerPartition
     }
     if (fragmented.isEmpty) return 0
     val newDir = log.newDataDirName(
@@ -330,19 +333,31 @@ final class WorkIdIndex(spark: SparkSession, path: String,
     if (yielded && cells.nonEmpty) f.delete(log.dataPath(newDir), true)
   }
 
-  /** Incremental maintenance: append one ingest batch's rows (the
-    * streaming path — a full rebuild per batch would scan the whole
-    * record table). Bucket-duplicate rows are fine: work-id queries
-    * dedup by id within a page exactly like the reference's GSI reads. */
+  /** Incremental maintenance: append one ingest batch's record rows
+    * (the streaming path — a full rebuild per batch would scan the whole
+    * record table). The batch is collected and written on the driver,
+    * like [[RecordStore.appendDf]]'s. Bucket-duplicate rows are fine:
+    * work-id queries dedup by id within a page exactly like the
+    * reference's GSI reads. */
   def append(batch: DataFrame): Unit = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(batch.schema)
+    append(batch.collect().toSeq.map(toCatalyst(_).asInstanceOf[InternalRow]),
+      batch.schema)
+  }
+
+  /** [[append]] of record rows (of `schema`) the driver holds, written
+    * there by [[DriverWrite]], one file per prefix cell. */
+  private[store] def append(rows: Seq[InternalRow], schema: StructType): Unit = {
     log.migrateLegacyIfNeeded(WorkIdIndex.LevelPrefixes)
+    val widAt = schema.fieldIndex("work_id")
+    // the prefix as `withPrefix`'s substring computes it
+    val indexed = rows.filterNot(_.isNullAt(widAt)).map(r => new JoinedRow(r,
+      InternalRow(r.getUTF8String(widAt).substringSQL(0, prefixLen))))
+    if (indexed.isEmpty) return
     val dirName = log.newDataDirName(log.currentVersion.getOrElse(0L) + 1)
-    withPrefix(batch)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("work_id_prefix")
-      .parquet(log.dataPath(dirName).toString)
-    val cells = log.listCells(dirName, WorkIdIndex.LevelPrefixes)
-    if (cells.isEmpty) { f.delete(log.dataPath(dirName), true); return }
+    val cells = DriverWrite(spark, new ParquetFileFormat, log.dataPath(dirName),
+      schema.add("work_id_prefix", StringType), Seq("work_id_prefix"),
+      indexed.iterator)
     log.commitRetry(RecordStore.appendMutate(cells, dirName))
   }
 
@@ -376,8 +391,11 @@ final class WorkIdIndex(spark: SparkSession, path: String,
 }
 
 object RecordStore {
+  /** The columns a cell's path names, in path order. */
+  private val PartitionColumns = Seq("time_bucket", "what")
+
   /** Partition-directory walk for this table's cells. */
-  private[store] val LevelPrefixes = Seq("time_bucket=", "what=")
+  private[store] val LevelPrefixes = PartitionColumns.map(_ + "=")
 
   /** (time_bucket, what) of a `time_bucket=…/what=…` cell; None for a
     * cell of any other shape, which pruning then keeps. */

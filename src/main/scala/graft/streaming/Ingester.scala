@@ -1,9 +1,12 @@
 package graft.streaming
 
 import graft.core._
-import graft.store.{LatestStore, MetadataRow, RecordRow, RecordStore}
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SaveMode,
-  SparkSession}
+import graft.store.{DriverWrite, Fs, LatestStore, MetadataRow, RecordRow,
+  RecordStore}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Per-message ingestion telemetry (`ingester.py:27-65`, README.md:264-306):
@@ -152,9 +155,12 @@ final class StreamingIngester(
     * `batch.map(handle)` runs once, as one Spark job, and its results
     * come back to the driver; the records append, the latest upsert, the
     * report write and the fatal check all read that array, so nothing is
-    * pinned or recomputed. The batch is bounded (`maxBatch` messages on
-    * the queue path, [[StreamingIngester.MaxFilesPerTrigger]] files on
-    * the streaming path), and so is what is collected.
+    * pinned or recomputed. The record, work-id and report files are
+    * written on the driver ([[graft.store.DriverWrite]]), so a batch's
+    * jobs are the handle job, the records dedup probe and the latest
+    * merge. The batch is bounded (`maxBatch` messages on the queue path,
+    * [[StreamingIngester.MaxFilesPerTrigger]] files on the streaming
+    * path), and so is what is collected.
     *
     * `batchTag` keys the report side-output: with a tag (the streaming
     * path passes the foreachBatch batch id) each batch's reports land
@@ -187,26 +193,21 @@ final class StreamingIngester(
     latestStore.foreach(_.upsert(records))
     reportPath.foreach { p =>
       migrateLegacyReports(p)
-      // one task, so each batch dir holds one report file
-      val reports =
-        spark.createDataset(results.map(_.report))(ReportEnc).coalesce(1)
-      batchTag match {
-        case Some(t) => reports.write.mode(SaveMode.Overwrite)
-          .json(s"$p/batch=$t")
-        case None =>
-          // Uniform partition-style layout: Spark cannot
-          // read a directory mixing data files at the root with
-          // batch=<id> subdirs ("conflicting directory structures"),
-          // so queue drains get their own batch=queue-<uuid> dir
-          // instead of appending flat files. The dir is fresh, so
-          // Overwrite≡Append; redeliveries still have no stable batch
-          // identity, so a crash between processBatch and queue-delete
-          // may duplicate reports (as the old Append did) — records
-          // never. Read the report tree with
-          // `spark.read.json(s"$reportPath/batch=*")`.
-          reports.write.mode(SaveMode.Overwrite)
-            .json(s"$p/batch=queue-${java.util.UUID.randomUUID()}")
-      }
+      // Uniform partition-style layout: Spark cannot read a directory
+      // mixing data files at the root with batch=<id> subdirs
+      // ("conflicting directory structures"), so queue drains get their
+      // own fresh batch=queue-<uuid> dir instead of appending flat
+      // files. Redeliveries have no stable batch identity, so a crash
+      // between processBatch and queue-delete may duplicate reports (as
+      // the old Append did) — records never. A tagged replay overwrites
+      // its batch=<tag> dir. The reports are written on the driver, one
+      // JSON file per batch dir.
+      val dir = new Path(p,
+        "batch=" + batchTag.getOrElse(s"queue-${java.util.UUID.randomUUID()}"))
+      Fs.fs(spark, p).delete(dir, true)
+      val toRow = ReportEnc.createSerializer()
+      DriverWrite(spark, new JsonFileFormat, dir, ReportEnc.schema, Nil,
+        results.iterator.map(r => toRow(r.report)))
     }
     results.flatMap(_.fatal).headOption.foreach { msg =>
       throw new IllegalStateException(
@@ -243,16 +244,16 @@ final class StreamingIngester(
     legacyReportsChecked.synchronized {
       if (legacyReportsChecked.get()) return
       val hconf = spark.sparkContext.hadoopConfiguration
-      val root = new org.apache.hadoop.fs.Path(p)
+      val root = new Path(p)
       val fs = root.getFileSystem(hconf)
       if (fs.exists(root)) {
         val flat = fs.listStatus(root).filter(_.isFile)
         if (flat.nonEmpty) {
-          val legacy = new org.apache.hadoop.fs.Path(root, "batch=legacy")
+          val legacy = new Path(root, "batch=legacy")
           fs.mkdirs(legacy)
           flat.foreach { f =>
             val dest =
-              new org.apache.hadoop.fs.Path(legacy, f.getPath.getName)
+              new Path(legacy, f.getPath.getName)
             if (!fs.rename(f.getPath, dest))
               // throws WITHOUT latching: the batch fails, and the next
               // processBatch retries the migration (rename is atomic per
@@ -329,5 +330,5 @@ object StreamingIngester {
   // case class, which every batch paid through `spark.implicits`
   private val ResultEnc: Encoder[IngestResult] = Encoders.product
   private val RowEnc: Encoder[RecordRow] = Encoders.product
-  private val ReportEnc: Encoder[IngesterReport] = Encoders.product
+  private val ReportEnc: ExpressionEncoder[IngesterReport] = ExpressionEncoder()
 }
