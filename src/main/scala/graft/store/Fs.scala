@@ -87,43 +87,6 @@ private[graft] object Fs {
       s"marker $marker still empty after 5 reads — corrupt?")
   }
 
-  /** Atomically replace a config marker's content: write a temp file
-    * beside it, then rename-with-overwrite into place (FileContext's
-    * OVERWRITE rename — atomic on local disk and HDFS; an object store
-    * without atomic rename degrades to best-effort, which is fine for
-    * the one caller: a legacy-marker UPGRADE whose failure just means
-    * the next open re-validates the legacy form). Never throws — an
-    * upgrade must not fail an open that already validated. */
-  def replaceMarker(spark: SparkSession, marker: Path, content: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val tmp = new Path(marker.getParent,
-      marker.getName + ".tmp-" + java.util.UUID.randomUUID())
-    try {
-      val f = marker.getFileSystem(conf)
-      val out = f.create(tmp, true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-      try org.apache.hadoop.fs.FileContext.getFileContext(marker.toUri, conf)
-        .rename(tmp, marker, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      catch { case e: Exception =>
-        // the write landed but the swap didn't: remove the temp (one
-        // leaked file per failed attempt otherwise) before reporting
-        try f.delete(tmp, false) catch { case _: Exception => () }
-        throw e
-      }
-    } catch {
-      // an interrupt is not a filesystem failure: restore the flag so
-      // the caller's cancellation still lands
-      case _: InterruptedException => Thread.currentThread().interrupt()
-      // best-effort by contract, but never SILENT: an environment where
-      // the upgrade can never land (no rename support, permission
-      // asymmetry) should say so once per attempt, not hide it
-      case e: Exception =>
-        System.err.println(
-          s"[fs] marker upgrade for $marker did not land " +
-            s"(will re-validate legacy next open): $e")
-    }
-  }
-
   /** Sum of parquet footer record counts + file bytes for `parts`,
     * read driver-side on the common pool — footer opens are IO-bound
     * round trips (~ms each), so the walk is ~cores× parallel. The one

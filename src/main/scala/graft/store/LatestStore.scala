@@ -32,22 +32,11 @@ final class LatestStore(spark: SparkSession, path: String,
     committer: Option[ManifestCommitter] = None) {
   import spark.implicits._
 
-  private val root = new Path(path)
   private val log = new ManifestLog(spark, path, keepVersions, committer)
   private lazy val f = Fs.fs(spark, path)
 
-  /** true once any version has been committed (or a pre-manifest flat
-    * table sits at the path — see [[legacyFiles]]). */
-  def exists: Boolean = log.hasAny || legacyFiles.nonEmpty
-
-  /** Parquet files written flat at `path` by the pre-manifest layout
-    * (a whole-table rewrite per upsert). Readable as a snapshot; the
-    * first upsert migrates them into version 1 and removes them. */
-  private def legacyFiles: Seq[Path] =
-    if (!f.exists(root)) Nil
-    else f.listStatus(root).toSeq
-      .filter(st => st.isFile && ManifestLog.isDataFile(st.getPath.getName))
-      .map(_.getPath)
+  /** true once any version has been committed. */
+  def exists: Boolean = log.hasAny
 
   /** bucket -> data-version dir name; manifests store one dir per kp. */
   private def asBuckets(entries: Map[String, Seq[String]]): Map[Int, String] =
@@ -67,19 +56,13 @@ final class LatestStore(spark: SparkSession, path: String,
     val all = buckets.toSeq.sorted
       .flatMap(b => entries.get(b).map(bucketLeaf(_, b)))
     val leaves = if (strict) all else all.filter(p => f.exists(new Path(p)))
-    if (leaves.isEmpty) emptyTable
+    if (leaves.isEmpty) log.emptyDf(RecordStore.schema)
     else spark.read.schema(RecordStore.schema).parquet(leaves: _*)
   }
 
-  private def emptyTable: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      RecordStore.schema)
-
-  /** Current snapshot (all buckets of the current manifest; a
-    * pre-manifest flat table reads as-is until the first upsert
-    * migrates it). */
+  /** Current snapshot: all buckets of the current manifest. */
   def latest: DataFrame = log.resolve() match {
-    case None => legacyOrEmpty
+    case None => log.emptyDf(RecordStore.schema)
     case Some((_, raw)) =>
       val entries = asBuckets(raw)
       readBuckets(entries, entries.keys)
@@ -90,19 +73,12 @@ final class LatestStore(spark: SparkSession, path: String,
     * from one manifest resolve, so nothing else is listed or scanned. */
   def lookup(what: String, where: String): DataFrame = {
     val table = log.resolve() match {
-      case None => legacyOrEmpty
+      case None => log.emptyDf(RecordStore.schema)
       case Some((_, raw)) =>
         readBuckets(asBuckets(raw),
           Seq(LatestStore.bucketOf(what, where, modulus)))
     }
     table.filter(col("what") === what && col("where") === where)
-  }
-
-  private def legacyOrEmpty: DataFrame = {
-    val legacy = legacyFiles
-    if (legacy.isEmpty) emptyTable
-    else spark.read.schema(RecordStore.schema)
-      .parquet(legacy.map(_.toString): _*)
   }
 
   // the modulus the table's upserts stamped (write-once, so read once);
@@ -121,10 +97,7 @@ final class LatestStore(spark: SparkSession, path: String,
   /** Persist-or-validate `nBuckets` (the [[FingerprintIndex]] marker
     * discipline): an upsert under a different modulus would read the
     * wrong bucket for existing keys and leave TWO live rows for one
-    * (what, where) — the invariant the whole table exists to hold.
-    * Tables from before this guard are stamped with the opener's value
-    * on first upsert (unverifiable retroactively — keep passing what
-    * the table was built with, as before). */
+    * (what, where) — the invariant the whole table exists to hold. */
   private def ensureBuckets(): Unit = {
     val stored = Fs.ensureMarker(f, new Path(path, "_buckets"),
       nBuckets.toString)
@@ -166,65 +139,37 @@ final class LatestStore(spark: SparkSession, path: String,
       attempts += 1
       if (attempts > 10)
         throw new java.io.IOException(s"upsert lost $attempts commit races under $path")
-      val resolved = log.resolve()
-      val (baseV, entries) = resolved
+      val (baseV, entries) = log.resolve()
         .map { case (v, raw) => (v, asBuckets(raw)) }
         .getOrElse((0L, Map.empty[Int, String]))
-      // first-ever commit over a pre-manifest flat table: fold the whole
-      // legacy table into version 1 (all its buckets count as touched)
-      // and remove the flat files once the commit lands
-      val legacy = if (resolved.isEmpty) legacyFiles else Nil
-      try {
-        val (existing, touchedAll) =
-          if (legacy.nonEmpty) {
-            val legacyDf = withBucket(spark.read.schema(RecordStore.schema)
-              .parquet(legacy.map(_.toString): _*))
-            val legacyKps = legacyDf.select("kp").distinct()
-              .collect().map(_.getInt(0))
-            (legacyDf, (touched ++ legacyKps).distinct.sorted)
-          } else
-            // STRICT read for a merge: this path READS existing rows to
-            // REWRITE them, so a missing referenced leaf must fail the
-            // attempt — the non-strict exist-filter (benign for reads,
-            // where re-resolving picks the newer manifest) would here
-            // commit a table missing every key of the vanished bucket.
-            // A leaf of the CURRENT manifest cannot be vacuumed, so this
-            // only fires on external deletion or a flaky filesystem —
-            // exactly when losing loudly beats losing silently.
-            (withBucket(readBuckets(entries, touched, strict = true)), touched)
-        val newV = baseV + 1
-        // the data dir carries a writer nonce (see ManifestLog.newDataDirName):
-        // two racing writers may both target manifest version N, and their
-        // Spark write jobs must not collide on one directory
-        val newDataVersion = log.newDataDirName(newV)
-        // one shuffle partition per touched bucket -> one file per kp dir
-        existing.unionByName(batchWinners)
-          .repartition(touchedAll.size, col("kp"))
-          .withColumn("__rn", row_number().over(w))
-          .filter($"__rn" === 1).drop("__rn")
-          .write.mode(SaveMode.Overwrite).partitionBy("kp")
-          .parquet(log.dataPath(newDataVersion).toString)
-        val newEntries = entries ++ touchedAll.map(_ -> newDataVersion)
-        committed = log.tryCommit(newV,
-          newEntries.map { case (k, d) => k.toString -> Seq(d) })
-        if (!committed)
-          // lost the race: another writer committed baseV+1 first; drop our
-          // orphaned data version and re-merge against the new state
-          f.delete(log.dataPath(newDataVersion), true)
-        else legacy.foreach(p => f.delete(p, false))
-      } catch {
-        // the first-ever-commit race over a LEGACY flat table has a
-        // second losing mode: the winner deletes the flat files after
-        // committing while the loser's merge job is still SCANNING
-        // them, so the loser dies with FileNotFound instead of a clean
-        // tryCommit=false. If a newer manifest exists, that is exactly
-        // what happened — a benign lost race; retry the loop, which
-        // now reads the winner's manifest instead of the flat files.
-        // Without a newer manifest the failure is real and rethrows.
-        case scala.util.control.NonFatal(e)
-            if legacy.nonEmpty && log.resolve().exists(_._1 > baseV) =>
-          ()
-      }
+      // STRICT read for a merge: this path READS existing rows to
+      // REWRITE them, so a missing referenced leaf must fail the
+      // attempt — the non-strict exist-filter (benign for reads,
+      // where re-resolving picks the newer manifest) would here
+      // commit a table missing every key of the vanished bucket.
+      // A leaf of the CURRENT manifest cannot be vacuumed, so this
+      // only fires on external deletion or a flaky filesystem —
+      // exactly when losing loudly beats losing silently.
+      val existing = withBucket(readBuckets(entries, touched, strict = true))
+      val newV = baseV + 1
+      // the data dir carries a writer nonce (see ManifestLog.newDataDirName):
+      // two racing writers may both target manifest version N, and their
+      // Spark write jobs must not collide on one directory
+      val newDataVersion = log.newDataDirName(newV)
+      // one shuffle partition per touched bucket -> one file per kp dir
+      existing.unionByName(batchWinners)
+        .repartition(touched.size, col("kp"))
+        .withColumn("__rn", row_number().over(w))
+        .filter($"__rn" === 1).drop("__rn")
+        .write.mode(SaveMode.Overwrite).partitionBy("kp")
+        .parquet(log.dataPath(newDataVersion).toString)
+      val newEntries = entries ++ touched.map(_ -> newDataVersion)
+      committed = log.tryCommit(newV,
+        newEntries.map { case (k, d) => k.toString -> Seq(d) })
+      if (!committed)
+        // lost the race: another writer committed baseV+1 first; drop our
+        // orphaned data version and re-merge against the new state
+        f.delete(log.dataPath(newDataVersion), true)
     }
     log.vacuum()
   }

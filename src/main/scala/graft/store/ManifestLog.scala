@@ -36,10 +36,7 @@ import org.apache.spark.sql.types.StructType
   * garbage-collected, never renamed).
   *
   * File format: one `cell=dir1,dir2` line per cell, cells URL-encoded
-  * (values never need encoding — dir names are self-assigned). A
-  * single-dir entry serializes as `cell=dir`, byte-identical to the
-  * pre-generalization LatestStore format, so existing tables read
-  * unchanged.
+  * (values never need encoding — dir names are self-assigned).
   */
 final class ManifestLog(spark: SparkSession, path: String,
     keepVersions: Int = 3,
@@ -64,14 +61,42 @@ final class ManifestLog(spark: SparkSession, path: String,
     * data only they referenced). Each is a complete, immutable
     * snapshot: the basis for time-travel reads. The SINGLE listing of
     * the manifests dir — currentVersion/vacuum/vacuumOrphans all go
-    * through here so the name-pattern invariant lives in one place. */
-  def versions: Seq[Long] =
-    if (!f.exists(manifestsDir)) Nil
-    else f.listStatus(manifestsDir).toSeq
-      .flatMap(st => st.getPath.getName match {
-        case ManifestName(n) => Some(n.toLong)
-        case _ => None
-      }).sorted
+    * through here so the name-pattern invariant lives in one place.
+    * With no version it also refuses a table root that holds data
+    * written before the manifest log (see [[refusePreManifest]]), so
+    * every read, `exists` and commit fails on such a table before
+    * writing anything. */
+  def versions: Seq[Long] = {
+    val vs =
+      if (!f.exists(manifestsDir)) Nil
+      else f.listStatus(manifestsDir).toSeq
+        .flatMap(st => st.getPath.getName match {
+          case ManifestName(n) => Some(n.toLong)
+          case _ => None
+        }).sorted
+    if (vs.isEmpty) refusePreManifest()
+    vs
+  }
+
+  /** Throws when the table root holds a `*.parquet` file or a `k=v`
+    * partition directory: the flat or partitioned layout written before
+    * the manifest log, which is no longer read. Reading it as an empty
+    * table would hide its rows. `manifests/`, `data/` and hidden `_`/`.`
+    * names (markers, a crashed first writer's dir) are the manifested
+    * layout's own and pass. */
+  private def refusePreManifest(): Unit =
+    if (f.exists(root)) {
+      val stray = f.listStatus(root).map(_.getPath.getName).filter { n =>
+        n != "manifests" && n != "data" && !n.startsWith("_") &&
+          !n.startsWith(".") && (n.endsWith(".parquet") || n.contains('='))
+      }
+      if (stray.nonEmpty)
+        throw new IllegalStateException(
+          s"$path holds a pre-manifest table layout (${stray.sorted.take(3)
+            .mkString(", ")}) and no manifests/: this layout is no longer " +
+            "read; convert it by reading it with spark.read.parquet and " +
+            "appending the rows into a fresh path")
+    }
 
   def currentVersion: Option[Long] = versions.lastOption
 
@@ -270,17 +295,10 @@ final class ManifestLog(spark: SparkSession, path: String,
 
   def dataPath(dirName: String): Path = new Path(dataRoot, dirName)
 
-  /** Base path a data dir's cell leaves hang off. Dir "." references
-    * the table ROOT itself: a pre-manifest partitioned tree adopted in
-    * place by a pure manifest commit (no file moves, so the migration
-    * is crash- and race-safe); [[vacuum]] protects it. */
-  def cellBase(dirName: String): Path =
-    if (dirName == ".") root else dataPath(dirName)
-
   /** The data files of one (dir, cell) leaf; none when the leaf does
     * not exist. */
   def leafFiles(dir: String, cell: String): Array[FileStatus] = {
-    val leaf = new Path(cellBase(dir), cell)
+    val leaf = new Path(dataPath(dir), cell)
     if (!f.exists(leaf)) Array.empty
     else f.listStatus(leaf).filter(st => ManifestLog.isDataFile(st.getPath.getName))
   }
@@ -299,30 +317,8 @@ final class ManifestLog(spark: SparkSession, path: String,
             .map(tail => if (tail.isEmpty) st.getPath.getName
               else st.getPath.getName + "/" + tail))
     }
-    val base = cellBase(dir)
+    val base = dataPath(dir)
     if (!f.exists(base)) Nil else walk(base, levelPrefixes)
-  }
-
-  /** Root-level partition leaves of a table that predates the manifest
-    * log (empty once any manifest exists). */
-  def legacyCells(levelPrefixes: Seq[String]): Seq[String] =
-    if (hasAny) Nil else listCells(".", levelPrefixes)
-
-  /** The whole pre-manifest tree at the table root, if there is one —
-    * for a reader whose [[resolve]] found no manifest. Partition pruning
-    * is left to the planner, after the listing. */
-  def legacyTable(levelPrefixes: Seq[String],
-      schema: StructType): Option[DataFrame] =
-    if (listCells(".", levelPrefixes).isEmpty) None
-    else Some(spark.read.schema(schema).option("basePath", path).parquet(path))
-
-  /** One-time adoption of a pre-manifest partitioned tree: commit
-    * version 1 referencing the existing leaves in place (dir "."). A
-    * lost CAS means another writer already migrated — equally fine. */
-  def migrateLegacyIfNeeded(levelPrefixes: Seq[String]): Unit = {
-    val cells = legacyCells(levelPrefixes)
-    if (cells.nonEmpty)
-      tryCommit(1L, cells.map(_ -> Seq(".")).toMap)
   }
 
   /** Snapshot read of exactly the cells in `entries` as ONE relation
@@ -361,7 +357,7 @@ final class ManifestLog(spark: SparkSession, path: String,
     val zone =
       java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
     val leaves = dirCells.map { case (dir, cell) =>
-      val leaf = new Path(cellBase(dir), cell)
+      val leaf = new Path(dataPath(dir), cell)
       val values = pairs(cell).zip(partitionSchema).map { case ((_, v), fld) =>
         PartitioningUtils.castPartValueToDesiredType(fld.dataType, v, zone)
       }
@@ -559,10 +555,9 @@ private[store] object ManifestFileIndex {
 }
 
 object ManifestLog {
-  /** Dir names vacuum must never delete as a unit. "." marks the
-    * table's own root (a migrated pre-manifest tree referenced in
-    * place); deleting it would take the manifests with it. */
-  private[store] val Protected: Set[String] = Set(".", "")
+  /** Dir names vacuum must never delete as a unit: `dataPath("")` is
+    * the whole `data/` root. */
+  private[store] val Protected: Set[String] = Set("")
 
   /** Whether a leaf's file named `name` is data: a `.parquet` name that
     * is not hidden. Names starting with `_` or `.` are skipped, as
@@ -582,6 +577,15 @@ object ManifestLog {
     * work-bound knob like `bloomMaxKeys`, not a data constant. */
   val DefaultFooterBudget: Long = 4096L
 
+  /** (store path, skip-count magnitude) pairs already warned about —
+    * dedups the fragmentation hint so a hot ratio-gate loop doesn't
+    * spam one line per call; a store that keeps fragmenting re-warns
+    * at each magnitude step. */
+  private val fragWarned =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
+
+  private val RowCacheMax = 150000
+
   /** (table path, dir, cell) -> (footer row sum, parquet bytes). Safe
     * to share JVM-wide because committed data dirs are write-once.
     * Bounded as an ACCESS-ORDER LRU (~100 B/entry ⇒ ~15 MB cap): the
@@ -591,14 +595,6 @@ object ManifestLog {
     * working sets. All access paths (get/put/forEach) go through the
     * synchronized wrapper, which serializes LinkedHashMap's
     * access-order mutation on get. */
-  /** (store path, skip-count magnitude) pairs already warned about —
-    * dedups the fragmentation hint so a hot ratio-gate loop doesn't
-    * spam one line per call; a store that keeps fragmenting re-warns
-    * at each magnitude step. */
-  private val fragWarned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
-
-  private val RowCacheMax = 150000
   private val rowCache: java.util.Map[(String, String, String), (Long, Long)] =
     java.util.Collections.synchronizedMap(
       new java.util.LinkedHashMap[(String, String, String), (Long, Long)](

@@ -121,21 +121,8 @@ final class NearDupIndex(spark: SparkSession, path: String,
     * an index built under different values would silently miss every
     * historical near-duplicate (the [[GramIndex]] `w` lesson).
     * `maxDist` is deliberately NOT pinned: it is a confirm threshold,
-    * tunable per open without changing what is stored. Pre-upgrade
-    * markers carry only the bucket count; they are accepted when it
-    * matches (the other parameters are unverifiable for such stores —
-    * callers that tuned them before this guard existed must keep
-    * passing the same values, as before).
-    *
-    * `upgradeLegacy` is set ONLY by write paths (append/ingest): a
-    * writer freezes the band identity anyway (it appends postings
-    * under ITS params), so recording that identity closes the
-    * forever-unpinned window. A READ-ONLY caller (probe, stats,
-    * monitoring) must never rewrite the marker — its parameters are
-    * just as unverifiable as anyone's, and pinning THEM would lock
-    * out the tuned writer that actually built the store. */
-  private def ensureBuckets(upgradeLegacy: Boolean = false,
-      createIfMissing: Boolean = true): Unit = {
+    * tunable per open without changing what is stored. */
+  private def ensureBuckets(createIfMissing: Boolean = true): Unit = {
     val want =
       s"buckets=$buckets;numHashes=$numHashes;" +
         s"rowsPerBand=$rowsPerBand;normChars=$normChars"
@@ -146,16 +133,10 @@ final class NearDupIndex(spark: SparkSession, path: String,
     val stored =
       if (createIfMissing) Fs.ensureMarker(f, bucketsMarker, want)
       else Fs.readMarker(f, bucketsMarker).getOrElse(want)
-    val legacy = stored != want &&
-      scala.util.Try(stored.toInt).toOption.contains(buckets)
-    require(stored == want || legacy,
+    require(stored == want,
       s"index at $path was created with '$stored'; opened with '$want' " +
         "— a band/normalization mismatch silently misses every " +
         "historical near-duplicate")
-    // Upgrade a validated legacy (bucket-only) marker to the full
-    // band-identity format. Atomic replace; best-effort (a failure
-    // re-validates legacy next open).
-    if (legacy && upgradeLegacy) Fs.replaceMarker(spark, bucketsMarker, want)
   }
 
   private def requireIntegralId(batch: DataFrame, idCol: String): Unit =
@@ -345,7 +326,7 @@ final class NearDupIndex(spark: SparkSession, path: String,
       idCol: String = "doc_id"): Unit = {
     requireNoCollisions(docs, WorkingCols)
     requireIntegralId(docs, idCol)
-    ensureBuckets(upgradeLegacy = true)
+    ensureBuckets()
     val clean = docs.filter(col(textCol).isNotNull)
       .select(col(idCol).cast("long").as("__id"),
         col(textCol).as("__text"), normCol(textCol).as("__t"))
@@ -375,7 +356,7 @@ final class NearDupIndex(spark: SparkSession, path: String,
       idCol: String = "doc_id"): DataFrame = {
     requireNoCollisions(batch, WorkingCols :+ "canonical_id")
     requireIntegralId(batch, idCol)
-    ensureBuckets(upgradeLegacy = true)
+    ensureBuckets()
     val clean = batch.filter(col(textCol).isNotNull)
       .select(col(idCol).cast("long").as("__id"),
         col(textCol).as("__text"), normCol(textCol).as("__t"))

@@ -114,7 +114,6 @@ final class RecordStore(spark: SparkSession, path: String,
     * the data files, because an append's content does not depend on the
     * base version. An empty result writes nothing. */
   def appendDf(df: DataFrame, dedupAgainstExisting: Boolean): Unit = {
-    log.migrateLegacyIfNeeded(RecordStore.LevelPrefixes)
     val schema = df.schema
     val bucketAt = schema.fieldIndex("time_bucket")
     val metaAt = schema.fieldIndex("metadata")
@@ -159,8 +158,7 @@ final class RecordStore(spark: SparkSession, path: String,
       .as[(Long, String)].collect().toSet.filter(keys.contains)
   }
 
-  def exists: Boolean =
-    log.hasAny || log.legacyCells(RecordStore.LevelPrefixes).nonEmpty
+  def exists: Boolean = log.hasAny
 
   /** Full table as DataFrame; partition columns are restored to their
     * logical types. See [[ManifestLog.readEntries]] for the scan shape. */
@@ -170,8 +168,7 @@ final class RecordStore(spark: SparkSession, path: String,
     * `[fromBucket, toBucket]`. The current manifest is resolved once and
     * its cells are pruned on the driver to the ones these keys reach, so
     * no other cell is listed or scanned. A missing or empty table reads
-    * as an empty frame. A pre-manifest tree is read whole, and the
-    * caller's filters prune its partitions after the listing. */
+    * as an empty frame. */
   def recordsIn(what: Option[String], fromBucket: Long = Long.MinValue,
       toBucket: Long = Long.MaxValue): DataFrame =
     recordsWhere((b, w) =>
@@ -185,8 +182,7 @@ final class RecordStore(spark: SparkSession, path: String,
         log.readEntries(entries.filter { case (cell, _) =>
           RecordStore.parseCell(cell).forall(keep.tupled)
         }, RecordStore.schema)
-      case None => log.legacyTable(RecordStore.LevelPrefixes, RecordStore.schema)
-        .getOrElse(log.emptyDf(RecordStore.schema))
+      case None => log.emptyDf(RecordStore.schema)
     }
 
   /** Compact fragmented cells: streaming ingest appends one small file
@@ -203,7 +199,6 @@ final class RecordStore(spark: SparkSession, path: String,
     * this call actually rewrote. */
   def compact(filesPerPartition: Int = 1): Int = {
     require(filesPerPartition >= 1, "filesPerPartition must be >= 1")
-    log.migrateLegacyIfNeeded(RecordStore.LevelPrefixes)
     val resolved = log.resolve()
     if (resolved.isEmpty) return 0
     val (_, snapshot) = resolved.get
@@ -292,8 +287,7 @@ final class WorkIdIndex(spark: SparkSession, path: String,
   private val log = new ManifestLog(spark, path, keepVersions, committer)
   private lazy val f = Fs.fs(spark, path)
 
-  def exists: Boolean =
-    log.hasAny || log.legacyCells(WorkIdIndex.LevelPrefixes).nonEmpty
+  def exists: Boolean = log.hasAny
 
   private def withPrefix(df: DataFrame): DataFrame =
     df.filter(col("work_id").isNotNull)
@@ -309,7 +303,6 @@ final class WorkIdIndex(spark: SparkSession, path: String,
     * to ([[WorkIdIndex.rebuildMutate]]): exactly one replacement wins,
     * never a doubled index. */
   def rebuild(store: RecordStore): Unit = {
-    log.migrateLegacyIfNeeded(WorkIdIndex.LevelPrefixes)
     val snapshot = log.resolve().map(_._2).getOrElse(Map.empty)
     val newDir = log.newDataDirName(
       log.currentVersion.getOrElse(0L) + 1, tag = "rebuild")
@@ -348,7 +341,6 @@ final class WorkIdIndex(spark: SparkSession, path: String,
   /** [[append]] of record rows (of `schema`) the driver holds, written
     * there by [[DriverWrite]], one file per prefix cell. */
   private[store] def append(rows: Seq[InternalRow], schema: StructType): Unit = {
-    log.migrateLegacyIfNeeded(WorkIdIndex.LevelPrefixes)
     val widAt = schema.fieldIndex("work_id")
     // the prefix as `withPrefix`'s substring computes it
     val indexed = rows.filterNot(_.isNullAt(widAt)).map(r => new JoinedRow(r,
@@ -368,21 +360,17 @@ final class WorkIdIndex(spark: SparkSession, path: String,
 
   /** [[lookup]] read from the one prefix cell `workId` falls in, pruned
     * on the driver from a single manifest resolve; None when no index
-    * has been built, so a caller can fall back to the record table. A
-    * pre-manifest tree is read whole and pruned by the planner. */
+    * has been built, so a caller can fall back to the record table. */
   private[graft] def find(workId: String, what: String): Option[DataFrame] = {
     val prefix = workId.take(prefixLen)
-    val table = log.resolve() match {
-      case Some((_, entries)) =>
-        Some(log.readEntries(entries.filter { case (cell, _) =>
-          WorkIdIndex.parseCell(cell).forall(_ == prefix)
-        }, WorkIdIndex.schema))
-      case None => log.legacyTable(WorkIdIndex.LevelPrefixes, WorkIdIndex.schema)
+    log.resolve().map { case (_, entries) =>
+      log.readEntries(entries.filter { case (cell, _) =>
+        WorkIdIndex.parseCell(cell).forall(_ == prefix)
+      }, WorkIdIndex.schema)
+        .filter(col("work_id_prefix") === prefix &&
+          col("work_id") === workId && col("what") === what)
+        .drop("work_id_prefix")
     }
-    table.map(_
-      .filter(col("work_id_prefix") === prefix &&
-        col("work_id") === workId && col("what") === what)
-      .drop("work_id_prefix"))
   }
 
   /** See [[ManifestLog.vacuumOrphans]]. */
@@ -393,9 +381,6 @@ final class WorkIdIndex(spark: SparkSession, path: String,
 object RecordStore {
   /** The columns a cell's path names, in path order. */
   private val PartitionColumns = Seq("time_bucket", "what")
-
-  /** Partition-directory walk for this table's cells. */
-  private[store] val LevelPrefixes = PartitionColumns.map(_ + "=")
 
   /** (time_bucket, what) of a `time_bucket=…/what=…` cell; None for a
     * cell of any other shape, which pruning then keeps. */

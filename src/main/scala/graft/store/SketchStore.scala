@@ -57,9 +57,12 @@ final class SketchStore(spark: SparkSession, path: String,
     case Some((_, entries)) => batchesIn(entries)
   }
 
+  /** Throws on a tag not of the [[SketchStore.tag]] shape: a store
+    * written before that form would not recognise its own batch ids, so
+    * a replay would merge them twice. */
   private def batchesIn(entries: Map[String, Seq[String]]): Set[String] = {
       val dirs = entries.values.flatten.toSet
-      dirs.flatMap { dir =>
+      val tags = dirs.flatMap { dir =>
         val parts = dir.split("-")
         val fromTag =
           if (parts.length == 3 && parts(1) != CompactTag) Set(parts(1))
@@ -74,6 +77,13 @@ final class SketchStore(spark: SparkSession, path: String,
           } else Set.empty[String]
         fromTag ++ fromMarker
       }
+      tags.find(!TagShape.matches(_)).foreach { t =>
+        throw new IllegalStateException(
+          s"sketch store at $path holds batch tag '$t', not of the " +
+            "<sanitized>_<8 hex> form: a pre-upgrade tag, which this " +
+            "store no longer reads; re-ingest its loads into a fresh path")
+      }
+      tags
   }
 
   /** Normalize an operator-shaped frame to stored cells. */
@@ -98,14 +108,7 @@ final class SketchStore(spark: SparkSession, path: String,
     * CMS sums exact under at-least-once delivery. */
   def ingest(cells: DataFrame, batchId: String): Boolean = {
     val tag = SketchStore.tag(batchId)
-    val legacy = SketchStore.legacyTag(batchId)
-    // accept BOTH tag forms as "already committed": stores written before
-    // the collision-free tag format carry plain sanitize-form dir tags,
-    // which can never equal the new tags — without this, an at-least-once
-    // replay of a pre-upgrade batch id would re-ingest and double-count
-    // CMS/HLL cells, breaking the store's exactness contract
-    val done = committedBatches
-    if (done.contains(tag) || done.contains(legacy)) return false
+    if (committedBatches.contains(tag)) return false
     val dirName = log.newDataDirName(
       log.currentVersion.getOrElse(0L) + 1, tag = tag)
     toCells(cells)
@@ -124,9 +127,7 @@ final class SketchStore(spark: SparkSession, path: String,
       // markers), not just name tags: the racer's dir may ALREADY have
       // been folded by a compaction between its commit and ours, in
       // which case only the marker still carries its batch id
-      val present = batchesIn(current)
-        .exists(b => b == tag || b == legacy)
-      if (present) { skipped = true; current }
+      if (batchesIn(current).contains(tag)) { skipped = true; current }
       else RecordStore.appendMutate(leaves, dirName)(current)
     }
     if (skipped) { f.delete(log.dataPath(dirName), true); false }
@@ -254,14 +255,9 @@ object SketchStore {
     s.take(48) + "_" + md.take(4).map("%02x".format(_)).mkString
   }
 
-  /** The pre-upgrade tag form (plain character sanitize, no md5
-    * suffix). Never WRITTEN anymore — only consulted by the replay
-    * guard so stores created before the collision-free format keep
-    * refusing replays of their already-committed batch ids. */
-  def legacyTag(batchId: String): String = {
-    require(batchId.nonEmpty, "batchId must be non-empty")
-    batchId.map(c => if (c.isLetterOrDigit) c else '_')
-  }
+  /** The shape every [[tag]] has. */
+  private[store] val TagShape = """[\p{L}\p{Nd}_]{1,48}_[0-9a-f]{8}""".r
+
   val LevelPrefixes: Seq[String] = Seq("bucket=")
   val schema: StructType = StructType(Seq(
     StructField("group", StringType),

@@ -171,10 +171,7 @@ final class StreamingIngester(
     * ([[drainQueue]], whose redeliveries have no stable batch identity)
     * write a unique `batch=queue-<uuid>` dir — the whole report tree
     * stays one uniform partitioned layout Spark can read in a single
-    * `read.json(reportPath)` (a tree started by the pre-`batch=` code
-    * is upgraded in place first: [[migrateLegacyReports]] moves its
-    * flat root files into `batch=legacy/`) — and keep
-    * Append-equivalent semantics: a
+    * `read.json(reportPath)` — and keep Append-equivalent semantics: a
     * crash between processBatch and queue-delete may duplicate reports
     * there, records never.
     *
@@ -192,7 +189,6 @@ final class StreamingIngester(
     recordStore.appendDf(records, dedupAgainstExisting = true)
     latestStore.foreach(_.upsert(records))
     reportPath.foreach { p =>
-      migrateLegacyReports(p)
       // Uniform partition-style layout: Spark cannot read a directory
       // mixing data files at the root with batch=<id> subdirs
       // ("conflicting directory structures"), so queue drains get their
@@ -216,58 +212,6 @@ final class StreamingIngester(
     if (compactEvery > 0 &&
         batchesSinceCompact.incrementAndGet() % compactEvery == 0)
       recordStore.compact()
-  }
-
-  // migrate-once latch: the listing costs one RPC per report write and
-  // the root only needs checking until it is known clean. The latch is
-  // set only AFTER a migration completes — latching on entry would make
-  // one failed rename permanently skip migration for this instance, and
-  // the next write would create the exact mixed flat+batch= layout the
-  // migration exists to prevent.
-  private val legacyReportsChecked =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  /** Upgrade a report tree written by the pre-`batch=` code: that code
-    * appended part files FLAT at the report root, and Spark refuses to
-    * read a directory mixing root data files with `batch=<id>` subdirs
-    * ("conflicting directory structures"). On the first write of each
-    * ingester instance, any regular file still sitting at the root is
-    * MOVED into `batch=legacy/` — same rows, one uniform partitioned
-    * layout, `spark.read.json(reportPath)` works across the upgrade.
-    * Hidden files (`_SUCCESS`, `.*.crc`) move too: Spark readers ignore
-    * them wherever they sit, and a clean root keeps the layout
-    * self-describing. Rename, not copy — atomic per file on any
-    * sane filesystem, and a crash mid-migration just leaves fewer flat
-    * files for the next attempt. */
-  private def migrateLegacyReports(p: String): Unit = {
-    if (legacyReportsChecked.get()) return
-    legacyReportsChecked.synchronized {
-      if (legacyReportsChecked.get()) return
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val root = new Path(p)
-      val fs = root.getFileSystem(hconf)
-      if (fs.exists(root)) {
-        val flat = fs.listStatus(root).filter(_.isFile)
-        if (flat.nonEmpty) {
-          val legacy = new Path(root, "batch=legacy")
-          fs.mkdirs(legacy)
-          flat.foreach { f =>
-            val dest =
-              new Path(legacy, f.getPath.getName)
-            if (!fs.rename(f.getPath, dest))
-              // throws WITHOUT latching: the batch fails, and the next
-              // processBatch retries the migration (rename is atomic per
-              // file, so a partial pass just leaves fewer flat files)
-              throw new IllegalStateException(
-                s"report-layout migration failed: could not move " +
-                  s"${f.getPath} to $dest — a root mixing flat files " +
-                  s"with batch= dirs is unreadable; move the flat files " +
-                  s"into $legacy manually and retry")
-          }
-        }
-      }
-      legacyReportsChecked.set(true)
-    }
   }
 
   /** Drain a [[NotificationQueue]] through the Spark ingest path with the

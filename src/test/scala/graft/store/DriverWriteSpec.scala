@@ -63,9 +63,10 @@ class DriverWriteSpec extends SparkSuite {
     df.coalesce(1).write.partitionBy("time_bucket", "what")
       .parquet(log.dataPath("s").toString)
 
-    val sparkLeaves = log.listCells("s", RecordStore.LevelPrefixes)
+    val levels = Seq("time_bucket=", "what=")
+    val sparkLeaves = log.listCells("s", levels)
     assert(leaves.sorted === sparkLeaves.sorted)
-    assert(log.listCells("d", RecordStore.LevelPrefixes).sorted === leaves.sorted)
+    assert(log.listCells("d", levels).sorted === leaves.sorted)
     assert(leaves.exists(_.endsWith("what=a%2Fb c%3Dd%25")), leaves)
     assert(leaves.size === 6)
 
@@ -186,7 +187,7 @@ class DriverWriteSpec extends SparkSuite {
     val log = new ManifestLog(spark, dir + "/t")
     val rowCount = log.rowCount()
     val (cell, dirs) = log.resolve().get._2.head
-    val leaf = new Path(log.cellBase(dirs.head), cell)
+    val leaf = new Path(log.dataPath(dirs.head), cell)
     val fs = leaf.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val Seq(part) = log.leafFiles(dirs.head, cell).toSeq
     Seq("_x.parquet", ".y.parquet").foreach { name =>

@@ -3,8 +3,7 @@ package graft.store
 import graft.SparkSuite
 import org.apache.hadoop.fs.Path
 
-/** [[Fs.ensureMarker]] race behavior and [[Fs.replaceMarker]]
-  * atomic-replace semantics (ADVICE r10): a concurrent opener can
+/** [[Fs.ensureMarker]] race behavior (ADVICE r10): a concurrent opener can
   * observe a marker created-but-not-yet-written; reading "" must be
   * treated as the race it is, not returned for callers to parse. */
 class FsSpec extends SparkSuite {
@@ -46,17 +45,5 @@ class FsSpec extends SparkSuite {
     f.create(m, false).close() // never written: corrupt, not racing
     val e = intercept[java.io.IOException] { Fs.ensureMarker(f, m, "1") }
     assert(e.getMessage.contains("marker"))
-  }
-
-  test("replaceMarker swaps content in place with no temp residue") {
-    val dir = tmpDir("fs-replace")
-    val f = Fs.fs(spark, dir)
-    val m = new Path(dir, "_marker")
-    assert(Fs.ensureMarker(f, m, "8") === "8")
-    Fs.replaceMarker(spark, m, "buckets=8;numHashes=8")
-    assert(Fs.ensureMarker(f, m, "ignored") === "buckets=8;numHashes=8")
-    val residue = f.listStatus(new Path(dir))
-      .map(_.getPath.getName).filter(_.startsWith("_marker.tmp"))
-    assert(residue.isEmpty, s"temp files left behind: ${residue.toSeq}")
   }
 }

@@ -134,31 +134,6 @@ class LatestStoreSpec extends SparkSuite {
       .getAs[Long]("start") === 106L * day)
   }
 
-  test("pre-manifest flat table reads as-is and migrates on first upsert") {
-    import org.apache.spark.sql.SaveMode
-    val dir = tmpDir("lat-legacy") + "/t"
-    // simulate the old layout: winners written flat at the table path
-    batch(Seq(("a", "x"), ("b", "y")), 100L * day, 1L)
-      .write.mode(SaveMode.Overwrite).parquet(dir)
-    val store = new LatestStore(spark, dir, nBuckets = 4)
-    assert(store.exists)
-    assert(store.latest.count() === 2) // readable before any migration
-
-    // first upsert folds the legacy rows into version 1 and removes them
-    store.upsert(batch(Seq(("c", "z")), 200L * day, 2L))
-    val rows = store.latest.collect()
-    assert(rows.map(_.getAs[String]("what")).sorted === Array("a", "b", "c"))
-    val flatLeft = new java.io.File(dir).listFiles()
-      .count(f => f.isFile && f.getName.endsWith(".parquet"))
-    assert(flatLeft === 0, "legacy flat files must be gone after migration")
-    // monotonicity still holds across the migration
-    store.upsert(batch(Seq(("a", "x")), 50L * day, 3L)) // older -> no-op
-    val a = store.latest.filter(org.apache.spark.sql.functions
-      .col("what") === "a").collect().head
-    assert(a.getAs[org.apache.spark.sql.Row]("metadata")
-      .getAs[Long]("start") === 100L * day)
-  }
-
   test("time travel: latestAt reads the snapshot a version committed") {
     val store = new LatestStore(spark, tmpDir("lat-tt") + "/t", nBuckets = 4)
     store.upsert(batch(Seq(("a", "x")), 100L * day, 1L))

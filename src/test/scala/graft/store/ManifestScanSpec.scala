@@ -68,7 +68,7 @@ class ManifestScanSpec extends SparkSuite {
       schema: StructType): DataFrame =
     entries.toSeq.flatMap { case (cell, dirs) => dirs.map(_ -> cell) }
       .groupBy(_._1).toSeq.sortBy(_._1).map { case (dir, cells) =>
-        val b = log.cellBase(dir)
+        val b = log.dataPath(dir)
         spark.read.schema(schema).option("basePath", b.toString)
           .parquet(cells.map(c => new Path(b, c._2).toString).distinct: _*)
       }

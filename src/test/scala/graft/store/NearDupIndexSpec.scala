@@ -137,51 +137,47 @@ class NearDupIndexSpec extends SparkSuite {
       .probe(Seq((9L, "tiny probe doc")).toDF("doc_id", "text")).count()
   }
 
-  test("pre-upgrade bucket-only markers stay accepted when the bucket " +
-    "count matches, rejected when it does not") {
+  test("identity marker: mismatches and bucket-only markers are refused; " +
+    "a probe of a virgin store pins nothing") {
     import spark.implicits._
     val path = tmp()
     val f = Fs.fs(spark, path)
-    f.mkdirs(new org.apache.hadoop.fs.Path(path))
-    val out = f.create(new org.apache.hadoop.fs.Path(path, "_buckets"), false)
-    out.write("8".getBytes("UTF-8")); out.close()
-    val idx = new NearDupIndex(spark, path, buckets = 8)
-    idx.append(Seq((1L, base)).toDF("doc_id", "text"))
-    assert(idx.probe(Seq((9L, edited)).toDF("doc_id", "text")).count() === 1)
-    intercept[IllegalArgumentException] {
-      new NearDupIndex(spark, path, buckets = 16)
-        .probe(Seq((9L, base)).toDF("doc_id", "text"))
-    }
-    // the validated legacy marker is upgraded in place to the full
-    // band-identity format BY THE WRITE PATH (append above), so the
-    // previously-unverifiable parameters are pinned from the first
-    // post-upgrade write onward: a reopen with different band params —
-    // silently accepted under the bucket-only marker — is now refused
     def marker(p: String): String = {
       val in = f.open(new org.apache.hadoop.fs.Path(p, "_buckets"))
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
       finally in.close()
     }
+    val idx = new NearDupIndex(spark, path, buckets = 8)
+    idx.append(Seq((1L, base)).toDF("doc_id", "text"))
+    assert(idx.probe(Seq((9L, edited)).toDF("doc_id", "text")).count() === 1)
     assert(marker(path) ===
       "buckets=8;numHashes=8;rowsPerBand=4;normChars=4000")
+    intercept[IllegalArgumentException] {
+      new NearDupIndex(spark, path, buckets = 16)
+        .probe(Seq((9L, base)).toDF("doc_id", "text"))
+    }
     intercept[IllegalArgumentException] {
       new NearDupIndex(spark, path, buckets = 8, rowsPerBand = 2)
         .probe(Seq((9L, base)).toDF("doc_id", "text"))
     }
-    // a READ-ONLY open must never rewrite a legacy marker: a probing
-    // monitor's (unverifiable) params would otherwise lock out the
-    // tuned writer that actually built the store
+    // a marker holding only the bucket count names no band identity:
+    // refused by readers and writers alike, never rewritten
     val p2 = tmp()
     f.mkdirs(new org.apache.hadoop.fs.Path(p2))
     val out2 = f.create(new org.apache.hadoop.fs.Path(p2, "_buckets"), false)
     out2.write("8".getBytes("UTF-8")); out2.close()
-    new NearDupIndex(spark, p2, buckets = 8)
-      .probe(Seq((9L, base)).toDF("doc_id", "text")).count()
-    assert(marker(p2) === "8",
-      "probe must leave the legacy marker untouched")
-    // ... and probing a VIRGIN store must not create a marker at all:
-    // pinning the PROBER's params as the store's permanent identity
-    // would lock out the differently-tuned writer that arrives later
+    intercept[IllegalArgumentException] {
+      new NearDupIndex(spark, p2, buckets = 8)
+        .probe(Seq((9L, base)).toDF("doc_id", "text"))
+    }
+    intercept[IllegalArgumentException] {
+      new NearDupIndex(spark, p2, buckets = 8)
+        .append(Seq((1L, base)).toDF("doc_id", "text"))
+    }
+    assert(marker(p2) === "8")
+    // probing a VIRGIN store must not create a marker at all: pinning
+    // the PROBER's params as the store's permanent identity would lock
+    // out the differently-tuned writer that arrives later
     val p3 = tmp()
     val probed = new NearDupIndex(spark, p3, buckets = 16)
       .probe(Seq((9L, base)).toDF("doc_id", "text"))

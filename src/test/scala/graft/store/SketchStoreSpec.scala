@@ -161,20 +161,18 @@ class SketchStoreSpec extends SparkSuite {
     assert(got.toSeq === want.toSeq)
   }
 
-  test("stores written under the pre-upgrade tag format still refuse " +
-    "replays of their committed batch ids") {
+  test("a store holding a pre-upgrade batch tag is refused, not replayed") {
     import spark.implicits._
     val dir = tmp()
     def regs(rows: Seq[(String, String)]) =
       Cms.registers(words(rows), Seq("g"), "v").withColumnRenamed("g", "group")
-    // build the store exactly as the pre-upgrade code did: data dir
-    // tagged with the plain sanitize form (no md5 suffix), committed
-    // through the same manifest machinery
-    val legacyId = "s3://bucket/old load-1"
-    val legacy = SketchStore.legacyTag(legacyId)
-    assert(legacy === "s3___bucket_old_load_1")
+    // build the store as the pre-upgrade code did: data dir tagged with
+    // the plain sanitize form (no md5 suffix), committed through the
+    // same manifest machinery
+    val oldId = "s3://bucket/old load-1"
+    val oldTag = "s3___bucket_old_load_1"
     val log = new ManifestLog(spark, dir, 3, None)
-    val dirName = log.newDataDirName(1L, tag = legacy)
+    val dirName = log.newDataDirName(1L, tag = oldTag)
     regs(batch1)
       .select(col("group"), col("row").cast("int").as("a"),
         col("col").cast("int").as("b"), col("counter").cast("long").as("v"))
@@ -184,22 +182,33 @@ class SketchStoreSpec extends SparkSuite {
       .parquet(log.dataPath(dirName).toString)
     log.commitRetry(RecordStore.appendMutate(
       log.listCells(dirName, SketchStore.LevelPrefixes), dirName))
-    // upgraded code opening the old store: the legacy tag is visible,
-    // and a replay of the SAME raw id — whose NEW tag can never equal
-    // the stored legacy tag — must still be refused, or at-least-once
-    // redelivery double-counts every CMS cell of the batch
+    // the replay of the SAME raw id has a new-form tag that can never
+    // equal the stored one: accepting it would double-count every CMS
+    // cell of the batch, so the store refuses before writing anything
     val st = new SketchStore(spark, dir, SketchStore.CmsKind)
-    assert(st.committedBatches === Set(legacy))
-    assert(!st.ingest(regs(batch1), legacyId),
-      "pre-upgrade batch id re-ingested — exactness contract broken")
-    // and the merged read is still the single batch, not a double-count
+    def refused(what: String)(op: => Any): Unit = {
+      val e = intercept[IllegalStateException] { op }
+      assert(e.getMessage.contains(oldTag), s"$what: ${e.getMessage}")
+    }
+    refused("committedBatches")(st.committedBatches)
+    refused("ingest")(st.ingest(regs(batch1), oldId))
+    refused("ingest of a new id")(st.ingest(regs(batch2), "new-load-2"))
+    assert(log.versions === Seq(1L))
+    assert(new java.io.File(dir, "data").list().toSeq === Seq(dirName))
+    // the stored batch still reads once, not twice
     val got = st.read().orderBy($"group", $"a", $"b").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3)))
     val want = Cms.registers(words(batch1), Seq("g"), "v")
       .orderBy($"g", $"row", $"col").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3)))
     assert(got.toSeq === want.toSeq)
-    // a genuinely NEW batch under a new id still ingests
-    assert(st.ingest(regs(batch2), "new-load-2"))
+    // every tag the store writes has the accepted shape, whatever the
+    // raw id holds: letters and digits of any script, punctuation
+    assert(SketchStore.TagShape.matches(SketchStore.tag("b\u00fccket \u0663-x")))
+    val fresh = new SketchStore(spark, tmp(), SketchStore.CmsKind)
+    val odd = "s3://bucket/load 3-e.1"
+    assert(fresh.ingest(regs(batch1), odd))
+    assert(fresh.committedBatches === Set(SketchStore.tag(odd)))
+    assert(!fresh.ingest(regs(batch1), odd), "replay re-ingested")
   }
 }

@@ -124,31 +124,90 @@ class StoreMaintenanceSpec extends SparkSuite {
     assert(ids.sorted.toSeq === (1 to 7).map(i => f"$i%032x").sorted)
   }
 
-  test("pre-manifest partitioned tree is adopted in place and compactable") {
+  test("a pre-manifest table root is refused by every read and write") {
     import org.apache.spark.sql.SaveMode
-    val dir = tmpDir("legacy") + "/t"
+    import org.apache.spark.sql.functions.substring
     val session = spark
     import session.implicits._
-    // simulate the old layout: a partitioned tree written directly at
-    // the table root, no manifest
     val rows = (1 to 4).flatMap(i =>
-      DatalakeRecord.listFromMetadata(meta(i), s"file:///$i", 1L, 2L))
+      DatalakeRecord.listFromMetadata(meta(i, workId = Some(s"wk$i")),
+        s"file:///$i", 1L, 2L))
       .map(RecordRow.fromCore)
-    rows.toDS().toDF()
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("time_bucket", "what").parquet(dir)
-    val store = new RecordStore(spark, dir)
-    assert(store.exists)
-    assert(store.records.count() === 4) // readable before any migration
+    val df = rows.toDS().toDF()
+    val more = DatalakeRecord.listFromMetadata(
+      meta(5, workId = Some("wk5")), "file:///5", 1L, 2L)
+    def refused(what: String)(op: => Any): Unit = {
+      val e = intercept[IllegalStateException] { op }
+      assert(e.getMessage.contains("pre-manifest"), s"$what: ${e.getMessage}")
+    }
+    val fs = new Path(tmpDir("premanifest")).getFileSystem(
+      spark.sessionState.newHadoopConf())
+    def nothingWritten(dir: String): Unit = {
+      assert(!fs.exists(new Path(dir, "data")), s"$dir: data/ was written")
+      assert(!fs.exists(new Path(dir, "manifests")),
+        s"$dir: manifests/ was written")
+    }
 
-    // first append migrates (a pure manifest commit referencing the
-    // tree in place) and the union view is complete
-    store.append(DatalakeRecord.listFromMetadata(meta(5), "file:///5", 1L, 2L))
-    assert(store.records.count() === 5)
-    // compaction then supersedes the legacy leaves
-    assert(store.compact(filesPerPartition = 1) === 1)
-    assert(store.records.count() === 5)
-    assert(store.records.inputFiles.length === 1)
+    // the old record layout: a partitioned tree written directly at
+    // the table root, no manifest
+    val recDir = tmpDir("legacy") + "/t"
+    df.write.mode(SaveMode.Overwrite)
+      .partitionBy("time_bucket", "what").parquet(recDir)
+    val store = new RecordStore(spark, recDir)
+    refused("exists")(store.exists)
+    refused("records")(store.records)
+    refused("append")(store.append(more))
+    refused("compact")(store.compact(filesPerPartition = 1))
+    nothingWritten(recDir)
+
+    // the old latest layout: winners written flat at the table root
+    val latDir = tmpDir("legacy-latest") + "/t"
+    df.write.mode(SaveMode.Overwrite).parquet(latDir)
+    val latest = new LatestStore(spark, latDir, nBuckets = 4)
+    refused("latest")(latest.latest)
+    refused("lookup")(latest.lookup("w", "here"))
+    refused("upsert")(latest.upsert(df))
+    nothingWritten(latDir)
+
+    // the old work-id index layout: prefix dirs at the table root
+    val idxDir = tmpDir("legacy-wid") + "/t"
+    df.withColumn("work_id_prefix", substring($"work_id", 0, 2))
+      .write.mode(SaveMode.Overwrite).partitionBy("work_id_prefix")
+      .parquet(idxDir)
+    val index = new WorkIdIndex(spark, idxDir)
+    val source = new RecordStore(spark, tmpDir("legacy-wid-src") + "/t")
+    source.append(more)
+    refused("find")(index.find("wk1", "w"))
+    refused("append")(index.append(df))
+    refused("rebuild")(index.rebuild(source))
+    nothingWritten(idxDir)
+  }
+
+  test("a crashed first writer's data dir and a marker read as empty, " +
+    "not as a pre-manifest table") {
+    val fs = new Path(tmpDir("crashed")).getFileSystem(
+      spark.sessionState.newHadoopConf())
+    def crashedRoot(name: String, cell: String): String = {
+      val dir = tmpDir(name) + "/t"
+      val leaf = new Path(dir, s"data/v0000000001-deadbeef/$cell")
+      fs.mkdirs(leaf)
+      fs.create(new Path(leaf, "part-00000.parquet")).close()
+      val out = fs.create(new Path(dir, "_buckets"))
+      try out.write("4".getBytes("UTF-8")) finally out.close()
+      dir
+    }
+    val store = new RecordStore(spark,
+      crashedRoot("crashed-rec", "time_bucket=500/what=w"))
+    assert(!store.exists)
+    assert(store.records.count() === 0)
+    store.append(DatalakeRecord.listFromMetadata(meta(1), "file:///1", 1L, 2L))
+    assert(store.records.count() === 1)
+
+    val latest = new LatestStore(spark,
+      crashedRoot("crashed-lat", "kp=0"), nBuckets = 4)
+    assert(!latest.exists)
+    assert(latest.latest.count() === 0)
+    assert(latest.lookup("w", "here").count() === 0)
   }
 
   test("vacuumOrphans reclaims crashed-writer dirs, never fresh ones") {

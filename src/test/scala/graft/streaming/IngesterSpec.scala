@@ -200,73 +200,6 @@ class IngesterSpec extends SparkSuite {
     assert(reports.filter(reports("status") === "error").count() === 1)
   }
 
-  test("legacy report migration: flat root files from the pre-batch= " +
-    "code move into batch=legacy on first write, so the mixed tree " +
-    "Spark rejects never exists") {
-    val recordStore = new RecordStore(spark, tmpDir("rec-legacy") + "/t")
-    val reportDir = tmpDir("reports-legacy") + "/r"
-    // the pre-r11 Append layout: part files (+ _SUCCESS) FLAT at the root
-    val legacyReport =
-      """{"start":1,"end":2,"what":"syslog","status":"success"}"""
-    Files.createDirectories(Paths.get(reportDir))
-    Files.write(Paths.get(reportDir, "part-00000-deadbeef.json"),
-      legacyReport.getBytes(StandardCharsets.UTF_8))
-    Files.write(Paths.get(reportDir, "_SUCCESS"), Array.empty[Byte])
-    val ing = new StreamingIngester(spark,
-      new FakeContentStore(Map(url -> metaJson)),
-      recordStore, None, Some(reportDir), () => 123000L)
-    // untagged = the queue-drain path that writes batch=queue-<uuid>
-    ing.processBatch(spark.createDataset(Seq(notification(Seq(s3Event()))))(
-      org.apache.spark.sql.Encoders.STRING))
-    // one uniform partitioned tree: the root carries ONLY batch= dirs...
-    val rootEntries = new java.io.File(reportDir).listFiles().toSeq
-    assert(rootEntries.forall(f =>
-      f.isDirectory && f.getName.startsWith("batch=")),
-      s"mixed layout survived: ${rootEntries.map(_.getName)}")
-    assert(rootEntries.exists(_.getName == "batch=legacy"))
-    // ...and one read sees the legacy row AND the new one
-    val reports = spark.read.json(reportDir)
-    assert(reports.count() === 2)
-    assert(reports.filter(reports("status") === "success").count() === 2)
-  }
-
-  test("legacy report migration retries after a failed attempt — the " +
-    "once-only latch must not latch on failure, or the next write " +
-    "creates the exact mixed layout the migration exists to prevent") {
-    val recordStore = new RecordStore(spark, tmpDir("rec-legacy2") + "/t")
-    val reportDir = tmpDir("reports-legacy2") + "/r"
-    val legacyReport =
-      """{"start":1,"end":2,"what":"syslog","status":"success"}"""
-    Files.createDirectories(Paths.get(reportDir))
-    Files.write(Paths.get(reportDir, "part-00000-cafe.json"),
-      legacyReport.getBytes(StandardCharsets.UTF_8))
-    // obstruction: a regular FILE where the migration needs its
-    // batch=legacy DIRECTORY — mkdirs/rename fail, the batch throws
-    Files.write(Paths.get(reportDir, "batch=legacy"),
-      "in the way".getBytes(StandardCharsets.UTF_8))
-    val ing = new StreamingIngester(spark,
-      new FakeContentStore(Map(url -> metaJson)),
-      recordStore, None, Some(reportDir), () => 123000L)
-    def oneBatch(): Unit =
-      ing.processBatch(spark.createDataset(Seq(notification(Seq(s3Event()))))(
-        org.apache.spark.sql.Encoders.STRING))
-    intercept[Exception] { oneBatch() }
-    // no batch= report dir may exist yet: a write after the failed
-    // migration would have built the unreadable mixed tree
-    assert(!new java.io.File(reportDir).listFiles()
-      .exists(f => f.isDirectory && f.getName.startsWith("batch=")),
-      "a report was written beside unmigrated flat files")
-    // operator clears the obstruction; the SAME instance must retry
-    Files.delete(Paths.get(reportDir, "batch=legacy"))
-    oneBatch()
-    val rootEntries = new java.io.File(reportDir).listFiles().toSeq
-    assert(rootEntries.forall(f =>
-      f.isDirectory && f.getName.startsWith("batch=")),
-      s"mixed layout survived the retry: ${rootEntries.map(_.getName)}")
-    val reports = spark.read.json(reportDir)
-    assert(reports.count() === 2)
-  }
-
   test("streaming end-to-end: files → records + latest + reports, replay-safe") {
     val notifDir = tmpDir("notif")
     val widIndex = new graft.store.WorkIdIndex(spark, tmpDir("wix") + "/i")
