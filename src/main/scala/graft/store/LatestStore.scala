@@ -1,11 +1,14 @@
 package graft.store
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{JoinedRow, Literal, XxHash64}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.unsafe.types.UTF8String
-import scala.jdk.CollectionConverters._
 
 /** Compacted latest table replacing the reference's 1-row-per-
   * `what:where` DynamoDB table (`storage.py:78-137`), stored as a
@@ -14,23 +17,30 @@ import scala.jdk.CollectionConverters._
   * and upserts rewrite only the key buckets a batch touches.
   *
   * A manifest maps each key bucket (`kp = pmod(xxhash64(what, where),
-  * nBuckets)`) to the data version holding its current rows. The commit
+  * nBuckets)`, keyed by the bare number) to the data version holding its
+  * current rows in a `kp=N` leaf. Every read goes through
+  * [[ManifestLog.readEntries]]: one relation over the listed leaves, so a
+  * referenced leaf that has vanished fails the read loudly. The commit
   * CAS goes through the [[ManifestCommitter]] seam — rename-as-commit
   * by default, a [[ConditionalPutCommitter]] (the reference's DynamoDB
   * conditional-put shape) on object stores without fail-if-exists
   * rename.
   *
   * Incremental maintenance: an upsert merges ONLY the buckets present in
-  * the batch — one key touches one bucket, so the rewrite is O(batch
-  * keys / nBuckets of the table), not O(table). Untouched buckets keep
-  * their old manifest entries. Superseded versions beyond `keepVersions`
-  * are vacuumed after commit; `keepVersions >= 2` leaves a window for
-  * in-flight readers on the previous snapshot.
+  * the batch, on the driver — one key touches one bucket, so the rewrite
+  * is O(batch keys / nBuckets of the table), not O(table). Untouched
+  * buckets keep their old manifest entries. Superseded versions beyond
+  * `keepVersions` are vacuumed after commit; `keepVersions >= 2` leaves
+  * a window for in-flight readers on the previous snapshot.
+  *
+  * Driver memory: a merge collects the touched buckets' rows (one per
+  * key, never history) and fails first, loudly, when their leaves list
+  * more than [[LatestStore.MaxMergeBytes]]; the fix is a fresh table
+  * with a larger `nBuckets`.
   */
 final class LatestStore(spark: SparkSession, path: String,
     nBuckets: Int = 16, keepVersions: Int = 3,
     committer: Option[ManifestCommitter] = None) {
-  import spark.implicits._
 
   private val log = new ManifestLog(spark, path, keepVersions, committer)
   private lazy val f = Fs.fs(spark, path)
@@ -38,47 +48,28 @@ final class LatestStore(spark: SparkSession, path: String,
   /** true once any version has been committed. */
   def exists: Boolean = log.hasAny
 
-  /** bucket -> data-version dir name; manifests store one dir per kp. */
-  private def asBuckets(entries: Map[String, Seq[String]]): Map[Int, String] =
-    entries.collect { case (k, dirs) if dirs.nonEmpty => k.toInt -> dirs.head }
-
-  private def bucketLeaf(dataVersion: String, kp: Int): String =
-    new Path(log.dataPath(dataVersion), s"kp=$kp").toString
-
-  /** `strict = false` (current-snapshot reads) tolerates a leaf
-    * vanishing between resolve and scan — the benign race against a
-    * concurrent vacuum, where re-resolving would just pick the newer
-    * manifest anyway. `strict = true` (pinned time-travel reads) does
-    * NOT exist-filter: a pinned snapshot that lost dirs to vacuum must
-    * FAIL, never silently return a partial table. */
-  private def readBuckets(entries: Map[Int, String], buckets: Iterable[Int],
-      strict: Boolean = false): DataFrame = {
-    val all = buckets.toSeq.sorted
-      .flatMap(b => entries.get(b).map(bucketLeaf(_, b)))
-    val leaves = if (strict) all else all.filter(p => f.exists(new Path(p)))
-    if (leaves.isEmpty) log.emptyDf(RecordStore.schema)
-    else spark.read.schema(RecordStore.schema).parquet(leaves: _*)
+  /** The rows of the kp buckets `keep` accepts in `snapshot` (manifest
+    * entries, bare kp -> data dirs; None reads as an empty table), read
+    * through [[ManifestLog.readEntries]] from each bucket's `kp=N` leaf.
+    * A referenced leaf that is missing fails the read. */
+  private def bucketRows(snapshot: Option[Map[String, Seq[String]]],
+      keep: Int => Boolean = _ => true): DataFrame = snapshot match {
+    case None => log.emptyDf(RecordStore.schema)
+    case Some(entries) => log.readEntries(entries.collect {
+        case (kp, dirs) if keep(kp.toInt) => s"kp=$kp" -> dirs
+      }, LatestStore.Stored).drop("kp")
   }
 
   /** Current snapshot: all buckets of the current manifest. */
-  def latest: DataFrame = log.resolve() match {
-    case None => log.emptyDf(RecordStore.schema)
-    case Some((_, raw)) =>
-      val entries = asBuckets(raw)
-      readBuckets(entries, entries.keys)
-  }
+  def latest: DataFrame = bucketRows(log.resolve().map(_._2))
 
   /** The row of (`what`, `where`), if any, read from the one kp bucket
     * [[upsert]] writes that key to. The bucket is computed on the driver
     * from one manifest resolve, so nothing else is listed or scanned. */
   def lookup(what: String, where: String): DataFrame = {
-    val table = log.resolve() match {
-      case None => log.emptyDf(RecordStore.schema)
-      case Some((_, raw)) =>
-        readBuckets(asBuckets(raw),
-          Seq(LatestStore.bucketOf(what, where, modulus)))
-    }
-    table.filter(col("what") === what && col("where") === where)
+    lazy val kp = LatestStore.bucketOf(what, where, modulus)
+    bucketRows(log.resolve().map(_._2), _ == kp)
+      .filter(col("what") === what && col("where") === where)
   }
 
   // the modulus the table's upserts stamped (write-once, so read once);
@@ -89,10 +80,6 @@ final class LatestStore(spark: SparkSession, path: String,
     stamped = m
     m.getOrElse(nBuckets)
   }
-
-  private def withBucket(df: DataFrame): DataFrame =
-    df.withColumn("kp",
-      pmod(xxhash64(col("what"), col("where")), lit(nBuckets)).cast("int"))
 
   /** Persist-or-validate `nBuckets` (the [[FingerprintIndex]] marker
     * discipline): an upsert under a different modulus would read the
@@ -111,27 +98,24 @@ final class LatestStore(spark: SparkSession, path: String,
     * where) wins; replay-safe (applying the same batch twice is a no-op).
     * Only buckets containing batch keys are re-merged and rewritten.
     *
-    * The batch is collected once (a local frame fires no job); its
-    * per-key winners ([[LatestStore.winners]]) and their kp buckets are
-    * computed on the driver. The merge with the touched buckets' existing
-    * rows stays one Spark write: those rows grow with the table and are
-    * never collected, so driver memory is bounded by the batch. */
-  def upsert(batch: DataFrame): Unit = {
+    * The batch is collected once (a local frame fires no job). Each
+    * attempt reads the touched buckets' stored rows in one job, picks
+    * the per-key winners over stored and batch rows on the driver
+    * ([[LatestStore.winners]]) and writes one file per touched kp with
+    * [[DriverWrite]]; a lost commit race deletes that dir and merges
+    * again against the new state. */
+  def upsert(batch: DataFrame): Unit = upsert(batch, LatestStore.MaxMergeBytes)
+
+  /** [[upsert]] refusing a merge whose touched leaves list more than
+    * `maxMergeBytes`. */
+  private[store] def upsert(batch: DataFrame, maxMergeBytes: Long): Unit = {
     ensureBuckets()
     val cols = RecordStore.schema.fieldNames.map(col).toSeq
-    val selected = batch.select(cols: _*)
-    val winners = LatestStore.winners(selected.collect().toSeq)
-    val touched = winners.map(r =>
-      LatestStore.bucketOf(r.getString(LatestStore.WhatAt),
-        r.getString(LatestStore.WhereAt), modulus)).distinct.sorted
+    val batchWinners = LatestStore.winners(batch.select(cols: _*).collect().toSeq)
+    val touched = batchWinners.map(LatestStore.bucketOf(_, modulus)).distinct.sorted
     if (touched.isEmpty) return
-    val batchWinners =
-      withBucket(spark.createDataFrame(winners.asJava, selected.schema))
-    // kp is a function of (what, where), so a window partitioned by it
-    // too runs on the merge's kp repartition without a shuffle of its own
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"kp", $"what", $"where")
-      .orderBy($"metadata.start".desc, $"create_time".desc, $"metadata.id".desc)
+    val toCatalyst =
+      CatalystTypeConverters.createToCatalystConverter(RecordStore.schema)
 
     var attempts = 0
     var committed = false
@@ -139,33 +123,26 @@ final class LatestStore(spark: SparkSession, path: String,
       attempts += 1
       if (attempts > 10)
         throw new java.io.IOException(s"upsert lost $attempts commit races under $path")
-      val (baseV, entries) = log.resolve()
-        .map { case (v, raw) => (v, asBuckets(raw)) }
-        .getOrElse((0L, Map.empty[Int, String]))
-      // STRICT read for a merge: this path READS existing rows to
-      // REWRITE them, so a missing referenced leaf must fail the
-      // attempt — the non-strict exist-filter (benign for reads,
-      // where re-resolving picks the newer manifest) would here
-      // commit a table missing every key of the vanished bucket.
-      // A leaf of the CURRENT manifest cannot be vacuumed, so this
-      // only fires on external deletion or a flaky filesystem —
-      // exactly when losing loudly beats losing silently.
-      val existing = withBucket(readBuckets(entries, touched, strict = true))
+      val (baseV, entries) =
+        log.resolve().getOrElse((0L, Map.empty[String, Seq[String]]))
+      val stored = bucketRows(Some(entries), touched.contains)
+      val bytes = LatestStore.listedBytes(stored)
+      if (bytes > maxMergeBytes) throw new IllegalStateException(
+        s"latest table at $path: merging ${touched.size} of its $nBuckets " +
+          s"buckets would collect $bytes stored bytes on the driver, over the " +
+          s"bound of $maxMergeBytes bytes; write the keys into a fresh table " +
+          s"with a larger nBuckets than $nBuckets")
+      val merged = LatestStore.winners(stored.collect().toSeq ++ batchWinners)
       val newV = baseV + 1
-      // the data dir carries a writer nonce (see ManifestLog.newDataDirName):
-      // two racing writers may both target manifest version N, and their
-      // Spark write jobs must not collide on one directory
+      // the data dir carries a writer nonce (see ManifestLog.newDataDirName),
+      // so two writers racing for version N write disjoint dirs
       val newDataVersion = log.newDataDirName(newV)
-      // one shuffle partition per touched bucket -> one file per kp dir
-      existing.unionByName(batchWinners)
-        .repartition(touched.size, col("kp"))
-        .withColumn("__rn", row_number().over(w))
-        .filter($"__rn" === 1).drop("__rn")
-        .write.mode(SaveMode.Overwrite).partitionBy("kp")
-        .parquet(log.dataPath(newDataVersion).toString)
-      val newEntries = entries ++ touched.map(_ -> newDataVersion)
+      DriverWrite(spark, new ParquetFileFormat, log.dataPath(newDataVersion),
+        LatestStore.Stored, Seq("kp"), merged.iterator.map(r => new JoinedRow(
+          toCatalyst(r).asInstanceOf[InternalRow],
+          InternalRow(LatestStore.bucketOf(r, nBuckets)))))
       committed = log.tryCommit(newV,
-        newEntries.map { case (k, d) => k.toString -> Seq(d) })
+        entries ++ touched.map(_.toString -> Seq(newDataVersion)))
       if (!committed)
         // lost the race: another writer committed baseV+1 first; drop our
         // orphaned data version and re-merge against the new state
@@ -188,15 +165,30 @@ final class LatestStore(spark: SparkSession, path: String,
     * (complete immutable snapshot; vacuumed versions throw — reading
     * the manifest or any reclaimed leaf fails loudly rather than
     * returning a silently partial snapshot). */
-  def latestAt(version: Long): DataFrame = {
-    val entries = asBuckets(log.readManifest(version))
-    readBuckets(entries, entries.keys, strict = true)
-  }
+  def latestAt(version: Long): DataFrame =
+    bucketRows(Some(log.readManifest(version)))
 }
 
 object LatestStore {
-  private[store] val WhatAt = RecordStore.schema.fieldIndex("what")
-  private[store] val WhereAt = RecordStore.schema.fieldIndex("where")
+  /** Stored rows: [[RecordStore.schema]] plus the `kp` partition column. */
+  private val Stored = RecordStore.schema.add("kp", IntegerType)
+
+  /** Bound on the stored parquet bytes one merge collects to the driver.
+    * Measured (4 cores, JDK 17) on archive-shaped record rows (32-hex ids
+    * and hashes, `s3://` urls): 100,000 keys stored 6.5 MB, about 16,000
+    * rows per MB, and collected into about 0.9 KB of heap per row, so
+    * 8 MB admits about 130,000 rows, about 120 MB once collected. */
+  val MaxMergeBytes: Long = 8L << 20
+
+  /** The bytes listed for the relation `df` reads: the sum of its files'
+    * lengths, known from the listing, so no job runs. */
+  private def listedBytes(df: DataFrame): Long =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation.sizeInBytes
+    }.getOrElse(0L)
+
+  private val WhatAt = RecordStore.schema.fieldIndex("what")
+  private val WhereAt = RecordStore.schema.fieldIndex("where")
   private val CreateAt = RecordStore.schema.fieldIndex("create_time")
   private val MetaAt = RecordStore.schema.fieldIndex("metadata")
   private val StartAt = RecordStore.metadataSchema.fieldIndex("start")
@@ -227,4 +219,8 @@ object LatestStore {
     val h = new XxHash64(Seq(Literal(what), Literal(where))).eval()
     java.lang.Math.floorMod(h.asInstanceOf[Long], nBuckets.toLong).toInt
   }
+
+  /** [[bucketOf]] of a row in [[RecordStore.schema]] column order. */
+  private def bucketOf(r: Row, nBuckets: Int): Int =
+    bucketOf(r.getString(WhatAt), r.getString(WhereAt), nBuckets)
 }

@@ -242,21 +242,22 @@ object SketchStore {
   private[store] val Buckets = 16
 
   /** Filesystem-safe replay-guard tag for a raw batch id: sanitized
-    * prefix + an md5-derived suffix, so DISTINCT raw ids that differ
-    * only in punctuation ("load-1" vs "load.1" vs "load_1") can never
-    * collide to one tag — a collision would silently refuse the second
-    * load's ingest as a replay. Deterministic, so a true replay of the
-    * SAME raw id still maps to the same tag. */
+    * prefix (ASCII letters and digits; anything else, which a JVM whose
+    * file names encode as ASCII cannot write, becomes `_`) + an md5
+    * suffix, so DISTINCT raw ids that differ only in punctuation or
+    * script ("load-1" vs "load.1" vs "load_1") never collide to one tag
+    * — a collision would silently refuse the second load as a replay.
+    * Deterministic: a true replay of the SAME raw id maps to its tag. */
   def tag(batchId: String): String = {
     require(batchId.nonEmpty, "batchId must be non-empty")
-    val s = batchId.map(c => if (c.isLetterOrDigit) c else '_')
+    val s = batchId.map(c => if (c < 128 && c.isLetterOrDigit) c else '_')
     val md = java.security.MessageDigest.getInstance("MD5")
       .digest(batchId.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     s.take(48) + "_" + md.take(4).map("%02x".format(_)).mkString
   }
 
   /** The shape every [[tag]] has. */
-  private[store] val TagShape = """[\p{L}\p{Nd}_]{1,48}_[0-9a-f]{8}""".r
+  private[store] val TagShape = """[A-Za-z0-9_]{1,48}_[0-9a-f]{8}""".r
 
   val LevelPrefixes: Seq[String] = Seq("bucket=")
   val schema: StructType = StructType(Seq(

@@ -155,10 +155,11 @@ final class StreamingIngester(
     * `batch.map(handle)` runs once, as one Spark job, and its results
     * come back to the driver; the records append, the latest upsert, the
     * report write and the fatal check all read that array, so nothing is
-    * pinned or recomputed. The record, work-id and report files are
-    * written on the driver ([[graft.store.DriverWrite]]), so a batch's
-    * jobs are the handle job, the records dedup probe and the latest
-    * merge. The batch is bounded (`maxBatch` messages on the queue path,
+    * pinned or recomputed. The record, work-id, report and latest files
+    * are written on the driver ([[graft.store.DriverWrite]]), so a
+    * batch fires three jobs: the handle job, the records dedup probe and
+    * the latest merge's read of its touched buckets. The batch is
+    * bounded (`maxBatch` messages on the queue path,
     * [[StreamingIngester.MaxFilesPerTrigger]] files on the streaming
     * path), and so is what is collected.
     *

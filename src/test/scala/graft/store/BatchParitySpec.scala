@@ -50,6 +50,46 @@ class BatchParitySpec extends SparkSuite {
       .forall(_.endsWith(supplementary)))
   }
 
+  test("a second upsert merges with the stored rows as the row_number " +
+    "window over both batches does: wins, losses and ties on start, " +
+    "create_time and the id in UTF-8 order") {
+    val t = 1430092800000L
+    val (sup, rep) = (supplementary, replacement)
+    // (key, stored rows, second-batch rows) as (start, create_time, id)
+    val cases = Seq(
+      ("newer-start", Seq((t, 5L, "a")), Seq((t + 1, 1L, "a"))),
+      ("older-start", Seq((t, 5L, "a")), Seq((t - 1, 9L, "z"))),
+      ("newer-create", Seq((t, 5L, "a")), Seq((t, 6L, "a"))),
+      ("older-create", Seq((t, 5L, "z")), Seq((t, 4L, "zz"))),
+      // ids that order one way in UTF-8 and the other in UTF-16
+      ("batch-id-wins", Seq((t, 5L, s"id-$rep")), Seq((t, 5L, s"id-$sup"))),
+      ("stored-id-wins", Seq((t, 5L, s"id-$sup")), Seq((t, 5L, s"id-$rep"))),
+      ("several-each", Seq((t, 5L, "b"), (t + 2, 1L, s"id-$rep")),
+        Seq((t + 2, 1L, s"id-$sup"), (t + 1, 9L, "c"))),
+      ("stored-only", Seq((t, 5L, "a")), Nil),
+      ("batch-only", Nil, Seq((t, 5L, "a"))))
+    def frame(rows: Seq[(String, (Long, Long, String))]) =
+      rows.map { case (k, (start, created, id)) =>
+        row("syslog", k, start, created, s"$k-$id")
+      }.toDS().toDF()
+    val first = frame(cases.flatMap(c => c._2.map(c._1 -> _)))
+    val second = frame(cases.flatMap(c => c._3.map(c._1 -> _)))
+    val store = new LatestStore(spark, tmpDir("lat-merge") + "/t", nBuckets = 4)
+    store.upsert(first)
+    store.upsert(second)
+    val w = Window.partitionBy($"what", $"where")
+      .orderBy($"metadata.start".desc, $"create_time".desc, $"metadata.id".desc)
+    val want = first.unionByName(second).withColumn("__rn", row_number().over(w))
+      .filter($"__rn" === 1).drop("__rn")
+    assert(rows(store.latest) === rows(want))
+    val ids = store.latest.select($"where", $"metadata.id").as[(String, String)]
+      .collect().toMap
+    assert(ids.size === cases.size)
+    Seq("batch-id-wins", "stored-id-wins", "several-each").foreach { k =>
+      assert(ids(k).endsWith(sup), k)
+    }
+  }
+
   test("duplicate (time_bucket, id) rows within one appendDf collapse " +
     "to one row") {
     val batch = for {

@@ -251,6 +251,43 @@ class LatestStoreSpec extends SparkSuite {
     intercept[Exception] { store.upsert(batch(keys, 200L * day, 2L)) }
   }
 
+  test("a current-snapshot read whose referenced leaf is missing FAILS " +
+    "instead of returning a table without that bucket's keys") {
+    val dir = tmpDir("lat-vanished") + "/t"
+    val store = new LatestStore(spark, dir, nBuckets = 4)
+    store.upsert(batch((1 to 16).map(i => (s"what$i", s"where$i")),
+      100L * day, 1L))
+    assert(store.latest.count() === 16L)
+    val leaf = new java.io.File(dir, "data").listFiles().head.listFiles()
+      .filter(_.getName.startsWith("kp=")).head
+    leaf.listFiles().foreach(_.delete())
+    assert(leaf.delete())
+    intercept[java.io.FileNotFoundException](store.latest.collect())
+  }
+
+  test("a merge over the driver bound is refused with its size, the " +
+    "bound and the fix, and commits nothing") {
+    val dir = tmpDir("lat-bound") + "/t"
+    val store = new LatestStore(spark, dir, nBuckets = 2)
+    val keys = (1 to 16).map(i => (s"what$i", s"where$i"))
+    store.upsert(batch(keys, 100L * day, 1L))
+    val versions = store.versions
+    val dirs = new java.io.File(dir, "data").list().toSet
+    val before = store.latest.collect().map(_.toString).toSet
+    val e = intercept[IllegalStateException] {
+      store.upsert(batch(keys.take(1), 200L * day, 2L), maxMergeBytes = 100L)
+    }
+    assert(e.getMessage.matches(
+      ".*collect \\d+ stored bytes.*bound of 100 bytes.*larger nBuckets.*"),
+      e.getMessage)
+    assert(store.versions === versions)
+    assert(new java.io.File(dir, "data").list().toSet === dirs)
+    assert(store.latest.collect().map(_.toString).toSet === before)
+    // within the bound the same merge lands
+    store.upsert(batch(keys.take(1), 200L * day, 2L))
+    assert(store.versions.last === versions.last + 1)
+  }
+
   test("bucketOf on the driver names the kp upsert wrote; the one-bucket " +
     "lookup returns the full table's row, and nothing for an absent key") {
     val dir = tmpDir("lat-kp") + "/t"

@@ -27,9 +27,9 @@ object CountingFileSystem {
   }
 }
 
-/** Directory listings one record append costs on a manifested store
-  * with a work-id index: each one is a filesystem round trip on the
-  * commit path (an object-store LIST). */
+/** Directory listings one record append or latest upsert costs on a
+  * manifested store: each one is a filesystem round trip on the commit
+  * path (an object-store LIST). */
 class ListingCountSpec extends SparkSuite {
   import spark.implicits._
 
@@ -56,5 +56,30 @@ class ListingCountSpec extends SparkSuite {
     // the commit's resolve and its vacuum
     assert(counts.getOrElse(s"$dir/records/manifests", 0) === 5, counts)
     assert(counts.getOrElse(s"$dir/wid/manifests", 0) === 3, counts)
+  }
+
+  test("a latest upsert touching one bucket lists the manifests dir, a " +
+    "pinned number of times, and that bucket's one leaf") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFileSystem].getName)
+    val dir = tmpDir("countfs-lat")
+    val day = DatalakeRecord.TimeBucketSizeMs
+    val store = new LatestStore(spark, s"countfs://$dir/latest", nBuckets = 16)
+    def batch(keys: Seq[Int], start: Long) = keys.flatMap { n =>
+      DatalakeRecord.listFromMetadata(Metadata(0, start, None, s"h$n",
+        "syslog", None, "/var/f.log", f"$n%032x", "h"), s"file:///c/$n", 7L, 9L)
+    }.map(RecordRow.fromCore).toDF()
+    val keys = 0 until 64
+    assert(keys.map(n => LatestStore.bucketOf("syslog", s"h$n", 16)).toSet ===
+      (0 until 16).toSet)
+    store.upsert(batch(keys, 17000L * day))
+    val kp = LatestStore.bucketOf("syslog", "h5", 16)
+    val dataDir = new java.io.File(s"$dir/latest/data").list().head
+    val counts = CountingFileSystem.listings(
+      store.upsert(batch(Seq(5), 17001L * day)))
+    assert(store.latest.count() === 64)
+    // the resolve before the merge and the vacuum after the commit
+    assert(counts === Map(s"$dir/latest/manifests" -> 2,
+      s"$dir/latest/data/$dataDir/kp=$kp" -> 1), counts)
   }
 }

@@ -205,10 +205,29 @@ class SketchStoreSpec extends SparkSuite {
     // every tag the store writes has the accepted shape, whatever the
     // raw id holds: letters and digits of any script, punctuation
     assert(SketchStore.TagShape.matches(SketchStore.tag("b\u00fccket \u0663-x")))
+    // a tag that keeps a non-ASCII letter is not of that shape
+    assert(!SketchStore.TagShape.matches("b\u00fccket_0123abcd"))
     val fresh = new SketchStore(spark, tmp(), SketchStore.CmsKind)
     val odd = "s3://bucket/load 3-e.1"
     assert(fresh.ingest(regs(batch1), odd))
     assert(fresh.committedBatches === Set(SketchStore.tag(odd)))
     assert(!fresh.ingest(regs(batch1), odd), "replay re-ingested")
+  }
+
+  test("a batch id with non-ASCII letters and digits ingests under an " +
+    "ASCII tag, reads back as committed and replays as a no-op") {
+    val st = new SketchStore(spark, tmp(), SketchStore.CmsKind)
+    def regs(rows: Seq[(String, String)]) =
+      Cms.registers(words(rows), Seq("g"), "v").withColumnRenamed("g", "group")
+    val id = "s3://b\u00fccket/l\u00f6ad \u0663-\u00e9.1"
+    val tag = SketchStore.tag(id)
+    assert(tag.forall(_ < 128), tag)
+    assert(tag.startsWith("s3___b_cket_l_ad_____1_"), tag)
+    assert(st.ingest(regs(batch1), id))
+    assert(st.committedBatches === Set(tag))
+    assert(!st.ingest(regs(batch1), id), "replay re-ingested")
+    // ids differing only in their non-ASCII characters keep distinct tags
+    assert(st.ingest(regs(batch2), "s3://b\u00e4cket/l\u00f6ad \u0663-\u00e9.1"))
+    assert(st.committedBatches.size === 2)
   }
 }

@@ -272,9 +272,9 @@ class IngesterSpec extends SparkSuite {
   def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
-  test("one batch of 20 notifications fires at most 4 jobs, none of them " +
-    "a record, work-id or report write, holds no persisted block after it " +
-    "returns, and replays as a no-op") {
+  test("one batch of 20 notifications fires at most 3 jobs, none of them " +
+    "a record, work-id, report or latest write, holds no persisted block " +
+    "after it returns, and replays as a no-op") {
     val all = files(0, 40)
     val widIndex = new WorkIdIndex(spark, tmpDir("wix-batch") + "/i")
     val recordStore = new RecordStore(spark, tmpDir("rec-batch") + "/t",
@@ -292,10 +292,11 @@ class IngesterSpec extends SparkSuite {
     val collector = Obs.collector(spark)
     Obs.release(spark)
     val s = collector.measure(ds(batch))(ing.processBatch(_))
-    // handle, the dedup probe, the latest merge's shuffle and write
-    assert(s.jobs.size <= 4, s.jobs.map(_.op))
-    // the record, work-id and report files are written on the driver
-    val writes = "(parquet|json|save|insertInto) at (RecordStore|Ingester)\\.scala:\\d+"
+    // handle, the dedup probe and the latest merge's read
+    assert(s.jobs.size <= 3, s.jobs.map(_.op))
+    // the record, work-id, report and latest files are written on the driver
+    val writes =
+      "(parquet|json|save|insertInto) at (RecordStore|Ingester|LatestStore)\\.scala:\\d+"
     assert(!s.jobs.exists(_.op.matches(writes)), s.jobs.map(_.op))
     assert(s.residualBlocks === 0, "a batch must not leave blocks pinned")
 
