@@ -24,8 +24,9 @@ trait ManifestCommitter {
   def putIfAbsent(target: Path, bytes: Array[Byte]): Boolean
 }
 
-/** Default committer: write to a writer-unique dot-temp, then
-  * rename-as-commit under fail-if-destination-exists semantics.
+/** Default committer: write to a writer-unique dot-temp, then, under a
+  * JVM-wide per-table lock, publish it with
+  * `!exists(target) && rename(tmp, target)`.
   *
   * Two hazards this closes (one found by review, one by the racing-
   * writers spec):
@@ -33,18 +34,22 @@ trait ManifestCommitter {
   *     racing writers overwrite each other's staged content, so the
   *     winner could publish the LOSER's entries;
   *   - `FileSystem.rename` on the local filesystem is POSIX rename(2),
-  *     which silently REPLACES an existing destination — no CAS. The
-  *     commit therefore goes through `FileContext.rename(…,
-  *     Rename.NONE)`, whose contract is fail-if-exists on every
-  *     implementation (HDFS enforces it natively, atomically). For
-  *     filesystems with no FileContext binding (e.g. s3a), it falls
-  *     back to exists-then-rename — NOT cross-process safe; such
+  *     which silently REPLACES an existing destination. The lock makes
+  *     the exists check and the rename one step for every writer in
+  *     this JVM, which is what local tests and single-driver
+  *     deployments race through.
+  *
+  * What the publish guarantees across processes depends on the
+  * filesystem:
+  *   - HDFS: `rename` refuses an existing destination file atomically,
+  *     so the publish is a true CAS;
+  *   - `file:`: check-then-act, so two driver JVMs can both win. No
+  *     local API does better: Hadoop's fail-if-exists rename
+  *     (`Rename.NONE`) on `file:` is the same status probes followed by
+  *     rename(2), and starts `readlink` processes besides;
+  *   - object stores (s3a): check-then-act over a copy. Such
   *     deployments should wire a [[ConditionalPutCommitter]] instead,
   *     which is exactly why this seam exists.
-  *
-  * In-process racers (multiple writers in one driver JVM — what local
-  * tests and single-driver deployments actually race through) are
-  * additionally serialized by a JVM-wide per-table lock.
   */
 final class RenameCommitter(spark: SparkSession, tablePath: String)
     extends ManifestCommitter {
@@ -58,27 +63,13 @@ final class RenameCommitter(spark: SparkSession, tablePath: String)
     val out = f.create(tmp, true)
     try out.write(bytes) finally out.close()
     // delete the staged temp on EVERY non-success path, including a
-    // rename that throws something other than the two handled cases (a
-    // transient IOException used to propagate past the cleanup, leaving
-    // one orphaned .tmp per retried attempt that nothing ever sweeps —
-    // the trait contract says no temp file may be left behind)
+    // rename that throws (a transient IOException used to propagate
+    // past the cleanup, leaving one orphaned .tmp per retried attempt
+    // that nothing ever sweeps — the trait contract says no temp file
+    // may be left behind)
     val ok =
       try RenameCommitter.tableLock(tablePath).synchronized {
-        if (f.exists(target)) false
-        else {
-          try {
-            val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-              target.toUri, spark.sessionState.newHadoopConf())
-            fc.rename(tmp, target, org.apache.hadoop.fs.Options.Rename.NONE)
-            true
-          } catch {
-            case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-            case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-              // no FileContext binding: best-effort exists+rename (still
-              // inside the JVM lock, which covers in-process racers)
-              !f.exists(target) && f.rename(tmp, target)
-          }
-        }
+        !f.exists(target) && f.rename(tmp, target)
       } catch {
         case e: Throwable =>
           try f.delete(tmp, false)
@@ -93,7 +84,7 @@ final class RenameCommitter(spark: SparkSession, tablePath: String)
 object RenameCommitter {
   /** JVM-wide per-table commit locks: serialize in-process writers so
     * the commit CAS holds even on filesystems whose rename silently
-    * overwrites (local) or that lack a FileContext binding. */
+    * overwrites (local, object stores). */
   private val tableLocks =
     scala.collection.concurrent.TrieMap.empty[String, Object]
 

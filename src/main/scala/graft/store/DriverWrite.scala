@@ -64,7 +64,7 @@ private[graft] object DriverWrite {
     }
     if (byLeaf.isEmpty) return Nil
 
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val job = Job.getInstance(Fs.hadoopConf(spark))
     val factory = format.prepareWrite(spark, job, Map.empty, dataSchema)
     val context = new TaskAttemptContextImpl(job.getConfiguration,
       new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))

@@ -1,7 +1,10 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
+import java.nio.file.attribute.PosixFilePermission
 
 /** Hadoop-FileSystem helpers for the store layer: every table mutation
   * goes through the FS API so the same code runs on `file://`, HDFS,
@@ -15,11 +18,31 @@ import org.apache.spark.sql.SparkSession
   * writer's own uncommitted dir ([[DriverWrite]]), and the manifest's
   * own rename-as-commit — the layout that stays correct even on object
   * stores without atomic directory operations.
+  *
+  * `file:` is bound to [[NioLocalFileSystem]] in every conf this object
+  * hands out ([[hadoopConf]]). Without the native libhadoop, Hadoop's
+  * own local filesystem sets the mode of every file, `.crc` sidecar and
+  * dir it creates by starting a `chmod` process (about 7.5 ms each on a
+  * 4-core Linux VM, some 45 per ingest batch); the binding sets the same
+  * bits in-process and changes nothing else. Spark's own writes resolve
+  * `file:` through its cached instance and are not covered.
   */
 private[graft] object Fs {
 
+  /** The session's Hadoop conf with `file:` bound to
+    * [[NioLocalFileSystem]]. The FileSystem cache is keyed by scheme,
+    * authority and user, not by implementation, so the binding's cache
+    * is switched off: a cached lookup would return whichever `file:`
+    * instance Spark created first. */
+  def hadoopConf(spark: SparkSession): Configuration = {
+    val conf = spark.sessionState.newHadoopConf()
+    conf.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    conf
+  }
+
   def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    new Path(path).getFileSystem(hadoopConf(spark))
 
   def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path))
@@ -103,5 +126,32 @@ private[graft] object Fs {
       bytes.addAndGet(st.getLen)
     }
     (rows.get(), bytes.get())
+  }
+}
+
+/** Hadoop's checksummed local filesystem (the `file:` default, `.crc`
+  * sidecars and all) over [[NioRawLocalFileSystem]]. */
+private[graft] final class NioLocalFileSystem
+    extends LocalFileSystem(new NioRawLocalFileSystem)
+
+/** Hadoop's raw local filesystem with one change: `setPermission` sets
+  * the mode through `java.nio` instead of a `chmod` process (Hadoop's
+  * path whenever the native libhadoop is not loaded). The bits are the
+  * ones Hadoop would pass to `chmod`. Anything beyond the nine rwx bits
+  * (the sticky bit) has no `java.nio` form and no store path asks for
+  * it, so it is refused rather than dropped. */
+private[graft] final class NioRawLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    val mode = permission.toShort
+    if ((mode & ~0x1ff) != 0)
+      throw new UnsupportedOperationException(
+        f"cannot set mode $mode%04o on $p: only the rwx bits are supported")
+    // PosixFilePermission's order, OWNER_READ to OTHERS_EXECUTE, is the
+    // mode's bit order from 0400 down to 0001
+    val bits = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
+    PosixFilePermission.values.foreach { b =>
+      if ((mode & (0x100 >> b.ordinal)) != 0) bits.add(b)
+    }
+    java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath, bits)
   }
 }

@@ -28,8 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Incremental maintenance: an upsert merges ONLY the buckets present in
   * the batch, on the driver — one key touches one bucket, so the rewrite
-  * is O(batch keys / nBuckets of the table), not O(table). Untouched
-  * buckets keep their old manifest entries. Superseded versions beyond
+  * is O(batch keys / nBuckets of the table), not O(table). Buckets no
+  * batch row changes keep their old manifest entries, and an upsert
+  * that changes no row commits nothing. Superseded versions beyond
   * `keepVersions` are vacuumed after commit; `keepVersions >= 2` leaves
   * a window for in-flight readers on the previous snapshot.
   *
@@ -96,14 +97,15 @@ final class LatestStore(spark: SparkSession, path: String,
 
   /** Monotone upsert: newest (metadata.start, create_time) per (what,
     * where) wins; replay-safe (applying the same batch twice is a no-op).
-    * Only buckets containing batch keys are re-merged and rewritten.
+    * Only buckets where a batch row beats the stored row of its key are
+    * re-merged and rewritten; when no batch row does (a replay), nothing
+    * is written or committed, so a replay spends no retention slot.
     *
     * The batch is collected once (a local frame fires no job). Each
     * attempt reads the touched buckets' stored rows in one job, picks
-    * the per-key winners over stored and batch rows on the driver
-    * ([[LatestStore.winners]]) and writes one file per touched kp with
-    * [[DriverWrite]]; a lost commit race deletes that dir and merges
-    * again against the new state. */
+    * the batch rows that win on the driver ([[LatestStore.beating]]) and
+    * writes one file per changed kp with [[DriverWrite]]; a lost commit
+    * race deletes that dir and merges again against the new state. */
   def upsert(batch: DataFrame): Unit = upsert(batch, LatestStore.MaxMergeBytes)
 
   /** [[upsert]] refusing a merge whose touched leaves list more than
@@ -132,7 +134,12 @@ final class LatestStore(spark: SparkSession, path: String,
           s"buckets would collect $bytes stored bytes on the driver, over the " +
           s"bound of $maxMergeBytes bytes; write the keys into a fresh table " +
           s"with a larger nBuckets than $nBuckets")
-      val merged = LatestStore.winners(stored.collect().toSeq ++ batchWinners)
+      val storedRows = stored.collect().toSeq
+      val won = LatestStore.beating(storedRows, batchWinners)
+      if (won.isEmpty) return
+      val changed = won.map(LatestStore.bucketOf(_, modulus)).toSet
+      val merged = LatestStore.winners(
+        storedRows.filter(r => changed(LatestStore.bucketOf(r, modulus))) ++ won)
       val newV = baseV + 1
       // the data dir carries a writer nonce (see ManifestLog.newDataDirName),
       // so two writers racing for version N write disjoint dirs
@@ -142,7 +149,7 @@ final class LatestStore(spark: SparkSession, path: String,
           toCatalyst(r).asInstanceOf[InternalRow],
           InternalRow(LatestStore.bucketOf(r, nBuckets)))))
       committed = log.tryCommit(newV,
-        entries ++ touched.map(_.toString -> Seq(newDataVersion)))
+        entries ++ changed.map(_.toString -> Seq(newDataVersion)))
       if (!committed)
         // lost the race: another writer committed baseV+1 first; drop our
         // orphaned data version and re-merge against the new state
@@ -205,12 +212,22 @@ object LatestStore {
       UTF8String.fromString(m.getString(IdAt)))
   }
 
+  private def key(r: Row): (String, String) =
+    (r.getString(WhatAt), r.getString(WhereAt))
+
   /** The row per (what, where) that `upsert`'s merge window ranks first
     * — newest metadata.start, then create_time, then metadata.id — over
     * rows in [[RecordStore.schema]] column order. */
   private[store] def winners(rows: Seq[Row]): Seq[Row] =
-    rows.groupBy(r => (r.getString(WhatAt), r.getString(WhereAt)))
-      .values.map(_.max(rank)).toSeq
+    rows.groupBy(key).values.map(_.max(rank)).toSeq
+
+  /** The rows of `batch` (one per key) that rank strictly above the
+    * `stored` row of their key, or whose key has none: the rows an
+    * upsert must write. A tie keeps the stored row. */
+  private[store] def beating(stored: Seq[Row], batch: Seq[Row]): Seq[Row] = {
+    val have = stored.map(r => key(r) -> r).toMap
+    batch.filter(b => have.get(key(b)).forall(rank.gt(b, _)))
+  }
 
   /** The kp bucket [[LatestStore.upsert]] writes (`what`, `where`) to:
     * the same `pmod(xxhash64(what, where), nBuckets)`, evaluated on the

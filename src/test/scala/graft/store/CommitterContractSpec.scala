@@ -1,6 +1,6 @@
 package graft.store
 
-import graft.SparkSuite
+import graft.{ProcessStarts, SparkSuite}
 import graft.core.{DatalakeRecord, Metadata}
 import org.apache.hadoop.fs.Path
 
@@ -48,6 +48,26 @@ class CommitterContractSpec extends SparkSuite {
     assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
     pool.shutdown()
     winners.toArray(Array.empty[Integer]).toSeq.map(_.intValue())
+  }
+
+  test("a RenameCommitter commit, won or lost, starts no OS process") {
+    // the recording sees a process this thread starts
+    val (_, control) = ProcessStarts.on(
+      new ProcessBuilder("true").start().waitFor())
+    assert(control.size === 1, control)
+    val dir = tmpDir("cas-nofork")
+    val committer = new RenameCommitter(spark, dir)
+    // the manifests dir does not exist yet: the commit creates it
+    val target = new Path(dir, "manifests/v0000000001.txt")
+    val (won, winStarts) = ProcessStarts.on(
+      committer.putIfAbsent(target, "first\n".getBytes("UTF-8")))
+    assert(won)
+    assert(winStarts === Nil)
+    val (lost, loseStarts) = ProcessStarts.on(
+      committer.putIfAbsent(target, "second\n".getBytes("UTF-8")))
+    assert(!lost)
+    assert(loseStarts === Nil)
+    assert(readAll(target) === "first\n")
   }
 
   test("RenameCommitter: one winner among racing in-process writers") {

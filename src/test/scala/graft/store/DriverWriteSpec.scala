@@ -9,6 +9,9 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
+import scala.jdk.CollectionConverters._
 
 /** [[DriverWrite]] against Spark's own partitioned write of the same
   * rows: the same leaves (escaped values included), the same rows, the
@@ -44,6 +47,20 @@ class DriverWriteSpec extends SparkSuite {
     Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath).toSeq
   }
 
+  /** Every dir and file under `base` (`base` itself as ""), part-file
+    * uuids and the separator after them masked, with its POSIX mode; Spark's `_SUCCESS` marker and
+    * its sidecar left out. */
+  def modes(base: Path): Map[String, String] = {
+    val root = Paths.get(base.toUri.getPath)
+    val walk = Files.walk(root)
+    try walk.iterator.asScala.map { p =>
+      root.relativize(p).toString.replaceAll(
+        "[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}[-.]", "<uuid>") ->
+        PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    }.filterNot(_._1.contains("_SUCCESS")).toMap
+    finally walk.close()
+  }
+
   def footer(p: Path): (String, String) = {
     val r = ParquetFileReader.open(HadoopInputFile.fromPath(p,
       spark.sparkContext.hadoopConfiguration))
@@ -69,6 +86,10 @@ class DriverWriteSpec extends SparkSuite {
     assert(log.listCells("d", levels).sorted === leaves.sorted)
     assert(leaves.exists(_.endsWith("what=a%2Fb c%3Dd%25")), leaves)
     assert(leaves.size === 6)
+    // the same dirs, data files and .crc sidecars, with the same modes
+    val written = modes(log.dataPath("d"))
+    assert(written.keys.count(_.endsWith(".crc")) === 6, written)
+    assert(written === modes(log.dataPath("s")))
 
     def read(dir: String) = log.readEntries(
       leaves.map(_ -> Seq(dir)).toMap, RecordStore.schema)

@@ -1,7 +1,10 @@
 package graft.store
 
-import graft.SparkSuite
+import graft.{ProcessStarts, SparkSuite}
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.permission.{FsAction, FsPermission}
 
 /** [[Fs.ensureMarker]] race behavior (ADVICE r10): a concurrent opener can
   * observe a marker created-but-not-yet-written; reading "" must be
@@ -45,5 +48,39 @@ class FsSpec extends SparkSuite {
     f.create(m, false).close() // never written: corrupt, not racing
     val e = intercept[java.io.IOException] { Fs.ensureMarker(f, m, "1") }
     assert(e.getMessage.contains("marker"))
+  }
+
+  test("the file: binding sets Hadoop's mode bits without starting a " +
+    "process, refuses the sticky bit, and leaves Spark's instance alone") {
+    val dir = tmpDir("fs-mode")
+    // Spark's own lookup, cached first, is Hadoop's stock class
+    val sparkFs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    val f = Fs.fs(spark, dir)
+    assert(f.isInstanceOf[NioLocalFileSystem], f.getClass)
+    assert(!sparkFs.isInstanceOf[NioLocalFileSystem], sparkFs.getClass)
+    assert(!new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+      .isInstanceOf[NioLocalFileSystem])
+
+    val p = new Path(dir, "sub/x")
+    def mode(rel: String): String = PosixFilePermissions.toString(
+      Files.getPosixFilePermissions(Paths.get(dir, rel)))
+    val (_, starts) = ProcessStarts.on {
+      f.create(p, false).close()
+      // Hadoop's defaults under its 022 umask, on the file, its checksum
+      // sidecar and the dir the create made
+      assert(mode("sub/x") === "rw-r--r--")
+      assert(mode("sub/.x.crc") === "rw-r--r--")
+      assert(mode("sub") === "rwxr-xr-x")
+      Seq("640" -> "rw-r-----", "0" -> "---------", "777" -> "rwxrwxrwx",
+        "421" -> "r---w---x").foreach { case (octal, want) =>
+        f.setPermission(p, new FsPermission(Integer.parseInt(octal, 8).toShort))
+        assert(mode("sub/x") === want, octal)
+      }
+    }
+    assert(starts === Nil)
+    val sticky = new FsPermission(FsAction.ALL, FsAction.ALL, FsAction.ALL, true)
+    val e = intercept[UnsupportedOperationException](f.setPermission(p, sticky))
+    assert(e.getMessage.contains("1777"), e.getMessage)
+    assert(mode("sub/x") === "r---w---x")
   }
 }

@@ -134,6 +134,36 @@ class LatestStoreSpec extends SparkSuite {
       .getAs[Long]("start") === 106L * day)
   }
 
+  test("a replayed batch commits nothing, and a batch that changes one " +
+    "key rewrites only that key's bucket") {
+    val dir = tmpDir("lat-replay") + "/t"
+    val store = new LatestStore(spark, dir, nBuckets = 4, keepVersions = 2)
+    val keys = (1 to 8).map(i => ("syslog", s"host$i"))
+    def dataDirs = new java.io.File(dir, "data").list().toSeq.sorted
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    store.upsert(batch(keys, 100L * day, 1L))
+    val Seq(v1) = store.versions
+    val v1Dirs = dataDirs
+    val v1Rows = rows(store.latest)
+    assert(v1Rows.size === 8)
+    (1 to 2).foreach(_ => store.upsert(batch(keys, 100L * day, 1L)))
+    assert(store.versions === Seq(v1))
+    assert(dataDirs === v1Dirs)
+    assert(rows(store.latestAt(v1)) === v1Rows)
+
+    // the same keys, one of them newer: one version, one kp leaf
+    val newer = batch(keys.take(1), 200L * day, 1L)
+    store.upsert(batch(keys.drop(1), 100L * day, 1L).union(newer))
+    assert(store.versions.size === 2)
+    val Seq(v2Dir) = dataDirs.diff(v1Dirs)
+    val v2Leaves = new java.io.File(new java.io.File(dir, "data"), v2Dir).list()
+    assert(v2Leaves.toSeq === Seq(s"kp=${LatestStore.bucketOf("syslog", "host1", 4)}"))
+    val starts = store.latest.collect().map(r => r.getAs[String]("where") ->
+      r.getAs[org.apache.spark.sql.Row]("metadata").getAs[Long]("start")).toMap
+    assert(starts === keys.map { case (_, where) =>
+      where -> (if (where == "host1") 200L else 100L) * day }.toMap)
+  }
+
   test("time travel: latestAt reads the snapshot a version committed") {
     val store = new LatestStore(spark, tmpDir("lat-tt") + "/t", nBuckets = 4)
     store.upsert(batch(Seq(("a", "x")), 100L * day, 1L))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSuite
+import graft.{ProcessStarts, SparkSuite}
 import graft.core._
 import graft.obs.Obs
 import graft.query.ArchiveQuerier
@@ -310,6 +310,32 @@ class IngesterSpec extends SparkSuite {
     assert(rowsOf(recordStore.records) === records)
     assert(indexRows === index)
     assert(rowsOf(latestStore.latest) === latest)
+  }
+
+  test("a queue drain's batches write records, the work-id index, the " +
+    "latest table and reports, and start no OS process") {
+    val all = files(0, 20)
+    val widIndex = new WorkIdIndex(spark, tmpDir("wix-nofork") + "/i")
+    val recordStore = new RecordStore(spark, tmpDir("rec-nofork") + "/t",
+      workIdIndex = Some(widIndex))
+    val latestStore = new LatestStore(spark, tmpDir("lat-nofork") + "/t")
+    val reportDir = tmpDir("rep-nofork") + "/r"
+    val ing = new StreamingIngester(spark, new FakeContentStore(all),
+      recordStore, Some(latestStore), Some(reportDir), () => 123000L)
+    val queue = new DirNotificationQueue(tmpDir("queue-nofork"))
+    // the first batch creates every table and marker, the second adds to them
+    notificationsOf(all).grouped(10).foreach { batch =>
+      batch.foreach(queue.send)
+      val (n, starts) = ProcessStarts.on(
+        ing.drainQueue(queue, maxBatch = 10, idleTimeoutMs = 100))
+      assert(n === 10)
+      assert(starts === Nil)
+    }
+    assert(rowsOf(recordStore.records).size === 20)
+    assert((0 until 4).map(w =>
+      widIndex.lookup(s"w-$w", "syslog").count()).sum === 20)
+    assert(rowsOf(latestStore.latest).size === 4)
+    assert(rowsOf(spark.read.json(reportDir)).size === 20)
   }
 
   test("the streaming source takes at most MaxFilesPerTrigger files per " +
