@@ -751,8 +751,8 @@ final class CellIndex(spark: SparkSession, path: String) {
 
   /** [[semanticIngest]] that ALSO returns the batch's CANONICAL rows
     * (original batch columns) — the emission a streaming pipeline sinks
-    * ([[graft.streaming.StreamOps.semanticIngestStream]]). The emission
-    * is STATE-derived, the [[graft.store.FingerprintIndex
+    * (the semantic stage of [[graft.streaming.StreamOps.curateAllBatch]]).
+    * The emission is STATE-derived, the [[graft.store.FingerprintIndex
     * .ingestResolved]] discipline: it contains the fresh survivors this
     * call appends AND any batch row whose vec_id is already stored
     * (`is_replay`) — that row IS its own canonical copy in the index.

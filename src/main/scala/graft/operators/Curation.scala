@@ -741,7 +741,7 @@ object Curation {
     "digit" -> "[0-9]")
 
   /** The character-bigram extraction shared by [[charLmScore]] and
-    * [[charLmModelMap]]: the native codegen'd `char_bigrams` expression
+    * [[langId]]: the native codegen'd `char_bigrams` expression
     * over the normalized text (one decode + one loop per row — the
     * interpreted-HOF spelling `transform(sequence(…), i ->
     * substring(t, i, 2))` re-scans the string per bigram and was the
@@ -753,24 +753,6 @@ object Curation {
     graft.functions.functions.charBigrams(
       regexp_replace(lower(trim(col(textCol))),
         "[ \\t\\n\\x0B\\f\\r]+", " "))
-
-  /** The model half of [[charLmScore]] collected driver-side: bigram →
-    * micro-scaled probability (`round(1e6·count/total)`), for shipping
-    * into a continuous pipeline the way the line blocklist and BPE
-    * merges ship — train batch, apply stream
-    * ([[graft.streaming.StreamOps.scoreStream]]). Bounded by
-    * |charset|² entries regardless of corpus size. */
-  def charLmModelMap(
-      docs: DataFrame, textCol: String = "text"): Map[String, Long] = {
-    val grams = docs.select(explode(charGramsExpr(textCol)).as("__g"))
-    val model = grams.groupBy(col("__g")).agg(count(lit(1)).as("__cnt"))
-    val total = model.agg(sum(col("__cnt")).as("__total"))
-    model.crossJoin(broadcast(total))
-      .select(col("__g"),
-        round(col("__cnt") * lit(1000000.0) / col("__total"))
-          .cast("long").as("__p"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-  }
 
   /** Driver-bounded collect of a model-sized aggregate: the
     * `limit(cap+1)` rides the same aggregation pass (no extra counting

@@ -1,21 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-final case class SessionEvent(user_id: Long, event_id: Long, ts_ms: Long)
-
-final case class SessionState(
-    sessionStart: Long,
-    lastTs: Long,
-    nEvents: Long)
-
-final case class SessionOut(
-    user_id: Long,
-    session_start: Long,
-    session_end: Long,
-    n_events: Long)
 
 /** Thresholds for the quality-gate stage of
   * [[StreamOps.curateAllWithHistory]] — the configurable knobs of
@@ -24,121 +10,26 @@ final case class SessionOut(
 final case class GateConfig(
     minWords: Long = 50L,
     maxWords: Long = 100000L,
-    minStopwords: Int = 2,
-    repN: Int = 3)
+    minStopwords: Int = 2)
 
-/** Streaming counterparts of the batch temporal operators: watermarked
-  * tumbling-window aggregation and gap-based sessionization with custom
-  * state (`flatMapGroupsWithState`) — the Structured Streaming surface the
-  * engine exposes for continuous pipelines (SURVEY §2.7 mapping).
-  *
-  * Every history-backed `foreachBatch` entry here hands its sink the
-  * micro-batch's EPOCH ID alongside the frame — the checkpoint-stable
-  * replay identity. A sink that needs exactly-once OUTPUT keys its
-  * write on it (`batch=<id>` dir + Overwrite — the [[graft.tools
-  * .Curate]] / Ingester discipline); a sink with idempotent keyed
-  * writes may ignore it (the entries' replay-stable emission already
-  * makes at-least-once converge).
-  */
+/** The streaming curation loop: [[curateAllWithHistory]] runs every
+  * micro-batch of a document stream through [[curateAllBatch]] (scrub
+  * head, quality gate, then the four history-backed dedup stores) in
+  * one `foreachBatch`, with [[maintainAll]] between batches. */
 object StreamOps {
 
-  /** Tumbling-window counts per event_type with a watermark bounding
-    * state (the streaming form of q_hourly_agg). `events` must carry an
-    * event-time timestamp column named `ts`. */
-  def hourlyCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("hour_start"), col("event_type"), col("n"))
-
-  /** Streaming exact deduplication — the incremental form of the batch
-    * `Dedup.exact` family for a continuously-ingesting pipeline. Keyed on
-    * `keyCols`; the watermark on `ts` bounds the dedup state (Spark drops
-    * key state older than the watermark), so this runs forever on an
-    * unbounded stream: a duplicate arriving within the watermark window
-    * is suppressed, one arriving later than the watermark is the caller's
-    * late-data policy, exactly `dropDuplicatesWithinWatermark`'s
-    * contract. At 100 TB/day the state store holds only one window's
-    * keys, not history. */
-  def streamingDedup(
-      rows: DataFrame,
-      keyCols: Seq[String],
-      watermark: String = "1 hour"): DataFrame =
-    rows
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  /** Streaming curation: the batch scrub-and-filter pass
-    * ([[graft.operators.Curation]] / `q_curation_pipeline` semantics)
-    * composed for a continuously-ingesting corpus —
-    *
-    *   1. exact dedup on the text hash within the watermark window
-    *      (bounded state, as [[streamingDedup]]);
-    *   2. PII redaction (map-side regexp chain — streams untouched);
-    *   3. minimum-length quality filter on the redacted text;
-    *   4. deterministic stratified downsampling by `stratumCol` (pure
-    *      md5-of-id decision — replays and retries keep identical rows,
-    *      which matters doubly under streaming recovery).
-    *
-    * Everything except the dedup is stateless map work, so the whole
-    * pass adds exactly one piece of streaming state: the dedup keys of
-    * one watermark window. `docs` must carry event-time `ts`, `doc_id`,
-    * `text`, and `stratumCol`; `__text_hash` is a reserved working
-    * column. */
-  def streamingCuration(
-      docs: DataFrame,
-      stratumCol: String,
-      rates: Map[String, Int],
-      defaultPct: Int,
-      minWords: Int = 15,
-      watermark: String = "1 hour"): DataFrame = {
-    import graft.operators.Curation
-    require(!docs.columns.contains("__text_hash"),
-      "input column '__text_hash' collides with a streamingCuration " +
-        "working column")
-    val deduped = streamingDedup(
-      docs.withColumn("__text_hash", md5(col("text"))),
-      Seq("__text_hash"), watermark)
-      .drop("__text_hash")
-    val redacted = Curation.redact(deduped)
-    val quality = redacted.filter(
-      size(split(trim(col("redacted")), "[ \\t\\n\\x0B\\f\\r]+")) >= minWords)
-    Curation.stratifiedSample(quality, stratumCol, "doc_id",
-      rates, defaultPct)
-  }
-
-  /** Streaming scrub: the raw-crawl head of the curation pipeline
-    * composed in front of [[streamingCuration]] —
-    *
-    *   1. boilerplate line removal against a BATCH-LEARNED blocklist
-    *      (the streaming twin of [[graft.operators.Curation.lineDedup]]:
-    *      corpus-wide line counts need a batch pass; the stream applies
-    *      the learned over-threshold lines as a literal-array filter —
-    *      map-side, no stream-stream join, no state). Runs on RAW lines
-    *      because that is what the batch pass counted — and it must run
-    *      before the markup strip collapses line structure. Blocklists
-    *      are small by construction (only lines over the threshold), and
-    *      the size cap keeps the broadcast honest;
-    *   2. markup strip ([[graft.operators.Curation.stripMarkup]] —
-    *      codegen'd regexp chain, stateless);
-    *   3. Unicode NFC canonicalization (native `nfc` expression) so the
-    *      downstream dedup hash sees ONE byte form per text — composed
-    *      and decomposed spellings of the same document collapse;
-    *   4. the stateful dedup + redact + quality + sample chain of
-    *      [[streamingCuration]] on the scrubbed text.
-    *
-    * Steps 1–3 are stateless map work; total streaming state remains the
-    * one dedup window [[streamingCuration]] already carries. */
-  /** The stateless scrub head shared by [[streamingScrub]] and
-    * [[curateWithHistory]]: boilerplate-line removal against a
-    * batch-learned blocklist, then markup strip, then NFC. Blocklist
-    * membership is a hash-set lookup per line via a closure-shipped
-    * Set — a literal-array `array_contains` would re-scan the whole
-    * blocklist for EVERY line (O(lines × |blocklist|) in the microbatch
-    * hot path); the UDF trades one projection's codegen span for O(1)
-    * lookups, which wins for any blocklist past a handful of entries.
-    * The size cap keeps the task closure honest. */
+  /** The stateless scrub head of [[curateAllBatch]]: boilerplate-line
+    * removal against a batch-learned blocklist (on RAW lines, before
+    * the markup strip collapses line structure), then markup strip
+    * ([[graft.operators.Curation.stripMarkup]]), then Unicode NFC, so
+    * the fingerprint stage sees ONE byte form per text — markup
+    * wrappers and composed/decomposed spellings of one document
+    * collapse. Blocklist membership is a hash-set lookup per line via a
+    * closure-shipped Set — a literal-array `array_contains` would
+    * re-scan the whole blocklist for EVERY line (O(lines × |blocklist|)
+    * in the microbatch hot path); the UDF trades one projection's
+    * codegen span for O(1) lookups, which wins for any blocklist past a
+    * handful of entries. The size cap keeps the task closure honest. */
   private def scrubHead(docs: DataFrame,
       boilerplate: Seq[String]): DataFrame = {
     require(boilerplate.size <= 100000,
@@ -158,253 +49,6 @@ object StreamOps {
       .withColumn("text", graft.functions.functions.nfc(col("stripped")))
       .drop("stripped", "n_tags")
   }
-
-  def streamingScrub(
-      docs: DataFrame,
-      boilerplate: Seq[String],
-      stratumCol: String,
-      rates: Map[String, Int],
-      defaultPct: Int,
-      minWords: Int = 15,
-      watermark: String = "1 hour"): DataFrame =
-    streamingCuration(scrubHead(docs, boilerplate), stratumCol, rates,
-      defaultPct, minWords, watermark)
-
-  /** Model-scored streaming quality gate: apply a BATCH-TRAINED
-    * character-bigram model ([[graft.operators.Curation.charLmModelMap]])
-    * to a continuously-ingesting stream and keep documents whose mean
-    * bigram micro-probability clears `minAvgMicro` — the train-batch /
-    * score-stream split every production quality filter runs (the model
-    * needs a corpus-wide count, the stream must stay unbounded). A
-    * bigram never seen in training scores 0 — exactly the OOV penalty
-    * wanted from a gibberish gate.
-    *
-    * Map-side and STATELESS (no watermark, no state store): scoring is
-    * a closure-shipped hash-map lookup per bigram (the [[scrubHead]]
-    * blocklist precedent — O(1) per gram where a literal-map expression
-    * would re-scan the model). The normalization mirrors the batch
-    * operator (lowercase, trim, explicit-whitespace-class collapse) and
-    * bigrams are CODEPOINT pairs like the batch side's `substring`, so
-    * a document whose bigrams were all seen in training scores exactly
-    * its batch `avg_micro` (spec-asserted parity).
-    *
-    * @return input columns + `avg_micro`, filtered to the keepers
-    */
-  def scoreStream(
-      docs: DataFrame,
-      model: Map[String, Long],
-      minAvgMicro: Long,
-      textCol: String = "text"): DataFrame = {
-    require(model.nonEmpty, "empty char-bigram model")
-    val m = model
-    val score = udf { (text: String) =>
-      if (text == null) 0L
-      else {
-        // Spark's trim strips SPACES only; Java String.trim strips
-        // every char <= U+0020 — a trailing '\n' would vanish here but
-        // survive the batch side's trim and become a trailing space in
-        // the collapse, scoring one extra bigram. Mirror Spark exactly
-        // (space-trim, then the explicit whitespace-class collapse) so
-        // stream and batch scores stay bit-equal on edge whitespace.
-        // toLowerCase() with NO locale, matching Spark's lower() slow
-        // path (UTF8String.toLowerCaseSlow -> String.toLowerCase(),
-        // default locale): a Locale.ROOT lowercase here would diverge
-        // from the batch-trained model on tr/az/lt default-locale JVMs
-        // ('I' -> 'i' vs dotless 'ı'), mis-gating docs near the
-        // threshold calibrated on batch scores.
-        val t = text.toLowerCase()
-          .replaceAll("^ +| +$", "")
-          .replaceAll("[ \\t\\n\\x0B\\f\\r]+", " ")
-        val cps = t.codePoints.toArray
-        if (cps.length < 2) 0L
-        else {
-          var s = 0L
-          var i = 0
-          while (i < cps.length - 1) {
-            s += m.getOrElse(new String(cps, i, 2), 0L)
-            i += 1
-          }
-          s / (cps.length - 1)
-        }
-      }
-    }
-    docs.withColumn("avg_micro", score(col(textCol)))
-      .filter(col("avg_micro") >= minAvgMicro)
-  }
-
-  /** Streaming form of the composed Gopher quality gate
-    * ([[graft.operators.Curation.qualityGate]]): each micro-batch is
-    * gated whole — the repetition signal is a per-doc aggregate, which
-    * append-mode streaming cannot express in-stream, so the gate runs
-    * in `foreachBatch` like the history-backed dedup stages. The gate
-    * is a pure function of each document alone (no cross-batch state),
-    * so replays re-derive identical keep/reason rows by construction
-    * and the sink sees every batch row exactly once per delivery, keep
-    * and drop alike (the sink chooses what to do with drops — route to
-    * a reject store, count into a report, or both). */
-  def qualityGateStream(
-      docs: DataFrame,
-      checkpointDir: String,
-      gate: GateConfig = GateConfig())(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the one GateConfig type both gate entry points share — a
-        // loose-parameter copy here had already drifted (it could not
-        // express repN)
-        sink(graft.operators.Curation.qualityGate(batch,
-          minWords = gate.minWords, maxWords = gate.maxWords,
-          minStopwords = gate.minStopwords, repN = gate.repN), batchId)
-      }
-      .start()
-
-  /** Durable-dedup streaming curation: [[streamingScrub]]'s stateless
-    * head (blocklist → markup strip → NFC) composed with a
-    * [[graft.store.FingerprintIndex]] in a `foreachBatch` loop, so
-    * duplicates are suppressed against ALL history — not just the
-    * watermark window the in-stream dedup state can hold. A duplicate
-    * arriving weeks after its original is still dropped.
-    *
-    * Exactly-once effect under at-least-once execution: the index
-    * commit is idempotent and `ingestResolved` re-derives a replayed
-    * batch's emission from index STATE, so a crash anywhere between the
-    * commit and the sink re-emits the identical rows on retry — the
-    * sink sees each canonical document at least once with identical
-    * content, and an idempotent sink (keyed write) converges to exactly
-    * once. That retry only happens if the query RESTARTS FROM ITS
-    * CHECKPOINT, which is why `checkpointDir` is a required parameter
-    * rather than Spark's default ephemeral temp checkpoint (deleted on
-    * stop, useless after a crash). Fingerprinting runs AFTER scrub, so
-    * byte-level spelling variants (markup wrappers, decomposed Unicode)
-    * of one document share a fingerprint.
-    *
-    * Per batch, the scrubbed frame is persisted: ingest's write,
-    * the two bucket collections, the ownership join and the sink all
-    * reuse one evaluation of the regexp/NFC chain instead of five.
-    *
-    * Returns a started query; stop it to end the stream. */
-  def curateWithHistory(
-      docs: DataFrame,
-      index: graft.store.FingerprintIndex,
-      boilerplate: Seq[String],
-      checkpointDir: String,
-      minWords: Int = 15)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Curation
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cleaned = scrubHead(batch, boilerplate).persist()
-        try {
-          val canonical = index.ingestResolved(cleaned)
-          val redacted = Curation.redact(canonical)
-          sink(redacted.filter(
-            size(split(trim(col("redacted")), "[ \\t\\n\\x0B\\f\\r]+")) >= minWords),
-            batchId)
-        } finally cleaned.unpersist(false)
-      }
-      .start()
-  }
-
-  /** [[curateWithHistory]] with a NEAR-duplicate leg: after the exact
-    * [[graft.store.FingerprintIndex]] suppresses byte-identical repeats
-    * against all history, the batch's canonical survivors run
-    * [[graft.store.NearDupIndex.ingest]] — MinHash-LSH probe against the
-    * persisted band postings, banded-Levenshtein confirm, one atomic
-    * registration commit — and only rows whose verdict names THEMSELVES
-    * canonical (`canonical_id == doc_id`) continue to redaction and the
-    * sink. A lightly-edited copy of a document ingested weeks earlier —
-    * invisible to the exact index (different bytes) and to any
-    * watermark-bounded stream state — is suppressed here, against the
-    * full 100-TB history, reading only the band-key buckets the batch's
-    * own signatures land in.
-    *
-    * Replay-stable end to end: both indexes re-derive a replayed
-    * batch's verdicts from persisted state ([[graft.store
-    * .FingerprintIndex.ingestResolved]]'s discipline; NearDupIndex
-    * persists every doc's verdict row), so a crash between commit and
-    * sink re-emits identical rows on retry — at-least-once into an
-    * idempotent sink converges to exactly-once. */
-  def curateWithNearDupHistory(
-      docs: DataFrame,
-      exact: graft.store.FingerprintIndex,
-      nearDup: graft.store.NearDupIndex,
-      boilerplate: Seq[String],
-      checkpointDir: String,
-      minWords: Int = 15)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.Curation
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cleaned = scrubHead(batch, boilerplate).persist()
-        try {
-          val exactCanonical = exact.ingestResolved(cleaned)
-          val survivors = nearDup.ingest(exactCanonical)
-            .filter(col("canonical_id") === col("doc_id"))
-            .drop("canonical_id")
-          val redacted = Curation.redact(survivors)
-          sink(redacted.filter(
-            size(split(trim(col("redacted")), "[ \\t\\n\\x0B\\f\\r]+")) >= minWords),
-            batchId)
-        } finally cleaned.unpersist(false)
-      }
-      .start()
-  }
-
-  /** Streaming SPAN-level dedup: each arriving batch's duplicated
-    * regions — vs everything ever ingested AND within the batch — are
-    * excised from the text before the sink, via one
-    * [[graft.store.GramIndex.ingest]] per micro-batch (probe history,
-    * register own grams, one atomic commit). This is the streaming form
-    * of the Lee et al. 2022 ExactSubstr dedup: boilerplate, license
-    * headers, and full copies of documents ingested weeks earlier are
-    * cut out of the arriving text at region granularity; a FULLY
-    * duplicated document loses every token and is dropped outright
-    * (subsuming exact dedup), while a mostly-novel document keeps its
-    * novel regions instead of being all-or-nothing suppressed — the
-    * behavior neither [[curateWithHistory]] (byte-exact whole docs) nor
-    * [[curateWithNearDupHistory]] (whole-doc near-dups) can express.
-    *
-    * Emits the batch's non-text columns + (n_kept, scrubbed_text),
-    * filtered to `minKeptTokens`. Replay-stable: a whole-batch replay
-    * re-derives identical spans from index state (GramIndex's
-    * owner-inequality rule) and commits nothing, so at-least-once into
-    * an idempotent sink converges to exactly-once. */
-  def scrubSpansWithHistory(
-      docs: DataFrame,
-      grams: graft.store.GramIndex,
-      checkpointDir: String,
-      minKeptTokens: Int = 15,
-      textCol: String = "text",
-      idCol: String = "doc_id")(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        try {
-          val spans = grams.ingest(b, textCol, idCol)
-          val scrubbed = graft.operators.SpanDedup
-            .exciseTextBySpans(b, spans, textCol, idCol)
-          sink(
-            b.drop(textCol)
-              .withColumnRenamed(idCol, "doc_id")
-              .join(scrubbed, Seq("doc_id"))
-              .filter(col("n_kept") >= minKeptTokens),
-            batchId)
-        } finally b.unpersist(false)
-      }
-      .start()
 
   /** The FULL streaming curation pipeline: all four dedup
     * granularities against their persisted histories in ONE
@@ -460,12 +104,13 @@ object StreamOps {
     * ("maintain") — an instrumentation seam (telemetry, and the spec's
     * crash injection).
     *
-    * Lifecycle knobs: `warmOnStart` pre-touches every store's
-    * filesystem metadata before batch 1 (the first-touch-outlier
-    * mitigation); `maintenanceEvery` = N > 0 runs [[maintainAll]] after
-    * every Nth batch from the single writer thread ("maintain" fires on
-    * `onStage`) — unbounded live dirs mean unbounded snapshot read
-    * fan-in, so a production loop wants this on. */
+    * Lifecycle: every store's filesystem metadata is pre-touched
+    * before batch 1 (the first-touch-outlier mitigation);
+    * `maintenanceEvery` = N > 0 runs [[maintainAll]] after every Nth
+    * batch from the single writer thread ("maintain" fires on
+    * `onStage`), 0 runs none, and a negative N is refused —
+    * unbounded live dirs mean unbounded snapshot read fan-in, so a
+    * production loop wants this on. */
   def curateAllWithHistory(
       docs: DataFrame,
       exact: graft.store.FingerprintIndex,
@@ -480,17 +125,17 @@ object StreamOps {
       gate: Option[GateConfig] = None,
       gateSink: (DataFrame, Long) => Unit = (_, _) => (),
       onStage: String => Unit = _ => (),
-      warmOnStart: Boolean = false,
       maintenanceEvery: Int = 0,
       availableNow: Boolean = false)(
       sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    require(maintenanceEvery >= 0,
+      s"maintenanceEvery must be >= 0 (0 disables): $maintenanceEvery")
     // first-touch mitigation: pre-list + footer-read every store's live
     // snapshot BEFORE batch 1, so a fresh driver's first micro-batch
-    // doesn't pay the cold-metadata cost mid-batch (PROFILE round-9c)
-    if (warmOnStart) {
-      exact.warm(); nearDup.warm(); grams.warm(); semantic.warm()
-    }
+    // doesn't pay the cold-metadata cost mid-batch (PROFILE round-9c);
+    // each warm() swallows a virgin store's failure
+    exact.warm(); nearDup.warm(); grams.warm(); semantic.warm()
     val batches = new java.util.concurrent.atomic.AtomicLong()
     val writer = docs.writeStream
       .outputMode("append")
@@ -581,7 +226,7 @@ object StreamOps {
     // and serves BOTH the gate sink and the store legs
     val gated = gate.map(g => graft.operators.Curation.qualityGate(
       headScrubbed, minWords = g.minWords, maxWords = g.maxWords,
-      minStopwords = g.minStopwords, repN = g.repN).persist())
+      minStopwords = g.minStopwords).persist())
     val cleaned = gated
       .map(_.filter(col("keep") === 1).drop("n_words", "keep", "reasons"))
       .getOrElse(headScrubbed)
@@ -646,157 +291,5 @@ object StreamOps {
       cleaned.unpersist(false)
       gated.foreach(_.unpersist(false))
     }
-  }
-
-  /** Streaming SEMANTIC dedup at ingestion: each micro-batch of
-    * (vec_id, embedding) rows runs [[graft.operators.CellIndex
-    * .semanticIngestResolved]] — probe the partition-pruned history
-    * cells, drop history/within-batch near-dups and replays, append the
-    * survivors atomically — and the sink receives exactly the rows the
-    * index appended. The embedding-space member of the streaming
-    * curation family ([[curateWithHistory]] = byte-exact,
-    * [[curateWithNearDupHistory]] = edited text, [[scrubSpansWithHistory]]
-    * = verbatim regions, this = PARAPHRASES that share no tokens at
-    * all). Per-batch cost is bounded by the probed cells' population,
-    * independent of history size. */
-  def semanticIngestStream(
-      vectors: DataFrame,
-      index: graft.operators.CellIndex,
-      checkpointDir: String,
-      thresholdMicro: Long = 300000L,
-      nprobe: Int = 1)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (kept, _) =
-          index.semanticIngestResolved(batch, thresholdMicro, nprobe)
-        sink(kept, batchId)
-      }
-      .start()
-
-  /** Gap-based sessionization with explicit state: a session closes (and
-    * is emitted) when its group sees an event more than `gapMs` later.
-    * Batch `Temporal.sessionize` computes the same sessions
-    * retrospectively; this emits them incrementally. (No state timeout:
-    * with ProcessingTimeTimeout Spark schedules continuous empty batches
-    * to poll timers, which burns state-store maintenance forever in a
-    * drained test stream — idle-session flushing belongs to a real
-    * deployment's trigger cadence.)
-    */
-  /** Streaming distinct-count sketch: [[graft.operators.Hll]] registers
-    * maintained as a streaming max-aggregation. The state per group is
-    * HARD-BOUNDED at 64 register rows — no watermark needed, because
-    * the sketch, not time, bounds it — where exact streaming distinct
-    * would grow state with every new value forever. This is the
-    * streaming form of the same trade the batch sketch makes: the
-    * registers converge to EXACTLY the batch sketch of everything the
-    * stream has seen (max is order-insensitive and duplicate-proof), so
-    * a `memory`/update sink holds a live register table and
-    * [[graft.operators.Hll.indicator]]/`estimateMicro` read the running
-    * cardinality estimate off it at any moment.
-    *
-    * Run with `outputMode("update")` (each batch re-emits only changed
-    * registers).
-    */
-  def hllStream(
-      rows: DataFrame,
-      groupCols: Seq[String],
-      valueCol: String): DataFrame =
-    graft.operators.Hll.registers(rows, groupCols, valueCol)
-
-  /** Streaming frequency sketch: [[graft.operators.Cms]] counters
-    * maintained as a streaming sum-aggregation — the [[hllStream]]
-    * trade for COUNTS instead of cardinality. State per group is
-    * HARD-BOUNDED at d·w counter cells (the sketch, not a watermark,
-    * bounds it), where an exact streaming `groupBy(term).count()` grows
-    * state with every distinct term forever. Because CMS merges by sum
-    * and sum is what the streaming aggregation maintains, the cells
-    * converge to EXACTLY the batch sketch of everything the stream has
-    * seen; a `memory`/update sink holds the live grid and
-    * [[graft.operators.Cms.estimate]] reads point estimates off it at
-    * any moment (live heavy-hitter watchlists over an unbounded term
-    * domain).
-    *
-    * Run with `outputMode("update")`.
-    */
-  def cmsStream(
-      rows: DataFrame,
-      groupCols: Seq[String],
-      valueCol: String): DataFrame =
-    graft.operators.Cms.registers(rows, groupCols, valueCol)
-
-  /** Streaming KMV distinct sketch: the native [[graft.functions
-    * .KmvAgg]] maintained as a streaming aggregation — state per group
-    * is HARD-BOUNDED at k longs (the serialized sketch buffer in the
-    * state store), and because the aggregate's merge IS the KMV merge
-    * law (k-min of union), the sketch converges to exactly the batch
-    * sketch of everything the stream has seen. The streaming leg of the
-    * [[graft.operators.Kmv]] family: live pairwise source-similarity
-    * ([[graft.operators.Kmv.jaccardHits]]) reads off the latest
-    * sketches at any moment — the set-operation estimate neither the
-    * HLL nor the CMS stream can produce.
-    *
-    * Run with `outputMode("update")`.
-    */
-  def kmvStream(
-      rows: DataFrame,
-      groupCols: Seq[String],
-      valueCol: String,
-      k: Int = graft.operators.Kmv.DefaultK): DataFrame =
-    graft.operators.Kmv.sketch(rows, groupCols, valueCol, k)
-
-  def sessionizeStream(
-      events: Dataset[SessionEvent],
-      gapMs: Long): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        // NoTimeout means hasTimedOut can never fire — no timeout
-        // branch exists, by design: the open session flushes on the
-        // next in-gap-or-beyond event, never on wall clock
-        (userId: Long, rows: Iterator[SessionEvent],
-         state: GroupState[SessionState]) =>
-          val sorted = rows.toSeq.sortBy(e => (e.ts_ms, e.event_id))
-          var current = state.getOption
-          val closed = scala.collection.mutable.Buffer.empty[SessionOut]
-          sorted.foreach { e =>
-            current match {
-              case Some(s) if e.ts_ms - s.lastTs <= gapMs &&
-                  e.ts_ms < s.sessionStart - gapMs =>
-                // a LATE event older than the open session's reach:
-                // batch sessionize would place it in an EARLIER session
-                // (that region is already gone in a stream), so emit it
-                // as its own closed single-event session — folding it in
-                // would produce a session containing an event before its
-                // own session_start, which the batch twin can never do
-                closed += SessionOut(userId, e.ts_ms, e.ts_ms, 1)
-              case Some(s) if e.ts_ms - s.lastTs <= gapMs =>
-                // a LATE event (sorted within its batch, but batches
-                // are not sorted against each other) must never rewind
-                // lastTs: the session's end is its newest event, and a
-                // rewound lastTs would let a later event close the
-                // session with session_end EARLIER than an event it
-                // contains. sessionStart DOES extend backward (min):
-                // an in-reach late event is the session's new first
-                // event, exactly as the batch twin would order it
-                current = Some(s.copy(
-                  sessionStart = math.min(s.sessionStart, e.ts_ms),
-                  lastTs = math.max(s.lastTs, e.ts_ms),
-                  nEvents = s.nEvents + 1))
-              case Some(s) =>
-                closed += SessionOut(userId, s.sessionStart, s.lastTs, s.nEvents)
-                current = Some(SessionState(e.ts_ms, e.ts_ms, 1))
-              case None =>
-                current = Some(SessionState(e.ts_ms, e.ts_ms, 1))
-            }
-          }
-          current.foreach(state.update)
-          closed.iterator
-      }
   }
 }

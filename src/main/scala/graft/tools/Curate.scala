@@ -138,7 +138,6 @@ object Curate {
         writeTo(gated.filter(col("keep") === 0), "rejected", batchId)
       },
       onStage = onStage,
-      warmOnStart = true,
       maintenanceEvery = cfg.maintenanceEvery,
       availableNow = cfg.once) { (kept, batchId) =>
       writeTo(kept, "kept", batchId)

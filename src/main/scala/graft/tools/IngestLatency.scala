@@ -15,16 +15,15 @@ import org.apache.spark.sql.functions._
   * batch): wall seconds + shuffle read/write bytes from the collector.
   *
   *   - `exact`    = [[graft.store.FingerprintIndex.ingestResolved]]
-  *                  (the [[graft.streaming.StreamOps.curateWithHistory]]
-  *                  unit)
+  *                  (the `curateAllWithHistory` byte-exact stage)
   *   - `spans`    = [[graft.store.GramIndex.ingest]] (the
-  *                  `scrubSpansWithHistory` unit — Bloom-prefiltered
-  *                  history probe)
+  *                  `curateAllWithHistory` verbatim-span stage —
+  *                  Bloom-prefiltered history probe)
   *   - `neardup`  = [[graft.store.NearDupIndex.ingest]] (the
   *                  `curateAllWithHistory` whole-doc near-dup stage,
   *                  same two-layer pruning)
   *   - `semantic` = [[graft.operators.CellIndex.semanticIngestResolved]]
-  *                  (the `semanticIngestStream` unit)
+  *                  (the `curateAllWithHistory` semantic stage)
   *   - `pipeline` = [[graft.streaming.StreamOps.curateAllBatch]] (the
   *                  COMPOSED five-stage `curateAllWithHistory` unit —
   *                  gate → exact → near-dup → span-scrub → semantic —

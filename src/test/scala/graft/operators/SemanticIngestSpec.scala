@@ -95,6 +95,20 @@ class SemanticIngestSpec extends SparkSuite {
     assert(idx.vectors.count() === 3L)
   }
 
+  test("semanticIngestResolved emits the survivors, and a later batch's " +
+    "near-dup of them drops against the history that batch appended") {
+    val idx = seeded()
+    def emitted(rows: (Long, Array[Float])*): Seq[Long] =
+      idx.semanticIngestResolved(emb(rows: _*), thresholdMicro = 900000L)
+        ._1.select(col("vec_id")).collect().map(_.getLong(0)).sorted.toSeq
+    // a near-dup of history vector 0 (dropped) + a novel direction
+    assert(emitted(10L -> Array(1f, 0.01f, 0f, 0f),
+      11L -> Array(0f, 1f, 0f, 0f)) === Seq(11L))
+    // a near-dup of the previous batch's survivor + a novel one
+    assert(emitted(20L -> Array(0.01f, 1f, 0f, 0f),
+      21L -> Array(0f, 0f, 0f, 1f)) === Seq(21L))
+  }
+
   test("the history scan is partition-pruned to the batch's probed " +
     "cells") {
     val idx = seeded()

@@ -45,6 +45,30 @@ class GramIndexSpec extends SparkSuite {
     assert(idx.grams.count() === n)
   }
 
+  test("ingest spans excise history: a quoting doc keeps its novel " +
+    "head, a full copy of history drops, novel docs pass untouched") {
+    import spark.implicits._
+    val idx = new GramIndex(spark, tmp(), w = 8, buckets = 8)
+    // one batch = one ingest, then the excision the curation loop runs
+    def scrub(rows: (Long, String)*): Map[Long, (Long, String)] = {
+      val b = rows.toDF("doc_id", "text")
+      SpanDedup.exciseTextBySpans(b, idx.ingest(b)).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
+    }
+    assert(scrub((1L, s"$S tail1 tail2 tail3")) ===
+      Map(1L -> (11L, s"$S tail1 tail2 tail3")), "first copy untouched")
+    // a later batch: a doc quoting the 8-run, a full copy of doc 1 and
+    // a novel doc
+    val got = scrub(
+      (2L, s"head1 head2 $S"),
+      (3L, s"$S tail1 tail2 tail3"),
+      (4L, "n1 n2 n3 n4 n5 n6 n7 n8 n9"))
+    assert(got(2L) === ((2L, "head1 head2")),
+      "quoted region excised, novel head kept")
+    assert(!got.contains(3L), "full duplicate excised whole")
+    assert(got(4L) === ((9L, "n1 n2 n3 n4 n5 n6 n7 n8 n9")))
+  }
+
   test("bloom prefilter parity: probe and ingest spans identical with " +
     "the prefilter disabled (bloomMaxKeys=0)") {
     import spark.implicits._

@@ -6,354 +6,13 @@ import org.apache.spark.sql.functions._
 
 class StreamOpsSpec extends SparkSuite {
 
-  test("watermarked hourly counts over a drained stream") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, String)]
-    val df = input.toDF().toDF("ts", "event_type")
-    val q = StreamOps.hourlyCounts(df)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("hourly_out").start()
-    def t(h: Int, m: Int) =
-      java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-    input.addData((t(0, 10), "click"), (t(0, 40), "click"), (t(0, 50), "view"))
-    q.processAllAvailable()
-    // advance event time far past the watermark so hour 0 finalizes
-    input.addData((t(9, 0), "click"))
-    q.processAllAvailable()
-    val out = spark.table("hourly_out")
-      .select($"hour_start", $"event_type", $"n").collect()
-      .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2)))
-      .toSet
-    q.stop()
-    assert(out === Set(
-      ("2024-01-01 00:00:00.0", "click", 2L),
-      ("2024-01-01 00:00:00.0", "view", 1L)))
-  }
-
-  test("streaming dedup suppresses in-window duplicates, state bounded by watermark") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, String, Int)]
-    val df = input.toDF().toDF("ts", "doc_key", "payload")
-    val q = StreamOps.streamingDedup(df, Seq("doc_key"), watermark = "10 minutes")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("dedup_out").start()
-    def t(h: Int, m: Int) =
-      java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-    // duplicates inside the watermark window: suppressed
-    input.addData((t(0, 0), "a", 1), (t(0, 1), "a", 2), (t(0, 2), "b", 3))
-    q.processAllAvailable()
-    input.addData((t(0, 3), "a", 4), (t(0, 4), "b", 5), (t(0, 5), "c", 6))
-    q.processAllAvailable()
-    // advance the watermark far past the first window: key state for a/b/c
-    // is dropped, so a re-arrival of "a" is a NEW row (the documented
-    // late-data contract — state is bounded, not historical)
-    input.addData((t(2, 0), "z", 7))
-    q.processAllAvailable()
-    input.addData((t(2, 1), "a", 8))
-    q.processAllAvailable()
-    val out = spark.table("dedup_out")
-      .select($"doc_key", $"payload").collect()
-      .map(r => (r.getString(0), r.getInt(1))).toSet
-    q.stop()
-    assert(out === Set(("a", 1), ("b", 3), ("c", 6), ("z", 7), ("a", 8)))
-  }
-
-  test("streaming curation: dedup + redact + quality + sampling on a stream") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, Long, String, String)]
-    val df = input.toDF().toDF("ts", "doc_id", "text", "lang")
-    val q = StreamOps.streamingCuration(df, stratumCol = "lang",
-      rates = Map.empty, defaultPct = 100, minWords = 5,
-      watermark = "10 minutes")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("curated_out").start()
-    def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
-    val longText = "contact me at alice@example.org about the " +
-      "quarterly report draft please"
-    input.addData(
-      (t(0), 1L, longText, "en"),          // kept, email redacted
-      (t(2), 3L, "too short", "en"),       // quality-filtered
-      (t(3), 4L, "a completely different sentence with many words inside", "en"))
-    q.processAllAvailable()
-    // the duplicate arrives in a LATER micro-batch: doc 1 is already in
-    // the dedup state, so suppression is deterministic (within one batch
-    // the surviving duplicate would be an ordering accident)
-    input.addData((t(1), 2L, longText, "en"))
-    q.processAllAvailable()
-    val out = spark.table("curated_out")
-      .select($"doc_id", $"redacted", $"n_emails").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
-    q.stop()
-    assert(out.map(_._1).sorted === Array(1L, 4L))
-    val doc1 = out.find(_._1 == 1L).get
-    assert(doc1._2.contains("<EMAIL>") && !doc1._2.contains("alice@"))
-    assert(doc1._3 === 1)
-  }
-
-  test("streaming scrub: strip + NFC + blocklist ahead of the curation " +
-    "chain") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, Long, String, String)]
-    val df = input.toDF().toDF("ts", "doc_id", "text", "lang")
-    val q = StreamOps.streamingScrub(df,
-      boilerplate = Seq("SUBSCRIBE to our newsletter"),
-      stratumCol = "lang", rates = Map.empty, defaultPct = 100,
-      minWords = 5, watermark = "10 minutes")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("scrub_out").start()
-    def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
-    // decomposed é (e + U+0301) wrapped in markup, plus a boilerplate line
-    val decomposed = "<p>the nice cafe\u0301 on the corner serves " +
-      "breakfast</p>\nSUBSCRIBE to our newsletter"
-    // the same text, composed (U+00E9), different markup: after strip +
-    // NFC the bytes are identical, so the dedup hash must collapse them
-    val composed = "<div>the nice caf\u00e9 on the corner serves " +
-      "breakfast</div>"
-    input.addData(
-      (t(0), 1L, decomposed, "en"),
-      (t(2), 3L, "<b>tiny</b>", "en")) // quality-filtered after strip
-    q.processAllAvailable()
-    input.addData((t(1), 2L, composed, "en")) // later batch: deterministic
-    q.processAllAvailable()
-    val out = spark.table("scrub_out")
-      .select($"doc_id", $"redacted").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    q.stop()
-    assert(out.map(_._1).toSeq === Seq(1L))
-    val text1 = out.head._2
-    // markup and the boilerplate line are gone; the é is composed
-    assert(text1 === "the nice caf\u00e9 on the corner serves breakfast")
-  }
-
-  test("curateWithHistory suppresses duplicates beyond any watermark " +
-    "window via the fingerprint index") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, Long, String, String)]
-    val df = input.toDF().toDF("ts", "doc_id", "text", "lang")
-    val idxDir = java.nio.file.Files.createTempDirectory("fpidx-stream")
-    val idx = new graft.store.FingerprintIndex(spark, idxDir.toString,
-      buckets = 8)
-    val emitted = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val ckpt = java.nio.file.Files.createTempDirectory("fpidx-ckpt")
-    val q = StreamOps.curateWithHistory(df, idx,
-      boilerplate = Seq.empty, checkpointDir = ckpt.toString,
-      minWords = 3) { (out, _) =>
-      emitted ++= out.select($"doc_id").collect().map(_.getLong(0))
-    }
-    def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
-    val text = "an original document body here"
-    input.addData((t(0), 1L, text, "en"))
-    q.processAllAvailable()
-    // the duplicate arrives in a much later micro-batch — there is NO
-    // watermark state to age out; suppression comes from the durable
-    // index. A decomposed-unicode spelling of the same text dedups too
-    // (fingerprints are taken post-NFC).
-    input.addData((t(30), 2L, text, "en"),
-      (t(31), 3L, "completely different new content", "en"))
-    q.processAllAvailable()
-    q.stop()
-    assert(emitted.sorted.toSeq === Seq(1L, 3L))
-    assert(idx.fingerprints.count() === 2)
-  }
-
-  test("curateWithNearDupHistory suppresses lightly-edited copies of " +
-    "history the exact index cannot see") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, Long, String, String)]
-    val df = input.toDF().toDF("ts", "doc_id", "text", "lang")
-    val exact = new graft.store.FingerprintIndex(spark,
-      java.nio.file.Files.createTempDirectory("ndh-fp").toString, buckets = 8)
-    val near = new graft.store.NearDupIndex(spark,
-      java.nio.file.Files.createTempDirectory("ndh-nd").toString, buckets = 8)
-    val emitted = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val ckpt = java.nio.file.Files.createTempDirectory("ndh-ckpt")
-    val q = StreamOps.curateWithNearDupHistory(df, exact, near,
-      boilerplate = Seq.empty, checkpointDir = ckpt.toString,
-      minWords = 3) { (out, _) =>
-      emitted ++= out.select($"doc_id").collect().map(_.getLong(0))
-    }
-    def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
-    val base = "the quick brown fox jumps over the lazy dog while " +
-      "seventeen sleepy penguins waddle across the frozen antarctic " +
-      "shelf carrying small wooden crates of pickled herring toward " +
-      "the waiting ship anchored beyond the ridge"
-    input.addData((t(0), 1L, base, "en"))
-    q.processAllAvailable()
-    // a much later micro-batch: a byte-exact repeat (exact leg), a
-    // lightly-EDITED copy (near-dup leg — different bytes, so the
-    // fingerprint index passes it), and a genuinely new doc
-    input.addData(
-      (t(30), 2L, base, "en"),
-      (t(31), 3L, base.replace("fox", "zesty"), "en"),
-      (t(32), 4L, "completely different subject matter entirely about " +
-        "orbital mechanics delta-v budgets and transfer windows", "en"))
-    q.processAllAvailable()
-    q.stop()
-    assert(emitted.sorted.toSeq === Seq(1L, 4L))
-    // the edited copy's verdict is persisted, naming the history canonical
-    val verdict = near.assignments
-      .filter($"doc_id" === 3L).select($"canonical_id").collect()
-    assert(verdict.map(_.getLong(0)).toSeq === Seq(1L))
-  }
-
-  test("stateful sessionization emits closed sessions incrementally") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SessionEvent]
-    val q = StreamOps.sessionizeStream(input.toDS(), gapMs = 1000L)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("sessions_out").start()
-
-    // session 1: three events within the gap
-    input.addData(SessionEvent(1L, 1L, 0L), SessionEvent(1L, 2L, 500L),
-      SessionEvent(1L, 3L, 900L))
-    q.processAllAvailable()
-    assert(spark.table("sessions_out").count() === 0) // still open
-
-    // a far-future event closes session 1 and opens session 2
-    input.addData(SessionEvent(1L, 4L, 10000L))
-    q.processAllAvailable()
-    val closed = spark.table("sessions_out").as[SessionOut].collect()
-    q.stop()
-    assert(closed.toSeq === Seq(SessionOut(1L, 0L, 900L, 3L)))
-  }
-
-  test("sessionization: a late cross-batch event never rewinds the " +
-    "session end") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SessionEvent]
-    val q = StreamOps.sessionizeStream(input.toDS(), gapMs = 1000L)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("sessions_late").start()
-    input.addData(SessionEvent(1L, 1L, 1000L))
-    q.processAllAvailable()
-    // LATE event (batches are sorted internally, not against each
-    // other): within gap of the session, but older than its last event
-    input.addData(SessionEvent(1L, 2L, 500L))
-    q.processAllAvailable()
-    // within gap of the REAL last event (1000) but not of the late one
-    // (500): a rewound lastTs would wrongly close the session here
-    // with session_end=500 — earlier than an event it contains
-    input.addData(SessionEvent(1L, 3L, 1600L))
-    q.processAllAvailable()
-    assert(spark.table("sessions_late").count() === 0,
-      "the session must still be open — no spurious split")
-    input.addData(SessionEvent(1L, 4L, 99000L)) // far future closes it
-    q.processAllAvailable()
-    val closed = spark.table("sessions_late").as[SessionOut].collect()
-    q.stop()
-    // the late 500 is the session's new FIRST event (batch sessionize
-    // over {500, 1000, 1600} at gap 1000 yields one session [500, 1600])
-    assert(closed.toSeq === Seq(SessionOut(1L, 500L, 1600L, 3L)))
-  }
-
-  test("sessionization: a late event OLDER than the open session's " +
-    "reach closes as its own session — never folded into a session " +
-    "that starts after it") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SessionEvent]
-    val q = StreamOps.sessionizeStream(input.toDS(), gapMs = 100L)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("sessions_old").start()
-    input.addData(SessionEvent(1L, 1L, 1000L), SessionEvent(1L, 2L, 1080L))
-    q.processAllAvailable()
-    // ts=100: "within gap of lastTs"? 100-1080 = -980 <= 100 — the naive
-    // merge test passes, but the event is 900ms before session_start,
-    // beyond the session's backward reach (start - gap = 900)
-    input.addData(SessionEvent(1L, 3L, 100L))
-    q.processAllAvailable()
-    val early = spark.table("sessions_old").as[SessionOut].collect()
-    assert(early.toSeq === Seq(SessionOut(1L, 100L, 100L, 1L)),
-      "the too-old event must close as its own single-event session")
-    input.addData(SessionEvent(1L, 4L, 99000L))
-    q.processAllAvailable()
-    val all = spark.table("sessions_old").as[SessionOut].collect()
-    q.stop()
-    // the open session was untouched by the too-old event: when it
-    // finally closes it spans only its own events — exactly the batch
-    // twin's sessions over {100, 1000, 1080} at gap 100
-    assert(all.toSet === Set(
-      SessionOut(1L, 100L, 100L, 1L), SessionOut(1L, 1000L, 1080L, 2L)))
-  }
-
-  test("scoreStream: batch-trained char-LM gates a stream, parity with " +
-    "the batch score for fully-seen documents") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prose = "the quick brown fox jumps over the lazy dog again and again"
-    val corpus = (1L to 8L).map(i => (i, prose)).toDF("doc_id", "text")
-    val model = graft.operators.Curation.charLmModelMap(corpus)
-    // batch reference: every doc shares the text, so one avg_micro
-    val batchAvg = graft.operators.Curation.charLmScore(corpus)
-      .select($"avg_micro").head().getLong(0)
-
-    val input = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val df = input.toDF().toDF("ts", "doc_id", "text")
-    // threshold between gibberish (mostly-OOV bigrams -> near 0) and
-    // prose (batch-level score)
-    val q = StreamOps.scoreStream(df, model, minAvgMicro = batchAvg / 2)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("scored_out").start()
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    input.addData(
-      (t0, 1L, prose),                   // fully seen -> exact batch score
-      (t0, 2L, "zq xv qj vx jz wq kx"),  // OOV transitions -> gated
-      (t0, 3L, "THE  QUICK\tBROWN FOX")) // normalization folds case/ws
-    q.processAllAvailable()
-    val out = spark.table("scored_out")
-      .select($"doc_id", $"avg_micro").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    q.stop()
-    assert(out.keySet === Set(1L, 3L))
-    // parity: the streaming scorer reproduces the batch avg_micro
-    // exactly for a document whose bigrams were all seen in training
-    assert(out(1L) === batchAvg)
-  }
-
-  test("scoreStream parity holds on edge whitespace: Spark's trim " +
-    "strips spaces only, so a trailing newline scores one extra " +
-    "trailing-space bigram on BOTH sides") {
-    import spark.implicits._
-    val prose = "the quick brown fox jumps over the lazy dog again and again"
-    val corpus = (1L to 8L).map(i => (i, prose)).toDF("doc_id", "text")
-    val model = graft.operators.Curation.charLmModelMap(corpus)
-    // "\n" survives Spark trim and collapses to a trailing space —
-    // Java String.trim would strip it and diverge (the bug this pins)
-    val edgy = Seq((1L, prose + "\n"), (2L, "\t " + prose + " \r\n"))
-      .toDF("doc_id", "text")
-    // batch-side reference: the BATCH normalization chain (Spark trim +
-    // explicit whitespace-class collapse + charBigrams) scored under
-    // the SAME trained model the stream ships
-    val want = edgy.select($"doc_id", explode(
-      graft.functions.functions.charBigrams(
-        regexp_replace(lower(trim($"text")),
-          "[ \\t\\n\\x0B\\f\\r]+", " "))).as("g"))
-      .collect().groupBy(_.getLong(0)).map { case (id, rows) =>
-        val gs = rows.map(_.getString(1)).toSeq
-        id -> gs.map(g => model.getOrElse(g, 0L)).sum / gs.length
-      }
-    val got = StreamOps.scoreStream(edgy, model, minAvgMicro = 0L)
-      .select($"doc_id", $"avg_micro").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got === want,
-      "stream and batch scores must stay bit-equal on edge whitespace")
-  }
-
-  test("hllStream: 64-rows-per-group state converges to exactly the " +
-    "batch sketch of everything seen") {
+  test("Hll.registers on a stream: 64-rows-per-group state converges to " +
+    "exactly the batch sketch of everything seen") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, String)]
     val df = input.toDF().toDF("source", "word")
-    val q = StreamOps.hllStream(df, Seq("source"), "word")
+    val q = graft.operators.Hll.registers(df, Seq("source"), "word")
       .writeStream.outputMode("update")
       .format("memory").queryName("hll_out").start()
     val batch1 = (0 until 500).map(i => ("web", s"w$i")) ++
@@ -388,13 +47,13 @@ class StreamOpsSpec extends SparkSuite {
     assert(math.abs(est("books") - 200.0) / 200.0 < 0.4, est.toString)
   }
 
-  test("cmsStream: d*w-cells state converges to exactly the batch " +
-    "sketch of everything seen; live point estimates read off it") {
+  test("Cms.registers on a stream: d*w-cells state converges to exactly " +
+    "the batch sketch of everything seen; live point estimates read off it") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, String)]
     val df = input.toDF().toDF("g", "term")
-    val q = StreamOps.cmsStream(df, Seq("g"), "term")
+    val q = graft.operators.Cms.registers(df, Seq("g"), "term")
       .writeStream.outputMode("update")
       .format("memory").queryName("cms_out").start()
     val batch1 = Seq.fill(300)(("web", "hot")) ++
@@ -423,47 +82,15 @@ class StreamOpsSpec extends SparkSuite {
     assert(est >= 500L && est <= 700L, s"hot estimate $est")
   }
 
-  test("semanticIngestStream: paraphrase-level dedup against all vector " +
-    "history; sink sees exactly the appended survivors") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val idx = new graft.operators.CellIndex(spark,
-      java.nio.file.Files.createTempDirectory("sis-idx").toString)
-    idx.buildLearned(Seq(
-      0L -> Array(1f, 0f, 0f, 0f),
-      1L -> Array(0f, 0f, 1f, 0f)).toDF("vec_id", "embedding"),
-      k = 2, iters = 1)
-    val input = MemoryStream[(Long, Array[Float])]
-    val df = input.toDF().toDF("vec_id", "embedding")
-    val emitted = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val ckpt = java.nio.file.Files.createTempDirectory("sis-ckpt")
-    val q = StreamOps.semanticIngestStream(df, idx,
-      checkpointDir = ckpt.toString, thresholdMicro = 900000L) { (out, _) =>
-      emitted ++= out.select($"vec_id").collect().map(_.getLong(0))
-    }
-    // batch 1: a near-dup of history vector 0 (dropped) + a novel
-    // direction (appended)
-    input.addData((10L, Array(1f, 0.01f, 0f, 0f)),
-      (11L, Array(0f, 1f, 0f, 0f)))
-    q.processAllAvailable()
-    // batch 2: a near-dup of BATCH-1's survivor — caught against the
-    // history the previous micro-batch just appended — plus a novel one
-    input.addData((20L, Array(0.01f, 1f, 0f, 0f)),
-      (21L, Array(0f, 0f, 0f, 1f)))
-    q.processAllAvailable()
-    q.stop()
-    assert(emitted.sorted.toSeq === Seq(11L, 21L))
-  }
-
-  test("kmvStream: k-longs-per-group state converges to exactly the " +
-    "batch sketch of everything seen") {
+  test("Kmv.sketch on a stream: k-longs-per-group state converges to " +
+    "exactly the batch sketch of everything seen") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, String)]
     val df = input.toDF().toDF("g", "term")
     val latest =
       scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
-    val q = StreamOps.kmvStream(df, Seq("g"), "term", k = 16)
+    val q = graft.operators.Kmv.sketch(df, Seq("g"), "term", k = 16)
       .writeStream.outputMode("update")
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         b.collect().foreach(r =>
@@ -484,46 +111,6 @@ class StreamOpsSpec extends SparkSuite {
     assert(latest("a") === expected("a"))
     assert(latest("b") === expected("b"))
     assert(latest.values.forall(_.size <= 16), "state bounded at k")
-  }
-
-  test("scrubSpansWithHistory excises historical duplicate regions; " +
-    "fully-duplicated docs drop; novel docs pass untouched") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val df = input.toDF().toDF("doc_id", "text")
-    val grams = new graft.store.GramIndex(spark,
-      java.nio.file.Files.createTempDirectory("ssh-grams").toString,
-      w = 8, buckets = 8)
-    val emitted =
-      scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
-    val ckpt = java.nio.file.Files.createTempDirectory("ssh-ckpt")
-    val q = StreamOps.scrubSpansWithHistory(df, grams,
-      checkpointDir = ckpt.toString, minKeptTokens = 2) { (out, _) =>
-      emitted ++= out.select($"doc_id", $"n_kept", $"scrubbed_text")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    }
-    val run = (1 to 8).map(i => s"s$i").mkString(" ")
-    input.addData((1L, s"$run tail1 tail2 tail3"))
-    q.processAllAvailable()
-    // a much later micro-batch: a doc QUOTING the 8-run (region
-    // excised, novel head kept), a full copy of doc 1 (every position
-    // covered -> dropped), and a novel doc (untouched)
-    input.addData(
-      (2L, s"head1 head2 $run"),
-      (3L, s"$run tail1 tail2 tail3"),
-      (4L, "n1 n2 n3 n4 n5 n6 n7 n8 n9"))
-    q.processAllAvailable()
-    q.stop()
-    val byDoc = emitted.toList.groupBy(_._1)
-    assert(byDoc(1L) ===
-      List((1L, 11L, s"$run tail1 tail2 tail3")), "first copy untouched")
-    assert(byDoc(2L) === List((2L, 2L, "head1 head2")),
-      "quoted region excised, novel head kept")
-    assert(!byDoc.contains(3L), "full duplicate excised whole")
-    assert(byDoc(4L) === List((4L, 9L, "n1 n2 n3 n4 n5 n6 n7 n8 n9")))
-    // both batches registered their novel grams
-    assert(grams.grams.count() > 0)
   }
 
   // ---- curateAllWithHistory: gate + four history granularities -------
@@ -597,7 +184,8 @@ class StreamOpsSpec extends SparkSuite {
   private def curateProcess(st: CurateStores, rows: Seq[(Long, String,
       Array[Float])], kill: Option[String],
       gateDrops: scala.collection.mutable.ArrayBuffer[(Long, String)] =
-        scala.collection.mutable.ArrayBuffer.empty)
+        scala.collection.mutable.ArrayBuffer.empty,
+      boilerplate: Seq[String] = Seq.empty)
       : Seq[(Long, Long, String)] = {
     import spark.implicits._
     val out =
@@ -605,7 +193,7 @@ class StreamOpsSpec extends SparkSuite {
     StreamOps.curateAllBatch(
       rows.toDF("doc_id", "text", "embedding"),
       st.exact, st.near, st.grams, st.cell,
-      boilerplate = Seq.empty, minKeptTokens = 3,
+      boilerplate = boilerplate, minKeptTokens = 3,
       thresholdMicro = 900000L, nprobe = 1,
       gate = Some(CurateGate),
       gateSink = (gd, _) => gateDrops ++= gd.filter($"keep" === 0)
@@ -682,6 +270,50 @@ class StreamOpsSpec extends SparkSuite {
     assert(st.near.assignments.filter($"doc_id" === 11L)
       .select($"canonical_id").collect().map(_.getLong(0)).toSeq === Seq(1L))
     assert(st.cell.vectors.filter($"vec_id" === 13L).count() === 0)
+  }
+
+  test("curateAllBatch scrub head: blocklisted line, markup and " +
+    "decomposed Unicode are gone before the exact stage") {
+    val st = freshCurateStores()
+    // decomposed é (e + U+0301) wrapped in markup, plus a boilerplate line
+    val decomposed = "<p>the nice cafe\u0301 on the corner serves " +
+      "breakfast</p>\nSUBSCRIBE to our newsletter"
+    // the same text, composed (U+00E9), different markup: after strip +
+    // NFC the bytes are identical, so the fingerprint must collapse them
+    val composed = "<div>the nice caf\u00e9 on the corner serves " +
+      "breakfast</div>"
+    val block = Seq("SUBSCRIBE to our newsletter")
+    val first = curateProcess(st,
+      Seq((1L, decomposed, Array(1f, 0f, 0f, 0f))), None,
+      boilerplate = block)
+    assert(first === Seq(
+      (1L, 8L, "the nice caf\u00e9 on the corner serves breakfast")))
+    // a later batch: the composed spelling is a byte-exact repeat
+    val later = curateProcess(st,
+      Seq((2L, composed, Array(0f, 1f, 0f, 0f))), None,
+      boilerplate = block)
+    assert(later.isEmpty, s"composed spelling must dedup: $later")
+    assert(st.exact.fingerprints.count() === 1)
+  }
+
+  test("curateAllWithHistory refuses a negative maintenanceEvery before " +
+    "it writes a checkpoint") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val st = freshCurateStores()
+    val input = MemoryStream[(Long, String, Array[Float])]
+    val ckpt = java.nio.file.Files.createTempDirectory("cah-neg")
+      .resolve("checkpoint")
+    val e = intercept[IllegalArgumentException] {
+      StreamOps.curateAllWithHistory(
+        input.toDF().toDF("doc_id", "text", "embedding"),
+        st.exact, st.near, st.grams, st.cell, boilerplate = Seq.empty,
+        checkpointDir = ckpt.toString,
+        maintenanceEvery = -1) { (_, _) => () }.stop()
+    }
+    assert(e.getMessage.contains("maintenanceEvery"))
+    assert(!java.nio.file.Files.exists(ckpt),
+      "nothing may be written for a refused configuration")
   }
 
   test("curateAllWithHistory kill-point matrix: a crash between ANY two " +
@@ -830,8 +462,8 @@ class StreamOpsSpec extends SparkSuite {
       s"maintainAll must prune expired generations: ${st.cell.stats()}")
   }
 
-  test("curateAllWithHistory warmOnStart + maintenanceEvery fire " +
-    "through the streaming entry; 'maintain' lands on onStage") {
+  test("curateAllWithHistory maintenanceEvery fires through the " +
+    "streaming entry; 'maintain' lands on onStage") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val st = freshCurateStores()
@@ -844,8 +476,7 @@ class StreamOpsSpec extends SparkSuite {
       st.grams, st.cell, boilerplate = Seq.empty,
       checkpointDir = ckpt.toString, minKeptTokens = 3,
       thresholdMicro = 900000L, gate = Some(CurateGate),
-      onStage = stages += _, warmOnStart = true,
-      maintenanceEvery = 1) { (out, _) =>
+      onStage = stages += _, maintenanceEvery = 1) { (out, _) =>
       emitted ++= out.select($"doc_id").collect().map(_.getLong(0))
     }
     input.addData(curateSeed: _*)
@@ -860,46 +491,14 @@ class StreamOpsSpec extends SparkSuite {
       "maintenance runs AFTER the sink")
   }
 
-  test("qualityGateStream: per-batch gate matches the batch operator " +
-    "exactly; sink sees keeps and drops with reasons") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val df = input.toDF().toDF("doc_id", "text")
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, String)]
-    val ckpt = java.nio.file.Files.createTempDirectory("qgs-ckpt")
-    val q = StreamOps.qualityGateStream(df, ckpt.toString,
-      GateConfig(minWords = 3L, maxWords = 500L)) { (out, _) =>
-      got ++= out.select($"doc_id", $"keep", $"reasons").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
-    }
-    val rows = Seq(
-      (1L, "the results have been consistent with the plan and that " +
-        "is to be expected of the data"),
-      (2L, "too short"),
-      (3L, ("the data of note " * 20).trim))
-    input.addData(rows: _*)
-    q.processAllAvailable()
-    q.stop()
-    val want = graft.operators.Curation.qualityGate(
-      rows.toDF("doc_id", "text"), minWords = 3L, maxWords = 500L)
-      .select($"doc_id", $"keep", $"reasons").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq
-    assert(got.sortBy(_._1).toSeq === want.sortBy(_._1),
-      "stream gate must equal the batch gate row for row")
-    assert(got.exists(r => r._1 == 1L && r._2 == 1))
-    assert(got.exists(r => r._1 == 2L && r._3.contains("too_few_words")))
-    assert(got.exists(r => r._1 == 3L && r._3.contains("repetition")))
-  }
-
   test("streaming leak gate: gate/exact/near-dup/span/semantic drains " +
     "leave no persisted non-checkpoint frames") {
     // VERDICT r12 #4: LeakFreeBatterySpec covers the 121 BATCH queries,
     // but the r12 leak find (winnowPairs' corpus-order checkpoint) was
-    // in operator code reached via STREAMING. Drain each pipeline entry
-    // point, then assert the LeakFreeBatterySpec contract: after stop(),
-    // getPersistentRDDs may hold only locally-checkpointed blocks (the
-    // sanctioned frame-freezing tool, reclaimed by the ContextCleaner);
+    // in operator code reached via STREAMING. Drain the five-stage
+    // curation loop, then assert the LeakFreeBatterySpec contract: after
+    // stop(), getPersistentRDDs may hold only locally-checkpointed blocks
+    // (the sanctioned frame-freezing tool, reclaimed by the ContextCleaner);
     // a bare .persist() surviving a drain is a leak that lives until
     // the streaming driver dies — days, at 1000-executor scale.
     import spark.implicits._
@@ -919,52 +518,8 @@ class StreamOpsSpec extends SparkSuite {
       java.nio.file.Files.createTempDirectory(p).toString
 
     cleanSlate()
-    locally { // gate
-      val input = MemoryStream[(Long, String)]
-      val q = StreamOps.qualityGateStream(
-        input.toDF().toDF("doc_id", "text"), ckpt("leak-gate"),
-        CurateGate) { (out, _) => out.count(); () }
-      input.addData((1L, CurateBase), (2L, "tiny"))
-      q.processAllAvailable(); q.stop()
-      assertNoLeak("gate")
-    }
-
-    cleanSlate()
-    locally { // exact history
-      val input = MemoryStream[(java.sql.Timestamp, Long, String, String)]
-      val idx = new graft.store.FingerprintIndex(spark,
-        ckpt("leak-fp"), buckets = 8)
-      val q = StreamOps.curateWithHistory(
-        input.toDF().toDF("ts", "doc_id", "text", "lang"), idx,
-        boilerplate = Seq.empty, checkpointDir = ckpt("leak-fp-ck"),
-        minWords = 3) { (out, _) => out.count(); () }
-      val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-      input.addData((t0, 1L, CurateBase, "en"), (t0, 2L, CurateBase, "en"))
-      q.processAllAvailable(); q.stop()
-      assertNoLeak("exact")
-    }
-
-    cleanSlate()
-    locally { // near-dup history
-      val input = MemoryStream[(java.sql.Timestamp, Long, String, String)]
-      val exact = new graft.store.FingerprintIndex(spark,
-        ckpt("leak-nd-fp"), buckets = 8)
-      val near = new graft.store.NearDupIndex(spark,
-        ckpt("leak-nd"), buckets = 8)
-      val q = StreamOps.curateWithNearDupHistory(
-        input.toDF().toDF("ts", "doc_id", "text", "lang"), exact, near,
-        boilerplate = Seq.empty, checkpointDir = ckpt("leak-nd-ck"),
-        minWords = 3) { (out, _) => out.count(); () }
-      val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-      input.addData((t0, 1L, CurateBase, "en"),
-        (t0, 2L, CurateBase.replace("fox", "zesty"), "en"))
-      q.processAllAvailable(); q.stop()
-      assertNoLeak("near-dup")
-    }
-
-    cleanSlate()
-    locally { // span + semantic (the full five-stage pipeline, with the
-      // between-batch maintenance sweep — compaction must not pin either)
+    locally { // the full five-stage pipeline, with the between-batch
+      // maintenance sweep — compaction must not pin either
       val st = freshCurateStores()
       val input = MemoryStream[(Long, String, Array[Float])]
       val q = StreamOps.curateAllWithHistory(
@@ -978,7 +533,7 @@ class StreamOpsSpec extends SparkSuite {
       input.addData(curateVictim: _*)
       q.processAllAvailable()
       q.stop()
-      assertNoLeak("span+semantic")
+      assertNoLeak("five-stage")
     }
     cleanSlate()
   }

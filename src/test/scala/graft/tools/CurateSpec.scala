@@ -297,4 +297,17 @@ class CurateSpec extends SparkSuite {
     assert(dirs === Seq("batch=0", "batch=aaaa-legacy-uuid"),
       s"the uuid-era output must survive the new generation: $dirs")
   }
+
+  test("--maintenance-every=-1 is refused before the stream writes its " +
+    "checkpoint: the help text says 0 disables, a negative is no value") {
+    val in = tmpDir("curate-neg-in")
+    val root = tmpDir("curate-neg-root")
+    val cfg = Curate.parseConfig(Array(in, "--once", s"--root=$root",
+      "--maintenance-every=-1"))
+    assert(cfg.maintenanceEvery === -1)
+    val e = intercept[IllegalArgumentException] { Curate.run(spark, cfg) }
+    assert(e.getMessage.contains("maintenanceEvery"), e.getMessage)
+    assert(!new java.io.File(s"$root/curate/checkpoint").exists,
+      "a refused start must leave no checkpoint behind")
+  }
 }
