@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.store.{Fs, ManifestLog, RenameCommitter}
+import graft.store.{Fs, ManifestLog, ManifestedStore}
 
 /** IVF index materialized as cell-partitioned storage: vectors live in a
   * parquet table partitioned by cell id, centroids in a small side table.
@@ -16,71 +16,57 @@ import graft.store.{Fs, ManifestLog, RenameCommitter}
   * nprobe=8, a query batch touches 0.2% of the data; this layout is the
   * difference between an index and a full scan per batch.
   *
-  * The index is VERSIONED: every build lands in a fresh generation
-  * directory (`gen-XXXX/{vectors,centroids,codes,codebooks}`), made
-  * visible by committing a pointer file (`gen/vNNNNNNNNNN.txt`) through
-  * the same rename-as-commit CAS the manifested tables use
-  * ([[RenameCommitter]] — at most one writer wins a version). Readers
-  * resolve the highest committed pointer once per operation, so a
-  * concurrent [[retrain]] is invisible until its generation is complete
-  * and published — they see the old index or the new one, never a mix.
-  * A build that dies mid-write leaves an unreferenced directory (garbage
-  * to collect, never corruption).
+  * The index is VERSIONED: every build lands in a fresh generation dir
+  * (`data/<dir>/{vectors,centroids,codes,codebooks}`), made visible by
+  * committing a [[ManifestLog]] version whose one cell points at it —
+  * the replace-style snapshot [[graft.store.ClusterStore]] publishes,
+  * through the same commit CAS and retry loop, which also vacuums the
+  * generations past `keepVersions`. Readers resolve the current version
+  * once per operation, so a concurrent [[retrain]] is invisible until
+  * its generation is complete and published — they see the old index or
+  * the new one, never a mix. A build that dies mid-write leaves an
+  * unreferenced dir (garbage for [[vacuumOrphans]], never corruption).
   */
-final class CellIndex(spark: SparkSession, path: String) {
+final class CellIndex(spark: SparkSession, path: String,
+    keepVersions: Int = 3) extends ManifestedStore {
 
   // ───────────────────────── generation plumbing ─────────────────────────
 
-  private val committer = new RenameCommitter(spark, path)
-  private def genManifest = new Path(path, "gen")
+  protected val log = new ManifestLog(spark, path, keepVersions)
 
-  /** Committed generation pointers, version-ordered. Dot-temps from an
-    * in-flight commit never match the name pattern. */
-  private def committedVersions: Seq[(Long, Path)] = {
+  {
+    // the layout before the manifest log: pointer files under gen/ naming
+    // gen-XXXX dirs beside them, which this index no longer reads —
+    // reading it as an unbuilt index would hide every stored vector
     val f = Fs.fs(spark, path)
-    if (!f.exists(genManifest)) Nil
-    else f.listStatus(genManifest).toSeq.map(_.getPath)
-      .filter(_.getName.matches("v\\d{10}\\.txt"))
-      .map(p => (p.getName.stripPrefix("v").stripSuffix(".txt").toLong, p))
-      .sortBy(_._1)
-  }
-
-  /** The generation dir name a pointer file references. */
-  private def genOf(p: Path): String = {
-    val in = Fs.fs(spark, path).open(p)
-    try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8).trim
-    finally in.close()
+    if (f.exists(new Path(path, "gen")) &&
+        !f.exists(new Path(path, "manifests")))
+      throw new IllegalStateException(
+        s"$path holds a CellIndex in the generation-pointer layout (gen/) " +
+          "and no manifests/: this layout is no longer read; rebuild the " +
+          "index from its vectors into a fresh path")
   }
 
   /** Root of the CURRENT generation (falls back to `path` itself before
     * the first commit, so a not-yet-built index fails with the usual
-    * path-not-found, not a pointer error). Resolved ONCE at the start of
-    * every operation that reads more than one table, so vectors /
-    * centroids / codes / codebooks always come from the same generation
-    * even while a retrain swaps the pointer underneath. */
-  private def root: String = {
-    val vs = committedVersions
-    if (vs.isEmpty) path
-    else s"$path/${genOf(vs.last._2)}"
+    * path-not-found). Resolved ONCE at the start of every operation that
+    * reads more than one table, so vectors / centroids / codes /
+    * codebooks always come from the same generation even while a retrain
+    * publishes another. */
+  private def root: String = log.resolve() match {
+    case Some((_, entries)) =>
+      log.dataPath(entries(CellIndex.GenCell).head).toString
+    case None => path
   }
 
-  /** Publish `gen` as the next version: bump past the current tip until
-    * this writer's CAS lands. A racing publisher can slot in first — both
-    * generations are complete and self-consistent, last committed wins. */
-  private def commitGen(gen: String): Unit = {
-    val bytes = gen.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var v = committedVersions.lastOption.map(_._1).getOrElse(0L) + 1L
-    while (!committer.putIfAbsent(
-      new Path(genManifest, f"v$v%010d.txt"), bytes)) v += 1
-  }
-
-  /** Build into a fresh generation directory, then commit the pointer —
-    * the write-everything-then-swap discipline every build path shares. */
+  /** Build into a fresh generation dir, then publish it as the next
+    * version — the write-everything-then-swap discipline every build
+    * path shares. A racing publisher can slot in first: both generations
+    * are complete and self-consistent, and the last committed wins. */
   private def publishGen(body: String => Unit): Unit = {
-    val gen = "gen-" + java.util.UUID.randomUUID().toString.take(8)
-    body(s"$path/$gen")
-    commitGen(gen)
+    val gen = log.freshDir(tag = "gen")
+    body(log.dataPath(gen).toString)
+    log.commitRetry(_ => Map(CellIndex.GenCell -> Seq(gen)))
   }
 
   // ─────────────────────────────── builds ───────────────────────────────
@@ -283,10 +269,10 @@ final class CellIndex(spark: SparkSession, path: String) {
   /** Re-train on the CURRENT stored corpus — a learned coarse quantizer
     * at the same cell count, plus PQ codebooks at the same (m, k) when
     * the PQ half exists — into a fresh generation, atomically published
-    * via the version-pointer CAS. Readers resolve the pointer per
-    * operation: they see the old generation until the new one is
-    * complete, never a mix. (A labeled index retrains into a LEARNED
-    * one: retraining is by definition a quantizer fit.) */
+    * as the next version. Readers resolve the version per operation:
+    * they see the old generation until the new one is complete, never a
+    * mix. (A labeled index retrains into a LEARNED one: retraining is by
+    * definition a quantizer fit.) */
   def retrain(iters: Int = 2): Unit = {
     val r = root
     val emb = spark.read.parquet(r + "/vectors").drop("cell")
@@ -301,11 +287,6 @@ final class CellIndex(spark: SparkSession, path: String) {
       pqShape.foreach { case (m, kPq) => buildPqInto(g, m, kPq, iters) }
     }
   }
-
-  /** Whether any generation has been committed — the "do I need a
-    * bootstrap build?" probe a front-door wiring uses (the other index
-    * families expose the same `exists` via their manifest log). */
-  def exists: Boolean = committedVersions.nonEmpty
 
   /** Pre-touch the current generation's filesystem metadata: walk every
     * table dir and read every parquet footer, driver-side, no data
@@ -338,14 +319,13 @@ final class CellIndex(spark: SparkSession, path: String) {
 
   // ────────────────────────── store maintenance ─────────────────────────
 
-  /** Index economics from filesystem METADATA only (no data scan), the
-    * [[graft.store.GramIndex.stats]] contract for the one store family
-    * that versions by generation pointer instead of manifest: committed
-    * generations, the CURRENT generation's cell count, per-table parquet
-    * file counts and bytes, and the worst per-cell file fan-out — the
-    * gauge [[compactIfNeeded]] consults. Every [[append]] adds one file
-    * per touched cell (two with the PQ half), so a long append stream
-    * fragments cell dirs exactly like gram buckets. */
+  /** Index economics from filesystem METADATA only (no data scan):
+    * retained generations, the CURRENT generation's cell count,
+    * per-table parquet file counts and bytes, and the worst per-cell
+    * file fan-out — the gauge [[compactIfNeeded]] consults. Every
+    * [[append]] adds one file per touched cell (two with the PQ half),
+    * so a long append stream fragments cell dirs exactly like gram
+    * buckets. */
   def stats(): CellIndex.Stats = {
     val f = Fs.fs(spark, path)
     val r = root
@@ -368,17 +348,17 @@ final class CellIndex(spark: SparkSession, path: String) {
     }
     val (vCells, vFiles, vBytes, vWorst) = leafStats("vectors")
     val (_, cFiles, cBytes, cWorst) = leafStats("codes")
-    CellIndex.Stats(committedVersions.size, vCells, vFiles, vBytes,
+    CellIndex.Stats(log.versions.size, vCells, vFiles, vBytes,
       cFiles, cBytes, math.max(vWorst, cWorst))
   }
 
   /** Rewrite the current generation's fragmented cell dirs into
     * `filesPerCell` files per cell — vectors and, when materialized,
-    * codes — into a FRESH generation published through the pointer CAS.
+    * codes — into a FRESH generation published like a build.
     * The trained quantizer, PQ codebooks, and drift baseline are carried
     * over verbatim: compaction is a layout rewrite, never a retrain, so
     * probe routing and ADC answers are bit-identical before and after.
-    * Readers are safe at any moment (they resolve the pointer once per
+    * Readers are safe at any moment (they resolve the version once per
     * operation and see old or new, never a mix); WRITERS share the
     * single-writer discipline [[append]]/[[retrain]] already require —
     * schedule compaction from the appending driver between batches,
@@ -430,58 +410,6 @@ final class CellIndex(spark: SparkSession, path: String) {
     val s = stats()
     if (s.maxFilesPerCell > maxFilesPerCell) compactWith(s, filesPerCell)
     else 0
-  }
-
-  /** Drop generation pointers beyond the `keepVersions` most recent,
-    * then the generation dirs ONLY those expired pointers referenced
-    * (minus any a retained pointer still references) — the
-    * [[graft.store.ManifestLog.vacuum]] discipline: an in-flight
-    * build's dir is referenced by NO pointer yet and is never touched;
-    * a retained pointer that cannot be read aborts the vacuum rather
-    * than risk sweeping live data. Returns the reclaimed dir names. */
-  def vacuum(keepVersions: Int = 3): Seq[String] = {
-    require(keepVersions >= 1, "keepVersions must be >= 1")
-    val f = Fs.fs(spark, path)
-    val vs = committedVersions
-    val retained = vs.takeRight(keepVersions)
-    val expired = vs.dropRight(keepVersions)
-    if (expired.isEmpty) return Nil
-    val alive =
-      try retained.map(v => genOf(v._2)).toSet
-      catch { case scala.util.control.NonFatal(_) => return Nil }
-    val expiredRefs = expired.map { case (_, p) =>
-      p -> scala.util.Try(genOf(p)).toOption
-    }
-    val dead = expiredRefs.flatMap(_._2).toSet -- alive
-    // data before pointers: a crash in between re-runs idempotently
-    dead.foreach(g => f.delete(new Path(path, g), true))
-    expiredRefs.collect { case (p, Some(_)) => p }
-      .foreach(p => f.delete(p, false))
-    dead.toSeq.sorted
-  }
-
-  /** Offline reclamation of crashed-build leftovers: generation dirs no
-    * pointer references, last modified more than `olderThanMs` ago (the
-    * age guard keeps an in-flight build safe — its dir is fresh). Same
-    * contract as [[graft.store.ManifestLog.vacuumOrphans]]. */
-  def vacuumOrphans(olderThanMs: Long): Seq[String] = {
-    val f = Fs.fs(spark, path)
-    // ANY unreadable pointer aborts the sweep: treating a transient
-    // read failure as "references nothing" would make the LIVE
-    // generation look orphaned — and the age guard cannot save it,
-    // because a committed generation's dir is old by construction
-    val referenced =
-      try committedVersions.map(v => genOf(v._2)).toSet
-      catch { case scala.util.control.NonFatal(_) => return Nil }
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    val orphans = f.listStatus(new Path(path)).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("gen-") &&
-        !referenced.contains(st.getPath.getName) &&
-        st.getModificationTime < cutoff)
-      .map(_.getPath.getName)
-    orphans.foreach(g => f.delete(new Path(path, g), true))
-    orphans
   }
 
   // ─────────────────────────────── reads ────────────────────────────────
@@ -831,6 +759,9 @@ final class CellIndex(spark: SparkSession, path: String) {
 }
 
 object CellIndex {
+  /** The one manifest cell: it lists the current generation's dir. */
+  private val GenCell = "generation"
+
   /** Filesystem-level index economics; see [[CellIndex.stats]]. */
   final case class Stats(generations: Int, cells: Int,
       vectorFiles: Long, vectorBytes: Long,

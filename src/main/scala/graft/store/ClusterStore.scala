@@ -20,7 +20,8 @@ import org.apache.spark.sql.types._
   * reading the superseded dirs — retained for `keepVersions` manifest
   * versions — and one that resolves after sees the new snapshot; no
   * interleaving is observable because the swap is one manifest-file CAS
-  * ([[ManifestLog.tryCommit]]).
+  * ([[ManifestLog.commitRetry]], which also vacuums the versions past
+  * `keepVersions`).
   *
   * Staleness is DETECTABLE, not silent: every snapshot records the
   * `sourceId` the clustering was derived from (a source-table snapshot
@@ -37,21 +38,17 @@ import org.apache.spark.sql.types._
 final class ClusterStore(spark: SparkSession, path: String,
     buckets: Int = 16,
     keepVersions: Int = 3,
-    committer: Option[ManifestCommitter] = None) {
+    committer: Option[ManifestCommitter] = None) extends ManifestedStore {
 
   require(buckets >= 1, s"buckets must be >= 1, got $buckets")
 
-  private val log = new ManifestLog(spark, path, keepVersions, committer)
-  private lazy val f = Fs.fs(spark, path)
-
-  def exists: Boolean = log.hasAny
+  protected val log = new ManifestLog(spark, path, keepVersions, committer)
 
   /** Publish `assignments` (doc_id, cluster_id — extra columns are
     * dropped) as the next snapshot, recording `sourceId` alongside.
     * Returns the committed manifest version. */
   def write(assignments: DataFrame, sourceId: String): Long = {
-    val dirName = log.newDataDirName(
-      log.currentVersion.getOrElse(0L) + 1, tag = "snap")
+    val dirName = log.freshDir(tag = "snap")
     assignments
       .select(col("doc_id").cast("long").as("doc_id"),
         col("cluster_id").cast("long").as("cluster_id"))
@@ -63,7 +60,7 @@ final class ClusterStore(spark: SparkSession, path: String,
     // the source marker lives INSIDE the immutable data dir, written
     // before the commit — it becomes visible exactly when the snapshot
     // does, and can never describe a different snapshot's data
-    val out = f.create(new Path(log.dataPath(dirName), "source.txt"), true)
+    val out = log.f.create(new Path(log.dataPath(dirName), "source.txt"), true)
     try out.write(sourceId.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     val found = log.listCells(dirName, ClusterStore.LevelPrefixes)
@@ -98,17 +95,12 @@ final class ClusterStore(spark: SparkSession, path: String,
   def sourceId: Option[String] =
     log.resolve().flatMap { case (_, entries) =>
       entries.values.flatten.toSeq.distinct.sorted.headOption.map { dir =>
-        val in = f.open(new Path(log.dataPath(dir), "source.txt"))
+        val in = log.f.open(new Path(log.dataPath(dir), "source.txt"))
         try new String(in.readAllBytes(),
           java.nio.charset.StandardCharsets.UTF_8)
         finally in.close()
       }
     }
-
-  /** See [[ManifestLog.vacuum]] / [[ManifestLog.vacuumOrphans]]. */
-  def vacuum(): Unit = log.vacuum()
-  def vacuumOrphans(olderThanMs: Long): Seq[String] =
-    log.vacuumOrphans(olderThanMs)
 
   private[store] def currentVersion: Option[Long] = log.currentVersion
 }

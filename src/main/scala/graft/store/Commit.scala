@@ -1,13 +1,13 @@
 package graft.store
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The commit CAS seam: atomically publish `bytes` at `target` iff no
   * file with that name exists yet, returning whether THIS caller won.
   *
-  * Every manifested table ([[LatestStore]], [[RecordStore]],
-  * [[WorkIdIndex]]) funnels its manifest commit through this trait, so
+  * Every [[ManifestLog]] (so every versioned store) funnels its
+  * manifest commit through this trait, so
   * the concurrency story lives in exactly one place. The reference gets
   * the same guarantee from a DynamoDB conditional put
   * (`storage.py:78-137`: `put_item` with an attribute-not-exists
@@ -22,6 +22,22 @@ import org.apache.spark.sql.SparkSession
   */
 trait ManifestCommitter {
   def putIfAbsent(target: Path, bytes: Array[Byte]): Boolean
+}
+
+object ManifestCommitter {
+  /** Write `bytes` to a writer-unique dot-temp beside `target` and return
+    * it. The nonce keeps racing writers from overwriting each other's
+    * staged bytes; the leading dot keeps the temp out of every listing
+    * that matches manifest names. */
+  private[store] def stage(f: FileSystem, target: Path,
+      bytes: Array[Byte]): Path = {
+    val tmp = new Path(target.getParent,
+      "." + target.getName + "." +
+        java.util.UUID.randomUUID().toString.take(8) + ".tmp")
+    val out = f.create(tmp, true)
+    try out.write(bytes) finally out.close()
+    tmp
+  }
 }
 
 /** Default committer: write to a writer-unique dot-temp, then, under a
@@ -57,11 +73,7 @@ final class RenameCommitter(spark: SparkSession, tablePath: String)
   private lazy val f = Fs.fs(spark, tablePath)
 
   def putIfAbsent(target: Path, bytes: Array[Byte]): Boolean = {
-    val tmp = new Path(target.getParent,
-      "." + target.getName + "." +
-        java.util.UUID.randomUUID().toString.take(8) + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(bytes) finally out.close()
+    val tmp = ManifestCommitter.stage(f, target, bytes)
     // delete the staged temp on EVERY non-success path, including a
     // rename that throws (a transient IOException used to propagate
     // past the cleanup, leaving one orphaned .tmp per retried attempt
@@ -177,11 +189,7 @@ final class ConditionalPutCommitter(
     * fine iff the target exists (a concurrent completer landed the same
     * bytes first). */
   private def publish(target: Path, bytes: Array[Byte]): Unit = {
-    val tmp = new Path(target.getParent,
-      "." + target.getName + "." +
-        java.util.UUID.randomUUID().toString.take(8) + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(bytes) finally out.close()
+    val tmp = ManifestCommitter.stage(f, target, bytes)
     if (!f.rename(tmp, target)) {
       f.delete(tmp, false)
       if (!f.exists(target))

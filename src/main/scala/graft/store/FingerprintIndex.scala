@@ -56,46 +56,32 @@ final class FingerprintIndex(spark: SparkSession, path: String,
     keepVersions: Int = 3,
     committer: Option[ManifestCommitter] = None,
     bloomMaxKeys: Long = 4000000L,
-    bloomMinHistoryRatio: Long = 8L) {
+    bloomMinHistoryRatio: Long = 8L) extends ManifestedStore {
 
   require(buckets >= 1, s"buckets must be >= 1, got $buckets")
   require(bloomMaxKeys >= 0, s"bloomMaxKeys must be >= 0, got $bloomMaxKeys")
   require(bloomMinHistoryRatio >= 0,
     s"bloomMinHistoryRatio must be >= 0, got $bloomMinHistoryRatio")
 
-  private val log = new ManifestLog(spark, path, keepVersions, committer)
-  private lazy val f = Fs.fs(spark, path)
+  protected val log = new ManifestLog(spark, path, keepVersions, committer)
 
   private def bucketCol(fp: org.apache.spark.sql.Column) =
     pmod(conv(substring(fp, 1, 8), 16, 10).cast("long"), lit(buckets))
       .cast("int")
 
-  private def bucketsMarker = new Path(path, "_buckets")
-
   /** Persist-or-validate the bucket count: the stored partitioning is
     * only consultable with the modulus it was written under. */
-  private def ensureBuckets(): Unit = {
-    val stored = Fs.ensureMarker(f, bucketsMarker, buckets.toString)
-    require(stored.toInt == buckets,
+  private def ensureBuckets(): Unit =
+    Fs.requireMarker(log.f, new Path(path, "_buckets"), buckets.toString) {
+      stored =>
       s"index at $path was created with $stored buckets; opened with " +
         s"$buckets — the pruned history scan would miss matching " +
-        "partitions")
-  }
-
-  private def requireIntegralId(batch: DataFrame, idCol: String): Unit =
-    batch.schema(idCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => ()
-      case t => throw new IllegalArgumentException(
-        s"idCol '$idCol' must be an integral type, got $t — a lossy " +
-          "cast would register null owners and permanently suppress " +
-          "content without emitting it")
+        "partitions"
     }
 
   private def requireNoCollisions(batch: DataFrame, cols: Seq[String]): Unit =
     cols.foreach(c => require(!batch.columns.contains(c),
       s"input column '$c' collides with a FingerprintIndex working column"))
-
-  def exists: Boolean = log.hasAny
 
   /** Pre-touch the live snapshot's filesystem metadata — list every
     * cell leaf and read every parquet footer, driver-side, no data
@@ -159,7 +145,7 @@ final class FingerprintIndex(spark: SparkSession, path: String,
   def ingest(batch: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     requireNoCollisions(batch, Seq("__fp", "__bucket", "__min_id"))
-    requireIntegralId(batch, idCol)
+    FingerprintIndex.requireIntegralId(batch, idCol)
     ensureBuckets()
     val withFp = batch
       .filter(col(textCol).isNotNull)
@@ -195,16 +181,15 @@ final class FingerprintIndex(spark: SparkSession, path: String,
           .select(col("fp").as("__fp"))
         canon.join(existing, Seq("__fp"), "left_anti")
     }
-    val dirName = log.newDataDirName(log.currentVersion.getOrElse(0L) + 1)
-    newDocs
-      .select(col("__fp").as("fp"), col(idCol).cast("long").as("doc_id"),
-        col("__bucket").as("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(log.dataPath(dirName).toString)
-    val cells = log.listCells(dirName, FingerprintIndex.LevelPrefixes)
-    if (cells.isEmpty) f.delete(log.dataPath(dirName), true)
-    else log.commitRetry(RecordStore.appendMutate(cells, dirName))
+    log.append() { dir =>
+      newDocs
+        .select(col("__fp").as("fp"), col(idCol).cast("long").as("doc_id"),
+          col("__bucket").as("bucket"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("bucket")
+        .parquet(log.dataPath(dir).toString)
+      log.listCells(dir, FingerprintIndex.LevelPrefixes)
+    }
     newDocs.drop("__fp", "__bucket")
   }
 
@@ -249,71 +234,52 @@ final class FingerprintIndex(spark: SparkSession, path: String,
       .drop("__fp")
   }
 
-  /** Rewrite fragmented bucket cells (those whose live file count
-    * exceeds `filesPerPartition`) into fresh single-dir cells,
+  /** Rewrite fragmented bucket cells through [[ManifestLog.compact]],
     * collapsing any racing-writer duplicate fingerprints to the min
-    * doc_id on the way — the same OPTIMIZE-style maintenance as
-    * [[RecordStore.compact]], sharing its race-yielding commit
-    * transform. Micro-batch ingestion needs this periodically: every
-    * commit adds one data dir, and snapshot reads list and open one more
-    * file per touched cell. Returns the number of cells rewritten. */
-  def compact(filesPerPartition: Int = 1): Int = {
-    require(filesPerPartition >= 1, "filesPerPartition must be >= 1")
-    val resolved = log.resolve()
-    if (resolved.isEmpty) return 0
-    val (_, snapshot) = resolved.get
-    val fragmented = snapshot.filter { case (cell, dirs) =>
-      dirs.map(log.leafFiles(_, cell).length).sum > filesPerPartition
+    * doc_id on the way. Micro-batch ingestion needs this periodically:
+    * every commit adds one data dir, and snapshot reads list and open
+    * one more file per touched cell. Returns the number of cells
+    * rewritten. */
+  def compact(filesPerPartition: Int = 1): Int =
+    log.compact(filesPerPartition) { (fragmented, dir) =>
+      log.readEntries(fragmented, FingerprintIndex.schema)
+        .groupBy(col("fp"), col("bucket"))
+        .agg(min(col("doc_id")).as("doc_id"))
+        .withColumn("__salt", pmod(xxhash64(col("fp")), lit(filesPerPartition)))
+        .repartition(math.max(fragmented.size * filesPerPartition, 1),
+          col("bucket"), col("__salt"))
+        // fp-sorted row groups let the anti-join's parquet scan skip by
+        // min/max when Spark pushes fp equality sets down
+        .sortWithinPartitions(col("fp"))
+        .drop("__salt")
+        .select(col("fp"), col("doc_id"), col("bucket"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("bucket")
+        .parquet(log.dataPath(dir).toString)
     }
-    if (fragmented.isEmpty) return 0
-    val newDir = log.newDataDirName(
-      log.currentVersion.getOrElse(0L) + 1, tag = "compact")
-    log.readEntries(fragmented, FingerprintIndex.schema)
-      .groupBy(col("fp"), col("bucket"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .withColumn("__salt", pmod(xxhash64(col("fp")), lit(filesPerPartition)))
-      .repartition(math.max(fragmented.size * filesPerPartition, 1),
-        col("bucket"), col("__salt"))
-      // fp-sorted row groups let the anti-join's parquet scan skip by
-      // min/max when Spark pushes fp equality sets down
-      .sortWithinPartitions(col("fp"))
-      .drop("__salt")
-      .select(col("fp"), col("doc_id"), col("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(log.dataPath(newDir).toString)
-    @volatile var yielded = Set.empty[String]
-    log.commitRetry { current =>
-      val (entries, y) =
-        RecordStore.compactMutate(snapshot, fragmented.keySet, newDir)(current)
-      yielded = y
-      entries
-    }
-    if (yielded.size == fragmented.size)
-      f.delete(log.dataPath(newDir), true)
-    fragmented.size - yielded.size
-  }
 
   /** Index economics from filesystem metadata only (no data scan) —
     * see [[ManifestLog.storeStats]]. */
   def stats(): ManifestLog.StoreStats = log.storeStats()
 
-  /** Run [[compact]] only once live data dirs exceed `maxLiveDirs` —
-    * the [[GramIndex.compactIfNeeded]] scheduling policy; cheap to call
-    * after every ingest. */
-  def compactIfNeeded(maxLiveDirs: Int = 8,
-      filesPerPartition: Int = 1): Int = {
-    require(maxLiveDirs >= 1, "maxLiveDirs must be >= 1")
-    if (stats().liveDirs > maxLiveDirs) compact(filesPerPartition) else 0
-  }
-
-  /** See [[ManifestLog.vacuum]] / [[ManifestLog.vacuumOrphans]]. */
-  def vacuum(): Unit = log.vacuum()
-  def vacuumOrphans(olderThanMs: Long): Seq[String] =
-    log.vacuumOrphans(olderThanMs)
+  /** [[compact]] on the [[ManifestLog.compactIfNeeded]] schedule. */
+  def compactIfNeeded(maxLiveDirs: Int = 8, filesPerPartition: Int = 1): Int =
+    log.compactIfNeeded(maxLiveDirs)(compact(filesPerPartition))
 }
 
 object FingerprintIndex {
+  /** Refuses a non-integral `idCol`: a lossy cast to BIGINT would
+    * register null owners and permanently suppress content without
+    * emitting it. Every dedup store keyed by document id checks this. */
+  private[store] def requireIntegralId(batch: DataFrame, idCol: String): Unit =
+    batch.schema(idCol).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => ()
+      case t => throw new IllegalArgumentException(
+        s"idCol '$idCol' must be an integral type, got $t — a lossy " +
+          "cast would register null owners and permanently suppress " +
+          "content without emitting it")
+    }
+
   /** Committed fingerprint rows for the bloom ratio gate:
     * footer-derived ([[ManifestLog.rowCount]], cached per immutable
     * dir), falling back to bytes ÷ [[BytesPerFpRow]] only when footers

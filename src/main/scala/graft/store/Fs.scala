@@ -47,15 +47,43 @@ private[graft] object Fs {
   def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path))
 
-  /** Read-or-create a small exclusive config marker, returning the
-    * stored content (existing, or `want` if this caller created it) —
-    * the persist-or-validate discipline every bucketed store pins its
-    * layout parameters with. Two racing creators resolve through the
-    * exclusive create (the loser re-reads the winner's value); a
-    * PERSISTENT create failure (read-only filesystem, permissions)
-    * surfaces after a bounded number of attempts instead of recursing
-    * until StackOverflowError. */
-  def ensureMarker(f: FileSystem, marker: Path, want: String): String = {
+  /** Persist-or-validate a store's layout parameters: `want` is stored
+    * in `marker` by the first writer, and a store opened with any other
+    * value fails with `mismatch(stored)` — the stored layout is only
+    * consultable with the parameters it was written under.
+    * `createIfMissing = false` is the read-only caller's form: a probe
+    * of a virgin store must not pin ITS parameters as the store's
+    * identity (that would lock out the tuned writer that arrives later)
+    * and must work on a read-only filesystem. */
+  def requireMarker(f: FileSystem, marker: Path, want: String,
+      createIfMissing: Boolean = true)(mismatch: String => String): Unit = {
+    val stored =
+      if (createIfMissing) ensureMarker(f, marker, want)
+      else readMarker(f, marker).getOrElse(want)
+    require(stored == want, mismatch(stored))
+  }
+
+  /** Read-or-create a small exclusive marker, returning the stored
+    * content (existing, or `want` if this caller created it). Two racing
+    * creators resolve through the exclusive create (the loser re-reads
+    * the winner's value). */
+  def ensureMarker(f: FileSystem, marker: Path, want: String): String =
+    markerLoop(f, marker, Some(want)).get
+
+  /** Read an existing marker WITHOUT creating it; None when it does not
+    * exist. */
+  def readMarker(f: FileSystem, marker: Path): Option[String] =
+    markerLoop(f, marker, None)
+
+  /** The one read-with-retry loop behind [[ensureMarker]] (`create` set)
+    * and [[readMarker]]. An empty read is a concurrent creator's
+    * create→write window (create() makes the path visible before the
+    * bytes land), not a value, so it is retried; a marker that is STILL
+    * empty after 5 looks is corrupt, and a PERSISTENT create failure
+    * (read-only filesystem, permissions) surfaces after as many
+    * attempts, both as an IOException. */
+  private def markerLoop(f: FileSystem, marker: Path,
+      create: Option[String]): Option[String] = {
     var attempts = 0
     while (attempts < 5) {
       attempts += 1
@@ -64,50 +92,24 @@ private[graft] object Fs {
         val stored = try scala.io.Source.fromInputStream(in, "UTF-8")
           .mkString.trim
         finally in.close()
-        // An empty read is a concurrent creator's create→write window
-        // (create() makes the path visible before the bytes land), not a
-        // value: returning "" would fail callers' parse (toInt) or read
-        // as a spurious mismatch. Retry within the attempt budget; a
-        // marker that is STILL empty after 5 looks is corrupt and
-        // surfaces as the loud IOException below.
-        if (stored.nonEmpty) return stored
+        if (stored.nonEmpty) return Some(stored)
         // 50/100/150/200/250 ms: ~750 ms of total patience for the
         // concurrent creator — a loaded box can delay its write thread
         // well past the first retry, and giving up early turns a benign
         // race into a spurious open failure
         Thread.sleep(50L * attempts)
-      } else {
-        try {
-          val out = f.create(marker, false)
-          try out.write(want.getBytes("UTF-8")) finally out.close()
-          return want
-        } catch { case e: java.io.IOException => if (attempts >= 5) throw e }
+      } else create match {
+        case None => return None
+        case Some(want) =>
+          try {
+            val out = f.create(marker, false)
+            try out.write(want.getBytes("UTF-8")) finally out.close()
+            return Some(want)
+          } catch { case e: java.io.IOException => if (attempts >= 5) throw e }
       }
     }
     throw new java.io.IOException(
       s"cannot read or create marker $marker (empty or unwritable after 5 attempts)")
-  }
-
-  /** Read an existing marker WITHOUT creating it — the read-only-caller
-    * half of the [[ensureMarker]] discipline: a probe of a virgin store
-    * must not pin ITS parameters as the store's identity (that would
-    * lock out the tuned writer that arrives later) and must work on a
-    * read-only filesystem. Returns None when the marker does not exist;
-    * retries the empty-read window exactly like ensureMarker. */
-  def readMarker(f: FileSystem, marker: Path): Option[String] = {
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
-      if (!f.exists(marker)) return None
-      val in = f.open(marker)
-      val stored = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim
-      finally in.close()
-      if (stored.nonEmpty) return Some(stored)
-      Thread.sleep(50L * attempts)
-    }
-    throw new java.io.IOException(
-      s"marker $marker still empty after 5 reads — corrupt?")
   }
 
   /** Sum of parquet footer record counts + file bytes for `parts`,

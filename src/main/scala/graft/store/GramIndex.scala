@@ -61,7 +61,7 @@ final class GramIndex(spark: SparkSession, path: String,
     keepVersions: Int = 3,
     committer: Option[ManifestCommitter] = None,
     bloomMaxKeys: Long = 4000000L,
-    bloomMinHistoryRatio: Long = 8L) {
+    bloomMinHistoryRatio: Long = 8L) extends ManifestedStore {
 
   require(w >= 1, s"w must be >= 1, got $w")
   require(buckets >= 1, s"buckets must be >= 1, got $buckets")
@@ -69,42 +69,25 @@ final class GramIndex(spark: SparkSession, path: String,
   require(bloomMinHistoryRatio >= 0,
     s"bloomMinHistoryRatio must be >= 0, got $bloomMinHistoryRatio")
 
-  private val log = new ManifestLog(spark, path, keepVersions, committer)
-  private lazy val f = Fs.fs(spark, path)
+  protected val log = new ManifestLog(spark, path, keepVersions, committer)
 
   private def bucketCol(k: Column): Column =
     pmod(conv(substring(k, 1, 8), 16, 10).cast("long"), lit(buckets))
       .cast("int")
 
-  private def configMarker = new Path(path, "_gramindex")
-
   /** Persist-or-validate (buckets, w): the stored partitioning is only
     * consultable with the modulus it was written under, and a different
     * w changes gram IDENTITY — probing an index built at another width
-    * would silently miss every historical duplicate. */
-  /** Validate (write paths: or create) the parameter marker.
-    * `createIfMissing = false` is the READ-ONLY contract for [[probe]]:
-    * probing a virgin store must not pin the PROBER's parameters as the
-    * store's permanent identity — that locks out a differently-tuned
-    * writer arriving later — and must work on a read-only filesystem. */
+    * would silently miss every historical duplicate. [[probe]] only
+    * reads the marker (see [[Fs.requireMarker]]). */
   private def ensureConfig(createIfMissing: Boolean = true): Unit = {
     val want = s"buckets=$buckets;w=$w"
-    val stored =
-      if (createIfMissing) Fs.ensureMarker(f, configMarker, want)
-      else Fs.readMarker(f, configMarker).getOrElse(want)
-    require(stored == want,
+    Fs.requireMarker(log.f, new Path(path, "_gramindex"), want,
+      createIfMissing) { stored =>
       s"index at $path was created with '$stored'; opened with '$want' " +
-        "— a width/bucket mismatch silently misses historical duplicates")
-  }
-
-  private def requireIntegralId(batch: DataFrame, idCol: String): Unit =
-    batch.schema(idCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => ()
-      case t => throw new IllegalArgumentException(
-        s"idCol '$idCol' must be an integral type, got $t")
+        "— a width/bucket mismatch silently misses historical duplicates"
     }
-
-  def exists: Boolean = log.hasAny
+  }
 
   /** Pre-touch the live snapshot's filesystem metadata (list cell
     * leaves + read parquet footers, driver-side) so a fresh streaming
@@ -211,7 +194,7 @@ final class GramIndex(spark: SparkSession, path: String,
     * e.g. screening an eval set against the training corpus). */
   def probe(batch: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    requireIntegralId(batch, idCol)
+    FingerprintIndex.requireIntegralId(batch, idCol)
     ensureConfig(createIfMissing = false)
     // pin the batch grams ONCE: prunedHistory's bucket collect, the
     // bloom build, and the span join would otherwise each re-tokenize
@@ -227,7 +210,7 @@ final class GramIndex(spark: SparkSession, path: String,
     * spans, computed against the pinned pre-ingest snapshot. */
   def ingest(batch: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    requireIntegralId(batch, idCol)
+    FingerprintIndex.requireIntegralId(batch, idCol)
     ensureConfig()
     // pin the batch grams ONCE — four consumers (prunedHistory's
     // bucket collect, the bloom build, the span join, the newGrams
@@ -241,58 +224,37 @@ final class GramIndex(spark: SparkSession, path: String,
       .groupBy(col("k")).agg(min(col("doc_id")).cast("long").as("doc_id"))
       .join(history.select(col("k")), Seq("k"), "left_anti")
       .withColumn("bucket", bucketCol(col("k")))
-    val dirName = log.newDataDirName(log.currentVersion.getOrElse(0L) + 1)
-    newGrams
-      .select(col("k"), col("doc_id"), col("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(log.dataPath(dirName).toString)
-    val cells = log.listCells(dirName, GramIndex.LevelPrefixes)
-    if (cells.isEmpty) f.delete(log.dataPath(dirName), true)
-    else log.commitRetry(RecordStore.appendMutate(cells, dirName))
+    log.append() { dir =>
+      newGrams
+        .select(col("k"), col("doc_id"), col("bucket"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("bucket")
+        .parquet(log.dataPath(dir).toString)
+      log.listCells(dir, GramIndex.LevelPrefixes)
+    }
     spans
   }
 
-  /** Rewrite fragmented bucket cells into fresh single-dir cells,
-    * collapsing racing-writer duplicate keys to the min owner — the
-    * same OPTIMIZE-style maintenance as [[FingerprintIndex.compact]].
+  /** Rewrite fragmented bucket cells through [[ManifestLog.compact]],
+    * collapsing racing-writer duplicate keys to the min owner.
     * Micro-batch ingestion needs this periodically: every commit adds
     * one data dir and snapshot reads open one more file per cell.
     * Returns the number of cells rewritten. */
-  def compact(filesPerPartition: Int = 1): Int = {
-    require(filesPerPartition >= 1, "filesPerPartition must be >= 1")
-    val resolved = log.resolve()
-    if (resolved.isEmpty) return 0
-    val (_, snapshot) = resolved.get
-    val fragmented = snapshot.filter { case (cell, dirs) =>
-      dirs.map(log.leafFiles(_, cell).length).sum > filesPerPartition
+  def compact(filesPerPartition: Int = 1): Int =
+    log.compact(filesPerPartition) { (fragmented, dir) =>
+      log.readEntries(fragmented, GramIndex.schema)
+        .groupBy(col("k"), col("bucket"))
+        .agg(min(col("doc_id")).as("doc_id"))
+        .withColumn("__salt", pmod(xxhash64(col("k")), lit(filesPerPartition)))
+        .repartition(math.max(fragmented.size * filesPerPartition, 1),
+          col("bucket"), col("__salt"))
+        .sortWithinPartitions(col("k"))
+        .drop("__salt")
+        .select(col("k"), col("doc_id"), col("bucket"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("bucket")
+        .parquet(log.dataPath(dir).toString)
     }
-    if (fragmented.isEmpty) return 0
-    val newDir = log.newDataDirName(
-      log.currentVersion.getOrElse(0L) + 1, tag = "compact")
-    log.readEntries(fragmented, GramIndex.schema)
-      .groupBy(col("k"), col("bucket"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .withColumn("__salt", pmod(xxhash64(col("k")), lit(filesPerPartition)))
-      .repartition(math.max(fragmented.size * filesPerPartition, 1),
-        col("bucket"), col("__salt"))
-      .sortWithinPartitions(col("k"))
-      .drop("__salt")
-      .select(col("k"), col("doc_id"), col("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(log.dataPath(newDir).toString)
-    @volatile var yielded = Set.empty[String]
-    log.commitRetry { current =>
-      val (entries, y) =
-        RecordStore.compactMutate(snapshot, fragmented.keySet, newDir)(current)
-      yielded = y
-      entries
-    }
-    if (yielded.size == fragmented.size)
-      f.delete(log.dataPath(newDir), true)
-    fragmented.size - yielded.size
-  }
 
   /** Index economics from filesystem metadata only (no data scan):
     * live data dirs, referenced bucket cells, parquet file count, and
@@ -300,39 +262,16 @@ final class GramIndex(spark: SparkSession, path: String,
     * is the gauge that makes the constant visible (bytes ÷ corpus
     * tokens ≈ the per-token overhead; the spec pins it at tens of
     * bytes, same order as Lee et al. 2022's 8-bytes-per-token suffix
-    * array) and that [[compactIfNeeded]] consults for its live-dirs
-    * trigger. */
-  def stats(): GramIndex.Stats = {
-    val s = log.storeStats()
-    GramIndex.Stats(s.liveDirs, s.cells, s.files, s.bytes)
-  }
+    * array). */
+  def stats(): ManifestLog.StoreStats = log.storeStats()
 
-  /** Maintenance policy for continuous micro-batch ingestion: run
-    * [[compact]] only once the number of LIVE data dirs exceeds
-    * `maxLiveDirs` (every commit adds one dir; snapshot reads list and
-    * open one file per cell per live dir, so unbounded dirs means
-    * unbounded read fan-in).
-    * Returns the number of cells rewritten (0 = under threshold or
-    * nothing fragmented). Call it after ingests the way
-    * [[RecordStore.compact]] is scheduled — cheap to call every batch,
-    * pays only past the threshold. */
-  def compactIfNeeded(maxLiveDirs: Int = 8,
-      filesPerPartition: Int = 1): Int = {
-    require(maxLiveDirs >= 1, "maxLiveDirs must be >= 1")
-    if (stats().liveDirs > maxLiveDirs) compact(filesPerPartition) else 0
-  }
-
-  /** See [[ManifestLog.vacuum]] / [[ManifestLog.vacuumOrphans]]. */
-  def vacuum(): Unit = log.vacuum()
-  def vacuumOrphans(olderThanMs: Long): Seq[String] =
-    log.vacuumOrphans(olderThanMs)
+  /** [[compact]] on the [[ManifestLog.compactIfNeeded]] schedule: call
+    * it after every ingest, it pays only past `maxLiveDirs`. */
+  def compactIfNeeded(maxLiveDirs: Int = 8, filesPerPartition: Int = 1): Int =
+    log.compactIfNeeded(maxLiveDirs)(compact(filesPerPartition))
 }
 
 object GramIndex {
-  /** Filesystem-level index economics; see [[GramIndex.stats]]. */
-  final case class Stats(liveDirs: Int, cells: Int, files: Long,
-      bytes: Long)
-
   /** Committed gram rows for the bloom-prefilter ratio gate: the REAL
     * footer-derived count ([[ManifestLog.rowCount]], cached per
     * immutable dir so steady state pays one footer read per new

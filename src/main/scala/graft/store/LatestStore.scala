@@ -41,13 +41,9 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 final class LatestStore(spark: SparkSession, path: String,
     nBuckets: Int = 16, keepVersions: Int = 3,
-    committer: Option[ManifestCommitter] = None) {
+    committer: Option[ManifestCommitter] = None) extends ManifestedStore {
 
-  private val log = new ManifestLog(spark, path, keepVersions, committer)
-  private lazy val f = Fs.fs(spark, path)
-
-  /** true once any version has been committed. */
-  def exists: Boolean = log.hasAny
+  protected val log = new ManifestLog(spark, path, keepVersions, committer)
 
   /** The rows of the kp buckets `keep` accepts in `snapshot` (manifest
     * entries, bare kp -> data dirs; None reads as an empty table), read
@@ -77,7 +73,7 @@ final class LatestStore(spark: SparkSession, path: String,
   // this opener's until a stamp exists
   @volatile private var stamped: Option[Int] = None
   private def modulus: Int = stamped.getOrElse {
-    val m = Fs.readMarker(f, new Path(path, "_buckets")).map(_.toInt)
+    val m = Fs.readMarker(log.f, new Path(path, "_buckets")).map(_.toInt)
     stamped = m
     m.getOrElse(nBuckets)
   }
@@ -86,14 +82,13 @@ final class LatestStore(spark: SparkSession, path: String,
     * discipline): an upsert under a different modulus would read the
     * wrong bucket for existing keys and leave TWO live rows for one
     * (what, where) — the invariant the whole table exists to hold. */
-  private def ensureBuckets(): Unit = {
-    val stored = Fs.ensureMarker(f, new Path(path, "_buckets"),
-      nBuckets.toString)
-    require(stored.toInt == nBuckets,
-      s"latest table at $path was created with $stored buckets; opened " +
-        s"with $nBuckets — merges would miss existing keys and break " +
-        "the one-row-per-(what, where) invariant")
-  }
+  private def ensureBuckets(): Unit =
+    Fs.requireMarker(log.f, new Path(path, "_buckets"), nBuckets.toString) {
+      stored =>
+        s"latest table at $path was created with $stored buckets; opened " +
+          s"with $nBuckets — merges would miss existing keys and break " +
+          "the one-row-per-(what, where) invariant"
+    }
 
   /** Monotone upsert: newest (metadata.start, create_time) per (what,
     * where) wins; replay-safe (applying the same batch twice is a no-op).
@@ -153,16 +148,10 @@ final class LatestStore(spark: SparkSession, path: String,
       if (!committed)
         // lost the race: another writer committed baseV+1 first; drop our
         // orphaned data version and re-merge against the new state
-        f.delete(log.dataPath(newDataVersion), true)
+        log.f.delete(log.dataPath(newDataVersion), true)
     }
     log.vacuum()
   }
-
-  /** Offline reclamation of data dirs left by writers that crashed
-    * between data-write and manifest-commit (never referenced, so never
-    * swept by the regular vacuum). See [[ManifestLog.vacuumOrphans]]. */
-  def vacuumOrphans(olderThanMs: Long): Seq[String] =
-    log.vacuumOrphans(olderThanMs)
 
   /** Resolvable snapshot versions, oldest first (retention =
     * `keepVersions` commits). */

@@ -11,9 +11,20 @@ import org.apache.spark.sql.execution.datasources.{FileIndex,
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StructType
 
-/** Versioned manifest log shared by every manifested table
-  * ([[LatestStore]], [[RecordStore]], [[WorkIdIndex]]): the generic
-  * machinery behind snapshot-isolated commits on a filesystem.
+/** Versioned manifest log behind every versioned store: the one place
+  * that knows the commit protocol, so each store keeps only its format
+  * (schema, bucketing, the rewrite it runs). Its users:
+  *   - appending stores ([[RecordStore]], [[WorkIdIndex]],
+  *     [[FingerprintIndex]], [[GramIndex]], [[NearDupIndex]],
+  *     [[SketchStore]]) commit through [[append]] and compact through
+  *     [[compact]] (or, for a store that picks its own cells,
+  *     [[commitCompaction]]), scheduled by [[compactIfNeeded]];
+  *   - [[LatestStore]] merges against the base version it read, so it
+  *     runs its own [[tryCommit]] loop;
+  *   - replace-style stores ([[ClusterStore]], and
+  *     [[graft.operators.CellIndex]], whose one cell points at the
+  *     current generation dir) publish whole snapshots through
+  *     [[commitRetry]].
   *
   * Layout under a table `path`:
   * {{{
@@ -33,7 +44,8 @@ import org.apache.spark.sql.types.StructType
   * `storage.py:78-137`, and the same manifest-log shape Delta/Iceberg
   * use on object stores where directory operations are not atomic:
   * once committed, data files are only ever read and later
-  * garbage-collected, never renamed).
+  * garbage-collected, never renamed). Every commit vacuums the versions
+  * past `keepVersions` and the data dirs only they referenced.
   *
   * File format: one `cell=dir1,dir2` line per cell, cells URL-encoded
   * (values never need encoding — dir names are self-assigned).
@@ -293,6 +305,10 @@ final class ManifestLog(spark: SparkSession, path: String,
     f"v$v%010d-" + (if (tag.isEmpty) "" else tag + "-") +
       java.util.UUID.randomUUID().toString.take(8)
 
+  /** [[newDataDirName]] for the version after the current one. */
+  def freshDir(tag: String = ""): String =
+    newDataDirName(currentVersion.getOrElse(0L) + 1, tag)
+
   def dataPath(dirName: String): Path = new Path(dataRoot, dirName)
 
   /** The data files of one (dir, cell) leaf; none when the leaf does
@@ -413,6 +429,84 @@ final class ManifestLog(spark: SparkSession, path: String,
     throw new java.io.IOException(s"lost $attempts commit races under $path")
   }
 
+  /** The append commit: name a fresh data dir (tagged `tag`), let
+    * `write` fill it and return the cells it wrote, then drop the dir if
+    * it wrote none, else add it to each of those cells' lists through
+    * [[commitRetry]] ([[ManifestLog.appendMutate]]). An append's content
+    * never depends on the base version, so a lost race recomputes only
+    * the manifest. `skip` sees the entries at every commit attempt; when
+    * it holds (a racing writer already committed the same content) the
+    * dir is dropped and nothing is committed, and only then is the
+    * result false. */
+  def append(tag: String = "",
+      skip: Map[String, Seq[String]] => Boolean = _ => false)(
+      write: String => Seq[String]): Boolean = {
+    val dir = freshDir(tag)
+    val cells = write(dir)
+    if (cells.isEmpty) {
+      f.delete(dataPath(dir), true)
+      return true
+    }
+    @volatile var skipped = false
+    commitRetry { current =>
+      skipped = skip(current)
+      if (skipped) current else ManifestLog.appendMutate(cells, dir)(current)
+    }
+    if (skipped) f.delete(dataPath(dir), true)
+    !skipped
+  }
+
+  /** Compact fragmented cells (OPTIMIZE on Delta/Iceberg): the current
+    * snapshot's cells holding more than `filesPerCell` data files are
+    * handed to `rewrite` with a fresh `compact` data dir to write them
+    * into, which [[commitCompaction]] then commits. Readers concurrent
+    * with it keep resolving complete snapshots (old manifests and their
+    * dirs survive `keepVersions` commits). Cost follows fragmented
+    * cells, not table size. Returns the number of cells this call
+    * rewrote: 0 when nothing is fragmented or a racing compaction took
+    * every cell first. */
+  def compact(filesPerCell: Int)(
+      rewrite: (Map[String, Seq[String]], String) => Unit): Int = {
+    require(filesPerCell >= 1, "filesPerPartition must be >= 1")
+    val snapshot = resolve() match {
+      case Some((_, entries)) => entries
+      case None => return 0
+    }
+    val fragmented = snapshot.filter { case (cell, dirs) =>
+      dirs.map(leafFiles(_, cell).length).sum > filesPerCell
+    }
+    if (fragmented.isEmpty) return 0
+    val dir = freshDir("compact")
+    rewrite(fragmented, dir)
+    fragmented.size - commitCompaction(snapshot, fragmented.keySet, dir).size
+  }
+
+  /** The compaction commit: `cells`, as listed in `snapshot`, now point
+    * at `dir` ([[ManifestLog.compactMutate]]: a cell a racing compaction
+    * already superseded yields, appends that landed since are kept), and
+    * `dir` is deleted when every cell yielded. Returns the yielded
+    * cells. */
+  def commitCompaction(snapshot: Map[String, Seq[String]],
+      cells: Set[String], dir: String): Set[String] = {
+    @volatile var yielded = Set.empty[String]
+    commitRetry { current =>
+      val (entries, y) = ManifestLog.compactMutate(snapshot, cells, dir)(current)
+      yielded = y
+      entries
+    }
+    if (yielded.size == cells.size) f.delete(dataPath(dir), true)
+    yielded
+  }
+
+  /** The shared compaction schedule: run `compact` only once live data
+    * dirs exceed `maxLiveDirs` (each commit adds one, and a snapshot
+    * read lists and opens one file per cell per live dir). Cheap to call
+    * after every commit; returns what `compact` returns, else 0. */
+  def compactIfNeeded(maxLiveDirs: Int)(compact: => Int): Int = {
+    require(maxLiveDirs >= 1, "maxLiveDirs must be >= 1")
+    if (storeStats().liveDirs > maxLiveDirs) compact else 0
+  }
+
   /** Drop manifests beyond the `keepVersions` most recent, then the
     * data dirs ONLY those expired manifests referenced (minus any still
     * referenced by a retained manifest). Deleting by expired-manifest
@@ -506,6 +600,21 @@ final class ManifestLog(spark: SparkSession, path: String,
     } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
 }
 
+/** What every store on a [[ManifestLog]] passes through from it
+  * unchanged. */
+trait ManifestedStore {
+  protected def log: ManifestLog
+
+  /** true once any version has been committed. */
+  def exists: Boolean = log.hasAny
+
+  /** Offline reclamation of data dirs left by writers that crashed
+    * between data write and manifest commit; see
+    * [[ManifestLog.vacuumOrphans]]. */
+  def vacuumOrphans(olderThanMs: Long): Seq[String] =
+    log.vacuumOrphans(olderThanMs)
+}
+
 /** The fixed file list behind [[ManifestLog.readEntries]]: one partition
   * directory per (data dir, cell) leaf, listed when the read is built.
   * Committed data dirs are write-once, so the list never goes stale and
@@ -558,6 +667,39 @@ object ManifestLog {
   /** Dir names vacuum must never delete as a unit: `dataPath("")` is
     * the whole `data/` root. */
   private[store] val Protected: Set[String] = Set("")
+
+  /** Commit transform for an append that wrote `cells` into `dirName`:
+    * the new dir joins each touched cell's list; everything else rides
+    * along. */
+  private[store] def appendMutate(cells: Seq[String], dirName: String)(
+      entries: Map[String, Seq[String]]): Map[String, Seq[String]] =
+    entries ++ cells.map(c =>
+      c -> (entries.getOrElse(c, Seq.empty) :+ dirName))
+
+  /** Commit transform for a compaction that rewrote `fragmented` cells
+    * (their dir lists as of `snapshot`) into `newDir`. A cell some of
+    * whose snapshot dirs are no longer referenced was superseded by a
+    * RACING compaction — superseding it again would double its rows
+    * (both rewrites contain them), so that cell YIELDS to the current
+    * state and our rewrite of it goes unreferenced. Dirs added to a
+    * cell after the snapshot are concurrent appends: their rows are not
+    * in our rewrite, so they are preserved alongside it. Returns (new
+    * entries, yielded cells). Pure — unit-tested directly against
+    * crafted race states. */
+  private[store] def compactMutate(
+      snapshot: Map[String, Seq[String]],
+      fragmented: Set[String],
+      newDir: String)(current: Map[String, Seq[String]])
+      : (Map[String, Seq[String]], Set[String]) = {
+    val yielded = fragmented.filter(c =>
+      snapshot.getOrElse(c, Seq.empty)
+        .diff(current.getOrElse(c, Seq.empty)).nonEmpty)
+    val updates = (fragmented -- yielded).map { c =>
+      c -> (newDir +: current.getOrElse(c, Seq.empty)
+        .diff(snapshot.getOrElse(c, Seq.empty)))
+    }
+    (current ++ updates, yielded)
+  }
 
   /** Whether a leaf's file named `name` is data: a `.parquet` name that
     * is not hidden. Names starting with `_` or `.` are skipped, as

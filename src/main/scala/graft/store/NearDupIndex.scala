@@ -72,7 +72,7 @@ final class NearDupIndex(spark: SparkSession, path: String,
     committer: Option[ManifestCommitter] = None,
     bloomMaxKeys: Long = 4000000L,
     bloomMinHistoryRatio: Long = 8L,
-    broadcastMaxCandidates: Long = 4000000L) {
+    broadcastMaxCandidates: Long = 4000000L) extends ManifestedStore {
 
   require(buckets >= 1, s"buckets must be >= 1, got $buckets")
   require(bloomMaxKeys >= 0 && bloomMinHistoryRatio >= 0,
@@ -82,8 +82,7 @@ final class NearDupIndex(spark: SparkSession, path: String,
     s"numHashes ($numHashes) must be a multiple of rowsPerBand ($rowsPerBand)")
   require(maxDist >= 0 && normChars >= 1, "maxDist/normChars out of range")
 
-  private val log = new ManifestLog(spark, path, keepVersions, committer)
-  private lazy val f = Fs.fs(spark, path)
+  protected val log = new ManifestLog(spark, path, keepVersions, committer)
 
   import NearDupIndex._
 
@@ -113,40 +112,25 @@ final class NearDupIndex(spark: SparkSession, path: String,
         "[^\\x20-\\x7E]", ""),
       1, normChars)
 
-  private def bucketsMarker = new Path(path, "_buckets")
-
   /** Persist-or-validate EVERY parameter that changes stored identity,
     * not just the bucket modulus: `numHashes`/`rowsPerBand` define the
     * band keys and `normChars` the normalized text they hash — opening
     * an index built under different values would silently miss every
     * historical near-duplicate (the [[GramIndex]] `w` lesson).
     * `maxDist` is deliberately NOT pinned: it is a confirm threshold,
-    * tunable per open without changing what is stored. */
+    * tunable per open without changing what is stored. [[probe]] only
+    * reads the marker (see [[Fs.requireMarker]]). */
   private def ensureBuckets(createIfMissing: Boolean = true): Unit = {
     val want =
       s"buckets=$buckets;numHashes=$numHashes;" +
         s"rowsPerBand=$rowsPerBand;normChars=$normChars"
-    // createIfMissing = false is the READ-ONLY contract (probe): a
-    // virgin store must not get the PROBER's parameters pinned as its
-    // permanent identity — that locks out the tuned writer that
-    // arrives later — and a probe must work on a read-only filesystem
-    val stored =
-      if (createIfMissing) Fs.ensureMarker(f, bucketsMarker, want)
-      else Fs.readMarker(f, bucketsMarker).getOrElse(want)
-    require(stored == want,
+    Fs.requireMarker(log.f, new Path(path, "_buckets"), want,
+      createIfMissing) { stored =>
       s"index at $path was created with '$stored'; opened with '$want' " +
         "— a band/normalization mismatch silently misses every " +
-        "historical near-duplicate")
-  }
-
-  private def requireIntegralId(batch: DataFrame, idCol: String): Unit =
-    batch.schema(idCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => ()
-      case t => throw new IllegalArgumentException(
-        s"idCol '$idCol' must be an integral type, got $t — a lossy cast " +
-          "would register null owners and suppress content without " +
-          "emitting it")
+        "historical near-duplicate"
     }
+  }
 
   private def requireNoCollisions(batch: DataFrame, cols: Seq[String]): Unit =
     cols.foreach(c => require(!batch.columns.contains(c),
@@ -154,8 +138,6 @@ final class NearDupIndex(spark: SparkSession, path: String,
 
   private def kindEntries(entries: Map[String, Seq[String]], kind: String) =
     entries.filter { case (cell, _) => cell.startsWith(s"kind=$kind/") }
-
-  def exists: Boolean = log.hasAny
 
   /** Pre-touch the live snapshot's filesystem metadata (list cell
     * leaves + read parquet footers for BOTH kinds, driver-side) so a
@@ -196,7 +178,7 @@ final class NearDupIndex(spark: SparkSession, path: String,
   def probe(batch: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     requireNoCollisions(batch, WorkingCols)
-    requireIntegralId(batch, idCol)
+    FingerprintIndex.requireIntegralId(batch, idCol)
     ensureBuckets(createIfMissing = false)
     val clean = batch.filter(col(textCol).isNotNull)
       .select(col(idCol).cast("long").as("__id"),
@@ -325,7 +307,7 @@ final class NearDupIndex(spark: SparkSession, path: String,
   def append(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): Unit = {
     requireNoCollisions(docs, WorkingCols)
-    requireIntegralId(docs, idCol)
+    FingerprintIndex.requireIntegralId(docs, idCol)
     ensureBuckets()
     val clean = docs.filter(col(textCol).isNotNull)
       .select(col(idCol).cast("long").as("__id"),
@@ -355,7 +337,7 @@ final class NearDupIndex(spark: SparkSession, path: String,
   def ingest(batch: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     requireNoCollisions(batch, WorkingCols :+ "canonical_id")
-    requireIntegralId(batch, idCol)
+    FingerprintIndex.requireIntegralId(batch, idCol)
     ensureBuckets()
     val clean = batch.filter(col(textCol).isNotNull)
       .select(col(idCol).cast("long").as("__id"),
@@ -450,103 +432,71 @@ final class NearDupIndex(spark: SparkSession, path: String,
     * and no commit. */
   private def commitBatch(clean: DataFrame, bands: DataFrame,
       assign: DataFrame): Unit = {
-    val dirName = log.newDataDirName(log.currentVersion.getOrElse(0L) + 1)
     val canonicalIds = assign
       .filter(col("doc_id") === col("canonical_id"))
       .select(col("doc_id"))
-    bands.join(canonicalIds, Seq("doc_id"))
-      .select(col("band"), col("key"), col("doc_id"), col("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(new Path(log.dataPath(dirName), "kind=postings").toString)
-    assign
-      .join(clean.select(col("__id").as("doc_id"), col("__t")), Seq("doc_id"))
-      .select(col("doc_id"), col("canonical_id"),
-        when(col("doc_id") === col("canonical_id"), col("__t"))
-          .as("text_norm"),
-        idBucket(col("doc_id")).as("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(new Path(log.dataPath(dirName), "kind=docs").toString)
-    val cells = log.listCells(dirName, LevelPrefixes)
-    if (cells.isEmpty) { f.delete(log.dataPath(dirName), true); () }
-    else { log.commitRetry(RecordStore.appendMutate(cells, dirName)); () }
+    log.append() { dir =>
+      bands.join(canonicalIds, Seq("doc_id"))
+        .select(col("band"), col("key"), col("doc_id"), col("bucket"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("bucket")
+        .parquet(new Path(log.dataPath(dir), "kind=postings").toString)
+      assign
+        .join(clean.select(col("__id").as("doc_id"), col("__t")), Seq("doc_id"))
+        .select(col("doc_id"), col("canonical_id"),
+          when(col("doc_id") === col("canonical_id"), col("__t"))
+            .as("text_norm"),
+          idBucket(col("doc_id")).as("bucket"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("bucket")
+        .parquet(new Path(log.dataPath(dir), "kind=docs").toString)
+      log.listCells(dir, LevelPrefixes)
+    }
   }
 
   // ---- maintenance ---------------------------------------------------
 
-  /** Rewrite fragmented cells (live file count over `filesPerPartition`)
-    * into fresh single-dir cells — the same OPTIMIZE-style maintenance
-    * as [[FingerprintIndex.compact]], sharing its race-yielding commit
-    * transform. Postings dedup to one row per (band, key, doc_id);
-    * verdict rows collapse racing duplicates to the min canonical.
-    * Returns the number of cells rewritten. */
-  def compact(filesPerPartition: Int = 1): Int = {
-    require(filesPerPartition >= 1, "filesPerPartition must be >= 1")
-    val resolved = log.resolve()
-    if (resolved.isEmpty) return 0
-    val (_, snapshot) = resolved.get
-    val fragmented = snapshot.filter { case (cell, dirs) =>
-      dirs.map(log.leafFiles(_, cell).length).sum > filesPerPartition
+  /** Rewrite fragmented cells through [[ManifestLog.compact]].
+    * Postings dedup to one row per (band, key, doc_id); verdict rows
+    * collapse racing duplicates to the min canonical. Returns the number
+    * of cells rewritten. */
+  def compact(filesPerPartition: Int = 1): Int =
+    log.compact(filesPerPartition) { (fragmented, dir) =>
+      val fragPostings = kindEntries(fragmented, "postings")
+      val fragDocs = kindEntries(fragmented, "docs")
+      if (fragPostings.nonEmpty)
+        log.readEntries(fragPostings, postingsSchema)
+          .groupBy(col("band"), col("key"), col("doc_id"), col("bucket"))
+          .agg(count(lit(1))) // dedup only; count discarded
+          .select(col("band"), col("key"), col("doc_id"), col("bucket"))
+          .repartition(math.max(fragPostings.size * filesPerPartition, 1),
+            col("bucket"))
+          .sortWithinPartitions(col("key"))
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy("bucket")
+          .parquet(new Path(log.dataPath(dir), "kind=postings").toString)
+      if (fragDocs.nonEmpty)
+        log.readEntries(fragDocs, docsSchema)
+          .groupBy(col("doc_id"), col("bucket"))
+          .agg(min(col("canonical_id")).as("canonical_id"),
+            min(col("text_norm")).as("text_norm"))
+          .select(col("doc_id"), col("canonical_id"), col("text_norm"),
+            col("bucket"))
+          .repartition(math.max(fragDocs.size * filesPerPartition, 1),
+            col("bucket"))
+          .sortWithinPartitions(col("doc_id"))
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy("bucket")
+          .parquet(new Path(log.dataPath(dir), "kind=docs").toString)
     }
-    if (fragmented.isEmpty) return 0
-    val newDir = log.newDataDirName(
-      log.currentVersion.getOrElse(0L) + 1, tag = "compact")
-    val fragPostings = kindEntries(fragmented, "postings")
-    val fragDocs = kindEntries(fragmented, "docs")
-    if (fragPostings.nonEmpty)
-      log.readEntries(fragPostings, postingsSchema)
-        .groupBy(col("band"), col("key"), col("doc_id"), col("bucket"))
-        .agg(count(lit(1))) // dedup only; count discarded
-        .select(col("band"), col("key"), col("doc_id"), col("bucket"))
-        .repartition(math.max(fragPostings.size * filesPerPartition, 1),
-          col("bucket"))
-        .sortWithinPartitions(col("key"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(new Path(log.dataPath(newDir), "kind=postings").toString)
-    if (fragDocs.nonEmpty)
-      log.readEntries(fragDocs, docsSchema)
-        .groupBy(col("doc_id"), col("bucket"))
-        .agg(min(col("canonical_id")).as("canonical_id"),
-          min(col("text_norm")).as("text_norm"))
-        .select(col("doc_id"), col("canonical_id"), col("text_norm"),
-          col("bucket"))
-        .repartition(math.max(fragDocs.size * filesPerPartition, 1),
-          col("bucket"))
-        .sortWithinPartitions(col("doc_id"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(new Path(log.dataPath(newDir), "kind=docs").toString)
-    @volatile var yielded = Set.empty[String]
-    log.commitRetry { current =>
-      val (entries, y) =
-        RecordStore.compactMutate(snapshot, fragmented.keySet, newDir)(current)
-      yielded = y
-      entries
-    }
-    if (yielded.size == fragmented.size)
-      f.delete(log.dataPath(newDir), true)
-    fragmented.size - yielded.size
-  }
 
   /** Index economics from filesystem metadata only — see
     * [[ManifestLog.storeStats]]. */
   def stats(): ManifestLog.StoreStats = log.storeStats()
 
-  /** Run [[compact]] only once live data dirs exceed `maxLiveDirs` —
-    * the [[GramIndex.compactIfNeeded]] scheduling policy; cheap to call
-    * after every ingest. */
-  def compactIfNeeded(maxLiveDirs: Int = 8,
-      filesPerPartition: Int = 1): Int = {
-    require(maxLiveDirs >= 1, "maxLiveDirs must be >= 1")
-    if (stats().liveDirs > maxLiveDirs) compact(filesPerPartition) else 0
-  }
-
-  /** See [[ManifestLog.vacuum]] / [[ManifestLog.vacuumOrphans]]. */
-  def vacuum(): Unit = log.vacuum()
-  def vacuumOrphans(olderThanMs: Long): Seq[String] =
-    log.vacuumOrphans(olderThanMs)
+  /** [[compact]] on the [[ManifestLog.compactIfNeeded]] schedule. */
+  def compactIfNeeded(maxLiveDirs: Int = 8, filesPerPartition: Int = 1): Int =
+    log.compactIfNeeded(maxLiveDirs)(compact(filesPerPartition))
 
   private[store] def currentVersion: Option[Long] = log.currentVersion
 }

@@ -76,11 +76,10 @@ object RecordRow {
 final class RecordStore(spark: SparkSession, path: String,
     workIdIndex: Option[WorkIdIndex] = None,
     keepVersions: Int = 3,
-    committer: Option[ManifestCommitter] = None) {
+    committer: Option[ManifestCommitter] = None) extends ManifestedStore {
   import spark.implicits._
 
-  private val log = new ManifestLog(spark, path, keepVersions, committer)
-  private lazy val f = Fs.fs(spark, path)
+  protected val log = new ManifestLog(spark, path, keepVersions, committer)
 
   /** Append records idempotently: within-batch duplicate (id, time_bucket)
     * pairs collapse to one row, mirroring the dup-tolerant DynamoDB put
@@ -129,20 +128,21 @@ final class RecordStore(spark: SparkSession, path: String,
     val rows = batch.filterNot(r => stored.contains(key(r)))
       .map(toCatalyst(_).asInstanceOf[InternalRow])
     if (rows.isEmpty) return
-    val dirName = log.newDataDirName(log.currentVersion.getOrElse(0L) + 1)
-    val cells = DriverWrite(spark, new ParquetFileFormat, log.dataPath(dirName),
-      schema, RecordStore.PartitionColumns, rows.iterator)
-    // every writer maintains the secondary index — hooking here (not in
-    // individual callers) keeps the index consistent for push, uploader,
-    // and streaming alike. Index append comes BEFORE the record commit:
-    // a crash between them then leaves only a harmless duplicate-
-    // tolerated index entry that the replay repeats, whereas the old
-    // commit-then-index order could never be repaired — the replay
-    // dedups the already-committed rows to an empty batch and early-
-    // returns before ever reaching the index append, so lookup() missed
-    // those rows forever.
-    workIdIndex.foreach(_.append(rows, schema))
-    log.commitRetry(RecordStore.appendMutate(cells, dirName))
+    log.append() { dir =>
+      val cells = DriverWrite(spark, new ParquetFileFormat, log.dataPath(dir),
+        schema, RecordStore.PartitionColumns, rows.iterator)
+      // every writer maintains the secondary index — hooking here (not in
+      // individual callers) keeps the index consistent for push, uploader,
+      // and streaming alike. Index append comes BEFORE the record commit:
+      // a crash between them then leaves only a harmless duplicate-
+      // tolerated index entry that the replay repeats, whereas the old
+      // commit-then-index order could never be repaired — the replay
+      // dedups the already-committed rows to an empty batch and early-
+      // returns before ever reaching the index append, so lookup() missed
+      // those rows forever.
+      workIdIndex.foreach(_.append(rows, schema))
+      cells
+    }
   }
 
   /** The (time_bucket, id) pairs of `keys` already stored: one Spark job
@@ -157,8 +157,6 @@ final class RecordStore(spark: SparkSession, path: String,
       .select(col("time_bucket"), col("metadata.id"))
       .as[(Long, String)].collect().toSet.filter(keys.contains)
   }
-
-  def exists: Boolean = log.hasAny
 
   /** Full table as DataFrame; partition columns are restored to their
     * logical types. See [[ManifestLog.readEntries]] for the scan shape. */
@@ -185,77 +183,38 @@ final class RecordStore(spark: SparkSession, path: String,
       case None => log.emptyDf(RecordStore.schema)
     }
 
-  /** Compact fragmented cells: streaming ingest appends one small file
-    * per micro-batch per (bucket, what); this rewrites each cell whose
-    * live file count exceeds `filesPerPartition` into (at most)
-    * `filesPerPartition` files in a fresh data dir and commits a
-    * manifest superseding those cells' dir lists. Readers concurrent
-    * with the compaction keep resolving complete snapshots (old
-    * manifests and their dirs survive `keepVersions` commits); appends
-    * concurrent with it are preserved, and a RACING compaction of the
-    * same cell is detected and yielded to, by [[RecordStore.compactMutate]]
-    * in the commit loop. Cost follows fragmented cells, not table size.
-    * (On Delta/Iceberg this is OPTIMIZE.) Returns the number of cells
-    * this call actually rewrote. */
-  def compact(filesPerPartition: Int = 1): Int = {
-    require(filesPerPartition >= 1, "filesPerPartition must be >= 1")
-    val resolved = log.resolve()
-    if (resolved.isEmpty) return 0
-    val (_, snapshot) = resolved.get
-    val fragmented = snapshot.filter { case (cell, dirs) =>
-      dirs.map(log.leafFiles(_, cell).length).sum > filesPerPartition
+  /** Compact fragmented cells through [[ManifestLog.compact]]:
+    * streaming ingest appends one small file per micro-batch per
+    * (bucket, what); this rewrites each cell whose live file count
+    * exceeds `filesPerPartition` into (at most) `filesPerPartition`
+    * files. Returns the number of cells this call rewrote. */
+  def compact(filesPerPartition: Int = 1): Int =
+    log.compact(filesPerPartition) { (fragmented, dir) =>
+      // sort the rewrite by (where, start): parquet row-group min/max
+      // stats then let where-prefix and interval queries skip row groups
+      // inside a partition — the poor-man's Z-order, for free during the
+      // rewrite compaction already pays for. repartition on (cell key,
+      // salt) puts each cell's rows in `filesPerPartition` tasks -> that
+      // many files per cell dir.
+      log.readEntries(fragmented, RecordStore.schema)
+        .withColumn("__salt",
+          pmod(xxhash64(col("metadata.id")), lit(filesPerPartition)))
+        .repartition(math.max(fragmented.size * filesPerPartition, 1),
+          col("time_bucket"), col("what"), col("__salt"))
+        .sortWithinPartitions(col("where"), col("metadata.start"))
+        .drop("__salt")
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("time_bucket", "what")
+        .parquet(log.dataPath(dir).toString)
     }
-    if (fragmented.isEmpty) return 0
-    val newDir = log.newDataDirName(
-      log.currentVersion.getOrElse(0L) + 1, tag = "compact")
-    // sort the rewrite by (where, start): parquet row-group min/max
-    // stats then let where-prefix and interval queries skip row groups
-    // inside a partition — the poor-man's Z-order, for free during the
-    // rewrite compaction already pays for. repartition on (cell key,
-    // salt) puts each cell's rows in `filesPerPartition` tasks -> that
-    // many files per cell dir.
-    log.readEntries(fragmented, RecordStore.schema)
-      .withColumn("__salt",
-        pmod(xxhash64(col("metadata.id")), lit(filesPerPartition)))
-      .repartition(math.max(fragmented.size * filesPerPartition, 1),
-        col("time_bucket"), col("what"), col("__salt"))
-      .sortWithinPartitions(col("where"), col("metadata.start"))
-      .drop("__salt")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("time_bucket", "what")
-      .parquet(log.dataPath(newDir).toString)
-    @volatile var yielded = Set.empty[String]
-    log.commitRetry { current =>
-      val (entries, y) =
-        RecordStore.compactMutate(snapshot, fragmented.keySet, newDir)(current)
-      yielded = y
-      entries
-    }
-    if (yielded.size == fragmented.size)
-      // every cell lost to a racing compaction: our dir is fully
-      // unreferenced — reclaim it now rather than waiting for the sweep
-      f.delete(log.dataPath(newDir), true)
-    fragmented.size - yielded.size
-  }
 
   /** Table economics from filesystem metadata only — see
     * [[ManifestLog.storeStats]]. */
   def stats(): ManifestLog.StoreStats = log.storeStats()
 
-  /** Run [[compact]] only once live data dirs exceed `maxLiveDirs` —
-    * the shared manifested-store scheduling policy; cheap to call after
-    * every append. */
-  def compactIfNeeded(maxLiveDirs: Int = 8,
-      filesPerPartition: Int = 1): Int = {
-    require(maxLiveDirs >= 1, "maxLiveDirs must be >= 1")
-    if (stats().liveDirs > maxLiveDirs) compact(filesPerPartition) else 0
-  }
-
-  /** Offline reclamation of data dirs left by writers that crashed
-    * between data-write and manifest-commit. See
-    * [[ManifestLog.vacuumOrphans]]. */
-  def vacuumOrphans(olderThanMs: Long): Seq[String] =
-    log.vacuumOrphans(olderThanMs)
+  /** [[compact]] on the [[ManifestLog.compactIfNeeded]] schedule. */
+  def compactIfNeeded(maxLiveDirs: Int = 8, filesPerPartition: Int = 1): Int =
+    log.compactIfNeeded(maxLiveDirs)(compact(filesPerPartition))
 
   /** Resolvable snapshot versions, oldest first (retention =
     * `keepVersions` commits). */
@@ -282,12 +241,9 @@ final class RecordStore(spark: SparkSession, path: String,
 final class WorkIdIndex(spark: SparkSession, path: String,
     prefixLen: Int = 2,
     keepVersions: Int = 3,
-    committer: Option[ManifestCommitter] = None) {
+    committer: Option[ManifestCommitter] = None) extends ManifestedStore {
 
-  private val log = new ManifestLog(spark, path, keepVersions, committer)
-  private lazy val f = Fs.fs(spark, path)
-
-  def exists: Boolean = log.hasAny
+  protected val log = new ManifestLog(spark, path, keepVersions, committer)
 
   private def withPrefix(df: DataFrame): DataFrame =
     df.filter(col("work_id").isNotNull)
@@ -304,8 +260,7 @@ final class WorkIdIndex(spark: SparkSession, path: String,
     * never a doubled index. */
   def rebuild(store: RecordStore): Unit = {
     val snapshot = log.resolve().map(_._2).getOrElse(Map.empty)
-    val newDir = log.newDataDirName(
-      log.currentVersion.getOrElse(0L) + 1, tag = "rebuild")
+    val newDir = log.freshDir(tag = "rebuild")
     withPrefix(store.records)
       .repartition(col("work_id_prefix"))
       .sortWithinPartitions(col("work_id"), col("what"))
@@ -315,7 +270,7 @@ final class WorkIdIndex(spark: SparkSession, path: String,
     val cells = log.listCells(newDir, WorkIdIndex.LevelPrefixes)
     // empty source (no non-null work_ids): the rebuild still commits, so
     // a stale index empties out instead of keeping superseded entries
-    if (cells.isEmpty) f.delete(log.dataPath(newDir), true)
+    if (cells.isEmpty) log.f.delete(log.dataPath(newDir), true)
     @volatile var yielded = false
     log.commitRetry { current =>
       val (entries, y) =
@@ -323,7 +278,7 @@ final class WorkIdIndex(spark: SparkSession, path: String,
       yielded = y
       entries
     }
-    if (yielded && cells.nonEmpty) f.delete(log.dataPath(newDir), true)
+    if (yielded && cells.nonEmpty) log.f.delete(log.dataPath(newDir), true)
   }
 
   /** Incremental maintenance: append one ingest batch's record rows
@@ -346,11 +301,11 @@ final class WorkIdIndex(spark: SparkSession, path: String,
     val indexed = rows.filterNot(_.isNullAt(widAt)).map(r => new JoinedRow(r,
       InternalRow(r.getUTF8String(widAt).substringSQL(0, prefixLen))))
     if (indexed.isEmpty) return
-    val dirName = log.newDataDirName(log.currentVersion.getOrElse(0L) + 1)
-    val cells = DriverWrite(spark, new ParquetFileFormat, log.dataPath(dirName),
-      schema.add("work_id_prefix", StringType), Seq("work_id_prefix"),
-      indexed.iterator)
-    log.commitRetry(RecordStore.appendMutate(cells, dirName))
+    log.append() { dir =>
+      DriverWrite(spark, new ParquetFileFormat, log.dataPath(dir),
+        schema.add("work_id_prefix", StringType), Seq("work_id_prefix"),
+        indexed.iterator)
+    }
   }
 
   /** Index rows of (`workId`, `what`); empty while no index is built. */
@@ -372,10 +327,6 @@ final class WorkIdIndex(spark: SparkSession, path: String,
         .drop("work_id_prefix")
     }
   }
-
-  /** See [[ManifestLog.vacuumOrphans]]. */
-  def vacuumOrphans(olderThanMs: Long): Seq[String] =
-    log.vacuumOrphans(olderThanMs)
 }
 
 object RecordStore {
@@ -391,40 +342,6 @@ object RecordStore {
           .map(_ -> ExternalCatalogUtils.unescapePathName(w.stripPrefix("what=")))
       case _ => None
     }
-
-  /** Commit transform for an append that wrote `cells` into `dirName`:
-    * the new dir joins each touched cell's list; everything else rides
-    * along. Append content never depends on the base version, so a
-    * lost race recomputes only this map. */
-  private[store] def appendMutate(cells: Seq[String], dirName: String)(
-      entries: Map[String, Seq[String]]): Map[String, Seq[String]] =
-    entries ++ cells.map(c =>
-      c -> (entries.getOrElse(c, Seq.empty) :+ dirName))
-
-  /** Commit transform for a compaction that rewrote `fragmented` cells
-    * (their dir lists as of `snapshot`) into `newDir`. A cell some of
-    * whose snapshot dirs are no longer referenced was superseded by a
-    * RACING compaction — superseding it again would double its rows
-    * (both rewrites contain them), so that cell YIELDS to the current
-    * state and our rewrite of it goes unreferenced. Dirs added to a
-    * cell after the snapshot are concurrent appends: their rows are not
-    * in our rewrite, so they are preserved alongside it. Returns (new
-    * entries, yielded cells). Pure — unit-tested directly against
-    * crafted race states. */
-  private[store] def compactMutate(
-      snapshot: Map[String, Seq[String]],
-      fragmented: Set[String],
-      newDir: String)(current: Map[String, Seq[String]])
-      : (Map[String, Seq[String]], Set[String]) = {
-    val yielded = fragmented.filter(c =>
-      snapshot.getOrElse(c, Seq.empty)
-        .diff(current.getOrElse(c, Seq.empty)).nonEmpty)
-    val updates = (fragmented -- yielded).map { c =>
-      c -> (newDir +: current.getOrElse(c, Seq.empty)
-        .diff(snapshot.getOrElse(c, Seq.empty)))
-    }
-    (current ++ updates, yielded)
-  }
 
   val metadataSchema: StructType = StructType(Seq(
     StructField("version", IntegerType, nullable = false),

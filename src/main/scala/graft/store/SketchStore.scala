@@ -40,14 +40,11 @@ final class SketchStore(spark: SparkSession, path: String,
     kind: SketchStore.Kind,
     k: Int = graft.operators.Kmv.DefaultK,
     keepVersions: Int = 3,
-    committer: Option[ManifestCommitter] = None) {
+    committer: Option[ManifestCommitter] = None) extends ManifestedStore {
 
   import SketchStore._
 
-  private val log = new ManifestLog(spark, path, keepVersions, committer)
-  private lazy val f = Fs.fs(spark, path)
-
-  def exists: Boolean = log.hasAny
+  protected val log = new ManifestLog(spark, path, keepVersions, committer)
 
   /** Batch ids already merged into the store (dir-name tags plus the
     * ids a compaction folded in via its `batches.txt` marker). Ids are
@@ -69,8 +66,8 @@ final class SketchStore(spark: SparkSession, path: String,
           else Set.empty[String]
         val marker = new Path(log.dataPath(dir), "batches.txt")
         val fromMarker =
-          if (f.exists(marker)) {
-            val in = f.open(marker)
+          if (log.f.exists(marker)) {
+            val in = log.f.open(marker)
             try scala.io.Source.fromInputStream(in, "UTF-8")
               .getLines().filter(_.nonEmpty).toSet
             finally in.close()
@@ -109,29 +106,21 @@ final class SketchStore(spark: SparkSession, path: String,
   def ingest(cells: DataFrame, batchId: String): Boolean = {
     val tag = SketchStore.tag(batchId)
     if (committedBatches.contains(tag)) return false
-    val dirName = log.newDataDirName(
-      log.currentVersion.getOrElse(0L) + 1, tag = tag)
-    toCells(cells)
-      .withColumn("bucket", pmod(xxhash64(col("group")), lit(Buckets))
-        .cast("int"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket")
-      .parquet(log.dataPath(dirName).toString)
-    val leaves = log.listCells(dirName, LevelPrefixes)
-    if (leaves.isEmpty) { f.delete(log.dataPath(dirName), true); return true }
-    @volatile var skipped = false
-    log.commitRetry { current =>
-      // re-check under the commit loop: a racing writer of the SAME
-      // batch id that committed first turns this commit into a no-op.
-      // Full batchesIn (dir-name tags AND compaction batches.txt
-      // markers), not just name tags: the racer's dir may ALREADY have
-      // been folded by a compaction between its commit and ours, in
-      // which case only the marker still carries its batch id
-      if (batchesIn(current).contains(tag)) { skipped = true; current }
-      else RecordStore.appendMutate(leaves, dirName)(current)
+    // re-checked at every commit attempt: a racing writer of the SAME
+    // batch id that committed first turns this commit into a no-op.
+    // Full batchesIn (dir-name tags AND compaction batches.txt
+    // markers), not just name tags: the racer's dir may ALREADY have
+    // been folded by a compaction between its commit and ours, in
+    // which case only the marker still carries its batch id
+    log.append(tag, skip = batchesIn(_).contains(tag)) { dir =>
+      toCells(cells)
+        .withColumn("bucket", pmod(xxhash64(col("group")), lit(Buckets))
+          .cast("int"))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("bucket")
+        .parquet(log.dataPath(dir).toString)
+      log.listCells(dir, LevelPrefixes)
     }
-    if (skipped) { f.delete(log.dataPath(dirName), true); false }
-    else true
   }
 
   /** The live merged sketch, operator-shaped: HLL (group, bucket,
@@ -163,7 +152,7 @@ final class SketchStore(spark: SparkSession, path: String,
     * number of dirs folded (0 = nothing to do, or a racing compaction
     * fully superseded this one).
     *
-    * Race-safe via [[RecordStore.compactMutate]]: the fold reads and
+    * Race-safe via [[ManifestLog.commitCompaction]]: the fold reads and
     * replaces only the PINNED pre-compact snapshot's dirs — an ingest
     * that commits while the fold runs keeps its dirs referenced (its
     * cells and dir-name batch tag both survive), and a cell already
@@ -177,8 +166,7 @@ final class SketchStore(spark: SparkSession, path: String,
     val dirs = snapshot.values.flatten.toSet
     if (dirs.size <= 1) return 0
     val folded = batchesIn(snapshot)
-    val newDir = log.newDataDirName(
-      log.currentVersion.getOrElse(0L) + 1, tag = CompactTag)
+    val newDir = log.freshDir(tag = CompactTag)
     // merge-on-read result (pinned to the snapshot) re-normalized to
     // cell rows — the merged sketch IS valid cell input (max/sum/k-min
     // are associative)
@@ -188,23 +176,16 @@ final class SketchStore(spark: SparkSession, path: String,
       .write.mode(SaveMode.Overwrite)
       .partitionBy("bucket")
       .parquet(log.dataPath(newDir).toString)
-    val out = f.create(new Path(log.dataPath(newDir), "batches.txt"), true)
+    val out = log.f.create(new Path(log.dataPath(newDir), "batches.txt"), true)
     try out.write(folded.toSeq.sorted.mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     val leaves = log.listCells(newDir, LevelPrefixes).toSet
     // only cells the fold actually rewrote may point at newDir
     val foldable = snapshot.keySet.intersect(leaves)
-    @volatile var yielded = Set.empty[String]
-    log.commitRetry { current =>
-      val (entries, y) =
-        RecordStore.compactMutate(snapshot, foldable, newDir)(current)
-      yielded = y
-      entries
-    }
-    if (yielded.size == foldable.size) {
-      f.delete(log.dataPath(newDir), true); 0
-    } else {
+    val yielded = log.commitCompaction(snapshot, foldable, newDir)
+    if (yielded.size == foldable.size) 0
+    else {
       // a PARTIAL yield (a racing compaction took some cells first)
       // leaves the yielded cells' old dirs live — report only what this
       // call actually folded, or a maintenance scheduler gating on the
@@ -218,18 +199,9 @@ final class SketchStore(spark: SparkSession, path: String,
     * [[ManifestLog.storeStats]]. */
   def stats(): ManifestLog.StoreStats = log.storeStats()
 
-  /** Run [[compact]] only once live data dirs exceed `maxLiveDirs` —
-    * the [[GramIndex.compactIfNeeded]] scheduling policy; cheap to call
-    * after every load. */
-  def compactIfNeeded(maxLiveDirs: Int = 8): Int = {
-    require(maxLiveDirs >= 1, "maxLiveDirs must be >= 1")
-    if (stats().liveDirs > maxLiveDirs) compact() else 0
-  }
-
-  /** See [[ManifestLog.vacuum]] / [[ManifestLog.vacuumOrphans]]. */
-  def vacuum(): Unit = log.vacuum()
-  def vacuumOrphans(olderThanMs: Long): Seq[String] =
-    log.vacuumOrphans(olderThanMs)
+  /** [[compact]] on the [[ManifestLog.compactIfNeeded]] schedule. */
+  def compactIfNeeded(maxLiveDirs: Int = 8): Int =
+    log.compactIfNeeded(maxLiveDirs)(compact())
 }
 
 object SketchStore {

@@ -180,17 +180,13 @@ object StreamOps {
       grams: graft.store.GramIndex,
       semantic: graft.operators.CellIndex,
       maxLiveDirs: Int = 8,
-      orphanAgeMs: Long = 24L * 3600 * 1000,
-      keepGenerations: Int = 3): Unit = {
+      orphanAgeMs: Long = 24L * 3600 * 1000): Unit = {
+    // expired versions (CellIndex generations too) are vacuumed inside
+    // every commit; only crashed writers' leftovers need a sweep here
     exact.compactIfNeeded(maxLiveDirs)
     nearDup.compactIfNeeded(maxLiveDirs)
     grams.compactIfNeeded(maxLiveDirs)
     semantic.compactIfNeeded(maxFilesPerCell = maxLiveDirs)
-    // the manifested stores vacuum expired versions inside every
-    // commit; CellIndex generations are pruned only HERE — without
-    // this, each compaction/retrain leaks a full index copy (old
-    // pointers reference complete rewritten generations forever)
-    semantic.vacuum(keepGenerations)
     exact.vacuumOrphans(orphanAgeMs)
     nearDup.vacuumOrphans(orphanAgeMs)
     grams.vacuumOrphans(orphanAgeMs)

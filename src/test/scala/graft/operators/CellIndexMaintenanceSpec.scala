@@ -1,16 +1,18 @@
 package graft.operators
 
 import graft.SparkSuite
+import graft.store.Fs
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Maintenance parity for the one store family that versions by
-  * generation pointer instead of manifest log: append-heavy semantic
-  * ingest fragments cell dirs exactly like gram buckets, so CellIndex
-  * carries the same stats()/compactIfNeeded/vacuum surface as the
-  * manifested stores — with compaction proven a pure LAYOUT rewrite
-  * (probe answers bit-identical, quantizer/codebooks/baseline carried
-  * over) and vacuum proven to never touch an in-flight build's dir. */
+/** Maintenance of the store whose manifest versions are whole index
+  * generations: append-heavy semantic ingest fragments cell dirs
+  * exactly like gram buckets, so CellIndex carries the same
+  * stats()/compactIfNeeded/vacuumOrphans surface as the other stores —
+  * with compaction proven a pure LAYOUT rewrite (probe answers
+  * bit-identical, quantizer/codebooks/baseline carried over) and the
+  * commit-time vacuum proven to never touch an in-flight build's dir. */
 class CellIndexMaintenanceSpec extends SparkSuite {
 
   private def tmp() =
@@ -79,22 +81,31 @@ class CellIndexMaintenanceSpec extends SparkSuite {
     "vacuum and age-gated vacuumOrphans") {
     import spark.implicits._
     val p = tmp()
-    val idx = new CellIndex(spark, p)
+    val idx = new CellIndex(spark, p, keepVersions = 1)
+    val fs = Fs.fs(spark, p)
+    def genDirs: Set[String] = fs.listStatus(new Path(p, "data"))
+      .map(_.getPath.getName).filter(_.contains("-gen-")).toSet
+    var seen = Set.empty[String]
     idx.buildLearned(corpus(0 until 40), k = 4)
+    seen ++= genDirs
+    assert(genDirs.size === 1 && idx.stats().generations === 1,
+      "nothing expired yet")
+    // a crashed build: a dir under data/ referenced by no manifest
+    val orphan = new Path(p, "data/gen-orphan01")
+    fs.mkdirs(orphan)
     idx.retrain()
-    idx.retrain() // three committed generations
-    assert(idx.stats().generations === 3)
+    seen ++= genDirs
+    // fragmenting appends, then a compaction: a layout rewrite, so its
+    // generation must answer exactly as the one it replaces
+    (40 until 52 by 4).foreach(s => idx.append(corpus(s until s + 4)))
     val queries = corpus(0 until 4).select(
       $"vec_id".as("query_id"),
       expr("CAST(embedding AS ARRAY<DOUBLE>)").as("qv"))
     val want = topKRows(idx, queries)
-    // a crashed build: a gen dir referenced by no pointer
-    val fs = graft.store.Fs.fs(spark, p)
-    val orphan = new org.apache.hadoop.fs.Path(p, "gen-orphan01")
-    fs.mkdirs(orphan)
+    assert(idx.compact() > 0) // three committed generations
+    seen ++= genDirs
 
-    assert(idx.vacuum(keepVersions = 3) === Nil, "nothing expired yet")
-    val reclaimed = idx.vacuum(keepVersions = 1)
+    val reclaimed = seen -- genDirs
     assert(reclaimed.size === 2, s"two expired generations: $reclaimed")
     assert(idx.stats().generations === 1)
     assert(fs.exists(orphan),
@@ -107,6 +118,22 @@ class CellIndexMaintenanceSpec extends SparkSuite {
     assert(!fs.exists(orphan))
   }
 
+  test("a path in the generation-pointer layout (gen/, no manifests/) " +
+    "is refused on open, and the message names the layout") {
+    val p = tmp()
+    val fs = Fs.fs(spark, p)
+    // the layout before the manifest log: a pointer file naming the
+    // generation dir beside it
+    val out = fs.create(new Path(p, "gen/v0000000001.txt"))
+    try out.write("gen-0a1b2c3d".getBytes("UTF-8")) finally out.close()
+    fs.mkdirs(new Path(p, "gen-0a1b2c3d/vectors/cell=0"))
+    val e = intercept[IllegalStateException](new CellIndex(spark, p))
+    assert(e.getMessage.contains("generation-pointer layout (gen/)"),
+      e.getMessage)
+    assert(fs.exists(new Path(p, "gen-0a1b2c3d/vectors/cell=0")),
+      "a refusal deletes nothing")
+  }
+
   test("warm() is latency-only: an unbuilt index warms to zero instead " +
     "of failing the stream start") {
     assert(new CellIndex(spark, tmp()).warm() === 0L)
@@ -117,14 +144,15 @@ class CellIndexMaintenanceSpec extends SparkSuite {
     val p = tmp()
     val idx = new CellIndex(spark, p)
     idx.buildLearned(corpus(0 until 16), k = 2)
-    val fs = graft.store.Fs.fs(spark, p)
-    // an unreadable "pointer": a DIRECTORY matching the name pattern
-    val corrupt = new org.apache.hadoop.fs.Path(p, "gen/v0000000099.txt")
+    val fs = Fs.fs(spark, p)
+    // an unreadable generation manifest: a DIRECTORY matching the name
+    // pattern
+    val corrupt = new Path(p, "manifests/v0000000099.txt")
     fs.mkdirs(corrupt)
-    val orphan = new org.apache.hadoop.fs.Path(p, "gen-orphan02")
+    val orphan = new Path(p, "data/gen-orphan02")
     fs.mkdirs(orphan)
     assert(idx.vacuumOrphans(olderThanMs = -1000L) === Nil,
-      "one unreadable pointer must abort the whole sweep")
+      "one unreadable manifest must abort the whole sweep")
     assert(fs.exists(orphan), "nothing may be deleted on abort")
     fs.delete(corrupt, true)
     assert(idx.vacuumOrphans(olderThanMs = -1000L) === Seq("gen-orphan02"))

@@ -638,7 +638,7 @@ class OperatorsSpec extends SparkSuite {
     val idx = new CellIndex(spark, dir)
     idx.buildLearned(emb, k = 3, iters = 2)
     idx.buildPq(m = 4, k = 4, iters = 2)
-    def gens: Seq[String] = Option(new java.io.File(dir, "gen").list())
+    def gens: Seq[String] = Option(new java.io.File(dir, "manifests").list())
       .map(_.toSeq.filter(_.matches("v\\d{10}\\.txt")).sorted)
       .getOrElse(Nil)
     assert(gens.size === 1)
@@ -652,7 +652,7 @@ class OperatorsSpec extends SparkSuite {
     // an unreferenced generation directory is INVISIBLE until its pointer
     // commits — this is what "readers never see a half-swapped index"
     // means operationally
-    assert(new java.io.File(dir, "gen-halfbuilt/vectors").mkdirs())
+    assert(new java.io.File(dir, "data/gen-halfbuilt/vectors").mkdirs())
     assert(idx.vectors.count() === 70)
     // a drifted batch (+3 on every component): exactly one rebuild — a new
     // generation holding the MERGED corpus, quantizer and PQ codebooks

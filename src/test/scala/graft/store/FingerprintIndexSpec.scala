@@ -108,7 +108,7 @@ class FingerprintIndexSpec extends SparkSuite {
         pmod(conv(substring(md5($"text"), 1, 8), 16, 10).cast("long"),
           lit(8)).cast("int").as("bucket"))
       .write.partitionBy("bucket").parquet(log.dataPath(dir).toString)
-    log.commitRetry(RecordStore.appendMutate(
+    log.commitRetry(ManifestLog.appendMutate(
       log.listCells(dir, FingerprintIndex.LevelPrefixes), dir))
     assert(idx.fingerprints.count() === 2) // the duplicate row exists
     // later arrivals of the content are still suppressed
@@ -177,13 +177,13 @@ class FingerprintIndexSpec extends SparkSuite {
     val rewritten = idx.compact(filesPerPartition = 1)
     assert(rewritten > 0)
     assert(idx.fingerprints.count() === 6)
+    // a second compact finds nothing fragmented beyond the threshold
+    assert(idx.compact(1) === 0)
     // dedup behaviour is identical after the rewrite
     assert(idx.ingest(Seq((100L, "doc 3")).toDF("doc_id", "text"))
       .count() === 0)
     assert(idx.ingest(Seq((101L, "doc new")).toDF("doc_id", "text"))
       .count() === 1)
-    // a second compact finds nothing fragmented beyond the threshold
-    idx.vacuum()
   }
 
   test("bloom prefilter parity: ingest and ingestResolved identical with " +

@@ -213,7 +213,7 @@ class GramIndexSpec extends SparkSuite {
     "past the live-dirs threshold") {
     import spark.implicits._
     val idx = new GramIndex(spark, tmp(), w = 8, buckets = 4)
-    assert(idx.stats() === GramIndex.Stats(0, 0, 0L, 0L))
+    assert(idx.stats() === ManifestLog.StoreStats(0, 0, 0L, 0L))
     // 4 batches of 20-token docs → 13 grams each
     val batches = (0 until 4).map(b => Seq((b.toLong,
       (0 until 20).map(j => s"t${b}_$j").mkString(" ")))

@@ -180,7 +180,7 @@ class SketchStoreSpec extends SparkSuite {
         pmod(xxhash64(col("group")), lit(SketchStore.Buckets)).cast("int"))
       .write.partitionBy("bucket")
       .parquet(log.dataPath(dirName).toString)
-    log.commitRetry(RecordStore.appendMutate(
+    log.commitRetry(ManifestLog.appendMutate(
       log.listCells(dirName, SketchStore.LevelPrefixes), dirName))
     // the replay of the SAME raw id has a new-form tag that can never
     // equal the stored one: accepting it would double-count every CMS

@@ -262,27 +262,58 @@ class StoreMaintenanceSpec extends SparkSuite {
     "concurrent appends survive") {
     val snap = Map("c1" -> Seq("d1", "d2"), "c2" -> Seq("d3", "d4"))
     // plain case: no race — both cells supersede
-    val (e0, y0) = RecordStore.compactMutate(snap, Set("c1", "c2"), "dN")(snap)
+    val (e0, y0) = ManifestLog.compactMutate(snap, Set("c1", "c2"), "dN")(snap)
     assert(y0 === Set.empty)
     assert(e0 === Map("c1" -> Seq("dN"), "c2" -> Seq("dN")))
     // an append landed on c1 after our snapshot: preserved next to dN
     val appended = snap.updated("c1", Seq("d1", "d2", "dA"))
-    val (e1, y1) = RecordStore.compactMutate(snap, Set("c1", "c2"), "dN")(appended)
+    val (e1, y1) = ManifestLog.compactMutate(snap, Set("c1", "c2"), "dN")(appended)
     assert(y1 === Set.empty)
     assert(e1("c1") === Seq("dN", "dA"))
     // a RACING compaction already rewrote c1 (snapshot dirs gone):
     // superseding again would double every row — c1 must yield, c2 not
     val raced = Map("c1" -> Seq("dOther"), "c2" -> Seq("d3", "d4"))
-    val (e2, y2) = RecordStore.compactMutate(snap, Set("c1", "c2"), "dN")(raced)
+    val (e2, y2) = ManifestLog.compactMutate(snap, Set("c1", "c2"), "dN")(raced)
     assert(y2 === Set("c1"))
     assert(e2("c1") === Seq("dOther"))
     assert(e2("c2") === Seq("dN"))
     // racing compaction + an append on top of it: still yield c1, keep all
     val racedPlus = Map("c1" -> Seq("dOther", "dA"))
-    val (e3, y3) = RecordStore.compactMutate(
+    val (e3, y3) = ManifestLog.compactMutate(
       Map("c1" -> Seq("d1")), Set("c1"), "dN")(racedPlus)
     assert(y3 === Set("c1"))
     assert(e3("c1") === Seq("dOther", "dA"))
+  }
+
+  test("racing compactions on the shared path: the loser yields every " +
+    "cell, returns 0 and deletes its dir; no row is lost or doubled") {
+    val dir = tmpDir("race-compact") + "/t"
+    val store = new RecordStore(spark, dir)
+    // two cells, two data dirs each: both fragmented at one file a cell
+    for (i <- 1 to 4)
+      store.append(DatalakeRecord.listFromMetadata(
+        meta(i, what = if (i % 2 == 0) "a" else "b"), s"file:///$i", 1L, 2L))
+    val rows = store.records.count()
+    val rival = new ManifestLog(spark, dir)
+    val loser = new ManifestLog(spark, dir)
+    def rewrite(log: ManifestLog)(cells: Map[String, Seq[String]],
+        d: String): Unit =
+      log.readEntries(cells, RecordStore.schema).write
+        .partitionBy("time_bucket", "what").parquet(log.dataPath(d).toString)
+    var loserDir = ""
+    var rivalCells = -1
+    val lost = loser.compact(1) { (cells, d) =>
+      rewrite(loser)(cells, d)
+      loserDir = d
+      // the rival compacts the same snapshot and commits first
+      rivalCells = rival.compact(1)(rewrite(rival))
+    }
+    assert(rivalCells === 2, "the rival rewrote both fragmented cells")
+    assert(lost === 0, "every cell of the loser yields to the rival")
+    val f = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    assert(loserDir.nonEmpty && !f.exists(loser.dataPath(loserDir)),
+      "the loser's unreferenced dir is deleted")
+    assert(store.records.count() === rows)
   }
 
   test("rebuildMutate: racing rebuild yields; appends and stale cells " +
