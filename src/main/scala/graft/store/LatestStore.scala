@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{JoinedRow, Literal, XxHash64}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.IntegerType
@@ -18,9 +17,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * A manifest maps each key bucket (`kp = pmod(xxhash64(what, where),
   * nBuckets)`, keyed by the bare number) to the data version holding its
-  * current rows in a `kp=N` leaf. Every read goes through
-  * [[ManifestLog.readEntries]]: one relation over the listed leaves, so a
-  * referenced leaf that has vanished fails the read loudly. The commit
+  * current rows in a `kp=N` leaf. Every read lists its leaves with
+  * [[ManifestLog.listLeaves]], so a referenced leaf that has vanished
+  * fails the read loudly: the table reads as one relation over them
+  * ([[ManifestLog.readEntries]]), and an upsert's merge reads them on
+  * the driver ([[DriverRead]]). The commit
   * CAS goes through the [[ManifestCommitter]] seam — rename-as-commit
   * by default, a [[ConditionalPutCommitter]] (the reference's DynamoDB
   * conditional-put shape) on object stores without fail-if-exists
@@ -97,10 +98,13 @@ final class LatestStore(spark: SparkSession, path: String,
     * is written or committed, so a replay spends no retention slot.
     *
     * The batch is collected once (a local frame fires no job). Each
-    * attempt reads the touched buckets' stored rows in one job, picks
-    * the batch rows that win on the driver ([[LatestStore.beating]]) and
-    * writes one file per changed kp with [[DriverWrite]]; a lost commit
-    * race deletes that dir and merges again against the new state. */
+    * attempt lists the touched buckets' `kp=` leaves, refuses a merge
+    * whose listed file lengths exceed [[LatestStore.MaxMergeBytes]]
+    * before it opens any file, reads their stored rows on the driver
+    * ([[DriverRead]], no Spark job), picks the batch rows that win
+    * there ([[LatestStore.beating]]) and writes one file per changed kp
+    * with [[DriverWrite]]; a lost commit race deletes that dir and
+    * merges again against the new state. */
   def upsert(batch: DataFrame): Unit = upsert(batch, LatestStore.MaxMergeBytes)
 
   /** [[upsert]] refusing a merge whose touched leaves list more than
@@ -113,6 +117,8 @@ final class LatestStore(spark: SparkSession, path: String,
     if (touched.isEmpty) return
     val toCatalyst =
       CatalystTypeConverters.createToCatalystConverter(RecordStore.schema)
+    val toScala =
+      CatalystTypeConverters.createToScalaConverter(RecordStore.schema)
 
     var attempts = 0
     var committed = false
@@ -122,14 +128,20 @@ final class LatestStore(spark: SparkSession, path: String,
         throw new java.io.IOException(s"upsert lost $attempts commit races under $path")
       val (baseV, entries) =
         log.resolve().getOrElse((0L, Map.empty[String, Seq[String]]))
-      val stored = bucketRows(Some(entries), touched.contains)
-      val bytes = LatestStore.listedBytes(stored)
+      val leaves = log.listLeaves(entries.collect {
+        case (kp, dirs) if touched.contains(kp.toInt) => s"kp=$kp" -> dirs
+      }, LatestStore.Stored)
+      val bytes = leaves.sizeInBytes
       if (bytes > maxMergeBytes) throw new IllegalStateException(
         s"latest table at $path: merging ${touched.size} of its $nBuckets " +
           s"buckets would collect $bytes stored bytes on the driver, over the " +
           s"bound of $maxMergeBytes bytes; write the keys into a fresh table " +
           s"with a larger nBuckets than $nBuckets")
-      val storedRows = stored.collect().toSeq
+      val read = Seq.newBuilder[Row]
+      DriverRead(spark, leaves, RecordStore.schema) { r =>
+        read += toScala(r).asInstanceOf[Row]
+      }
+      val storedRows = read.result()
       val won = LatestStore.beating(storedRows, batchWinners)
       if (won.isEmpty) return
       val changed = won.map(LatestStore.bucketOf(_, modulus)).toSet
@@ -175,13 +187,6 @@ object LatestStore {
     * rows per MB, and collected into about 0.9 KB of heap per row, so
     * 8 MB admits about 130,000 rows, about 120 MB once collected. */
   val MaxMergeBytes: Long = 8L << 20
-
-  /** The bytes listed for the relation `df` reads: the sum of its files'
-    * lengths, known from the listing, so no job runs. */
-  private def listedBytes(df: DataFrame): Long =
-    df.queryExecution.analyzed.collectFirst {
-      case l: LogicalRelation => l.relation.sizeInBytes
-    }.getOrElse(0L)
 
   private val WhatAt = RecordStore.schema.fieldIndex("what")
   private val WhereAt = RecordStore.schema.fieldIndex("where")

@@ -338,21 +338,32 @@ final class ManifestLog(spark: SparkSession, path: String,
   }
 
   /** Snapshot read of exactly the cells in `entries` as ONE relation
-    * over a fixed file list (a dir's superseded leaves are never read).
-    * Each (dir, cell) leaf is listed once on the driver — one
-    * `listStatus`, never Spark's file discovery, so no read fires a
-    * listing job whatever its leaf count — and becomes one partition
-    * directory whose `k=v` values come from the cell name, typed from
-    * `schema`. Small files from every dir pack into the same scan tasks,
+    * over a fixed file list, [[listLeaves]]: a dir's superseded leaves
+    * are never read, and no read fires a listing job whatever its leaf
+    * count. Small files from every dir pack into the same scan tasks,
     * so a read's cost no longer grows with the number of live dirs. The
     * planner's partition filters prune leaves inside the index, and a
     * keyed read prunes `entries` to the cells its keys reach before that
     * (see [[RecordStore.recordsIn]]). Columns: `schema`'s data columns in
     * their order, then the cells' partition columns in path order (every
     * cell of one read must name the same columns); an empty `entries`
-    * reads as an empty frame of `schema`. */
+    * reads as an empty frame of `schema`. A batch-bounded read that ends
+    * on the driver reads the same listing with [[DriverRead]] instead. */
   def readEntries(entries: Map[String, Seq[String]], schema: StructType)
       : DataFrame = {
+    val index = listLeaves(entries, schema)
+    val dataSchema = StructType(
+      schema.filterNot(fld => index.partitionSchema.fieldNames.contains(fld.name)))
+    Bridge.parquetScan(spark, index, dataSchema)
+  }
+
+  /** The file list of the cells in `entries`: each (dir, cell) leaf is
+    * listed once on the driver (one `listStatus`, so a referenced leaf
+    * that has vanished fails here, loudly) and becomes one partition
+    * directory whose `k=v` values come from the cell name, typed from
+    * `schema`. */
+  private[store] def listLeaves(entries: Map[String, Seq[String]],
+      schema: StructType): ManifestFileIndex = {
     val dirCells = entries.toSeq
       .flatMap { case (cell, dirs) => dirs.map(_ -> cell) }
       .distinct.sorted
@@ -380,10 +391,7 @@ final class ManifestLog(spark: SparkSession, path: String,
       ManifestFileIndex.Leaf(leaf, InternalRow.fromSeq(values),
         f.listStatus(leaf).filter(st => ManifestLog.isDataFile(st.getPath.getName)))
     }
-    val dataSchema = StructType(
-      schema.filterNot(fld => partitionSchema.fieldNames.contains(fld.name)))
-    Bridge.parquetScan(spark, new ManifestFileIndex(leaves, partitionSchema),
-      dataSchema)
+    new ManifestFileIndex(leaves, partitionSchema)
   }
 
   def emptyDf(schema: StructType): DataFrame =
@@ -615,13 +623,14 @@ trait ManifestedStore {
     log.vacuumOrphans(olderThanMs)
 }
 
-/** The fixed file list behind [[ManifestLog.readEntries]]: one partition
-  * directory per (data dir, cell) leaf, listed when the read is built.
-  * Committed data dirs are write-once, so the list never goes stale and
-  * [[refresh]] has nothing to do. Partition filters are applied here:
+/** The fixed file list behind [[ManifestLog.readEntries]] and
+  * [[DriverRead]]: one partition directory per (data dir, cell) leaf,
+  * listed when the read is built. Committed data dirs are write-once,
+  * so the list never goes stale and [[refresh]] has nothing to do.
+  * Partition filters are applied here:
   * the planner does not re-apply partition-only filters above the scan. */
 private[store] final class ManifestFileIndex(
-    leaves: Seq[ManifestFileIndex.Leaf],
+    val leaves: Seq[ManifestFileIndex.Leaf],
     override val partitionSchema: StructType) extends FileIndex {
 
   override val rootPaths: Seq[Path] = leaves.map(_.path)

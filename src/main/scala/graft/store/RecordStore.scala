@@ -94,16 +94,15 @@ final class RecordStore(spark: SparkSession, path: String,
     * collected once (a local frame fires no job) and deduplicated on the
     * driver: within-batch duplicate (time_bucket, id) pairs collapse to
     * their first row. When `dedupAgainstExisting`, rows whose
-    * (time_bucket, id) already exist are dropped too: one scan of the
-    * cells of the batch's buckets, filtered to the batch's ids, returns
-    * the stored (time_bucket, id) pairs those ids have there, and the
-    * driver matches them against the batch's keys. Only batch-bounded
-    * keys come back (the 30-bucket ingest cap bounds the buckets). This
-    * is the replay-safety the reference gets from DynamoDB's idempotent
-    * put (`storage.py:64-73`) under at-least-once delivery.
+    * (time_bucket, id) already exist are dropped too ([[storedKeys]]).
+    * This is the replay-safety the reference gets from DynamoDB's
+    * idempotent put (`storage.py:64-73`) under at-least-once delivery.
     *
-    * Driver memory is bounded by the batch: existing table rows are
-    * filtered in Spark and never collected.
+    * Driver memory is bounded by the batch: the dedup probe streams only
+    * the `metadata.id` column of the cells of the batch's buckets
+    * through the driver ([[DriverRead]], no Spark job) and keeps only the
+    * pairs that are the batch's own keys; the 30-bucket ingest cap
+    * bounds the buckets.
     *
     * Commit shape: the surviving rows are written once, on the driver
     * ([[DriverWrite]], no Spark job), one file per cell into a
@@ -145,17 +144,22 @@ final class RecordStore(spark: SparkSession, path: String,
     }
   }
 
-  /** The (time_bucket, id) pairs of `keys` already stored: one Spark job
-    * scans the cells of the keys' buckets for rows with one of their
-    * ids, and the driver keeps the pairs that match a key. */
+  /** The (time_bucket, id) pairs of `keys` already stored: the
+    * (time_bucket, metadata.id) of every row in the cells of the keys'
+    * buckets is read on the driver ([[DriverRead]]) and only the pairs
+    * that are keys are kept. */
   private def storedKeys(keys: scala.collection.Set[(Long, String)])
       : Set[(Long, String)] = {
     val buckets = keys.map(_._1)
-    val ids = keys.map(_._2).toSeq.distinct
-    recordsWhere((b, _) => buckets.contains(b))
-      .filter(col("metadata.id").isin(ids: _*))
-      .select(col("time_bucket"), col("metadata.id"))
-      .as[(Long, String)].collect().toSet.filter(keys.contains)
+    val stored = Set.newBuilder[(Long, String)]
+    cellsWhere((b, _) => buckets.contains(b)).foreach { cells =>
+      DriverRead(spark, log.listLeaves(cells, RecordStore.schema),
+          RecordStore.IdKey) { r =>
+        val k = (r.getLong(0), r.getStruct(1, 1).getUTF8String(0).toString)
+        if (keys.contains(k)) stored += k
+      }
+    }
+    stored.result()
   }
 
   /** Full table as DataFrame; partition columns are restored to their
@@ -175,12 +179,19 @@ final class RecordStore(spark: SparkSession, path: String,
   /** Records of the cells whose (time_bucket, what) `keep` accepts; see
     * [[recordsIn]]. */
   private def recordsWhere(keep: (Long, String) => Boolean): DataFrame =
-    log.resolve() match {
-      case Some((_, entries)) =>
-        log.readEntries(entries.filter { case (cell, _) =>
-          RecordStore.parseCell(cell).forall(keep.tupled)
-        }, RecordStore.schema)
+    cellsWhere(keep) match {
+      case Some(cells) => log.readEntries(cells, RecordStore.schema)
       case None => log.emptyDf(RecordStore.schema)
+    }
+
+  /** The current manifest's cells whose (time_bucket, what) `keep`
+    * accepts (a cell of another shape is kept); None for no table. */
+  private def cellsWhere(keep: (Long, String) => Boolean)
+      : Option[Map[String, Seq[String]]] =
+    log.resolve().map { case (_, entries) =>
+      entries.filter { case (cell, _) =>
+        RecordStore.parseCell(cell).forall(keep.tupled)
+      }
     }
 
   /** Compact fragmented cells through [[ManifestLog.compact]]:
@@ -282,19 +293,11 @@ final class WorkIdIndex(spark: SparkSession, path: String,
   }
 
   /** Incremental maintenance: append one ingest batch's record rows
-    * (the streaming path — a full rebuild per batch would scan the whole
-    * record table). The batch is collected and written on the driver,
-    * like [[RecordStore.appendDf]]'s. Bucket-duplicate rows are fine:
-    * work-id queries dedup by id within a page exactly like the
-    * reference's GSI reads. */
-  def append(batch: DataFrame): Unit = {
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(batch.schema)
-    append(batch.collect().toSeq.map(toCatalyst(_).asInstanceOf[InternalRow]),
-      batch.schema)
-  }
-
-  /** [[append]] of record rows (of `schema`) the driver holds, written
-    * there by [[DriverWrite]], one file per prefix cell. */
+    * (of `schema`, held by the driver; the streaming path — a full
+    * rebuild per batch would scan the whole record table), written there
+    * by [[DriverWrite]], one file per prefix cell. Bucket-duplicate rows
+    * are fine: work-id queries dedup by id within a page exactly like
+    * the reference's GSI reads. */
   private[store] def append(rows: Seq[InternalRow], schema: StructType): Unit = {
     val widAt = schema.fieldIndex("work_id")
     // the prefix as `withPrefix`'s substring computes it
@@ -332,6 +335,12 @@ final class WorkIdIndex(spark: SparkSession, path: String,
 object RecordStore {
   /** The columns a cell's path names, in path order. */
   private val PartitionColumns = Seq("time_bucket", "what")
+
+  /** What the dedup probe reads of a row: its key, (time_bucket,
+    * metadata.id). */
+  private val IdKey = StructType(Seq(
+    StructField("time_bucket", LongType),
+    StructField("metadata", StructType(Seq(StructField("id", StringType))))))
 
   /** (time_bucket, what) of a `time_bucket=…/what=…` cell; None for a
     * cell of any other shape, which pruning then keeps. */

@@ -27,8 +27,9 @@ final case class IngesterReport(
 
 /** `fatal` carries an UNSAFE exception's rendering: the reference
   * publishes the error report in `finally` and THEN re-raises
-  * (`ingester.py:88-99`) — so the poison pill must cross the executor
-  * boundary as data, be reported, and only then stop the stream. */
+  * (`ingester.py:88-99`) — so the poison pill is returned as data with
+  * the batch's other results, reported, and only then stops the stream
+  * ([[StreamingIngester.processBatch]]). */
 final case class IngestResult(
     records: Seq[RecordRow],
     report: IngesterReport,
@@ -46,8 +47,7 @@ final case class IngestResult(
   */
 final class Ingester(
     contentStore: ContentStore,
-    clock: () => Long = () => System.currentTimeMillis())
-  extends Serializable {
+    clock: () => Long = () => System.currentTimeMillis()) {
 
   def handle(notificationJson: String): IngestResult = {
     val startMs = clock()
@@ -119,10 +119,10 @@ object Ingester {
   * notification directory (one JSON document per file — the reference's
   * inotify/SQS delivery unit), at most [[StreamingIngester.MaxFilesPerTrigger]]
   * files per micro-batch, and `foreachBatch` hands each micro-batch to
-  * [[StreamingIngester.processBatch]]: the messages are handled (parsed,
-  * resolved and expanded into records) on the executors in one job and
-  * collected, and the records table, the latest table and the report
-  * side-output are written from that driver-side copy. The reference's
+  * [[StreamingIngester.processBatch]]: the messages are collected and
+  * handled (parsed, resolved and expanded into records) on the driver,
+  * and the records table, the latest table and the report side-output
+  * are written from those results. The reference's
   * at-least-once + idempotent-put contract becomes dedup-on-append +
   * monotone latest MERGE, which is replay-safe (T3, strictly stronger).
   *
@@ -145,21 +145,24 @@ final class StreamingIngester(
     clock: () => Long = () => System.currentTimeMillis(),
     compactEvery: Int = 0) {
 
-  import StreamingIngester.{ReportEnc, ResultEnc, RowEnc}
+  import StreamingIngester.{ReportEnc, RowEnc}
 
   private val ingester = new Ingester(contentStore, clock)
   private val batchesSinceCompact = new java.util.concurrent.atomic.AtomicLong
 
   /** One ingest batch: records + latest + report from one collect.
     *
-    * `batch.map(handle)` runs once, as one Spark job, and its results
-    * come back to the driver; the records append, the latest upsert, the
-    * report write and the fatal check all read that array, so nothing is
-    * pinned or recomputed. The record, work-id, report and latest files
-    * are written on the driver ([[graft.store.DriverWrite]]), so a
-    * batch fires three jobs: the handle job, the records dedup probe and
-    * the latest merge's read of its touched buckets. The batch is
-    * bounded (`maxBatch` messages on the queue path,
+    * The batch's notification strings are collected and
+    * [[Ingester.handle]] runs over them on the driver, one after
+    * another; the records append, the latest upsert, the report write
+    * and the fatal check all read those results, so nothing is pinned
+    * or recomputed. A local batch (the queue path's) is collected
+    * without a job, and a streaming micro-batch fires only its source
+    * read. Everything else is on the driver too: the dedup probe and
+    * the latest merge read their leaves with [[graft.store.DriverRead]],
+    * and the record, work-id, report and latest files are written with
+    * [[graft.store.DriverWrite]]. So a queue batch fires no Spark job.
+    * The batch is bounded (`maxBatch` messages on the queue path,
     * [[StreamingIngester.MaxFilesPerTrigger]] files on the streaming
     * path), and so is what is collected.
     *
@@ -183,8 +186,7 @@ final class StreamingIngester(
     * checkpointed, so the message redelivers. */
   def processBatch(batch: Dataset[String],
       batchTag: Option[String] = None): Unit = {
-    val ing = ingester
-    val results = batch.map(ing.handle)(ResultEnc).collect().toSeq
+    val results = batch.collect().toSeq.map(ingester.handle)
     val records =
       spark.createDataset(results.flatMap(_.records))(RowEnc).toDF()
     recordStore.appendDf(records, dedupAgainstExisting = true)
@@ -215,9 +217,9 @@ final class StreamingIngester(
       recordStore.compact()
   }
 
-  /** Drain a [[NotificationQueue]] through the Spark ingest path with the
+  /** Drain a [[NotificationQueue]] through the ingest path with the
     * reference's at-least-once contract (`sqs_queue.py:52-66`): claim up
-    * to `maxBatch` messages, process them as ONE Spark batch (records +
+    * to `maxBatch` messages, process them as ONE batch (records +
     * latest + report in the same pass), and delete the claims only after
     * the batch commits. A crash mid-batch deletes nothing — every message
     * redelivers after its visibility timeout, and the store's
@@ -273,7 +275,6 @@ object StreamingIngester {
 
   // derived once per JVM: deriving a product encoder reflects over the
   // case class, which every batch paid through `spark.implicits`
-  private val ResultEnc: Encoder[IngestResult] = Encoders.product
   private val RowEnc: Encoder[RecordRow] = Encoders.product
   private val ReportEnc: ExpressionEncoder[IngesterReport] = ExpressionEncoder()
 }

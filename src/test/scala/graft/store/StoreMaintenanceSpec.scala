@@ -3,6 +3,8 @@ package graft.store
 import graft.SparkSuite
 import graft.core.{DatalakeRecord, Metadata}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions.col
 
 class StoreMaintenanceSpec extends SparkSuite {
@@ -12,6 +14,14 @@ class StoreMaintenanceSpec extends SparkSuite {
   def meta(i: Int, what: String = "w", workId: Option[String] = None): Metadata =
     Metadata(0, 500L * day + i, None, "here", what, workId,
       "/var/x.log", f"$i%032x", "h")
+
+  /** Append `df`'s rows to `idx` in the driver-held form an ingest batch
+    * hands it. */
+  def appendRows(idx: WorkIdIndex, df: DataFrame): Unit = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(df.schema)
+    idx.append(df.collect().toSeq.map(toCatalyst(_).asInstanceOf[InternalRow]),
+      df.schema)
+  }
 
   test("compact merges per-cell small files without changing rows") {
     val store = new RecordStore(spark, tmpDir("cmp") + "/t")
@@ -178,7 +188,7 @@ class StoreMaintenanceSpec extends SparkSuite {
     val source = new RecordStore(spark, tmpDir("legacy-wid-src") + "/t")
     source.append(more)
     refused("find")(index.find("wk1", "w"))
-    refused("append")(index.append(df))
+    refused("append")(appendRows(index, df))
     refused("rebuild")(index.rebuild(source))
     nothingWritten(idxDir)
   }
@@ -398,7 +408,7 @@ class StoreMaintenanceSpec extends SparkSuite {
     // incremental appends fragment the index...
     store.append(DatalakeRecord.listFromMetadata(
       meta(9, what = "job", workId = Some("aa-9")), "file:///9", 1L, 2L))
-    idx.append(store.records.filter(col("metadata.id") === f"${9}%032x"))
+    appendRows(idx, store.records.filter(col("metadata.id") === f"${9}%032x"))
     assert(idx.lookup("aa-9", "job").count() === 1)
     // ...and a rebuild collapses every prefix back to one dir
     idx.rebuild(store)
